@@ -1,8 +1,9 @@
 package graft
 
 import graft.streaming.Streaming
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** Streaming throughput measurement: rate source → wire-shaped
   * transactions → [[Streaming.windowedVolume]] → noop sink, reporting
@@ -21,7 +22,7 @@ object StreamBench {
   private val currencies = array(Seq("USD", "EUR", "KES", "GBP", "JPY").map(lit): _*)
 
   /** Rate-source stream shaped like the transaction wire format. */
-  def rateTxns(spark: SparkSession, rowsPerSecond: Long, partitions: Int): org.apache.spark.sql.DataFrame =
+  def rateTxns(spark: SparkSession, rowsPerSecond: Long, partitions: Int): DataFrame =
     spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond)
       .option("numPartitions", partitions)
@@ -35,139 +36,68 @@ object StreamBench {
         when(col("value") % 2 === 0, "credit").otherwise("debit").as("type"))
 
   /** Run the windowed-volume pipeline for `seconds` and return
-    * (rows/s, batches measured). */
+    * (rows/s, batches measured). The window opens at the first
+    * committed batch (plan/codegen warm-up, excluded from the rate)
+    * and, on a loaded host, stays open until a measured batch commits;
+    * [[LoadCapMs]] bounds each wait. */
   def run(spark: SparkSession, rocksDb: Boolean, seconds: Int,
       rowsPerSecond: Long = 5000000L): (Double, Int) = {
-    // capture the session's provider BEFORE configure so the finally
-    // block restores it — unconditionally unsetting would clobber a
-    // session-level RocksDB choice (e.g. GRAFT_STATE_STORE=rocksdb)
-    // for any later streaming queries on a shared session
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorProvider = spark.conf.getOption(providerKey)
-    Tables.configure(spark, rocksDbState = rocksDb)
-    if (!rocksDb) spark.conf.unset(providerKey) // measure the default store even if env opts in
+    val txns = rateTxns(spark, rowsPerSecond, spark.sparkContext.defaultParallelism)
+    val agg = Streaming.windowedVolume(txns,
+      watermark = "10 seconds", window_ = "5 seconds")
+    // the store is pinned for this query only — measures the default
+    // store even when the session opts into RocksDB
+    val q = Streaming.withConf(spark, Streaming.stateStoreConf(rocksDb))(
+      agg.writeStream.format("noop").outputMode("update").start())
     try {
-      val parts = spark.sparkContext.defaultParallelism
-      val txns = rateTxns(spark, rowsPerSecond, parts)
-      val agg = Streaming.windowedVolume(txns,
-        watermark = "10 seconds", window_ = "5 seconds")
-      val q = agg.writeStream.format("noop").outputMode("update").start()
-      try {
-        Thread.sleep(seconds * 1000L)
-      } finally q.stop()
-      // skip the warm-up batch; guard against NaN/zero-duration entries
-      val measured = q.recentProgress.toSeq.drop(1)
-        .map(p => (p.numInputRows,
-          Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)))
-        .filter { case (rows, ms) => rows > 0 && ms > 0 }
-      val rows = measured.map(_._1).sum.toDouble
-      val ms = measured.map(_._2).sum.toDouble
-      (if (ms > 0) rows / (ms / 1000.0) else 0.0, measured.size)
-    } finally priorProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None    => spark.conf.unset(providerKey)
-    }
-  }
-
-  /** The bucketed stream-stream interval join on a SKEWED corpus,
-    * A/B'd across state stores — the round-10 hot-key fix
-    * (lookback-bucketed join keys in [[Streaming.pairsOuterPipeline]])
-    * was gated for correctness and wall; this measures the state-store
-    * choice on the corpus where state size is the actual stressor (one
-    * user carrying ~¼ of all events concentrates join state under few
-    * keys). The corpus is replayed as a time-ordered bounded backfill
-    * ([[StreamStateProbe.writeSliced]], 2-day slices,
-    * `maxFilesPerTrigger=1`) so the watermark advances between batches
-    * and the measurement reflects steady-state operation, not the
-    * one-batch backfill artifact. Returns (rows/s over all batches
-    * after warm-up, peak state rows, peak state bytes as the provider
-    * reports them — in-memory map size for the default store, native
-    * memory + pinned blocks for RocksDB). */
-  def runPairsSkew(spark: SparkSession, rocksDb: Boolean, inDir: String):
-      (Double, Long, Long) = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorProvider = spark.conf.getOption(providerKey)
-    Tables.configure(spark, rocksDbState = rocksDb)
-    if (!rocksDb) spark.conf.unset(providerKey)
-    val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val schema = spark.read.parquet(
-        new java.io.File(inDir).listFiles().filter(_.getName.endsWith(".parquet"))
-          .head.toString).schema
-      val farFuture = new java.sql.Timestamp(4102444800000L)
-      val ck = java.nio.file.Files.createTempDirectory("graft-sbp-ck").toString
-      val q = Streaming.pairsOuterPipeline(10L, 60L, farFuture)(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir))
-        .writeStream.format("noop").outputMode(OutputMode.Append())
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val ps = q.recentProgress.toSeq.drop(1) // skip plan/codegen warm-up
-      val rows = ps.map(_.numInputRows).sum.toDouble
-      val ms = ps.flatMap(p =>
-        Option(p.durationMs.get("triggerExecution")).map(_.longValue)).sum.toDouble
-      val peakRows = ps.map(_.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-      val peakBytes = ps.map(_.stateOperators.map(_.memoryUsedBytes).sum)
-        .foldLeft(0L)(math.max)
-      graft.streaming.Streaming.rmTree(new java.io.File(ck))
-      (if (ms > 0) rows / (ms / 1000.0) else 0.0, peakRows, peakBytes)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevSp)
-      priorProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
+      def awaitBatches(n: Int): Unit = {
+        val cap = System.nanoTime() + LoadCapMs * 1000000L
+        while (q.isActive && q.recentProgress.length < n && System.nanoTime() < cap)
+          Thread.sleep(50)
       }
-    }
+      awaitBatches(1)
+      Thread.sleep(seconds * 1000L)
+      awaitBatches(2)
+    } finally q.stop()
+    // skip the warm-up batch; guard against NaN/zero-duration entries
+    val measured = q.recentProgress.toSeq.drop(1)
+      .filter(p => p.numInputRows > 0 && triggerMs(p) > 0)
+    (rowsPerSec(measured), measured.size)
   }
 
-  /** Drive an arbitrary oracled pipeline over a time-sliced bounded
-    * backfill (the [[runPairsSkew]] discipline: `maxFilesPerTrigger=1`,
-    * watermark advancing between batches) and report (rows/s after
-    * warm-up, peak state rows, measured batches). Used for the
-    * fMGWS-vs-transformWithState A/B: same corpus, same slices, same
-    * verdict arithmetic — only the state machinery (and, for TWS, the
-    * mandatory RocksDB provider) differs. */
+  /** Longest wait for one committed batch in [[run]]. */
+  private val LoadCapMs = 120000L
+
+  private def triggerMs(p: StreamingQueryProgress): Long =
+    Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
+
+  /** Input rows ÷ trigger execution time over `ps`. */
+  private def rowsPerSec(ps: Seq[StreamingQueryProgress]): Double = {
+    val ms = ps.map(triggerMs).sum.toDouble
+    if (ms > 0) ps.map(_.numInputRows).sum / (ms / 1000.0) else 0.0
+  }
+
+  /** Drive an oracled pipeline over a time-sliced bounded backfill
+    * ([[StreamStateProbe.replaySliced]]: `maxFilesPerTrigger=1`, the
+    * watermark advancing between batches, the replays' pinned state
+    * layout) on the default or RocksDB store, and report (rows/s over
+    * the batches after warm-up, their peak state rows, peak state bytes
+    * as the provider reports them — in-memory map size for the default
+    * store, native memory + pinned blocks for RocksDB — and measured
+    * batches). Backs the fMGWS-vs-transformWithState A/B (same corpus,
+    * slices and verdict arithmetic — only the state machinery differs)
+    * and the skew-corpus state-store A/B for the bucketed join, where
+    * one user carrying ~¼ of all events concentrates join state under
+    * few keys (the round-10 hot-key fix in
+    * [[Streaming.pairsOuterPipeline]] was gated for correctness and
+    * wall; this measures the store choice where state size is the
+    * stressor). */
   def runSliced(spark: SparkSession, rocksDb: Boolean, inDir: String,
-      pipeline: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame):
-      (Double, Long, Int) = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorProvider = spark.conf.getOption(providerKey)
-    Tables.configure(spark, rocksDbState = rocksDb)
-    if (!rocksDb) spark.conf.unset(providerKey)
-    val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val schema = spark.read.parquet(
-        new java.io.File(inDir).listFiles().filter(_.getName.endsWith(".parquet"))
-          .head.toString).schema
-      val ck = java.nio.file.Files.createTempDirectory("graft-sbf-ck").toString
-      val q = pipeline(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir))
-        .writeStream.format("noop").outputMode(OutputMode.Append())
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val ps = q.recentProgress.toSeq.drop(1)
-      val rows = ps.map(_.numInputRows).sum.toDouble
-      val ms = ps.flatMap(p =>
-        Option(p.durationMs.get("triggerExecution")).map(_.longValue)).sum.toDouble
-      val peakRows = ps.map(_.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-      graft.streaming.Streaming.rmTree(new java.io.File(ck))
-      (if (ms > 0) rows / (ms / 1000.0) else 0.0, peakRows, ps.size)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevSp)
-      priorProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+      pipeline: DataFrame => DataFrame): (Double, Long, Long, Int) = {
+    val ps = StreamStateProbe.replaySliced(spark, inDir, pipeline, Some(rocksDb))
+      .drop(1) // skip plan/codegen warm-up
+    val (peakRows, peakBytes) = StreamStateProbe.peakState(ps)
+    (rowsPerSec(ps), peakRows, peakBytes, ps.size)
   }
 
   def main(args: Array[String]): Unit = {
@@ -195,43 +125,33 @@ object StreamBench {
     // mandatory provider; with the fMGWS@rocksdb leg, the remaining
     // difference is the API itself).
     val abDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (new java.io.File(s"$abDir/events.parquet").exists()) {
-      val shaped = Tables.events(spark, abDir)
-        .select(col("ts").as("timestamp"), col("ts_ms"), col("event_id"),
-          col("user_id"), col("event_type"),
-          org.apache.spark.sql.functions.floor(col("value") * 100 + 0.5)
-            .cast("long").as("cents"))
-      val (inDir, _) = StreamStateProbe.writeSliced(shaped, 2L * 86400000L)
-      val (fmDef, sFmDef, bFm) = runSliced(spark, rocksDb = false, inDir,
-        Streaming.funnelPipeline(10L))
-      val (fmRocks, sFmRocks, _) = runSliced(spark, rocksDb = true, inDir,
-        Streaming.funnelPipeline(10L))
-      val (twsRocks, sTws, _) = runSliced(spark, rocksDb = true, inDir,
-        Streaming.funnelTwsPipeline(10L))
-      graft.streaming.Streaming.rmTree(new java.io.File(inDir))
-      println(s"""{"metric":"stream_funnel_api_ab_rows_per_sec",""" +
-        s""""fmgws_default":${fmDef.round},"fmgws_rocksdb":${fmRocks.round},""" +
-        s""""tws_rocksdb":${twsRocks.round},"batches":$bFm,""" +
-        s""""peak_state_rows_fmgws_default":$sFmDef,""" +
-        s""""peak_state_rows_fmgws_rocksdb":$sFmRocks,""" +
-        s""""peak_state_rows_tws":$sTws,"corpus":"$abDir"}""")
-    }
+    if (new java.io.File(s"$abDir/events.parquet").exists())
+      StreamStateProbe.withSlicedEvents(spark, abDir, 2L * 86400000L) { (inDir, _) =>
+        val (fmDef, sFmDef, _, bFm) = runSliced(spark, rocksDb = false, inDir,
+          Streaming.funnelPipeline(10L))
+        val (fmRocks, sFmRocks, _, _) = runSliced(spark, rocksDb = true, inDir,
+          Streaming.funnelPipeline(10L))
+        val (twsRocks, sTws, _, _) = runSliced(spark, rocksDb = true, inDir,
+          Streaming.funnelTwsPipeline(10L))
+        println(s"""{"metric":"stream_funnel_api_ab_rows_per_sec",""" +
+          s""""fmgws_default":${fmDef.round},"fmgws_rocksdb":${fmRocks.round},""" +
+          s""""tws_rocksdb":${twsRocks.round},"batches":$bFm,""" +
+          s""""peak_state_rows_fmgws_default":$sFmDef,""" +
+          s""""peak_state_rows_fmgws_rocksdb":$sFmRocks,""" +
+          s""""peak_state_rows_tws":$sTws,"corpus":"$abDir"}""")
+      }
     val skewDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "target/sfskew")
-    if (new java.io.File(s"$skewDir/events.parquet").exists()) {
-      val shaped = Tables.events(spark, skewDir)
-        .select(org.apache.spark.sql.functions.col("ts").as("timestamp"),
-          col("ts_ms"), col("event_id"), col("user_id"), col("event_type"),
-          org.apache.spark.sql.functions.floor(col("value") * 100 + 0.5)
-            .cast("long").as("cents"))
-      val (inDir, _) = StreamStateProbe.writeSliced(shaped, 2L * 86400000L)
-      val (dRps, dRows, dBytes) = runPairsSkew(spark, rocksDb = false, inDir)
-      val (rRps, rRows, rBytes) = runPairsSkew(spark, rocksDb = true, inDir)
-      graft.streaming.Streaming.rmTree(new java.io.File(inDir))
-      println(s"""{"metric":"stream_pairs_skew_rows_per_sec","default":${dRps.round},""" +
-        s""""rocksdb":${rRps.round},"peak_state_rows_default":$dRows,""" +
-        s""""peak_state_rows_rocksdb":$rRows,"peak_state_bytes_default":$dBytes,""" +
-        s""""peak_state_bytes_rocksdb":$rBytes,"corpus":"$skewDir"}""")
-    }
+    if (new java.io.File(s"$skewDir/events.parquet").exists())
+      StreamStateProbe.withSlicedEvents(spark, skewDir, 2L * 86400000L) { (inDir, _) =>
+        val pairs = Streaming.pairsOuterPipeline(10L, 60L,
+          new java.sql.Timestamp(4102444800000L)) _ // no sentinels: far-future guard
+        val (dRps, dRows, dBytes, _) = runSliced(spark, rocksDb = false, inDir, pairs)
+        val (rRps, rRows, rBytes, _) = runSliced(spark, rocksDb = true, inDir, pairs)
+        println(s"""{"metric":"stream_pairs_skew_rows_per_sec","default":${dRps.round},""" +
+          s""""rocksdb":${rRps.round},"peak_state_rows_default":$dRows,""" +
+          s""""peak_state_rows_rocksdb":$rRows,"peak_state_bytes_default":$dBytes,""" +
+          s""""peak_state_bytes_rocksdb":$rBytes,"corpus":"$skewDir"}""")
+      }
     spark.stop()
   }
 }

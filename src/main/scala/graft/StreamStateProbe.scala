@@ -3,7 +3,7 @@ package graft
 import graft.streaming.Streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import java.nio.file.Files
 
 /** Peak-state decade probe for the stateful streaming family — the
@@ -65,57 +65,63 @@ object StreamStateProbe {
     (dir, n)
   }
 
+  /** [[writeSliced]] over `sfDir`'s replay-shaped events, removed
+    * after `body` (also on failure). */
+  private[graft] def withSlicedEvents[T](spark: SparkSession, sfDir: String,
+      sliceMs: Long)(body: (String, Int) => T): T = {
+    val (inDir, n) = writeSliced(Streaming.replayShape(Tables.events(spark, sfDir)), sliceMs)
+    try body(inDir, n) finally Streaming.rmTree(new java.io.File(inDir))
+  }
+
+  /** `pipeline` over a [[writeSliced]] corpus through the replay
+    * driver — one slice per trigger into a noop sink, at the oracled
+    * replays' pinned state layout — returning every batch's progress.
+    * `rocksDb` pins the state store (None keeps the session's). */
+  private[graft] def replaySliced(spark: SparkSession, inDir: String,
+      pipeline: DataFrame => DataFrame,
+      rocksDb: Option[Boolean] = None): Seq[StreamingQueryProgress] =
+    Streaming.driveReplay(spark, inDir, pipeline, Streaming.NoopSink,
+      maxFilesPerTrigger = Some(1), pinPartitions = true, rocksDb = rocksDb)(_.progress)
+
+  /** Peak total (rows, bytes) across the state operators of any one
+    * batch, as the provider reports them. */
+  private[graft] def peakState(ps: Seq[StreamingQueryProgress]): (Long, Long) =
+    (ps.map(_.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(math.max),
+      ps.map(_.stateOperators.map(_.memoryUsedBytes).sum).foldLeft(0L)(math.max))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sliceDays = sys.env.getOrElse("SPARK_GRAFT_SLICE_DAYS", "2").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      // match the oracled replays' pinned state layout (8 partitions):
-      // per-partition state-store commit cost dominates bounded replays
-      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.shuffle.partitions", cpus)
       // a decade corpus at 2-day slices exceeds the default 100-entry
       // recentProgress ring; the peak must see EVERY batch
       .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val shaped = Tables.events(spark, sfDir)
-      .select(col("ts").as("timestamp"), col("ts_ms"), col("event_id"),
-        col("user_id"), col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val (inDir, nSlices) = writeSliced(shaped, sliceDays * 86400000L)
-    val schema = spark.read.parquet(s"$inDir/slice-0000.parquet").schema
-    // 2100: the probe adds no sentinels, so the in-plan sentinel guard
-    // predicates (`ts <= maxTs`) must never drop a real row
-    val farFuture = new java.sql.Timestamp(4102444800000L)
-    val pipes = Seq[(String, DataFrame => DataFrame)](
-      "sessions" -> Streaming.sessionsPipeline(10L, 30L),
-      "dedup" -> Streaming.dedupPipeline(10L, 5L),
-      "pairs_outer" -> Streaming.pairsOuterPipeline(10L, 60L, farFuture),
-      "asof" -> Streaming.asofPipeline(10L, 60L, farFuture))
-    pipes.foreach { case (name, pipe) =>
-      val ck = Files.createTempDirectory("graft-ssp-ck").toString
-      val t0 = System.nanoTime()
-      val q = pipe(spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir))
-        .writeStream.format("noop").outputMode(OutputMode.Append())
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val ps = q.recentProgress.toSeq
-      val input = ps.map(_.numInputRows).sum
-      val peakRows = ps.map(_.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-      val peakBytes = ps.map(_.stateOperators.map(_.memoryUsedBytes).sum)
-        .foldLeft(0L)(math.max)
-      Streaming.rmTree(new java.io.File(ck))
-      println(f"""{"pipeline":"$name","input_rows":$input,"batches":${ps.count(_.numInputRows > 0)},""" +
-        f""""slices":$nSlices,"wall_s":$wall%.3f,"peak_state_rows":$peakRows,""" +
-        s""""peak_state_bytes":$peakBytes,"slice_days":$sliceDays,"sf":"$sfDir"}""")
+    withSlicedEvents(spark, sfDir, sliceDays * 86400000L) { (inDir, nSlices) =>
+      // 2100: the probe adds no sentinels, so the in-plan sentinel guard
+      // predicates (`ts <= maxTs`) must never drop a real row
+      val farFuture = new java.sql.Timestamp(4102444800000L)
+      val pipes = Seq[(String, DataFrame => DataFrame)](
+        "sessions" -> Streaming.sessionsPipeline(10L, 30L),
+        "dedup" -> Streaming.dedupPipeline(10L, 5L),
+        "pairs_outer" -> Streaming.pairsOuterPipeline(10L, 60L, farFuture),
+        "asof" -> Streaming.asofPipeline(10L, 60L, farFuture))
+      pipes.foreach { case (name, pipe) =>
+        val t0 = System.nanoTime()
+        val ps = replaySliced(spark, inDir, pipe)
+        val wall = (System.nanoTime() - t0) / 1e9
+        val (peakRows, peakBytes) = peakState(ps)
+        println(f"""{"pipeline":"$name","input_rows":${ps.map(_.numInputRows).sum},""" +
+          f""""batches":${ps.count(_.numInputRows > 0)},""" +
+          f""""slices":$nSlices,"wall_s":$wall%.3f,"peak_state_rows":$peakRows,""" +
+          s""""peak_state_bytes":$peakBytes,"slice_days":$sliceDays,"sf":"$sfDir"}""")
+      }
     }
-    Streaming.rmTree(new java.io.File(inDir))
     spark.stop()
   }
 }

@@ -23,13 +23,10 @@ object TextHash {
   /** 60-bit positive hash of a string: first 15 hex chars of md5.
     * Wired to the native digest→long expression ([[NativeHash]]) —
     * bit-identical to the composed `conv(substring(md5))` form
-    * (spec-asserted) without its three string allocations per value.
-    * `GRAFT_HASH60_COMPOSED=1` switches back for A/B runs. */
-  def hash60(s: Column): Column =
-    if (sys.env.get("GRAFT_HASH60_COMPOSED").contains("1")) hash60Composed(s)
-    else NativeHash.md5Hash60(s)
+    * (spec-asserted) without its three string allocations per value. */
+  def hash60(s: Column): Column = NativeHash.md5Hash60(s)
 
-  /** The composed reference form of [[hash60]] (A/B + equivalence spec). */
+  /** The composed reference form of [[hash60]] (equivalence spec). */
   def hash60Composed(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 

@@ -31,9 +31,4 @@ object VectorOps {
     val b = toDouble(b0)
     dotD(a, b) / (normD(a) * normD(b))
   }
-
-  /** Cosine rounded to 4 decimals — the canonical comparison/ranking
-    * form used by the similarity operators (deterministic across
-    * engines; ties broken by id downstream). */
-  def cosine4(a: Column, b: Column): Column = round(cosine(a, b), 4)
 }

@@ -26,8 +26,6 @@ object Analytics {
   type Q = (SparkSession, String) => DataFrame
 
   private def r2(c: Column): Column = round(c, 2)
-  private def r4(c: Column): Column = round(c, 4)
-  private def r6(c: Column): Column = round(c, 6)
 
   /** Engine-portable average, truncated to `avgScale` decimals:
     * `floor(round(sum, sumScale) * 10^avgScale / count) / 10^avgScale`.

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextHash._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

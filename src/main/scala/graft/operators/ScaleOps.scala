@@ -216,15 +216,13 @@ object ScaleOps {
 
   /** 16-bit × 16-bit Morton (z-order) interleave. Wired to the native
     * magic-mask expression ([[graft.functions.NativeZOrder]]) —
-    * bit-identical to the composed 32-term chain (spec-asserted);
-    * `GRAFT_ZORDER_COMPOSED=1` switches back for A/B runs. */
+    * bit-identical to the composed 32-term chain (spec-asserted). */
   private[graft] def interleave16(x: Column, y: Column): Column =
-    if (sys.env.get("GRAFT_ZORDER_COMPOSED").contains("1")) interleave16Composed(x, y)
-    else graft.functions.NativeZOrder.zInterleave16(x, y)
+    graft.functions.NativeZOrder.zInterleave16(x, y)
 
   /** The composed built-ins-only reference form of [[interleave16]]:
     * one shift-and-or pair per bit — correct and codegen'd, but 32
-    * expression nodes per row (A/B + equivalence spec). */
+    * expression nodes per row (equivalence spec). */
   private[graft] def interleave16Composed(x: Column, y: Column): Column =
     (0 until 16).map { b =>
       shiftleft(shiftright(x, b).bitwiseAND(lit(1L)), 2 * b)

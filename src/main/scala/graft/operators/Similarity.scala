@@ -82,12 +82,6 @@ object Similarity {
   private def planeLit(h: Int): Column =
     array(hyperplanes(h).map(lit): _*)
 
-  /** First-n sign bits of a double-array embedding column (the
-    * composed per-plane form — kept for the multi-probe chain, which
-    * needs individual bits; ≤16 planes stays inside codegen limits). */
-  private def signBits(embD: Column, n: Int = NumPlanes): Seq[Column] =
-    (0 until n).map(h => when(NativeVector.dot(embD, planeLit(h)) >= 0, 1).otherwise(0))
-
   /** Band keys for an arbitrary (bands × rows) geometry, computed by
     * the single-loop native expression: the composed per-plane form
     * blows the codegen method limit past ~16 planes and silently

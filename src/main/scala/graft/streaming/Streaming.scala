@@ -587,44 +587,47 @@ object Streaming {
   def upsertSink(txns: DataFrame, storeDir: String, checkpoint: String,
       buckets: Int = 16,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): StreamingQuery = {
-    val base = txns.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
-      val cols = Seq("transaction_id", "user_id", "amount", "currency", "type", "timestamp")
-      // int kb regardless of the stream's user_id width (int or long)
-      val b = batch.select(cols.map(col): _*)
-        .withColumn("kb", pmod(col("user_id"), lit(buckets)).cast("int"))
-        .persist()
-      try {
-        // driver-side bucket list is bounded by `buckets`, never by data
-        val touched = b.select("kb").distinct().collect().map(_.getInt(0))
-        if (touched.nonEmpty) {
-          // explicit existence probe per touched partition dir — never a
-          // broad exception catch (which would conflate "store not born
-          // yet" with "store unreadable" and clobber good partitions)
-          val base = new org.apache.hadoop.fs.Path(storeDir)
-          val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val liveDirs = touched.map(k => s"$storeDir/kb=$k")
-            .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-          val existing =
-            if (liveDirs.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
-            else spark.read.option("basePath", storeDir).schema(b.schema)
-              .parquet(liveDirs.toSeq: _*)
-          val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-            .orderBy(col("timestamp").desc, col("transaction_id").desc)
-          existing.unionByName(b)
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1).drop("rn")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("kb")
-            .parquet(storeDir)
-        }
-      } finally b.unpersist() // also on write failure: replay must not stack cached copies
-      ()
-    }
+    val base = txns.writeStream.foreachBatch(upsertBatch(storeDir, buckets) _)
       .option("checkpointLocation", checkpoint)
     trigger.fold(base)(base.trigger).start()
+  }
+
+  /** [[upsertSink]]'s per-micro-batch keep-latest upsert into `storeDir`. */
+  private def upsertBatch(storeDir: String, buckets: Int)(batch: DataFrame,
+      batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    val cols = Seq("transaction_id", "user_id", "amount", "currency", "type", "timestamp")
+    // int kb regardless of the stream's user_id width (int or long)
+    val b = batch.select(cols.map(col): _*)
+      .withColumn("kb", pmod(col("user_id"), lit(buckets)).cast("int"))
+      .persist()
+    try {
+      // driver-side bucket list is bounded by `buckets`, never by data
+      val touched = b.select("kb").distinct().collect().map(_.getInt(0))
+      if (touched.nonEmpty) {
+        // explicit existence probe per touched partition dir — never a
+        // broad exception catch (which would conflate "store not born
+        // yet" with "store unreadable" and clobber good partitions)
+        val base = new org.apache.hadoop.fs.Path(storeDir)
+        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val liveDirs = touched.map(k => s"$storeDir/kb=$k")
+          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+        val existing =
+          if (liveDirs.isEmpty)
+            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
+          else spark.read.option("basePath", storeDir).schema(b.schema)
+            .parquet(liveDirs.toSeq: _*)
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
+          .orderBy(col("timestamp").desc, col("transaction_id").desc)
+        existing.unionByName(b)
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1).drop("rn")
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("kb")
+          .parquet(storeDir)
+      }
+    } finally b.unpersist() // also on write failure: replay must not stack cached copies
   }
 
   /** The CDC-apply path under the correctness gate: drive [[upsertSink]]
@@ -639,40 +642,24 @@ object Streaming {
     * computes, no matter how the files landed in batches. No watermark
     * or sentinel phases needed — foreachBatch applies every batch, and
     * `AvailableNow` terminates once the corpus drains. */
-  def streamCdc(spark: SparkSession, dir: String, buckets: Int = 16): DataFrame = {
-    // same per-partition state-commit economics as [[replay]], paid
-    // once per micro-batch — and this replay is deliberately
-    // multi-batch (maxFilesPerTrigger = 3)
-    val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", replayPartitions.toString)
-    try streamCdcWith(spark, dir, buckets)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
-  }
-
-  private def streamCdcWith(spark: SparkSession, dir: String, buckets: Int): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val (inDir, _) = ReplayCorpus.get(spark, dir)
-    val schema = spark.read.parquet(inDir).schema
-    val root = java.nio.file.Files.createTempDirectory("graft-cdc-run")
-    val store = s"$root/store"
-    val shaped = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 3).parquet(inDir)
-      .select(col("event_id").as("transaction_id"), col("user_id"),
-        // cents ride the double amount column exactly (integers < 2^53)
-        col("cents").cast("double").as("amount"),
-        col("event_type").as("currency"), lit("event").as("type"),
-        col("timestamp"))
-    upsertSink(shaped, store, s"$root/ck", buckets,
-      Some(Trigger.AvailableNow())).awaitTermination()
-    val result = spark.read.parquet(store)
-      .filter(col("user_id") >= 0L) // sentinels live in their own key
-      .select(col("user_id"), col("transaction_id").as("last_event_id"),
-        unix_millis(col("timestamp")).as("last_ts_ms"),
-        col("amount").cast("long").as("last_cents"))
-      .localCheckpoint(true)
-    rmTree(new java.io.File(root.toString))
-    result
-  }
+  def streamCdc(spark: SparkSession, dir: String, buckets: Int = 16): DataFrame =
+    // same per-partition commit economics as [[replay]], paid once per
+    // micro-batch — and this replay is deliberately multi-batch
+    driveReplay(spark, ReplayCorpus.get(spark, dir)._1, in => in
+        .select(col("event_id").as("transaction_id"), col("user_id"),
+          // cents ride the double amount column exactly (integers < 2^53)
+          col("cents").cast("double").as("amount"),
+          col("event_type").as("currency"), lit("event").as("type"),
+          col("timestamp")),
+      BatchSink(OutputMode.Append(), out => upsertBatch(out, buckets)),
+      maxFilesPerTrigger = Some(3), pinPartitions = true) { run =>
+      spark.read.parquet(run.out)
+        .filter(col("user_id") >= 0L) // sentinels live in their own key
+        .select(col("user_id"), col("transaction_id").as("last_event_id"),
+          unix_millis(col("timestamp")).as("last_ts_ms"),
+          col("amount").cast("long").as("last_cents"))
+        .localCheckpoint(true)
+    }
 
   /** Driver-visible streaming correctness: replay the bounded `events`
     * table through the REAL streaming pipeline — file source →
@@ -689,7 +676,7 @@ object Streaming {
     * watermark passes its end, and the watermark available to batch N
     * is computed from data seen through batch N−1 — so a bounded
     * replay needs LATER batches to flush the real windows. The shared
-    * [[replayToParquet]] harness runs TWO phases over one checkpoint
+    * [[SentinelFlush]] runs TWO phases over one checkpoint
     * (data + far-future sentinel #1, then a restart that discovers
     * sentinel #2), so the flush is guaranteed by the checkpointed
     * restart path rather than the engine's optional no-data batch.
@@ -1315,60 +1302,10 @@ object Streaming {
     replay(spark, dir, funnelPipeline(watermarkMin))
       .filter(col("user_id") >= 0L)
 
-  /** `transformWithState` requires the RocksDB state-store provider;
-    * pin it for the enclosed replay and restore the session conf
-    * after (shared by the modern-API ports). */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prior = spark.conf.getOption(key)
-    val priorCl = spark.conf.getOption(clKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // Changelog checkpointing: commit the per-batch CHANGELOG instead of
-    // a full RocksDB snapshot zip per partition per batch — pure
-    // checkpoint-format choice (state contents and results are
-    // byte-identical; snapshots still happen in background maintenance),
-    // and the production recommendation wherever commit latency matters.
-    // Opt-out knob for A/B: GRAFT_ROCKSDB_CHANGELOG=0.
-    val wantCl = !sys.env.get("GRAFT_ROCKSDB_CHANGELOG").contains("0")
-    if (wantCl) spark.conf.set(clKey, "true")
-    try body finally {
-      prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      if (wantCl) priorCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None    => spark.conf.unset(clKey)
-      }
-    }
-  }
-
-  /** The funnel verdict on Spark 4's `transformWithState` — the modern
-    * arbitrary-stateful API ([[streamFunnel]]'s `flatMapGroupsWithState`
-    * predecessor path kept alongside, SAME semantics, SAME oracle):
-    * a `StatefulProcessor` with two named state variables (the event
-    * buffer as `ValueState[FunnelBufState]`, the registered timer's
-    * timestamp as `ValueState[Long]`) and an EVENT-TIME timer per user
-    * at lastSeen+1 — each batch deletes the previous timer before
-    * registering the new one (timers don't overwrite the way
-    * `setTimeoutTimestamp` did), so exactly one verdict emits per user
-    * when the watermark finally passes their last event. This is the
-    * API surface a production funnel/ledger migrates to: typed state
-    * variables with independent lifetimes (TTL-capable), multiple
-    * timers, and state schema evolution — none of which the single
-    * opaque fMGWS state value offers.
-    *
-    * `transformWithState` requires the RocksDB state-store provider;
-    * [[withRocksDb]] pins it for the replay and restores the session
-    * conf after — which also makes the three modern-API ports the
-    * board's standing RocksDB coverage (every other oracled replay
-    * runs the default store). */
   /** The transformWithState funnel behind [[streamFunnelTws]], factored
     * for StreamBench's fMGWS-vs-TWS A/B (same verdict helper, same
     * buffering — only the state machinery differs). The caller must
-    * hold the RocksDB pin ([[withRocksDb]]). */
+    * run it on the RocksDB store ([[stateStoreConf]]). */
   private[graft] def funnelTwsPipeline(watermarkMin: Long)(in: DataFrame): DataFrame = {
     val spark = in.sparkSession
     import spark.implicits._
@@ -1420,12 +1357,30 @@ object Streaming {
       .toDF()
   }
 
+  /** The funnel verdict on Spark 4's `transformWithState` — the modern
+    * arbitrary-stateful API ([[streamFunnel]]'s `flatMapGroupsWithState`
+    * predecessor path kept alongside, SAME semantics, SAME oracle):
+    * a `StatefulProcessor` with two named state variables (the event
+    * buffer as `ValueState[FunnelBufState]`, the registered timer's
+    * timestamp as `ValueState[Long]`) and an EVENT-TIME timer per user
+    * at lastSeen+1 — each batch deletes the previous timer before
+    * registering the new one (timers don't overwrite the way
+    * `setTimeoutTimestamp` did), so exactly one verdict emits per user
+    * when the watermark finally passes their last event. This is the
+    * API surface a production funnel/ledger migrates to: typed state
+    * variables with independent lifetimes (TTL-capable), multiple
+    * timers, and state schema evolution — none of which the single
+    * opaque fMGWS state value offers.
+    *
+    * `transformWithState` requires the RocksDB state-store provider;
+    * the replay pins it for its stream only ([[stateStoreConf]]) —
+    * which also makes the modern-API ports the board's standing
+    * RocksDB coverage (every other oracled replay runs the session's
+    * store). */
   def streamFunnelTws(spark: SparkSession, dir: String,
       watermarkMin: Long = 10L): DataFrame =
-    withRocksDb(spark) {
-      replay(spark, dir, funnelTwsPipeline(watermarkMin))
-        .filter(col("user_id") >= 0L)
-    }
+    replay(spark, dir, funnelTwsPipeline(watermarkMin), rocksDb = true)
+      .filter(col("user_id") >= 0L)
 
   /** Session windows on `transformWithState` with LIST state — the
     * third state shape of the modern arbitrary-stateful API, alongside
@@ -1461,62 +1416,60 @@ object Streaming {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
       TimeMode, TimerValues, TTLConfig}
     val gapMs = gapMin * 60000L
-    withRocksDb(spark) {
-      replay(spark, dir, in => in
-        .select(timestamp_millis(col("ts_ms")).as("timestamp"),
-          col("user_id"), col("ts_ms"), col("cents"))
-        .withWatermark("timestamp", s"$watermarkMin minutes")
-        .as[(java.sql.Timestamp, Long, Long, Long)]
-        .groupByKey(_._2)
-        .transformWithState(
-          new StatefulProcessor[Long, (java.sql.Timestamp, Long, Long, Long), SessionRowTws] {
-            @transient private var buf: org.apache.spark.sql.streaming.ListState[SessEv] = _
-            @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-            override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-              buf = getHandle.getListState[SessEv]("buf",
-                org.apache.spark.sql.Encoders.product[SessEv], TTLConfig.NONE)
-              tmr = getHandle.getValueState[Long]("tmr",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-            }
-            override def handleInputRows(uid: Long,
-                rows: Iterator[(java.sql.Timestamp, Long, Long, Long)],
-                timerValues: TimerValues): Iterator[SessionRowTws] = {
-              val add = rows.map { case (_, _, tsMs, cents) => SessEv(tsMs, cents) }.toArray
-              if (add.nonEmpty) {
-                buf.appendList(add)
-                val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-                val next = math.max(prev, add.map(_.tsMs).max + gapMs)
-                if (next != prev) {
-                  if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                  getHandle.registerTimer(next)
-                  tmr.update(next)
-                }
+    replay(spark, dir, in => in
+      .select(timestamp_millis(col("ts_ms")).as("timestamp"),
+        col("user_id"), col("ts_ms"), col("cents"))
+      .withWatermark("timestamp", s"$watermarkMin minutes")
+      .as[(java.sql.Timestamp, Long, Long, Long)]
+      .groupByKey(_._2)
+      .transformWithState(
+        new StatefulProcessor[Long, (java.sql.Timestamp, Long, Long, Long), SessionRowTws] {
+          @transient private var buf: org.apache.spark.sql.streaming.ListState[SessEv] = _
+          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            buf = getHandle.getListState[SessEv]("buf",
+              org.apache.spark.sql.Encoders.product[SessEv], TTLConfig.NONE)
+            tmr = getHandle.getValueState[Long]("tmr",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          }
+          override def handleInputRows(uid: Long,
+              rows: Iterator[(java.sql.Timestamp, Long, Long, Long)],
+              timerValues: TimerValues): Iterator[SessionRowTws] = {
+            val add = rows.map { case (_, _, tsMs, cents) => SessEv(tsMs, cents) }.toArray
+            if (add.nonEmpty) {
+              buf.appendList(add)
+              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
+              val next = math.max(prev, add.map(_.tsMs).max + gapMs)
+              if (next != prev) {
+                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
+                getHandle.registerTimer(next)
+                tmr.update(next)
               }
-              Iterator.empty
             }
-            override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-                expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionRowTws] = {
-              val ev = buf.get().toArray.sortBy(_.tsMs)
-              buf.clear(); tmr.clear()
-              if (ev.isEmpty) return Iterator.empty
-              val out = scala.collection.mutable.ArrayBuffer.empty[SessionRowTws]
-              var start = ev(0).tsMs; var prevTs = ev(0).tsMs
-              var n = 0L; var c = 0L
-              ev.foreach { e =>
-                if (n > 0L && e.tsMs - prevTs >= gapMs) {
-                  out += SessionRowTws(start, uid, n, c)
-                  start = e.tsMs; n = 0L; c = 0L
-                }
-                n += 1L; c += e.cents; prevTs = e.tsMs
+            Iterator.empty
+          }
+          override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
+              expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionRowTws] = {
+            val ev = buf.get().toArray.sortBy(_.tsMs)
+            buf.clear(); tmr.clear()
+            if (ev.isEmpty) return Iterator.empty
+            val out = scala.collection.mutable.ArrayBuffer.empty[SessionRowTws]
+            var start = ev(0).tsMs; var prevTs = ev(0).tsMs
+            var n = 0L; var c = 0L
+            ev.foreach { e =>
+              if (n > 0L && e.tsMs - prevTs >= gapMs) {
+                out += SessionRowTws(start, uid, n, c)
+                start = e.tsMs; n = 0L; c = 0L
               }
-              out += SessionRowTws(start, uid, n, c)
-              out.iterator
+              n += 1L; c += e.cents; prevTs = e.tsMs
             }
-          },
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF())
-        .filter(col("user_id") =!= -1L)
-    }
+            out += SessionRowTws(start, uid, n, c)
+            out.iterator
+          }
+        },
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF(), rocksDb = true)
+      .filter(col("user_id") =!= -1L)
   }
 
   /** [[streamLedgerTws]] with INITIAL STATE — the batch→streaming
@@ -1541,7 +1494,7 @@ object Streaming {
   def streamLedgerInit(spark: SparkSession, dir: String,
       watermarkMin: Long = 10L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
+    import org.apache.spark.sql.streaming.{ExpiredTimerInfo,
       StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig}
     val ev = graft.Tables.events(spark, dir)
     val bounds = ev.agg(min(col("ts_ms")), max(col("ts_ms"))).head
@@ -1558,64 +1511,62 @@ object Streaming {
       .as[(Long, Array[LedgerInitEntry], Long)]
       .map { case (uid, rows, last) => (uid, LedgerInitState(rows, last)) }
       .groupByKey(_._1).mapValues(_._2)
-    withRocksDb(spark) {
-      replay(spark, dir, in => in
-        .filter(col("ts_ms") >= cutoff)
-        .select(col("timestamp"), col("user_id"), col("event_type"), col("cents"))
-        .withWatermark("timestamp", s"$watermarkMin minutes")
-        .as[(java.sql.Timestamp, Long, String, Long)]
-        .groupByKey(_._2)
-        .transformWithState(
-          new StatefulProcessorWithInitialState[Long,
-              (java.sql.Timestamp, Long, String, Long), LedgerRowTws, LedgerInitState] {
-            @transient private var led: org.apache.spark.sql.streaming.MapState[String, TypeAgg] = _
-            @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-            override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-              led = getHandle.getMapState[String, TypeAgg]("led",
-                org.apache.spark.sql.Encoders.STRING,
-                org.apache.spark.sql.Encoders.product[TypeAgg], TTLConfig.NONE)
-              tmr = getHandle.getValueState[Long]("tmr",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+    replay(spark, dir, in => in
+      .filter(col("ts_ms") >= cutoff)
+      .select(col("timestamp"), col("user_id"), col("event_type"), col("cents"))
+      .withWatermark("timestamp", s"$watermarkMin minutes")
+      .as[(java.sql.Timestamp, Long, String, Long)]
+      .groupByKey(_._2)
+      .transformWithState(
+        new StatefulProcessorWithInitialState[Long,
+            (java.sql.Timestamp, Long, String, Long), LedgerRowTws, LedgerInitState] {
+          @transient private var led: org.apache.spark.sql.streaming.MapState[String, TypeAgg] = _
+          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            led = getHandle.getMapState[String, TypeAgg]("led",
+              org.apache.spark.sql.Encoders.STRING,
+              org.apache.spark.sql.Encoders.product[TypeAgg], TTLConfig.NONE)
+            tmr = getHandle.getValueState[Long]("tmr",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          }
+          override def handleInitialState(uid: Long, st: LedgerInitState,
+              timerValues: TimerValues): Unit = {
+            st.rows.foreach(r => led.updateValue(r.t, TypeAgg(r.n, r.c)))
+            getHandle.registerTimer(st.lastSeenMs + 1L)
+            tmr.update(st.lastSeenMs + 1L)
+          }
+          override def handleInputRows(uid: Long,
+              rows: Iterator[(java.sql.Timestamp, Long, String, Long)],
+              timerValues: TimerValues): Iterator[LedgerRowTws] = {
+            var hi = Long.MinValue
+            rows.foreach { case (ts, _, typ, cents) =>
+              val cur = if (led.containsKey(typ)) led.getValue(typ) else TypeAgg(0L, 0L)
+              led.updateValue(typ, TypeAgg(cur.n + 1L, cur.cents + cents))
+              hi = math.max(hi, ts.getTime)
             }
-            override def handleInitialState(uid: Long, st: LedgerInitState,
-                timerValues: TimerValues): Unit = {
-              st.rows.foreach(r => led.updateValue(r.t, TypeAgg(r.n, r.c)))
-              getHandle.registerTimer(st.lastSeenMs + 1L)
-              tmr.update(st.lastSeenMs + 1L)
-            }
-            override def handleInputRows(uid: Long,
-                rows: Iterator[(java.sql.Timestamp, Long, String, Long)],
-                timerValues: TimerValues): Iterator[LedgerRowTws] = {
-              var hi = Long.MinValue
-              rows.foreach { case (ts, _, typ, cents) =>
-                val cur = if (led.containsKey(typ)) led.getValue(typ) else TypeAgg(0L, 0L)
-                led.updateValue(typ, TypeAgg(cur.n + 1L, cur.cents + cents))
-                hi = math.max(hi, ts.getTime)
+            if (hi != Long.MinValue) {
+              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
+              val next = math.max(prev, hi + 1L)
+              if (next != prev) {
+                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
+                getHandle.registerTimer(next)
+                tmr.update(next)
               }
-              if (hi != Long.MinValue) {
-                val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-                val next = math.max(prev, hi + 1L)
-                if (next != prev) {
-                  if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                  getHandle.registerTimer(next)
-                  tmr.update(next)
-                }
-              }
-              Iterator.empty
             }
-            override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-                expiredTimerInfo: ExpiredTimerInfo): Iterator[LedgerRowTws] = {
-              val out = led.iterator().map { case (typ, agg) =>
-                LedgerRowTws(uid, typ, agg.n, agg.cents)
-              }.toArray
-              led.clear(); tmr.clear()
-              out.iterator
-            }
-          },
-          TimeMode.EventTime(), OutputMode.Append(), initState)
-        .toDF())
-        .filter(col("user_id") >= 0L)
-    }
+            Iterator.empty
+          }
+          override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
+              expiredTimerInfo: ExpiredTimerInfo): Iterator[LedgerRowTws] = {
+            val out = led.iterator().map { case (typ, agg) =>
+              LedgerRowTws(uid, typ, agg.n, agg.cents)
+            }.toArray
+            led.clear(); tmr.clear()
+            out.iterator
+          }
+        },
+        TimeMode.EventTime(), OutputMode.Append(), initState)
+      .toDF(), rocksDb = true)
+      .filter(col("user_id") >= 0L)
   }
 
   /** Session windows CHAINED into a downstream tumbling aggregate —
@@ -1684,56 +1635,54 @@ object Streaming {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
       TimeMode, TimerValues, TTLConfig}
-    withRocksDb(spark) {
-      replay(spark, dir, in => in
-        .select(col("timestamp"), col("user_id"), col("event_type"), col("cents"))
-        .withWatermark("timestamp", s"$watermarkMin minutes")
-        .as[(java.sql.Timestamp, Long, String, Long)]
-        .groupByKey(_._2)
-        .transformWithState(
-          new StatefulProcessor[Long, (java.sql.Timestamp, Long, String, Long), LedgerRowTws] {
-            @transient private var led: org.apache.spark.sql.streaming.MapState[String, TypeAgg] = _
-            @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-            override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-              led = getHandle.getMapState[String, TypeAgg]("led",
-                org.apache.spark.sql.Encoders.STRING,
-                org.apache.spark.sql.Encoders.product[TypeAgg], TTLConfig.NONE)
-              tmr = getHandle.getValueState[Long]("tmr",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+    replay(spark, dir, in => in
+      .select(col("timestamp"), col("user_id"), col("event_type"), col("cents"))
+      .withWatermark("timestamp", s"$watermarkMin minutes")
+      .as[(java.sql.Timestamp, Long, String, Long)]
+      .groupByKey(_._2)
+      .transformWithState(
+        new StatefulProcessor[Long, (java.sql.Timestamp, Long, String, Long), LedgerRowTws] {
+          @transient private var led: org.apache.spark.sql.streaming.MapState[String, TypeAgg] = _
+          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            led = getHandle.getMapState[String, TypeAgg]("led",
+              org.apache.spark.sql.Encoders.STRING,
+              org.apache.spark.sql.Encoders.product[TypeAgg], TTLConfig.NONE)
+            tmr = getHandle.getValueState[Long]("tmr",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          }
+          override def handleInputRows(uid: Long,
+              rows: Iterator[(java.sql.Timestamp, Long, String, Long)],
+              timerValues: TimerValues): Iterator[LedgerRowTws] = {
+            var hi = Long.MinValue
+            rows.foreach { case (ts, _, typ, cents) =>
+              val cur = if (led.containsKey(typ)) led.getValue(typ) else TypeAgg(0L, 0L)
+              led.updateValue(typ, TypeAgg(cur.n + 1L, cur.cents + cents))
+              hi = math.max(hi, ts.getTime)
             }
-            override def handleInputRows(uid: Long,
-                rows: Iterator[(java.sql.Timestamp, Long, String, Long)],
-                timerValues: TimerValues): Iterator[LedgerRowTws] = {
-              var hi = Long.MinValue
-              rows.foreach { case (ts, _, typ, cents) =>
-                val cur = if (led.containsKey(typ)) led.getValue(typ) else TypeAgg(0L, 0L)
-                led.updateValue(typ, TypeAgg(cur.n + 1L, cur.cents + cents))
-                hi = math.max(hi, ts.getTime)
+            if (hi != Long.MinValue) {
+              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
+              val next = math.max(prev, hi + 1L)
+              if (next != prev) {
+                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
+                getHandle.registerTimer(next)
+                tmr.update(next)
               }
-              if (hi != Long.MinValue) {
-                val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-                val next = math.max(prev, hi + 1L)
-                if (next != prev) {
-                  if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                  getHandle.registerTimer(next)
-                  tmr.update(next)
-                }
-              }
-              Iterator.empty
             }
-            override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-                expiredTimerInfo: ExpiredTimerInfo): Iterator[LedgerRowTws] = {
-              val out = led.iterator().map { case (typ, agg) =>
-                LedgerRowTws(uid, typ, agg.n, agg.cents)
-              }.toArray
-              led.clear(); tmr.clear()
-              out.iterator
-            }
-          },
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF())
-        .filter(col("user_id") >= 0L)
-    }
+            Iterator.empty
+          }
+          override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
+              expiredTimerInfo: ExpiredTimerInfo): Iterator[LedgerRowTws] = {
+            val out = led.iterator().map { case (typ, agg) =>
+              LedgerRowTws(uid, typ, agg.n, agg.cents)
+            }.toArray
+            led.clear(); tmr.clear()
+            out.iterator
+          }
+        },
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF(), rocksDb = true)
+      .filter(col("user_id") >= 0L)
   }
 
   /** Streaming KMV distinct-user sketch — the ONLINE half of
@@ -1761,67 +1710,65 @@ object Streaming {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
       TimeMode, TimerValues, TTLConfig}
     val num = (k - 1).toDouble * (1L << 60).toDouble
-    withRocksDb(spark) {
-      replay(spark, dir, in => in
-        .select(col("timestamp"), col("event_type"),
-          graft.functions.TextHash.hash60(col("user_id").cast("string")).as("h"))
-        .withWatermark("timestamp", s"$watermarkMin minutes")
-        .as[(java.sql.Timestamp, String, Long)]
-        .groupByKey(_._2)
-        .transformWithState(
-          new StatefulProcessor[String, (java.sql.Timestamp, String, Long), KmvRow] {
-            @transient private var st: org.apache.spark.sql.streaming.ValueState[KmvState] = _
-            @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-            override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-              st = getHandle.getValueState[KmvState]("kmv",
-                org.apache.spark.sql.Encoders.product[KmvState], TTLConfig.NONE)
-              tmr = getHandle.getValueState[Long]("tmr",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+    replay(spark, dir, in => in
+      .select(col("timestamp"), col("event_type"),
+        graft.functions.TextHash.hash60(col("user_id").cast("string")).as("h"))
+      .withWatermark("timestamp", s"$watermarkMin minutes")
+      .as[(java.sql.Timestamp, String, Long)]
+      .groupByKey(_._2)
+      .transformWithState(
+        new StatefulProcessor[String, (java.sql.Timestamp, String, Long), KmvRow] {
+          @transient private var st: org.apache.spark.sql.streaming.ValueState[KmvState] = _
+          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            st = getHandle.getValueState[KmvState]("kmv",
+              org.apache.spark.sql.Encoders.product[KmvState], TTLConfig.NONE)
+            tmr = getHandle.getValueState[Long]("tmr",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          }
+          override def handleInputRows(typ: String,
+              rows: Iterator[(java.sql.Timestamp, String, Long)],
+              timerValues: TimerValues): Iterator[KmvRow] = {
+            var hi = Long.MinValue
+            val batch = scala.collection.mutable.ArrayBuffer.empty[Long]
+            rows.foreach { case (ts, _, h) =>
+              batch += h; hi = math.max(hi, ts.getTime)
             }
-            override def handleInputRows(typ: String,
-                rows: Iterator[(java.sql.Timestamp, String, Long)],
-                timerValues: TimerValues): Iterator[KmvRow] = {
-              var hi = Long.MinValue
-              val batch = scala.collection.mutable.ArrayBuffer.empty[Long]
-              rows.foreach { case (ts, _, h) =>
-                batch += h; hi = math.max(hi, ts.getTime)
+            val cur = if (st.exists()) st.get() else KmvState(Array.empty, Long.MinValue)
+            // bottom-k merge: distinct ∪ state, k smallest survive —
+            // O((k + batch)·log) per key per batch, state stays ≤ k
+            val merged = (cur.hs ++ batch).distinct.sorted.take(k)
+            st.update(KmvState(merged, math.max(cur.lastSeenMs, hi)))
+            if (hi != Long.MinValue) {
+              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
+              val next = math.max(prev, hi + 1L)
+              if (next != prev) {
+                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
+                getHandle.registerTimer(next)
+                tmr.update(next)
               }
-              val cur = if (st.exists()) st.get() else KmvState(Array.empty, Long.MinValue)
-              // bottom-k merge: distinct ∪ state, k smallest survive —
-              // O((k + batch)·log) per key per batch, state stays ≤ k
-              val merged = (cur.hs ++ batch).distinct.sorted.take(k)
-              st.update(KmvState(merged, math.max(cur.lastSeenMs, hi)))
-              if (hi != Long.MinValue) {
-                val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-                val next = math.max(prev, hi + 1L)
-                if (next != prev) {
-                  if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                  getHandle.registerTimer(next)
-                  tmr.update(next)
-                }
-              }
-              Iterator.empty
             }
-            override def handleExpiredTimer(typ: String, timerValues: TimerValues,
-                expiredTimerInfo: ExpiredTimerInfo): Iterator[KmvRow] = {
-              val out =
-                if (st.exists()) {
-                  val hs = st.get().hs
-                  Iterator.single(KmvRow(typ, hs.length.toLong,
-                    if (hs.length == k) Some(hs.last) else None))
-                } else Iterator.empty
-              st.clear(); tmr.clear()
-              out
-            }
-          },
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF())
-        .filter(col("event_type") =!= "__sentinel__")
-        .select(col("event_type"), col("n_min"), col("kth_hash"),
-          when(col("n_min") === k,
-            graft.functions.Portable.trunc4(lit(num) / col("kth_hash")))
-            .otherwise(col("n_min").cast("double")).as("est"))
-    }
+            Iterator.empty
+          }
+          override def handleExpiredTimer(typ: String, timerValues: TimerValues,
+              expiredTimerInfo: ExpiredTimerInfo): Iterator[KmvRow] = {
+            val out =
+              if (st.exists()) {
+                val hs = st.get().hs
+                Iterator.single(KmvRow(typ, hs.length.toLong,
+                  if (hs.length == k) Some(hs.last) else None))
+              } else Iterator.empty
+            st.clear(); tmr.clear()
+            out
+          }
+        },
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF(), rocksDb = true)
+      .filter(col("event_type") =!= "__sentinel__")
+      .select(col("event_type"), col("n_min"), col("kth_hash"),
+        when(col("n_min") === k,
+          graft.functions.Portable.trunc4(lit(num) / col("kth_hash")))
+          .otherwise(col("n_min").cast("double")).as("est"))
   }
 
   /** Streaming count-min sketch — the ONLINE half of
@@ -1857,74 +1804,72 @@ object Streaming {
     def bucketOf(iCol: org.apache.spark.sql.Column, amtCol: org.apache.spark.sql.Column) =
       pmod(hash60(concat(iCol.cast("string"), lit("|"), amtCol.cast("string"))),
         lit(width.toLong))
-    withRocksDb(spark) {
-      val counters = replay(spark, dir, in => in
-        .select(col("timestamp"), col("event_type"), expr("cents div 100").as("amt"))
-        .withColumn("i", explode(array((0 until depth).map(lit): _*)))
-        .withColumn("bucket",
-          when(col("event_type") === "__sentinel__", lit(-1L))
-            .otherwise(bucketOf(col("i"), col("amt"))))
-        .select(col("timestamp"), col("i"), col("bucket"))
-        .withWatermark("timestamp", s"$watermarkMin minutes")
-        .as[(java.sql.Timestamp, Int, Long)]
-        .groupByKey(r => (r._2, r._3))
-        .transformWithState(
-          new StatefulProcessor[(Int, Long), (java.sql.Timestamp, Int, Long), CmsCell] {
-            @transient private var cnt: org.apache.spark.sql.streaming.ValueState[Long] = _
-            @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-            override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-              cnt = getHandle.getValueState[Long]("cnt",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-              tmr = getHandle.getValueState[Long]("tmr",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+    val counters = replay(spark, dir, in => in
+      .select(col("timestamp"), col("event_type"), expr("cents div 100").as("amt"))
+      .withColumn("i", explode(array((0 until depth).map(lit): _*)))
+      .withColumn("bucket",
+        when(col("event_type") === "__sentinel__", lit(-1L))
+          .otherwise(bucketOf(col("i"), col("amt"))))
+      .select(col("timestamp"), col("i"), col("bucket"))
+      .withWatermark("timestamp", s"$watermarkMin minutes")
+      .as[(java.sql.Timestamp, Int, Long)]
+      .groupByKey(r => (r._2, r._3))
+      .transformWithState(
+        new StatefulProcessor[(Int, Long), (java.sql.Timestamp, Int, Long), CmsCell] {
+          @transient private var cnt: org.apache.spark.sql.streaming.ValueState[Long] = _
+          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            cnt = getHandle.getValueState[Long]("cnt",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+            tmr = getHandle.getValueState[Long]("tmr",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          }
+          override def handleInputRows(key: (Int, Long),
+              rows: Iterator[(java.sql.Timestamp, Int, Long)],
+              timerValues: TimerValues): Iterator[CmsCell] = {
+            var hi = Long.MinValue
+            var add = 0L
+            rows.foreach { case (ts, _, _) =>
+              add += 1L; hi = math.max(hi, ts.getTime)
             }
-            override def handleInputRows(key: (Int, Long),
-                rows: Iterator[(java.sql.Timestamp, Int, Long)],
-                timerValues: TimerValues): Iterator[CmsCell] = {
-              var hi = Long.MinValue
-              var add = 0L
-              rows.foreach { case (ts, _, _) =>
-                add += 1L; hi = math.max(hi, ts.getTime)
+            cnt.update((if (cnt.exists()) cnt.get() else 0L) + add)
+            if (hi != Long.MinValue) {
+              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
+              val next = math.max(prev, hi + 1L)
+              if (next != prev) {
+                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
+                getHandle.registerTimer(next)
+                tmr.update(next)
               }
-              cnt.update((if (cnt.exists()) cnt.get() else 0L) + add)
-              if (hi != Long.MinValue) {
-                val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-                val next = math.max(prev, hi + 1L)
-                if (next != prev) {
-                  if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                  getHandle.registerTimer(next)
-                  tmr.update(next)
-                }
-              }
-              Iterator.empty
             }
-            override def handleExpiredTimer(key: (Int, Long), timerValues: TimerValues,
-                expiredTimerInfo: ExpiredTimerInfo): Iterator[CmsCell] = {
-              val out =
-                if (cnt.exists()) Iterator.single(CmsCell(key._1, key._2, cnt.get()))
-                else Iterator.empty
-              cnt.clear(); tmr.clear()
-              out
-            }
-          },
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF())
-        .filter(col("bucket") >= 0L)
-      // the batch operator's eval harness over the STREAMED counters
-      val exact = graft.Tables.events(spark, dir)
-        .select(floor(col("value")).cast("long").as("amt"))
-        .groupBy(col("amt")).agg(count(lit(1)).as("n"))
-      val probes = exact
-        .withColumn("i", explode(array((0 until depth).map(lit): _*)))
-        .withColumn("bucket", bucketOf(col("i"), col("amt")))
-      val byCount = org.apache.spark.sql.expressions.Window
-        .orderBy(col("n").desc, col("amt"))
-      probes.join(counters, Seq("i", "bucket"))
-        .groupBy(col("amt"), col("n")).agg(min(col("c")).as("est"))
-        .withColumn("rnk", row_number().over(byCount).cast("long"))
-        .filter(col("rnk") <= topN)
-        .select(col("amt"), col("n"), col("est"), col("rnk"))
-    }
+            Iterator.empty
+          }
+          override def handleExpiredTimer(key: (Int, Long), timerValues: TimerValues,
+              expiredTimerInfo: ExpiredTimerInfo): Iterator[CmsCell] = {
+            val out =
+              if (cnt.exists()) Iterator.single(CmsCell(key._1, key._2, cnt.get()))
+              else Iterator.empty
+            cnt.clear(); tmr.clear()
+            out
+          }
+        },
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF(), rocksDb = true)
+      .filter(col("bucket") >= 0L)
+    // the batch operator's eval harness over the STREAMED counters
+    val exact = graft.Tables.events(spark, dir)
+      .select(floor(col("value")).cast("long").as("amt"))
+      .groupBy(col("amt")).agg(count(lit(1)).as("n"))
+    val probes = exact
+      .withColumn("i", explode(array((0 until depth).map(lit): _*)))
+      .withColumn("bucket", bucketOf(col("i"), col("amt")))
+    val byCount = org.apache.spark.sql.expressions.Window
+      .orderBy(col("n").desc, col("amt"))
+    probes.join(counters, Seq("i", "bucket"))
+      .groupBy(col("amt"), col("n")).agg(min(col("c")).as("est"))
+      .withColumn("rnk", row_number().over(byCount).cast("long"))
+      .filter(col("rnk") <= topN)
+      .select(col("amt"), col("n"), col("est"), col("rnk"))
   }
 
   /** Streaming HyperLogLog — the ONLINE half of
@@ -1957,68 +1902,66 @@ object Streaming {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
       TimeMode, TimerValues, TTLConfig}
     val Sk = graft.operators.Sketches
-    withRocksDb(spark) {
-      val regs = replay(spark, dir, in => Sk.hllCells(
-          in.select(col("timestamp"), col("event_type"), explode(array(
-              struct(lit("event_id").as("metric"), col("event_id").cast("string").as("v")),
-              struct(lit("user_id").as("metric"), col("user_id").cast("string").as("v")),
-              struct(lit("event_type").as("metric"), col("event_type").as("v")))).as("r"))
-            .select(col("timestamp"),
-              when(col("event_type") === "__sentinel__", lit("__sentinel__"))
-                .otherwise(col("r.metric")).as("metric"),
-              col("r.v").as("v"))
-            .filter(col("v").isNotNull), m)
-        .select(col("timestamp"), col("metric"), col("reg"), col("rho"))
-        .withWatermark("timestamp", s"$watermarkMin minutes")
-        .as[(java.sql.Timestamp, String, Long, Long)]
-        .groupByKey(r => (r._2, r._3))
-        .transformWithState(
-          new StatefulProcessor[(String, Long), (java.sql.Timestamp, String, Long, Long), HllReg] {
-            @transient private var mx: org.apache.spark.sql.streaming.ValueState[Long] = _
-            @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-            override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-              mx = getHandle.getValueState[Long]("mx",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-              tmr = getHandle.getValueState[Long]("tmr",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+    val regs = replay(spark, dir, in => Sk.hllCells(
+        in.select(col("timestamp"), col("event_type"), explode(array(
+            struct(lit("event_id").as("metric"), col("event_id").cast("string").as("v")),
+            struct(lit("user_id").as("metric"), col("user_id").cast("string").as("v")),
+            struct(lit("event_type").as("metric"), col("event_type").as("v")))).as("r"))
+          .select(col("timestamp"),
+            when(col("event_type") === "__sentinel__", lit("__sentinel__"))
+              .otherwise(col("r.metric")).as("metric"),
+            col("r.v").as("v"))
+          .filter(col("v").isNotNull), m)
+      .select(col("timestamp"), col("metric"), col("reg"), col("rho"))
+      .withWatermark("timestamp", s"$watermarkMin minutes")
+      .as[(java.sql.Timestamp, String, Long, Long)]
+      .groupByKey(r => (r._2, r._3))
+      .transformWithState(
+        new StatefulProcessor[(String, Long), (java.sql.Timestamp, String, Long, Long), HllReg] {
+          @transient private var mx: org.apache.spark.sql.streaming.ValueState[Long] = _
+          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            mx = getHandle.getValueState[Long]("mx",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+            tmr = getHandle.getValueState[Long]("tmr",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          }
+          override def handleInputRows(key: (String, Long),
+              rows: Iterator[(java.sql.Timestamp, String, Long, Long)],
+              timerValues: TimerValues): Iterator[HllReg] = {
+            var hi = Long.MinValue
+            var top = if (mx.exists()) mx.get() else 0L
+            rows.foreach { case (ts, _, _, rho) =>
+              top = math.max(top, rho); hi = math.max(hi, ts.getTime)
             }
-            override def handleInputRows(key: (String, Long),
-                rows: Iterator[(java.sql.Timestamp, String, Long, Long)],
-                timerValues: TimerValues): Iterator[HllReg] = {
-              var hi = Long.MinValue
-              var top = if (mx.exists()) mx.get() else 0L
-              rows.foreach { case (ts, _, _, rho) =>
-                top = math.max(top, rho); hi = math.max(hi, ts.getTime)
+            mx.update(top)
+            if (hi != Long.MinValue) {
+              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
+              val next = math.max(prev, hi + 1L)
+              if (next != prev) {
+                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
+                getHandle.registerTimer(next)
+                tmr.update(next)
               }
-              mx.update(top)
-              if (hi != Long.MinValue) {
-                val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-                val next = math.max(prev, hi + 1L)
-                if (next != prev) {
-                  if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                  getHandle.registerTimer(next)
-                  tmr.update(next)
-                }
-              }
-              Iterator.empty
             }
-            override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
-                expiredTimerInfo: ExpiredTimerInfo): Iterator[HllReg] = {
-              val out =
-                if (mx.exists()) Iterator.single(HllReg(key._1, key._2, mx.get()))
-                else Iterator.empty
-              mx.clear(); tmr.clear()
-              out
-            }
-          },
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF())
-        .filter(col("metric") =!= "__sentinel__")
-      // the batch operator's eval harness over the STREAMED registers
-      val exact = Sk.hllTagged(graft.Tables.events(spark, dir))
-        .groupBy(col("metric")).agg(countDistinct(col("v")).as("n_exact"))
-      Sk.hllEstimate(regs, exact, m)
-    }
+            Iterator.empty
+          }
+          override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
+              expiredTimerInfo: ExpiredTimerInfo): Iterator[HllReg] = {
+            val out =
+              if (mx.exists()) Iterator.single(HllReg(key._1, key._2, mx.get()))
+              else Iterator.empty
+            mx.clear(); tmr.clear()
+            out
+          }
+        },
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF(), rocksDb = true)
+      .filter(col("metric") =!= "__sentinel__")
+    // the batch operator's eval harness over the STREAMED registers
+    val exact = Sk.hllTagged(graft.Tables.events(spark, dir))
+      .groupBy(col("metric")).agg(countDistinct(col("v")).as("n_exact"))
+    Sk.hllEstimate(regs, exact, m)
   }
 
   /** Streaming histogram-quantile sketch — the ONLINE half of
@@ -2048,66 +1991,64 @@ object Streaming {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
       TimeMode, TimerValues, TTLConfig}
     val binWc = math.round(binW * 100) // cents per bin; 64.00 dollars
-    withRocksDb(spark) {
-      val bins = replay(spark, dir, in => in
-        .select(col("timestamp"),
-          when(col("event_type") === "__sentinel__", lit(-1L))
-            .otherwise(expr(s"cents div $binWc")).as("bin"))
-        .withWatermark("timestamp", s"$watermarkMin minutes")
-        .as[(java.sql.Timestamp, Long)]
-        .groupByKey(_._2)
-        .transformWithState(
-          new StatefulProcessor[Long, (java.sql.Timestamp, Long), QBin] {
-            @transient private var cnt: org.apache.spark.sql.streaming.ValueState[Long] = _
-            @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-            override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-              cnt = getHandle.getValueState[Long]("cnt",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-              tmr = getHandle.getValueState[Long]("tmr",
-                org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+    val bins = replay(spark, dir, in => in
+      .select(col("timestamp"),
+        when(col("event_type") === "__sentinel__", lit(-1L))
+          .otherwise(expr(s"cents div $binWc")).as("bin"))
+      .withWatermark("timestamp", s"$watermarkMin minutes")
+      .as[(java.sql.Timestamp, Long)]
+      .groupByKey(_._2)
+      .transformWithState(
+        new StatefulProcessor[Long, (java.sql.Timestamp, Long), QBin] {
+          @transient private var cnt: org.apache.spark.sql.streaming.ValueState[Long] = _
+          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
+          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+            cnt = getHandle.getValueState[Long]("cnt",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+            tmr = getHandle.getValueState[Long]("tmr",
+              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          }
+          override def handleInputRows(bin: Long,
+              rows: Iterator[(java.sql.Timestamp, Long)],
+              timerValues: TimerValues): Iterator[QBin] = {
+            var hi = Long.MinValue
+            var add = 0L
+            rows.foreach { case (ts, _) =>
+              add += 1L; hi = math.max(hi, ts.getTime)
             }
-            override def handleInputRows(bin: Long,
-                rows: Iterator[(java.sql.Timestamp, Long)],
-                timerValues: TimerValues): Iterator[QBin] = {
-              var hi = Long.MinValue
-              var add = 0L
-              rows.foreach { case (ts, _) =>
-                add += 1L; hi = math.max(hi, ts.getTime)
+            cnt.update((if (cnt.exists()) cnt.get() else 0L) + add)
+            if (hi != Long.MinValue) {
+              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
+              val next = math.max(prev, hi + 1L)
+              if (next != prev) {
+                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
+                getHandle.registerTimer(next)
+                tmr.update(next)
               }
-              cnt.update((if (cnt.exists()) cnt.get() else 0L) + add)
-              if (hi != Long.MinValue) {
-                val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-                val next = math.max(prev, hi + 1L)
-                if (next != prev) {
-                  if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                  getHandle.registerTimer(next)
-                  tmr.update(next)
-                }
-              }
-              Iterator.empty
             }
-            override def handleExpiredTimer(bin: Long, timerValues: TimerValues,
-                expiredTimerInfo: ExpiredTimerInfo): Iterator[QBin] = {
-              val out =
-                if (cnt.exists()) Iterator.single(QBin(bin, cnt.get()))
-                else Iterator.empty
-              cnt.clear(); tmr.clear()
-              out
-            }
-          },
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF())
-        .filter(col("bin") >= 0L)
-        // merge the finalized cells per bin before the read-back — the
-        // counter-addition merge (a no-op on this replay's one-row-per-bin
-        // output, so the result is unchanged) and the aggregate the
-        // cumulative window must sit on: quantileFromBins' global window
-        // is only scale-legal over a collapsed (binned) relation, which
-        // the batch sibling gets from its own groupBy and the streamed
-        // read-back must re-establish (ScaleSpec's global-window sweep)
-        .groupBy(col("bin")).agg(sum(col("cnt")).as("cnt"))
-      graft.operators.Sketches.quantileFromBins(bins, qs, binW)
-    }
+            Iterator.empty
+          }
+          override def handleExpiredTimer(bin: Long, timerValues: TimerValues,
+              expiredTimerInfo: ExpiredTimerInfo): Iterator[QBin] = {
+            val out =
+              if (cnt.exists()) Iterator.single(QBin(bin, cnt.get()))
+              else Iterator.empty
+            cnt.clear(); tmr.clear()
+            out
+          }
+        },
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF(), rocksDb = true)
+      .filter(col("bin") >= 0L)
+      // merge the finalized cells per bin before the read-back — the
+      // counter-addition merge (a no-op on this replay's one-row-per-bin
+      // output, so the result is unchanged) and the aggregate the
+      // cumulative window must sit on: quantileFromBins' global window
+      // is only scale-legal over a collapsed (binned) relation, which
+      // the batch sibling gets from its own groupBy and the streamed
+      // read-back must re-establish (ScaleSpec's global-window sweep)
+      .groupBy(col("bin")).agg(sum(col("cnt")).as("cnt"))
+    graft.operators.Sketches.quantileFromBins(bins, qs, binW)
   }
 
   /** The batch AML structuring rule (`q_aml_structuring`) as a LIVE
@@ -2141,9 +2082,16 @@ object Streaming {
     f.delete(); ()
   }
 
-  /** Shared replay corpus: ONE superset-shaped copy of `events` per
-    * sf-dir — (timestamp µs, ts_ms, event_id, user_id, event_type,
-    * cents) — written once and reused by EVERY replay query in the
+  /** The events → replay-shape projection: the superset row (timestamp
+    * µs, ts_ms, event_id, user_id, event_type, cents) every replay
+    * pipeline reads. */
+  private[graft] def replayShape(events: DataFrame): DataFrame =
+    events.select(col("ts").as("timestamp"), col("ts_ms"),
+      col("event_id"), col("user_id"), col("event_type"),
+      floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+
+  /** Shared replay corpus: ONE [[replayShape]]d copy of `events` per
+    * sf-dir, written once and reused by EVERY replay query in the
     * session; the corpus write is the harness's dominant fixed cost,
     * and N streaming gate queries would otherwise each re-land the
     * whole fact table. Sentinel files accumulate in the corpus under
@@ -2159,10 +2107,7 @@ object Streaming {
       scala.collection.concurrent.TrieMap[String, (String, java.sql.Timestamp)]()
     def get(spark: SparkSession, dir: String): (String, java.sql.Timestamp) =
       cache.getOrElseUpdate(dir, {
-        val shaped = graft.Tables.events(spark, dir)
-          .select(col("ts").as("timestamp"), col("ts_ms"),
-            col("event_id"), col("user_id"), col("event_type"),
-            floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+        val shaped = replayShape(graft.Tables.events(spark, dir))
         val maxRow = shaped.agg(max(col("timestamp"))).head
         require(!maxRow.isNullAt(0),
           "replay: events corpus is empty (no event-time maximum)")
@@ -2222,97 +2167,158 @@ object Streaming {
       })
   }
 
-  /** Bounded-replay harness shared by the driver-oracled streaming
-    * queries: run `pipeline` over the shared file-source corpus with
-    * `Trigger.AvailableNow` into an Append parquet sink, in TWO phases
-    * over one checkpoint — phase A's batch sees the data + a far-future
-    * sentinel row (flushes nothing: the initial watermark is epoch 0)
-    * and leaves the watermark past every real window; then sentinel #2
-    * is added and the query RESTARTS from the checkpoint, so phase B's
-    * batch sees exactly the new file and emits every finalized window.
-    * Checkpointed offsets carry the watermark across the restart — the
-    * exactly-once recovery path (StreamingSpec pins it for the sink),
-    * reused here so correctness never leans on the engine's OPTIONAL
-    * no-data flush batch, file modification-time ordering, or
-    * per-trigger file limits. Sentinels are superset rows (user −1,
-    * event_id −i, type "__sentinel__", cents mid-band for
-    * [[streamFlags]]' pushdown reasoning) at maxTs + i·2 days. The
-    * per-run checkpoint/sink tree is deleted after the result is
-    * eagerly materialized; the corpus persists for the next query. */
-  /** Pinned state-layout width for the bounded replays (the
-    * `spark.sql.shuffle.partitions` each replay sets for its own
-    * checkpoint and restores after). Stateful micro-batches pay a
-    * per-PARTITION state-store commit every batch independent of row
-    * count, so this is sized to the BOUNDED gate corpus's state volume,
-    * not to the host's core count — a production deployment sizes it to
-    * its cluster via this knob (`GRAFT_REPLAY_PARTITIONS`). Default
-    * measured at sf0.1, min-of-3 per config (OPTIMIZATION_r11.md):
-    * the stream-stream join family read 12.5 s at 32 partitions (r9),
-    * 7.1 s at 8, and this round 4.6/6.0 s at 8 vs 3.8/5.2 s at 4 vs
-    * 4.4/5.5 s at 2 (pairs_outer/asof) — 4 is the commit-cost floor
-    * before task-parallelism loss takes over. */
-  private[graft] def replayPartitions: Int =
-    sys.env.get("GRAFT_REPLAY_PARTITIONS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(4)
+  /** Pinned state-layout width (`spark.sql.shuffle.partitions`) for
+    * the stateful bounded replays and the probes that measure them.
+    * Stateful micro-batches pay a per-PARTITION state-store commit
+    * every batch independent of row count, so this is sized to the
+    * BOUNDED gate corpus's state volume, not to the host's core count;
+    * the checkpoint fixes it per query anyway, so the pin also makes
+    * the replay layout host-independent (scan parallelism is
+    * file-split-driven and unaffected). Measured at sf0.1, min-of-3 per
+    * config (OPTIMIZATION_r11.md): the stream-stream join family read
+    * 12.5 s at 32 partitions (r9), 7.1 s at 8, and 4.6/6.0 s at 8 vs
+    * 3.8/5.2 s at 4 vs 4.4/5.5 s at 2 (pairs_outer/asof) — 4 is the
+    * commit-cost floor before task-parallelism loss takes over. */
+  private[graft] val ReplayPartitions = 4
 
-  private def replay(spark: SparkSession, dir: String,
-      pipeline: DataFrame => DataFrame): DataFrame = {
-    import java.nio.file.Files
-    import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    // Stateful micro-batches pay a per-PARTITION state-store commit
-    // every batch, independent of row count — at 32 shuffle partitions
-    // that fixed cost dominates the bounded replay (measured at sf0.1,
-    // local[32]: stream-stream join 12.5 s at 32 partitions → 7.1 s at
-    // 8; windowed agg 5.7 → 4.6 s). Pin the replay's state layout to 8
-    // partitions (scan parallelism is file-split-driven and unaffected)
-    // and restore the session value after. A real deployment sizes
-    // this to its cluster; the checkpoint fixes it per query anyway,
-    // so the pin also makes the replay layout host-independent.
-    val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", replayPartitions.toString)
-    try replayWith(spark, dir, pipeline)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevSp)
+  /** State-store provider pins: RocksDB (which `transformWithState`
+    * requires) with changelog checkpointing — each batch commits its
+    * changelog instead of a full snapshot zip per partition, a pure
+    * checkpoint-format choice (state contents and results are
+    * byte-identical; snapshots still happen in background maintenance)
+    * — or the default HDFS-backed store. */
+  private[graft] def stateStoreConf(rocksDb: Boolean): Seq[(String, Option[String])] = {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    if (!rocksDb) Seq(provider -> None)
+    else Seq(provider ->
+      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> Some("true"))
   }
 
-  private def replayWith(spark: SparkSession, dir: String,
-      pipeline: DataFrame => DataFrame): DataFrame = {
+  /** Runs `body` with `overrides` on the session conf (None = unset)
+    * and restores the prior explicit settings after, also on failure.
+    * A streaming query runs on the session clone it takes in
+    * `start()`, so wrapping just the start pins the stream without the
+    * override staying on the session while its batches run. */
+  private[graft] def withConf[T](spark: SparkSession,
+      overrides: Seq[(String, Option[String])])(body: => T): T = {
+    def put(kv: (String, Option[String])): Unit =
+      kv._2.fold(spark.conf.unset(kv._1))(spark.conf.set(kv._1, _))
+    val prior = spark.conf.getAll
+    overrides.foreach(put)
+    try body finally overrides.foreach { case (k, _) => put(k -> prior.get(k)) }
+  }
+
+  /** Where a bounded replay's micro-batches go. */
+  private[graft] sealed trait ReplaySink
+  /** Append-mode parquet files in the run's output directory. */
+  private[graft] case object ParquetSink extends ReplaySink
+  /** Discarded output (Append-mode `noop`) — measurement runs. */
+  private[graft] case object NoopSink extends ReplaySink
+  /** `foreachBatch` in `mode`; `write(outDir)` is the batch function,
+    * free to lay the run's output directory out as it likes. */
+  private[graft] final case class BatchSink(mode: OutputMode,
+      write: String => (DataFrame, Long) => Unit) extends ReplaySink
+
+  /** How a bounded replay drains its input. */
+  private[graft] sealed trait ReplayPhases
+  /** One `AvailableNow` drain of whatever the input holds. */
+  private[graft] case object SingleDrain extends ReplayPhases
+  /** The two-phase flush over `sfDir`'s [[ReplayCorpus]], for
+    * watermarked Append pipelines: Append mode only emits a window once
+    * the watermark passes its end, and the watermark available to batch
+    * N is computed from data seen through batch N−1. Phase A's batch
+    * sees the data + a far-future sentinel row (flushes nothing: the
+    * initial watermark is epoch 0) and leaves the watermark past every
+    * real window; then sentinel #2 is added and the query RESTARTS from
+    * the checkpoint, so phase B's batch sees exactly the new file and
+    * emits every finalized window. Checkpointed offsets carry the
+    * watermark across the restart — the exactly-once recovery path
+    * (StreamingSpec pins it for the sink), reused here so correctness
+    * never leans on the engine's OPTIONAL no-data flush batch, file
+    * modification-time ordering, or per-trigger file limits. Sentinels
+    * are superset rows (user −1, event_id −i, type "__sentinel__",
+    * cents mid-band for [[streamFlags]]' pushdown reasoning) at
+    * maxTs + i·2 days; they stay in the corpus (see [[ReplayCorpus]]). */
+  private[graft] final case class SentinelFlush(sfDir: String) extends ReplayPhases
+
+  /** A finished bounded run, handed to the read-back before the
+    * driver removes its temp tree: the output directory, the
+    * pipeline's output schema, and every batch's progress. */
+  private[graft] final case class ReplayRun(out: String,
+      schema: org.apache.spark.sql.types.StructType,
+      progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
+
+  /** The bounded-replay driver every file replay runs through: the
+    * parquet files in `inDir` (at most `maxFilesPerTrigger` per
+    * micro-batch) → `pipeline` → `sink`, drained with
+    * `Trigger.AvailableNow` over one checkpoint in a fresh temp tree,
+    * then `readBack` over the finished run. `pinPartitions` pins
+    * [[ReplayPartitions]] and `rocksDb` the [[stateStoreConf]] — both
+    * applied only around each `start()` ([[withConf]]), so the
+    * session's own conf is untouched while batches run. The temp tree
+    * is removed after the read-back, also when a batch or the
+    * read-back fails; a read-back that outlives it must materialize
+    * (`localCheckpoint`). */
+  private[graft] def driveReplay[T](spark: SparkSession, inDir: String,
+      pipeline: DataFrame => DataFrame, sink: ReplaySink,
+      maxFilesPerTrigger: Option[Int] = None, phases: ReplayPhases = SingleDrain,
+      pinPartitions: Boolean = false, rocksDb: Option[Boolean] = None)(
+      readBack: ReplayRun => T): T = {
     import java.nio.file.Files
     import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    val (inDir, maxTs) = ReplayCorpus.get(spark, dir)
-    val schema = spark.read.parquet(inDir).schema
-    val uid = java.util.UUID.randomUUID().toString.take(8)
+    val inSchema = spark.read.parquet(inDir).schema
+    val pins = (if (pinPartitions)
+        Seq("spark.sql.shuffle.partitions" -> Some(ReplayPartitions.toString))
+      else Nil) ++ rocksDb.toSeq.flatMap(stateStoreConf)
     val root = Files.createTempDirectory("graft-replay-run")
-    val outDir = s"$root/out"
-    def addSentinel(i: Int): Unit = {
-      // content staged once per (dir, phase) — see ReplayCorpus.sentinelFile;
-      // only the NAME must be fresh per query for the file source
-      Files.copy(ReplayCorpus.sentinelFile(spark, dir, i, maxTs),
-        new java.io.File(inDir, s"zz-sentinel-$uid-$i.parquet").toPath)
-      ()
-    }
-    def drain(): Unit = {
-      val q = pipeline(spark.readStream.schema(schema).parquet(inDir))
-        .writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", s"$root/ck")
-        .outputMode(OutputMode.Append())
+    val out = s"$root/out"
+    val progress = Seq.newBuilder[org.apache.spark.sql.streaming.StreamingQueryProgress]
+    def drain(): org.apache.spark.sql.types.StructType = {
+      val src = spark.readStream.schema(inSchema)
+      val df = pipeline(maxFilesPerTrigger.fold(src)(src.option("maxFilesPerTrigger", _))
+        .parquet(inDir))
+      val w = df.writeStream.option("checkpointLocation", s"$root/ck")
         .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val q = withConf(spark, pins)((sink match {
+        case ParquetSink => w.format("parquet").option("path", out)
+          .outputMode(OutputMode.Append())
+        case NoopSink => w.format("noop").outputMode(OutputMode.Append())
+        case BatchSink(mode, write) => w.outputMode(mode).foreachBatch(write(out))
+      }).start())
+      try q.awaitTermination() finally q.stop()
+      progress ++= q.recentProgress
+      df.schema
     }
-    addSentinel(1)
-    drain() // phase A: data + sentinel #1 → watermark past every real window
-    addSentinel(2)
-    drain() // phase B: sentinel #2's batch emits all finalized state
-    val outSchema = pipeline(
-      spark.readStream.schema(schema).parquet(inDir)).schema
-    val result = spark.read.schema(outSchema).parquet(outDir)
-      .localCheckpoint(true) // materialize before the temp tree goes away
-    rmTree(new java.io.File(root.toString))
-    result
+    try {
+      val schema = phases match {
+        case SingleDrain => drain()
+        case SentinelFlush(sfDir) =>
+          val maxTs = ReplayCorpus.get(spark, sfDir)._2
+          val uid = java.util.UUID.randomUUID().toString.take(8)
+          (1 to 2).map { i =>
+            // content staged once per (dir, phase) — see
+            // ReplayCorpus.sentinelFile; only the NAME must be fresh per
+            // query for the file source
+            Files.copy(ReplayCorpus.sentinelFile(spark, sfDir, i, maxTs),
+              new java.io.File(inDir, s"zz-sentinel-$uid-$i.parquet").toPath)
+            drain()
+          }.last
+      }
+      readBack(ReplayRun(out, schema, progress.result()))
+    } finally rmTree(root.toFile)
   }
+
+  /** The driver-oracled replay: `pipeline` over `dir`'s
+    * [[ReplayCorpus]] through the [[SentinelFlush]] into an Append
+    * parquet sink at the pinned state layout, read back materialized. */
+  private def replay(spark: SparkSession, dir: String,
+      pipeline: DataFrame => DataFrame, rocksDb: Boolean = false): DataFrame =
+    driveReplay(spark, ReplayCorpus.get(spark, dir)._1, pipeline, ParquetSink,
+      phases = SentinelFlush(dir), pinPartitions = true,
+      rocksDb = Option.when(rocksDb)(true)) { run =>
+      spark.read.schema(run.schema).parquet(run.out).localCheckpoint(true)
+    }
 
   /** Streaming ingestion decontamination — the ONLINE half of
     * [[graft.operators.Similarity.simDecontam]]: candidate training
@@ -2341,16 +2347,12 @@ object Streaming {
     * state: none. */
   def streamDecontam(spark: SparkSession, dir: String,
       threshold: Double = 0.4): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.expressions.Window
     val Sim = graft.operators.Similarity
     // everything below sits under one try/finally: a failing stream or
-    // read-back must still unpersist the pinned index and remove the
-    // temp tree (round-9 advice — only the shuffle-partition restore
-    // was cleanup-safe before)
+    // read-back must still unpersist the pinned index (round-9 advice)
     val v = Sim.withEmbD(graft.Tables.embeddings(spark, dir)).persist()
     var capped: DataFrame = null
-    val root = java.nio.file.Files.createTempDirectory("graft-sdc")
     try {
       val tr = v.filter(pmod(col("vec_id"), lit(7L)) =!= 0)
       val cents = Sim.trainedCentroids(tr).localCheckpoint(true) // ≤ NList rows
@@ -2376,40 +2378,29 @@ object Streaming {
       // batch boundaries don't affect the (stateless) result; slicing is
       // only there to exercise real multi-batch execution — the staged
       // slice is shared with streamIvfIncr ([[HoldoutCorpus]])
-      val inDir = HoldoutCorpus.get(spark, dir); val outDir = s"$root/out"
-      val inSchema = spark.read.parquet(inDir).schema
-      // Stateless pipeline — the replayPartitions state-commit pin never
+      // Stateless pipeline — the ReplayPartitions state-commit pin never
       // applied here (r12: removed; the broadcast probe join leaves no
       // session-width exchange in the batch plan). A per-micro-batch
       // repartition to spread the probe compute was A/B-measured SLOWER
       // at sf0.1 (4.81 → 5.34 s warm min-of-3: four extra exchanges buy
       // nothing when each batch is thousands of rows); at 100 TB the
       // scan itself has thousands of splits and needs no spread.
-      val q = spark.readStream.schema(inSchema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir)
-        .select(col("vec_id").as("q_id"), col("e").as("qe"),
-          explode(probedLists(col("e"))).as("p"))
-        .select(col("q_id"), col("qe"), (-col("p.ncid")).as("list_id"))
-        .join(capped, Seq("list_id"))
-        .select(col("q_id"), col("train_id").as("train_match"),
-          graft.functions.Portable.trunc4(
-            graft.functions.NativeVector.cosine(col("qe"), col("te"))).as("cos"))
-        .filter(col("cos") >= threshold)
-        .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", s"$root/ck")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("q_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("train_match", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cos", org.apache.spark.sql.types.DoubleType)))
-      spark.read.schema(outSchema).parquet(outDir)
-        .localCheckpoint(true) // flagged pairs ≪ corpus
+      driveReplay(spark, HoldoutCorpus.get(spark, dir), in => in
+          .select(col("vec_id").as("q_id"), col("e").as("qe"),
+            explode(probedLists(col("e"))).as("p"))
+          .select(col("q_id"), col("qe"), (-col("p.ncid")).as("list_id"))
+          .join(capped, Seq("list_id"))
+          .select(col("q_id"), col("train_id").as("train_match"),
+            graft.functions.Portable.trunc4(
+              graft.functions.NativeVector.cosine(col("qe"), col("te"))).as("cos"))
+          .filter(col("cos") >= threshold),
+        ParquetSink, maxFilesPerTrigger = Some(1)) { run =>
+        spark.read.schema(run.schema).parquet(run.out)
+          .localCheckpoint(true) // flagged pairs ≪ corpus
+      }
     } finally {
       if (capped != null) capped.unpersist()
       v.unpersist()
-      rmTree(new java.io.File(root.toString))
     }
   }
 
@@ -2435,16 +2426,16 @@ object Streaming {
       .select(col("user_id").as("d_user"), col("status"),
         col("valid_from"), col("valid_to"))
       .persist()
-    dim.count() // pin the dimension before micro-batches start
-    val result = replay(spark, dir, in => in
-      .filter(col("event_type") === "purchase")
-      .join(dim, col("user_id") === col("d_user") &&
-        col("ts_ms") >= col("valid_from") &&
-        (col("valid_to").isNull || col("ts_ms") < col("valid_to")))
-      .select(col("event_id"), col("user_id"), col("ts_ms"),
-        col("status"), col("cents")))
-    dim.unpersist()
-    result
+    try {
+      dim.count() // pin the dimension before micro-batches start
+      replay(spark, dir, in => in
+        .filter(col("event_type") === "purchase")
+        .join(dim, col("user_id") === col("d_user") &&
+          col("ts_ms") >= col("valid_from") &&
+          (col("valid_to").isNull || col("ts_ms") < col("valid_to")))
+        .select(col("event_id"), col("user_id"), col("ts_ms"),
+          col("status"), col("cents")))
+    } finally dim.unpersist()
   }
 
   /** Online IVF index maintenance — the streaming half of
@@ -2479,11 +2470,8 @@ object Streaming {
       moveFrac: Double = 0.25, minAdds: Long = 3L,
       onProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit
         = _ => ()): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val Sim = graft.operators.Similarity
     val v = Sim.withEmbD(graft.Tables.embeddings(spark, dir)).persist()
-    val root = java.nio.file.Files.createTempDirectory("graft-sii")
-    val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val tr = v.filter(pmod(col("vec_id"), lit(7L)) =!= 0)
       val frozen = Sim.trainedCentroids(tr).localCheckpoint(true) // ≤ NList rows
@@ -2504,17 +2492,13 @@ object Streaming {
       // batch boundaries don't affect the final ledger; slicing only
       // exercises real multi-batch accumulation through state — the
       // staged slice is shared with streamDecontam ([[HoldoutCorpus]])
-      val inDir = HoldoutCorpus.get(spark, dir); val snapDir = s"$root/snap"
-      val inSchema = spark.read.parquet(inDir).schema
-      spark.conf.set("spark.sql.shuffle.partitions", replayPartitions.toString)
       // The pin sizes the ≤ NList-group STATE layout; the heavy work is
       // the 2·NList literal cosines per row, which would otherwise run
       // inside the 1-file-per-trigger scan stage — ONE task per batch.
       // Spread each micro-batch first (r12, guide §2): the assignment +
       // map-side partial agg then run cluster-wide, and only ≤ NList
       // partial rows per partition reach the pinned state exchange.
-      val ledger = spark.readStream.schema(inSchema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+      driveReplay(spark, HoldoutCorpus.get(spark, dir), in => in
         .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
         .select(assignLit(col("e"), fl).as("list_id"),
           assignLit(col("e"), rl).as("retrained_list"))
@@ -2528,23 +2512,15 @@ object Streaming {
           (col("n_added") >= minAdds &&
             graft.functions.Portable.trunc4(
               col("n_would_move").cast("double") / col("n_added")) >= moveFrac)
-            .as("retrain"))
-      val q = ledger.writeStream
-        .outputMode(OutputMode.Complete())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(snapDir) // compacted ledger snapshot
-        }
-        .option("checkpointLocation", s"$root/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      onProgress(q.recentProgress.toSeq)
-      spark.read.parquet(snapDir)
-        .localCheckpoint(true) // ≤ NList rows; materialize before rmTree
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevSp)
-      v.unpersist()
-      rmTree(new java.io.File(root.toString))
-    }
+            .as("retrain")),
+        BatchSink(OutputMode.Complete(), snap => (df, _) =>
+          df.write.mode("overwrite").parquet(snap)), // compacted ledger snapshot
+        maxFilesPerTrigger = Some(1), pinPartitions = true) { run =>
+        onProgress(run.progress)
+        spark.read.parquet(run.out)
+          .localCheckpoint(true) // ≤ NList rows; materialize before rmTree
+      }
+    } finally v.unpersist()
   }
 
   /** Streaming event-time AS-OF enrichment — Flink's event-time
@@ -2615,7 +2591,6 @@ object Streaming {
       threshold: Double = 0.5,
       onProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit
         = _ => ()): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val D = graft.operators.Dedup
     val docs = graft.Tables.documents(spark, dir)
     val registry = D.incrRegistryOf(docs).persist() // verify arm re-shingles candidates
@@ -2623,42 +2598,36 @@ object Streaming {
     val root = java.nio.file.Files.createTempDirectory("graft-snd")
     try {
       regBands.count() // pin the LSH index BEFORE micro-batches start
-      val inDir = s"$root/in"; val outDir = s"$root/out"
+      val inDir = s"$root/in"
       // batch boundaries don't affect the (stateless) result; slicing is
       // only there to exercise real multi-batch execution
       D.incrBatchOf(docs).repartition(4).write.parquet(inDir)
-      val inSchema = spark.read.parquet(inDir).schema
-      // NO replayPartitions pin here (r12): that pin exists to bound
+      // NO ReplayPartitions pin here (r12): that pin exists to bound
       // PER-PARTITION STATE-STORE COMMITS, and this foreachBatch probe is
       // stateless — no state store ever commits. Pinning it to 4 only
       // narrowed the probe's candidate/verify joins (the CPU-heavy exact-
       // Jaccard arm) to 4 tasks per micro-batch; the r11 board's 5.2→8.1 s
       // regression tracked exactly that change. The probe runs at the
       // session's shuffle width like every other stateless batch join.
-      val q = spark.readStream.schema(inSchema).option("maxFilesPerTrigger", 1)
-        .parquet(inDir)
-        .writeStream
-        // idempotent per micro-batch (ADVICE r10): foreachBatch is
-        // at-least-once — a batch retried from the checkpoint after a
-        // partial/full write would DUPLICATE flagged pairs under a plain
-        // append sink, breaking dedup semantics on that run. Each batch
-        // owns a batchId-named subdirectory written in overwrite mode, so
-        // a retry replaces its own output instead of appending beside it.
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          D.probeRegistry(registry, regBands, b, threshold)
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        }
-        .option("checkpointLocation", s"$root/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      onProgress(q.recentProgress.toSeq)
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("reg_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType)))
-      spark.read.schema(outSchema).option("recursiveFileLookup", "true")
-        .parquet(outDir)
-        .localCheckpoint(true) // flagged pairs ≪ corpus; materialize before rmTree
+      // idempotent per micro-batch (ADVICE r10): foreachBatch is
+      // at-least-once — a batch retried from the checkpoint after a
+      // partial/full write would DUPLICATE flagged pairs under a plain
+      // append sink, breaking dedup semantics on that run. Each batch
+      // owns a batchId-named subdirectory written in overwrite mode, so
+      // a retry replaces its own output instead of appending beside it.
+      driveReplay(spark, inDir, identity, BatchSink(OutputMode.Append(),
+          out => (b, batchId) => D.probeRegistry(registry, regBands, b, threshold)
+            .write.mode("overwrite").parquet(s"$out/b$batchId")),
+        maxFilesPerTrigger = Some(1)) { run =>
+        onProgress(run.progress)
+        val outSchema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("reg_id", org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType)))
+        spark.read.schema(outSchema).option("recursiveFileLookup", "true")
+          .parquet(run.out)
+          .localCheckpoint(true) // flagged pairs ≪ corpus; materialize before rmTree
+      }
     } finally {
       regBands.unpersist(); registry.unpersist()
       rmTree(new java.io.File(root.toString))

@@ -186,7 +186,6 @@ class OperatorsSpec extends SparkSpec {
       assert(hit.get.getAs[Double]("jaccard") > 0.5)
     }
     // the EXACT incremental path cannot see any of them (content differs)
-    import spark.implicits._
     val perturbed = docsDF.select((col("doc_id") + co).as("doc_id"),
       concat(lit("xq"), col("doc_id"),
         expr("substring(text, instr(text, ' '))")).as("text"))
@@ -528,7 +527,6 @@ class OperatorsSpec extends SparkSpec {
     assert(p2quiet.toSet === Set("q_1", "q_2", "q_3", "q_4", "q_5"))
     assert(p2quiet.head === "q_5") // slowest-first within the batch
     // storm: pass-1 reruns collapse >2x → ALL leftovers rerun even past the cap
-    val stormP1 = p1names.map(n => n -> 0.8).toMap
     val bigRes = (1 to 40).map(i => s"q_$i" -> (3.0 + i))
     val bigP1names = Bench.rerunCandidates(bigRes, floors)
     val bigStormP1 = bigP1names.map(n => n -> 0.9).toMap
@@ -2392,7 +2390,6 @@ class OperatorsSpec extends SparkSpec {
     val toks = docs.collect().map(r =>
       r.getAs[Long]("doc_id") -> r.getAs[String]("text").split(" ").toSeq).toMap
     val nd = toks.size
-    val avg = toks.values.map(_.size).sum.toDouble / nd
     val dfm = toks.values.flatMap(_.distinct).groupBy(identity).map { case (t, xs) => t -> xs.size }
     // top-2 df terms, ties by token asc
     val q = dfm.toSeq.sortBy { case (t, d) => (-d, t) }.take(2)

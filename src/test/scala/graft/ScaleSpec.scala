@@ -350,7 +350,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("AQE splits the skewed partition of a skewed join (skew=true)") {
-    import spark.implicits._
     // 95% of the left rows share key 0 → one reducer would take ~all of
     // the join. With skew-join thresholds scaled to the test's data
     // volume, AQE must split that partition at runtime.
@@ -813,7 +812,6 @@ class ScaleSpec extends SparkSpec {
     //  (c) offsettingPairs keys on (user, cents, bucket), so the hot
     //      user's candidate pairs stay bounded by per-cell sizes, far
     //      below the hotN² a user-only pair join would materialize.
-    import org.apache.spark.sql.functions.{count => cnt}
     val hot = 424242L
     val ev = Tables.events(spark, "/root/testdata/sf0.01")
       .withColumn("user_id",

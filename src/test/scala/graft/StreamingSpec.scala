@@ -478,6 +478,71 @@ class StreamingSpec extends SparkSpec {
     assert(rps > 0.0)
   }
 
+  /** Runs `body` over a fresh 3-file parquet input (one micro-batch per
+    * file at maxFilesPerTrigger = 1), removed after. */
+  private def withThreeFileInput[T](body: String => T): T = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-drive-in")
+    try {
+      (0L until 3L).toDF("x").repartition(3).write.parquet(s"$root/in")
+      body(s"$root/in")
+    } finally Streaming.rmTree(root.toFile)
+  }
+
+  test("driveReplay: a failing batch propagates and leaks no temp dir, conf or cache") {
+    withThreeFileInput { in =>
+      val conf0 = spark.conf.getAll
+      val cached0 = org.apache.spark.sql.CachedRelations.count(spark)
+      // the run's temp tree, seen from inside (other forked suites share
+      // java.io.tmpdir, so a before/after listing of it would race them)
+      @volatile var runRoot: java.io.File = null
+      val failing = Streaming.BatchSink(OutputMode.Append(), out => (_, batchId) => {
+        runRoot = new java.io.File(out).getParentFile
+        if (batchId == 1L) throw new IllegalStateException("injected batch-1 failure")
+      })
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Streaming.driveReplay(spark, in, identity, failing, maxFilesPerTrigger = Some(1),
+          pinPartitions = true, rocksDb = Some(true))(_ => ())
+      }
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("injected batch-1")),
+        s"injected failure not propagated: $err")
+      assert(runRoot.getName.startsWith("graft-") &&
+        runRoot.getParentFile == new java.io.File(System.getProperty("java.io.tmpdir")))
+      assert(!runRoot.exists(), s"driver left its temp tree $runRoot behind")
+      assert(spark.conf.getAll === conf0, "driver left a conf override behind")
+      assert(org.apache.spark.sql.CachedRelations.count(spark) === cached0,
+        "driver left a cached relation behind")
+    }
+  }
+
+  test("driveReplay pins conf on the stream's session only, never the caller's") {
+    val sp = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    withThreeFileInput { in =>
+      // the caller's width differs from the pin, so a leak would show
+      Streaming.withConf(spark, Seq(sp -> Some("3"))) {
+        val batches = Streaming.driveReplay(spark, in, identity,
+          Streaming.BatchSink(OutputMode.Append(), _ => (b, _) => {
+            seen.add((spark.conf.get(sp), b.sparkSession.conf.get(sp),
+              b.sparkSession.conf.get(provider)))
+            ()
+          }), maxFilesPerTrigger = Some(1), pinPartitions = true,
+          rocksDb = Some(true))(_.progress.size)
+        assert(batches === 3) // one per file, all handed back
+        assert(spark.conf.get(sp) === "3")
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.size === 3)
+    assert(seen.asScala.toSeq.map(_._1).distinct === Seq("3"),
+      "the caller's session carried the pin while batches ran")
+    assert(seen.asScala.toSeq.map(t => (t._2, t._3)).distinct === Seq(
+      (Streaming.ReplayPartitions.toString,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")))
+  }
+
   test("stream-stream join: debit matches in-window same-user credits only") {
     import spark.implicits._
     val in = MemoryStream[Transaction](spark)
@@ -622,7 +687,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamBurst: the streaming z-gate equals the batch detector row-for-row") {
-    import org.apache.spark.sql.functions._
     val got = Streaming.streamBurst(spark, sf)
     val batch = graft.operators.Monitoring.burstDetect(Tables.events(spark, sf))
     assert(got.exceptAll(batch).count() === 0)
@@ -877,7 +941,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamCms: streamed counters reconstruct the batch sketch row-for-row; state O(depth*width), not O(distinct amounts)") {
-    import org.apache.spark.sql.functions._
     val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
     val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
@@ -912,7 +975,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamHll: streamed registers reconstruct the batch sketch row-for-row; state O(metrics*m), not O(distinct ids)") {
-    import org.apache.spark.sql.functions._
     val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
     val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
@@ -1272,13 +1334,8 @@ class StreamingSpec extends SparkSpec {
     // the corpus and a DOUBLED corpus (same density, 2x history — the
     // ScaleUp contract: +35-day shift, fresh keys). If state were
     // O(stream), peak would double; bounded state plateaus.
-    import org.apache.spark.sql.streaming.Trigger
-    import java.nio.file.Files
     val sfDir = "/root/testdata/sf0.01" // 10k events / 30 days: real slices
-    val shaped = Tables.events(spark, sfDir)
-      .select(col("ts").as("timestamp"), col("ts_ms"), col("event_id"),
-        col("user_id"), col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    val shaped = Streaming.replayShape(Tables.events(spark, sfDir))
     val doubled = shaped.unionByName(shaped
       .withColumn("ts_ms", col("ts_ms") + 35L * 86400000L)
       .withColumn("timestamp", org.apache.spark.sql.functions
@@ -1286,51 +1343,21 @@ class StreamingSpec extends SparkSpec {
       .withColumn("event_id", col("event_id") + 10000000L)
       .withColumn("user_id", col("user_id") + 10000000L))
     val sliceMs = 2L * 86400000L
-    def writeSliced(df: org.apache.spark.sql.DataFrame, tag: String): String = {
-      val dir = Files.createTempDirectory(s"graft-sb-$tag").toString
-      val bounds = df.agg(org.apache.spark.sql.functions.min(col("ts_ms")),
-        org.apache.spark.sql.functions.max(col("ts_ms"))).head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val n = ((hi - lo) / sliceMs + 1).toInt
-      for (i <- 0 until n) {
-        val scratch = s"$dir/tmp$i"
-        df.filter(col("ts_ms") >= lo + i * sliceMs &&
-            col("ts_ms") < lo + (i + 1) * sliceMs)
-          .coalesce(1).write.parquet(scratch)
-        val part = new java.io.File(scratch).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(dir, f"slice-$i%03d.parquet")
-        Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(1700000000000L + i * 60000L) // deterministic batch order
-        graft.streaming.Streaming.rmTree(new java.io.File(scratch))
-      }
-      dir
-    }
-    val dirA = writeSliced(shaped, "a")
-    val dirB = writeSliced(doubled, "b")
+    val (dirA, _) = StreamStateProbe.writeSliced(shaped, sliceMs)
+    val (dirB, _) = StreamStateProbe.writeSliced(doubled, sliceMs)
     case class Peak(input: Long, rows: Long, bytes: Long, batches: Int)
     def probe(dir: String, pipeline: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): Peak = {
-      val schema = spark.read.parquet(s"$dir/slice-000.parquet").schema
-      val ck = Files.createTempDirectory("graft-sb-ck").toString
-      val q = pipeline(spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir))
-        .writeStream.format("noop").outputMode(OutputMode.Append())
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val ps = q.recentProgress.toSeq
-      Peak(ps.map(_.numInputRows).sum,
-        ps.map(p => p.stateOperators.map(_.numRowsTotal).sum).max,
-        ps.map(p => p.stateOperators.map(_.memoryUsedBytes).sum).max,
-        ps.count(_.numInputRows > 0))
+      val ps = StreamStateProbe.replaySliced(spark, dir, pipeline)
+      val (rows, bytes) = StreamStateProbe.peakState(ps)
+      Peak(ps.map(_.numInputRows).sum, rows, bytes, ps.count(_.numInputRows > 0))
     }
     val farFuture = new Timestamp(4102444800000L) // 2100: probe adds no sentinels
     val pipes = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
       "pairs_outer" -> Streaming.pairsOuterPipeline(10L, 60L, farFuture),
       "sessions" -> Streaming.sessionsPipeline(10L, 30L),
       "dedup" -> Streaming.dedupPipeline(10L, 5L))
-    for ((name, pipe) <- pipes) {
+    try for ((name, pipe) <- pipes) {
       val a = probe(dirA, pipe)
       val b = probe(dirB, pipe)
       info(f"$name: input ${a.input}->${b.input}, peak state rows " +
@@ -1344,7 +1371,7 @@ class StreamingSpec extends SparkSpec {
       // and the peak is a fraction of the stream even on corpus A
       assert(a.rows <= a.input / 2,
         s"$name: peak state ${a.rows} vs input ${a.input} — never evicted?")
-    }
+    } finally Seq(dirA, dirB).foreach(d => Streaming.rmTree(new java.io.File(d)))
   }
 
   test("kafkaShapedIngest parses raw JSON values against the wire schema") {
@@ -1433,7 +1460,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streamDecontam flags exactly the batch operator's scored pairs (stateless micro-batch parity)") {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{broadcast, row_number, count => fcount, min => fmin, max => fmax}
+    import org.apache.spark.sql.functions.{broadcast, row_number}
     val Sim = graft.operators.Similarity
     // batch reference: the SAME scored-pair chain the streaming probe
     // literalizes — split, capped index, windowed top-NProbe probe
