@@ -47,7 +47,7 @@ object StreamBench {
       watermark = "10 seconds", window_ = "5 seconds")
     // the store is pinned for this query only — measures the default
     // store even when the session opts into RocksDB
-    val q = Streaming.withConf(spark, Streaming.stateStoreConf(rocksDb))(
+    val q = Scope.withConf(spark, Streaming.stateStoreConf(rocksDb))(
       agg.writeStream.format("noop").outputMode("update").start())
     try {
       def awaitBatches(n: Int): Unit = {

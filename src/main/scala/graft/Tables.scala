@@ -18,22 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Session settings every entry point applies (idempotent).
-    *
-    * `rocksDbState=true` (or env `GRAFT_STATE_STORE=rocksdb`) switches
-    * Structured Streaming state to the RocksDB provider — the
-    * production posture at scale, where stateful operators (windows,
-    * dedup, stream-stream joins) hold state off-heap and spill to local
-    * disk instead of growing the executor heap with the default
-    * HDFS-backed in-memory map. Opt-in because the default provider is
-    * faster for the tiny test states. */
-  def configure(spark: SparkSession, rocksDbState: Boolean = false): SparkSession = {
+  /** Session settings every entry point applies (idempotent). The
+    * RocksDB state store is pinned per stream, around its start
+    * ([[graft.streaming.Streaming.stateStoreConf]]), never here. */
+  def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if (rocksDbState || sys.env.get("GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("rocksdb")))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     if (sys.env.get("GRAFT_AQE_PROFILE").exists(_.equalsIgnoreCase("scale")))
       aqeScaleProfile(spark)
     spark

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -668,19 +668,19 @@ object Analytics {
     * production alternates the two to convergence. */
   def alsHalfStep(orders: DataFrame, li: DataFrame, part: DataFrame,
       lambda1e6: Long = 100000L, probeUsers: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
-      topK: Int = 3): DataFrame = {
+      topK: Int = 3): DataFrame = Scope { s =>
     import graft.functions.TextHash.hash60
     // fixed item factors: y1 = 1.000, y2 = hash-centered in [-0.5, 0.5)
     def y2m(brand: Column): Column =
       pmod(hash60(concat(lit("als|"), brand)), lit(1000L)) - 500L
-    val ratings = li.select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
+    // feeds the solve AND the rated-brand anti-join
+    val ratings = s.persist(li.select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
       .join(orders.select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(part.select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("o_custkey").as("u"), col("p_brand").as("brand"))
-      .agg(sum(col("l_quantity").cast("long")).as("r"))
-      .persist() // feeds the solve AND the rated-brand anti-join
+      .agg(sum(col("l_quantity").cast("long")).as("r")))
     val withY = ratings
       .withColumn("y1m", lit(1000L))
       .withColumn("y2m", y2m(col("brand")))
@@ -703,13 +703,11 @@ object Analytics {
       .select(col("u"), col("brand"),
         (col("x1") * 1.0 + col("x2") * (col("y2m").cast("double") / 1000)).as("score"))
     val w = Window.partitionBy(col("u")).orderBy(col("score").desc, col("brand"))
-    val result = scored.withColumn("rnk", row_number().over(w).cast("long"))
+    scored.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= topK)
       .select(col("u").as("user"), col("brand"),
         graft.functions.Portable.trunc4(col("score")).as("score"), col("rnk"))
       .localCheckpoint(true) // 15 rows; frees the ratings cache
-    ratings.unpersist()
-    result
   }
 
   /** Depth-2 greedy histogram tree — one boosting-tree layer past

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.TextHash._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -105,8 +105,8 @@ object Dedup {
     * Scale: signatures computed once; each geometry is a banded
     * equi-join (the production shape); exact verification re-shingles
     * only POOLED docs (the [[minhashLsh]] candidate-only discipline). */
-  def bandTuning(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val sig = signatures(docs).persist()
+  def bandTuning(docs: DataFrame, threshold: Double = 0.5): DataFrame = Scope { s =>
+    val sig = s.persist(signatures(docs))
     val geoms = Seq(2, 4, 8)
     // ONE tagged band relation for all three geometries (2+4+8 = 14
     // band rows per doc in a single explode over the shared signature
@@ -121,24 +121,23 @@ object Dedup {
       bandsWithGeom(sig, nb).select(lit(nb.toLong).as("geom"),
         col("doc_id"), col("band"), col("bkey"))
     }.reduce(_ unionByName _)
-    val cands = bandsAll.as("x").join(bandsAll.as("y"),
+    val cands = s.persist(bandsAll.as("x").join(bandsAll.as("y"),
         col("x.geom") === col("y.geom") &&
           col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.geom").as("geom"),
         col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct().persist()
-    val pool = cands.select(col("a_id"), col("b_id")).distinct().persist()
+      .distinct())
+    val pool = s.persist(cands.select(col("a_id"), col("b_id")).distinct())
     val poolIds = pool.select(col("a_id").as("doc_id"))
       .unionByName(pool.select(col("b_id").as("doc_id"))).distinct()
-    val sets = docs.join(poolIds, "doc_id")
-      .select(col("doc_id"), array_distinct(shingles(tokens(col("text")))).as("sd"))
-      .persist()
-    val truth = pool
+    val sets = s.persist(docs.join(poolIds, "doc_id")
+      .select(col("doc_id"), array_distinct(shingles(tokens(col("text")))).as("sd")))
+    val truth = s.persist(pool
       .join(sets.select(col("doc_id").as("a_id"), col("sd").as("sda")), "a_id")
       .join(sets.select(col("doc_id").as("b_id"), col("sd").as("sdb")), "b_id")
       .filter(jaccard(col("sda"), col("sdb")) >= threshold)
-      .select(col("a_id"), col("b_id")).persist()
+      .select(col("a_id"), col("b_id")))
     val nPool = truth.agg(count(lit(1)).as("n_pool_true"))
     // per-geometry counts in ONE aggregate each over the tagged pairs
     // (left-semi against the pooled truth), assembled on the geom key
@@ -153,7 +152,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_candidates"))
     val verCounts = cands.join(truth, Seq("a_id", "b_id"), "left_semi")
       .groupBy(col("geom")).agg(count(lit(1)).as("n_verified"))
-    val result = geomDf
+    geomDf
       .join(candCounts, Seq("geom"), "left")
       .join(verCounts, Seq("geom"), "left")
       .crossJoin(nPool)
@@ -167,9 +166,6 @@ object Dedup {
         when(col("n_pool_true") > 0,
           trunc4(coalesce(col("n_verified"), lit(0L)) / col("n_pool_true"))).as("pooled_recall"))
       .localCheckpoint(true) // 3 rows
-    truth.unpersist(); sets.unpersist(); pool.unpersist()
-    cands.unpersist(); sig.unpersist()
-    result
   }
 
   /** Distinct LSH band-collision candidate pairs (pre-verification) —
@@ -187,24 +183,24 @@ object Dedup {
       .distinct()
   }
 
-  def minhashLsh(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val sig = signatures(docs).persist()
+  def minhashLsh(docs: DataFrame, threshold: Double = 0.5): DataFrame = Scope { s =>
+    val sig = s.persist(signatures(docs))
     val bands = bandsOf(sig)
-    val cand = bands.as("x").join(bands.as("y"),
+    val cand = s.persist(bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct().persist()
+      .distinct())
     val candIds = cand.select(col("a_id").as("doc_id"))
       .unionByName(cand.select(col("b_id").as("doc_id"))).distinct()
     // candidate docs only: the per-row HOF shingle array is fine here
     // because this relation is tiny relative to the corpus
-    val sets = docs.join(candIds, "doc_id")
-      .select(col("doc_id"), array_distinct(shingles(tokens(col("text")))).as("sd"))
-      .persist() // two join arms below
+    // two join arms below
+    val sets = s.persist(docs.join(candIds, "doc_id")
+      .select(col("doc_id"), array_distinct(shingles(tokens(col("text")))).as("sd")))
     val sa = sets.select(col("doc_id").as("a_id"), col("sd").as("sda"))
     val sb = sets.select(col("doc_id").as("b_id"), col("sd").as("sdb"))
-    val result = cand.join(sa, "a_id").join(sb, "b_id")
+    cand.join(sa, "a_id").join(sb, "b_id")
       .withColumn("jac", jaccard(col("sda"), col("sdb")))
       .filter(col("jac") >= threshold)
       .select(col("a_id"), col("b_id"), trunc4(col("jac")).as("jaccard"))
@@ -212,8 +208,6 @@ object Dedup {
       // result so the persisted intermediates can be released here —
       // library callers don't accumulate cached relations across calls
       .localCheckpoint(true)
-    sig.unpersist(); cand.unpersist(); sets.unpersist()
-    result
   }
 
   /** Sorted-neighborhood dedup (Hernández & Stolfo 1995, the classic
@@ -229,19 +223,19 @@ object Dedup {
     * copy and must surface at Jaccard 1.
     *
     * Scale shape: THE SORT IS THE SHUFFLE — the global order comes
-    * from [[ScaleOps.globalRankLazy]]'s two-phase rank (range exchange
+    * from [[ScaleOps.globalRank]]'s two-phase rank (range exchange
     * + partition-local row_number + broadcast offsets), never a
     * one-task window; neighbours then pair by an exact equi-join on
     * position (rank + exploded offset 1..w — no range self-join, no
     * cartesian). Only ids and positions ride the pair join; the
     * document-sized shingle payloads attach per-doc afterwards (the
     * [[minhashLsh]] candidate-only discipline). */
-  def dedupSnm(docs: DataFrame, w: Int = 4, threshold: Double = 0.5): DataFrame = {
+  def dedupSnm(docs: DataFrame, w: Int = 4, threshold: Double = 0.5): DataFrame = Scope { s =>
     val norm = graft.operators.TextOps.perturbed(docs)
       .select(col("doc_id"), graft.operators.TextOps.normalize(col("text")).as("nt"))
-    val (ranked, cache) = ScaleOps.globalRankLazy(
-      norm, Seq(col("nt"), col("doc_id")))
-    val slim = ranked.select(col("doc_id"), col("pos"))
+    val order = Seq(col("nt"), col("doc_id"))
+    val ranged = ScaleOps.rangePartitioned(s, norm, order)
+    val slim = ScaleOps.rankPartitioned(ranged, order).select(col("doc_id"), col("pos"))
     val cand = slim.select(col("doc_id").as("a_id"), col("pos"))
       .withColumn("off", explode(array((1 to w).map(i => lit(i.toLong)): _*)))
       .withColumn("bpos", col("pos") + col("off"))
@@ -251,11 +245,11 @@ object Dedup {
     // arm needs only (doc_id, nt) and must not re-pay the rank pipeline
     // (partition-local sort + offsets broadcast join) that only the
     // position arm requires — same rows, one string sort fewer
-    val sets = cache
+    // two join arms below
+    val sets = s.persist(ranged
       .select(col("doc_id"), array_distinct(shingles(tokens(col("nt")))).as("sd"))
-      .filter(size(col("sd")) > 0) // <3-token docs have no 3-shingles
-      .persist() // two join arms below
-    val result = cand
+      .filter(size(col("sd")) > 0)) // <3-token docs have no 3-shingles
+    cand
       .join(sets.select(col("doc_id").as("a_id"), col("sd").as("sda")), "a_id")
       .join(sets.select(col("doc_id").as("b_id"), col("sd").as("sdb")), "b_id")
       .withColumn("jac", jaccard(col("sda"), col("sdb")))
@@ -264,8 +258,6 @@ object Dedup {
         greatest(col("a_id"), col("b_id")).as("b_id"),
         trunc4(col("jac")).as("jaccard"))
       .localCheckpoint(true) // verified pairs ≪ corpus; releases caches
-    sets.unpersist(); cache.unpersist()
-    result
   }
 
   /** 60-bit SimHash per doc, computed relationally so the hot loop
@@ -292,14 +284,14 @@ object Dedup {
   /** SimHash near-dup pairs via banded LSH: 5 bands × 12 bits generate
     * candidates; keep pairs with hamming distance ≤ `maxHamming`.
     * Banding gives exact recall for hamming ≤ 5-1-… ≤ 4 < 5 bands. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val fp = simhashRelational(docs).persist() // both band self-join arms
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = Scope { s =>
+    val fp = s.persist(simhashRelational(docs)) // both band self-join arms
     val bands = fp.select(col("doc_id"), col("simhash"),
         explode(array((0 until 5).map(b =>
           struct(lit(b).as("band"),
             shiftright(col("simhash"), b * 12).bitwiseAND(lit(4095L)).as("bkey"))): _*)).as("bb"))
       .select(col("doc_id"), col("simhash"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    val result = bands.as("x").join(bands.as("y"),
+    bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
@@ -307,32 +299,28 @@ object Dedup {
       .distinct()
       .filter(col("hd") <= maxHamming)
       .localCheckpoint(true) // near-dup pairs ≪ corpus
-    fp.unpersist()
-    result
   }
 
   /** n-gram Jaccard top-k: for each query doc, the k most similar other
     * docs by 3-shingle Jaccard. Linear scan (queries broadcast), the
     * exact-baseline sibling of minhashLsh. */
-  def ngramTopK(docs: DataFrame, queryIds: Seq[Long], k: Int = 5): DataFrame = {
+  def ngramTopK(docs: DataFrame, queryIds: Seq[Long], k: Int = 5): DataFrame = Scope { s =>
     // per-(doc, query) array_intersect Jaccard: with a small broadcast
     // query set this is per-row embarrassingly-parallel work and beats a
     // relational explode→join→regroup rewrite 3× (measured at sf0.1) —
     // the rewrite's persist + extra shuffles only pay off when the
     // query side itself is large
-    val sets = spread(docs).select(col("doc_id"),
-      array_distinct(shingles(tokens(col("text")))).as("sd")).persist()
+    val sets = s.persist(spread(docs).select(col("doc_id"),
+      array_distinct(shingles(tokens(col("text")))).as("sd")))
     val q = sets.filter(col("doc_id").isin(queryIds: _*))
       .select(col("doc_id").as("q_id"), col("sd").as("sq"))
     val scored = sets.join(broadcast(q), col("doc_id") =!= col("q_id"))
       .withColumn("jac", jaccard(col("sq"), col("sd")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("jac").desc, col("doc_id"))
-    val result = scored.withColumn("rnk", row_number().over(w).cast("long"))
+    scored.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("doc_id"), trunc4(col("jac")).as("jaccard"), col("rnk"))
       .localCheckpoint(true) // k rows per query
-    sets.unpersist()
-    result
   }
 
   /** Connected components over near-dup pairs: collapse pairs into
@@ -407,11 +395,7 @@ object Dedup {
         // twice per round (both join sides), a deliberate trade — the
         // label table is tiny next to the plan-explosion alternative.
         .localCheckpoint(false)
-      val tR = System.nanoTime()
       changed = next.filter(col("ch")).count() // materializes the round
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round=$rounds changed=$changed " +
-          f"sec=${(System.nanoTime() - tR) / 1e9}%.2f")
       // next's checkpoint blocks are live; the predecessor's can go
       // (nothing references them once the new generation exists)
       labels.unpersist()
@@ -542,24 +526,21 @@ object Dedup {
     * Match rows ≪ corpus after the cap, so the run window and pair agg
     * run on the small residue. */
   def substringRuns(docs: DataFrame, minRun: Long = 10L,
-      maxDf: Long = 50L): DataFrame = {
-    val (result, kept) = substringRunsLazy(docs, minRun, maxDf)
-    val out = result
+      maxDf: Long = 50L): DataFrame = Scope { s =>
+    substringRunsPlan(s, docs, minRun, maxDf)
       .localCheckpoint(true) // qualifying pairs ≪ corpus; releases kept
-    kept.unpersist()
-    out
   }
 
   /** [[substringRuns]] before its eager checkpoint (plan-shape specs
-    * need the live plan); caller unpersists the returned `kept`. */
-  private[graft] def substringRunsLazy(docs: DataFrame, minRun: Long,
-      maxDf: Long): (DataFrame, DataFrame) = {
+    * need the live plan), its `kept` shingles persisted in `s`. */
+  private[graft] def substringRunsPlan(s: Scope, docs: DataFrame, minRun: Long,
+      maxDf: Long): DataFrame = {
     val g = shingleRows(spread(docs), n = 3)
       .select(col("doc_id"), col("i"), hash60(col("s")).as("sh"))
-    val kept = g.withColumn("d", count(lit(1)).over(Window.partitionBy(col("sh"))))
+    // both arms of the match join
+    val kept = s.persist(g.withColumn("d", count(lit(1)).over(Window.partitionBy(col("sh"))))
       .filter(col("d") <= maxDf)
-      .select(col("doc_id"), col("i"), col("sh"))
-      .persist() // both arms of the match join
+      .select(col("doc_id"), col("i"), col("sh")))
     val m = kept.as("a").join(kept.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
@@ -571,11 +552,10 @@ object Dedup {
       .groupBy(col("a_id"), col("b_id"), col("diag"), col("grp"))
       .agg(count(lit(1)).as("run_shingles"))
       .filter(col("run_shingles") >= minRun)
-    val result = runs.groupBy(col("a_id"), col("b_id"))
+    runs.groupBy(col("a_id"), col("b_id"))
       .agg((max(col("run_shingles")) + 2).as("max_run_tokens"),
         count(lit(1)).as("n_runs"),
         (sum(col("run_shingles")) + count(lit(1)) * 2).as("total_tokens"))
-    (result, kept)
   }
 
   /** MinHash fidelity audit — the dedup sibling of the ANN recall
@@ -592,19 +572,19 @@ object Dedup {
     * integers, so the truncated outputs agree bit-for-bit with the
     * oracle. Same scale shape as [[minhashLsh]]: signatures feed the
     * band join, exact sets are re-shingled for CANDIDATE docs only. */
-  def minhashEstimateAudit(docs: DataFrame): DataFrame = {
-    val sig = signatures(docs).persist()
+  def minhashEstimateAudit(docs: DataFrame): DataFrame = Scope { s =>
+    val sig = s.persist(signatures(docs))
     val bands = bandsOf(sig)
-    val cand = bands.as("x").join(bands.as("y"),
+    val cand = s.persist(bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct().persist()
+      .distinct())
     val candIds = cand.select(col("a_id").as("doc_id"))
       .unionByName(cand.select(col("b_id").as("doc_id"))).distinct()
-    val sets = docs.join(candIds, "doc_id")
-      .select(col("doc_id"), array_distinct(shingles(tokens(col("text")))).as("sd"))
-      .persist() // both join arms below re-shingle otherwise
+    // both join arms below re-shingle otherwise
+    val sets = s.persist(docs.join(candIds, "doc_id")
+      .select(col("doc_id"), array_distinct(shingles(tokens(col("text")))).as("sd")))
     val sa = sig.join(sets, "doc_id")
       .select(col("doc_id").as("a_id"), col("sig").as("siga"), col("sd").as("sda"))
     val sb = sig.join(sets, "doc_id")
@@ -613,7 +593,7 @@ object Dedup {
       when(element_at(col("siga"), h + 1) === element_at(col("sigb"), h + 1),
         lit(1L)).otherwise(lit(0L))
     }.reduce(_ + _)
-    val result = cand.join(sa, "a_id").join(sb, "b_id")
+    cand.join(sa, "a_id").join(sb, "b_id")
       .withColumn("matches", matches)
       .withColumn("est", col("matches").cast("double") / 16d)
       .withColumn("jac", jaccard(col("sda"), col("sdb")))
@@ -621,8 +601,6 @@ object Dedup {
         trunc4(col("est")).as("estimate"), trunc4(col("jac")).as("jaccard"),
         trunc4(abs(col("est") - col("jac"))).as("abs_err"))
       .localCheckpoint(true)
-    sig.unpersist(); cand.unpersist(); sets.unpersist()
-    result
   }
 
   /** Incremental NEAR-dup ingest — the daily-crawl sibling of
@@ -638,11 +616,9 @@ object Dedup {
     * Same slim-payload discipline as [[minhashLsh]]: signatures carry
     * 16 longs, shingle sets are re-derived for CANDIDATE docs only. */
   def incrementalMinhash(registry: DataFrame, batch: DataFrame,
-      threshold: Double = 0.5): DataFrame = {
-    val regBands = bandIndex(registry).persist()
-    val result = probeRegistry(registry, regBands, batch, threshold)
-    regBands.unpersist()
-    result
+      threshold: Double = 0.5): DataFrame = Scope { s =>
+    val regBands = s.persist(bandIndex(registry))
+    probeRegistry(registry, regBands, batch, threshold)
   }
 
   /** The persistent LSH index a crawl pipeline maintains: one
@@ -662,12 +638,12 @@ object Dedup {
     * batch and the index, which is what makes the streaming replay of
     * this exact method micro-batch-invariant. */
   private[graft] def probeRegistry(registry: DataFrame, regBands: DataFrame,
-      batch: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val sigB = signatures(batch).persist()
-    val cand = bandsOf(sigB).as("x").join(regBands.as("y"),
+      batch: DataFrame, threshold: Double = 0.5): DataFrame = Scope { s =>
+    val sigB = s.persist(signatures(batch))
+    val cand = s.persist(bandsOf(sigB).as("x").join(regBands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey"))
       .select(col("x.doc_id").as("batch_id"), col("y.doc_id").as("reg_id"))
-      .distinct().persist()
+      .distinct())
     val setsB = batch
       .join(cand.select(col("batch_id").as("doc_id")).distinct(), "doc_id")
       .select(col("doc_id").as("batch_id"),
@@ -676,13 +652,11 @@ object Dedup {
       .join(cand.select(col("reg_id").as("doc_id")).distinct(), "doc_id")
       .select(col("doc_id").as("reg_id"),
         array_distinct(shingles(tokens(col("text")))).as("sdr"))
-    val result = cand.join(setsB, "batch_id").join(setsR, "reg_id")
+    cand.join(setsB, "batch_id").join(setsR, "reg_id")
       .withColumn("jac", jaccard(col("sdb"), col("sdr")))
       .filter(col("jac") >= threshold)
       .select(col("batch_id"), col("reg_id"), trunc4(col("jac")).as("jaccard"))
       .localCheckpoint(true)
-    sigB.unpersist(); cand.unpersist()
-    result
   }
 
   /** Driver wiring for [[incrementalMinhash]]: registry = docs < 250;
@@ -758,15 +732,14 @@ object Dedup {
     * once for both join sides — the cached relation is ~`cap` bytes per
     * doc, two orders smaller than the raw text; the self-equi-join on
     * the block key then shuffles only that narrow projection. */
-  def fuzzyEditPairs(docs: DataFrame, maxDist: Int = 2, cap: Int = 120): DataFrame = {
-    val (pairs, base) = fuzzyEditPairsLazy(docs, maxDist, cap)
-    val out = pairs.localCheckpoint(true) // pair list is small; frees the cache
-    base.unpersist()
-    out
-  }
+  def fuzzyEditPairs(docs: DataFrame, maxDist: Int = 2, cap: Int = 120): DataFrame =
+    Scope { s =>
+      fuzzyEditPairsPlan(s, docs, maxDist, cap)
+        .localCheckpoint(true) // pair list is small; frees the cache
+    }
 
-  /** [[fuzzyEditPairs]] without the eager checkpoint, exposing the
-    * cached base for plan inspection / lifecycle control.
+  /** [[fuzzyEditPairs]] without the eager checkpoint, its base
+    * persisted in `s`, for plan inspection.
     *
     * `maxBlock` is the hub guard the other pair generators already
     * carry (coEdges' maxCell, containment's maxDf): a prefix block
@@ -776,28 +749,26 @@ object Dedup {
     * such block before the cap existed). Dropped blocks are dropped
     * WHOLE, so the kept pair set is still exact within every surviving
     * block — the containment-maxDf trade, documented not hidden. */
-  private[graft] def fuzzyEditPairsLazy(docs: DataFrame, maxDist: Int = 2,
-      cap: Int = 120, maxBlock: Long = 64L): (DataFrame, DataFrame) = {
+  private[graft] def fuzzyEditPairsPlan(s: Scope, docs: DataFrame, maxDist: Int = 2,
+      cap: Int = 120, maxBlock: Long = 64L): DataFrame = {
     // spread BEFORE persist: the corpus parquet arrives as 1-2 splits,
     // which would serialize the O(cap²) Levenshtein DP on 1-2 cores —
     // the probe side's parallelism is the cached relation's (measured
     // 5.2 s → ~1 s at sf0.1 local[32])
-    val base = spread(
+    val base = s.persist(spread(
       typoCorpus(docs)
         .select(col("doc_id"), substring(col("nt"), 1, cap).as("t"))
         .withColumn("blk", substring(col("t"), 1, 12))
         .withColumn("blk_n", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("blk"))))
         .filter(col("blk_n") <= maxBlock)
-        .drop("blk_n"))
-      .persist()
+        .drop("blk_n")))
     val a = base.select(col("blk"), col("doc_id").as("id_a"), col("t").as("t_a"))
     val b = base.select(col("blk"), col("doc_id").as("id_b"), col("t").as("t_b"))
-    val pairs = a.join(b, Seq("blk")).filter(col("id_a") < col("id_b"))
+    a.join(b, Seq("blk")).filter(col("id_a") < col("id_b"))
       .withColumn("dist", levenshtein(col("t_a"), col("t_b")).cast("long"))
       .filter(col("dist") <= maxDist)
       .select(col("id_a"), col("id_b"), col("dist"))
-    (pairs, base)
   }
 
   /** Containment near-subset detection: documents whose 3-shingle set
@@ -816,10 +787,9 @@ object Dedup {
     * hidden). One distinct-shingle shuffle, one window for df, one
     * bucket join, one pair hash-agg. */
   def containmentPairs(docs: DataFrame, threshold10k: Long = 7000L,
-      maxDf: Long = 50L, minSize: Long = 10L): DataFrame = {
-    val g = shingleRows(docs, n = 3)
-      .select(col("doc_id"), hash60(col("s")).as("sh")).distinct()
-      .persist()
+      maxDf: Long = 50L, minSize: Long = 10L): DataFrame = Scope { s =>
+    val g = s.persist(shingleRows(docs, n = 3)
+      .select(col("doc_id"), hash60(col("s")).as("sh")).distinct())
     val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("inner_size"))
       .filter(col("inner_size") >= minSize)
     val kept = g.withColumn("d", count(lit(1)).over(Window.partitionBy(col("sh"))))
@@ -837,15 +807,13 @@ object Dedup {
         col("shared"))
       .unionByName(half.select(col("db").as("inner_doc"),
         col("da").as("outer_doc"), col("shared")))
-    val result = pairs
+    pairs
       .join(sizes.withColumnRenamed("doc_id", "inner_doc"), "inner_doc")
       .filter(col("shared") * 10000L >= col("inner_size") * threshold10k)
       .select(col("inner_doc"), col("outer_doc"), col("shared"),
         col("inner_size"),
         trunc4(col("shared").cast("double") / col("inner_size")).as("containment"))
       .localCheckpoint(true)
-    g.unpersist()
-    result
   }
 
   /** Prefix-filtered exact Jaccard similarity join over 3-shingles
@@ -874,9 +842,9 @@ object Dedup {
     * shingle relation on (doc, sh) equi-keys. The oracle brute-forces
     * Σdf² over ALL shingles — the Spark plan never does. */
   def prefixJaccardJoin(docs: DataFrame, threshold10k: Long = 8000L,
-      minSize: Long = 4L): DataFrame = {
-    val tok = shingleRows(docs, n = 3)
-      .select(col("doc_id"), hash60(col("s")).as("sh")).distinct().persist()
+      minSize: Long = 4L): DataFrame = Scope { s =>
+    val tok = s.persist(shingleRows(docs, n = 3)
+      .select(col("doc_id"), hash60(col("s")).as("sh")).distinct())
     val sizes = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
       .filter(col("sz") >= minSize)
     val dfRel = tok.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -895,7 +863,7 @@ object Dedup {
       .join(tok.as("tb"), col("db") === col("tb.doc_id") &&
         col("ta.sh") === col("tb.sh"))
       .groupBy(col("da"), col("db")).agg(count(lit(1)).as("n_inter"))
-    val result = inter
+    inter
       .join(sizes.select(col("doc_id").as("da"), col("sz").as("sz_a")), "da")
       .join(sizes.select(col("doc_id").as("db"), col("sz").as("sz_b")), "db")
       .filter(col("n_inter") * 10000L >=
@@ -904,8 +872,6 @@ object Dedup {
         trunc4(col("n_inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("n_inter"))).as("jaccard"))
       .localCheckpoint(true)
-    tok.unpersist()
-    result
   }
 
   // ---- driver wiring ----

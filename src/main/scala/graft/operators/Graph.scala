@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -196,14 +196,15 @@ object Graph {
       .distinct()
   }
 
-  def triangles(ev: DataFrame, maxCell: Long = 64L): DataFrame = {
-    val e = coEdges(ev, maxCell).persist()
+  def triangles(ev: DataFrame, maxCell: Long = 64L): DataFrame = Scope { s =>
+    val e = s.persist(coEdges(ev, maxCell))
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.u2") === col("e2.u1"))
       .join(e.as("e3"), col("e3.u1") === col("e1.u1") && col("e3.u2") === col("e2.u2"))
       .select(col("e1.u1").as("a"), col("e1.u2").as("b"), col("e2.u2").as("c"))
     tri.select(explode(array(col("a"), col("b"), col("c"))).as("user_id"))
       .groupBy(col("user_id")).agg(count(lit(1)).as("n_triangles"))
+      .localCheckpoint(true) // ≤ |users| rows; releases the edge cache
   }
 
   /** Local clustering coefficient per node — how clique-ish each
@@ -220,8 +221,8 @@ object Graph {
     * triangle join's Σ deg² like [[triangles]] — the maxCell cap is
     * the scale guard. Zero-triangle nodes keep coef 0 via the left
     * join, NOT dropped — absence of closure is the signal. */
-  def clusteringCoef(ev: DataFrame, maxCell: Long = 64L): DataFrame = {
-    val e = coEdges(ev, maxCell).persist() // feeds degree AND closure
+  def clusteringCoef(ev: DataFrame, maxCell: Long = 64L): DataFrame = Scope { s =>
+    val e = s.persist(coEdges(ev, maxCell)) // feeds degree AND closure
     val deg = e.select(col("u1").as("user_id"))
       .unionAll(e.select(col("u2").as("user_id")))
       .groupBy(col("user_id")).agg(count(lit(1)).as("deg"))
@@ -230,14 +231,12 @@ object Graph {
       .join(e.as("e3"), col("e3.u1") === col("e1.u1") && col("e3.u2") === col("e2.u2"))
       .select(explode(array(col("e1.u1"), col("e1.u2"), col("e2.u2"))).as("user_id"))
       .groupBy(col("user_id")).agg(count(lit(1)).as("n_tri"))
-    val result = deg.join(tri, Seq("user_id"), "left")
+    deg.join(tri, Seq("user_id"), "left")
       .withColumn("n_tri", coalesce(col("n_tri"), lit(0L)))
       .filter(col("deg") >= 2L)
       .withColumn("coef", graft.functions.Portable.trunc4(
         col("n_tri") * lit(2.0) / (col("deg") * (col("deg") - lit(1L)))))
       .localCheckpoint(true) // one row per qualifying node
-    e.unpersist()
-    result
   }
 
   /** Fraud rings: connected components over the co-occurrence
@@ -271,21 +270,21 @@ object Graph {
     * exact integers in, identical membership at the threshold in both
     * engines. */
   def merchantJaccard(ev: DataFrame, maxFan: Long = 80L,
-      minJaccard: Double = 0.45): DataFrame = {
+      minJaccard: Double = 0.45): DataFrame = Scope { s =>
     val um = userMerchant(ev).filter(col("m").isNotNull)
       .select(col("user_id"), col("m")).distinct()
-    val g = um
+    // feeds the degree agg and both pair-join arms
+    val g = s.persist(um
       .withColumn("fan", count(lit(1)).over(Window.partitionBy(col("user_id"))))
       .filter(col("fan") <= maxFan)
-      .select(col("user_id"), col("m"))
-      .persist() // feeds the degree agg and both pair-join arms
+      .select(col("user_id"), col("m")))
     val deg = g.groupBy(col("m")).agg(count(lit(1)).as("d"))
     val inter = g.as("a").join(g.as("b"),
         col("a.user_id") === col("b.user_id") && col("a.m") < col("b.m"))
       .groupBy(col("a.m").as("m1"), col("b.m").as("m2"))
       .agg(count(lit(1)).as("inter"))
     val jac = col("inter") / (col("d1") + col("d2") - col("inter"))
-    val result = inter
+    inter
       .join(deg.select(col("m").as("m1"), col("d").as("d1")), "m1")
       .join(deg.select(col("m").as("m2"), col("d").as("d2")), "m2")
       .filter(jac >= minJaccard)
@@ -293,8 +292,6 @@ object Graph {
         col("inter"), col("d1"), col("d2"),
         graft.functions.Portable.trunc4(jac).as("jaccard"))
       .localCheckpoint(true) // thresholded pairs; releases the g cache
-    g.unpersist()
-    result
   }
 
   /** Maximum-strength spanning forest of the merchant co-visit graph
@@ -542,17 +539,17 @@ object Graph {
     * weights floor to 1e6-scaled BIGINTs so pair scores are exact
     * integer sums (common users have fan ≥ 2, so ln > 0 always). */
   def adamicAdar(ev: DataFrame, maxFan: Long = 80L,
-      minCommon: Long = 2L): DataFrame = {
+      minCommon: Long = 2L): DataFrame = Scope { s =>
     val um = userMerchant(ev).filter(col("m").isNotNull)
       .select(col("user_id"), col("m")).distinct()
-    val g = um
+    // feeds both pair-join arms
+    val g = s.persist(um
       .withColumn("fan", count(lit(1)).over(Window.partitionBy(col("user_id"))))
       .filter(col("fan") <= maxFan)
       .withColumn("w", when(col("fan") >= 2,
         floor(lit(1e6) / log(col("fan"))).cast("long")).otherwise(lit(0L)))
-      .select(col("user_id"), col("m"), col("w"))
-      .persist() // feeds both pair-join arms
-    val result = g.as("a").join(g.as("b"),
+      .select(col("user_id"), col("m"), col("w")))
+    g.as("a").join(g.as("b"),
         col("a.user_id") === col("b.user_id") && col("a.m") < col("b.m"))
       .groupBy(col("a.m").as("m1"), col("b.m").as("m2"))
       .agg(count(lit(1)).as("n_common"), sum(col("a.w")).as("aa_scaled"))
@@ -561,8 +558,6 @@ object Graph {
         col("n_common"), col("aa_scaled"),
         graft.functions.Portable.trunc4(col("aa_scaled") / 1e6).as("aa_score"))
       .localCheckpoint(true) // thresholded pairs; releases the g cache
-    g.unpersist()
-    result
   }
 
   /** Deterministic negative-edge sampling — the other half of a
@@ -572,23 +567,20 @@ object Graph {
     * ready for a trainer. Scale is the point: the non-edge space is
     * Θ(|nodes|²) and must NEVER be materialized — candidates are
     * O(|nodes|·k) via an md5 pick from the rank-indexed node list
-    * (ranked by the two-phase parallel [[ScaleOps.globalRankLazy]],
+    * (ranked by the two-phase parallel [[ScaleOps.globalRank]],
     * never a one-task global window), and the anti-join runs on
     * candidate keys only. Dedup keeps one row per undirected pair;
     * self-picks drop. */
-  def negativeEdges(ev: DataFrame, k: Int = 5): DataFrame = {
-    val (lazyResult, caches) = negativeEdgesLazy(ev, k)
-    val result = lazyResult
+  def negativeEdges(ev: DataFrame, k: Int = 5): DataFrame = Scope { s =>
+    negativeEdgesPlan(s, ev, k)
       .localCheckpoint(true) // ≤ |nodes|·k rows; releases the um cache
-    caches.foreach(_.unpersist())
-    result
   }
 
   /** [[negativeEdges]] before its eager checkpoint (ScaleSpec pins the
     * plan shape here — the checkpoint hides the inner pipeline).
     *
     * Scale posture of the node indexing: the rank over the merchant
-    * relation runs through [[ScaleOps.globalRankLazy]]'s two-phase
+    * relation runs through [[ScaleOps.globalRank]]'s two-phase
     * range-partitioned rank (a bare `Window.orderBy` would drag every
     * node through ONE task — the collapsed relation is merchant-sized,
     * which at a 10⁹-node graph is still 10⁹ rows), and the rn→partner
@@ -596,15 +588,16 @@ object Graph {
     * so the join strategy is left to the planner/AQE, which broadcasts
     * exactly when the relation actually fits. The only forced
     * broadcast is the 1-row count. */
-  private[graft] def negativeEdgesLazy(ev: DataFrame, k: Int = 5): (DataFrame, Seq[DataFrame]) = {
-    val um = userMerchant(ev).filter(col("m").isNotNull)
-      .select(col("user_id"), col("m").cast("long").as("m")).distinct()
-      .persist() // feeds the node list AND the true edge set
-    val (rankedNodes, ranged) = graft.operators.ScaleOps.globalRankLazy(
-      um.select(col("m")).distinct(), Seq(col("m")), posCol = "rn")
-    val nodes = rankedNodes.select(col("m"), col("rn"))
-      .localCheckpoint(true) // collapsed merchant relation; read 2×
-    ranged.unpersist()
+  private[graft] def negativeEdgesPlan(s: Scope, ev: DataFrame, k: Int = 5): DataFrame = {
+    // feeds the node list AND the true edge set
+    val um = s.persist(userMerchant(ev).filter(col("m").isNotNull)
+      .select(col("user_id"), col("m").cast("long").as("m")).distinct())
+    // the ranged relation is released as soon as the node list exists
+    val nodes = Scope { r =>
+      ScaleOps.globalRank(r, um.select(col("m")).distinct(), Seq(col("m")), posCol = "rn")
+        .select(col("m"), col("rn"))
+        .localCheckpoint(true) // collapsed merchant relation; read 2×
+    }
     val nn = nodes.agg(count(lit(1)).as("nn"))
     val picks = nodes.select(col("m").as("m1"))
       .crossJoin(broadcast(nn))
@@ -620,9 +613,8 @@ object Graph {
     val edges = um.as("a").join(um.as("b"),
         col("a.user_id") === col("b.user_id") && col("a.m") < col("b.m"))
       .select(col("a.m").as("m1"), col("b.m").as("m2")).distinct()
-    val result = picks.join(edges, Seq("m1", "m2"), "left_anti")
+    picks.join(edges, Seq("m1", "m2"), "left_anti")
       .select(col("m1"), col("m2"), lit(0L).as("label"))
-    (result, Seq(um))
   }
 
   /** HITS hub/authority over the bipartite user–merchant graph: a
@@ -878,8 +870,8 @@ object Graph {
     * edge relation persists across its three consumers (m, e_in,
     * degrees); labels come from [[lpaLabels]] — checkpointed per
     * round, O(rounds·|E|) like lpa itself. */
-  def modularity(ev: DataFrame, rounds: Int = 3, maxCell: Long = 64L): DataFrame = {
-    val e0 = coEdges(ev, maxCell).persist()
+  def modularity(ev: DataFrame, rounds: Int = 3, maxCell: Long = 64L): DataFrame = Scope { s =>
+    val e0 = s.persist(coEdges(ev, maxCell))
     val l = lpaLabels(e0, rounds) // eager (localCheckpoint) — small
     val mAgg = e0.agg(count(lit(1)).as("mm"))
     val ein = e0
@@ -892,7 +884,7 @@ object Graph {
       .join(l, "node")
       .groupBy(col("lbl").as("community"))
       .agg(sum(col("deg")).as("deg_sum"), count(lit(1)).as("n_nodes"))
-    val result = degc.join(ein, Seq("community"), "left")
+    degc.join(ein, Seq("community"), "left")
       .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
       .crossJoin(broadcast(mAgg))
       .select(col("community"), col("n_nodes"), col("e_in"), col("deg_sum"),
@@ -901,8 +893,6 @@ object Graph {
             (col("deg_sum") / (col("mm") * 2L)) * (col("deg_sum") / (col("mm") * 2L)))
           .as("q_contrib"))
       .localCheckpoint(true) // one row per community; releases the edges
-    e0.unpersist()
-    result
   }
 
   /** k-core of the co-occurrence projection: the maximal subgraph in
@@ -970,11 +960,11 @@ object Graph {
     * cross-product) so the doubles stay small and both engines compute
     * the identical expression. Scale: degrees are one hash-agg over
     * the df-capped edges; the moment rollup is a 1-row aggregate. */
-  def assortativity(ev: DataFrame, maxCell: Long = 64L): DataFrame = {
+  def assortativity(ev: DataFrame, maxCell: Long = 64L): DataFrame = Scope { s =>
     val e0 = coEdges(ev, maxCell)
-    val e = e0.select(col("u1").as("s"), col("u2").as("d"))
-      .unionAll(e0.select(col("u2").as("s"), col("u1").as("d")))
-      .persist() // feeds the degree relation AND the moment join
+    // feeds the degree relation AND the moment join
+    val e = s.persist(e0.select(col("u1").as("s"), col("u2").as("d"))
+      .unionAll(e0.select(col("u2").as("s"), col("u1").as("d"))))
     val deg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
     val m = e
       .join(deg.select(col("s"), col("deg").as("x")), "s")
@@ -987,11 +977,9 @@ object Graph {
     val my = col("sy") / col("m")
     val num = col("sxy") / col("m") - mx * my
     val den = sqrt(col("sx2") / col("m") - mx * mx) * sqrt(col("sy2") / col("m") - my * my)
-    val result = m.select(col("m").as("m_edges"), col("n_nodes"),
+    m.select(col("m").as("m_edges"), col("n_nodes"),
         when(den > 0, graft.functions.Portable.trunc4(num / den)).as("r"))
       .localCheckpoint(true) // 1 row; releases the edge cache
-    e.unpersist()
-    result
   }
 
   /** Temporal graph churn: week-over-week Jaccard of the co-occurrence
@@ -1007,7 +995,7 @@ object Graph {
     * final division. Edges per week come from the same hub-guarded
     * per-(merchant, hour) cell projection as [[coEdges]], week kept in
     * the pair key — Σ|cell|²/2 work, never per merchant. */
-  def graphChurn(ev: DataFrame, maxCell: Long = 64L): DataFrame = {
+  def graphChurn(ev: DataFrame, maxCell: Long = 64L): DataFrame = Scope { s =>
     val um = userMerchant(ev)
       .select(col("user_id").as("u"), col("m"),
         date_trunc("hour", col("ts")).as("h"),
@@ -1016,17 +1004,17 @@ object Graph {
     val cell = Window.partitionBy(col("m"), col("h"))
     val cells = um.withColumn("cell_n", count(lit(1)).over(cell))
       .filter(col("cell_n") <= maxCell)
-    val edges = cells.as("a").join(cells.as("b"),
+    // feeds per-week sizes AND the consecutive-week join
+    val edges = s.persist(cells.as("a").join(cells.as("b"),
         col("a.m") === col("b.m") && col("a.h") === col("b.h") && col("a.u") < col("b.u"))
       .select(col("a.week_ms").as("week_ms"), col("a.u").as("u1"), col("b.u").as("u2"))
-      .distinct()
-      .persist() // feeds per-week sizes AND the consecutive-week join
+      .distinct())
     val sizes = edges.groupBy(col("week_ms")).agg(count(lit(1)).as("n_edges"))
     val inter = edges.as("w0").join(edges.as("w1"),
         col("w0.u1") === col("w1.u1") && col("w0.u2") === col("w1.u2") &&
           col("w1.week_ms") === col("w0.week_ms") + 604800000L)
       .groupBy(col("w0.week_ms").as("week_ms")).agg(count(lit(1)).as("n_shared"))
-    val result = sizes.as("s0")
+    sizes.as("s0")
       .join(sizes.select(col("week_ms").as("next_ms"), col("n_edges").as("n_next")),
         col("next_ms") === col("week_ms") + 604800000L)
       .join(inter, Seq("week_ms"), "left")
@@ -1035,8 +1023,6 @@ object Graph {
         graft.functions.Portable.trunc4(col("n_shared") /
           (col("n_edges") + col("n_next") - col("n_shared"))).as("edge_jaccard"))
       .localCheckpoint(true) // |weeks| rows; releases the edge cache
-    edges.unpersist()
-    result
   }
 
   /** Delta scale for [[betweenness]]: dependencies live in [0, ∞) as

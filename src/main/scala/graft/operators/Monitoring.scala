@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.Portable.{trunc2, trunc4}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -370,27 +370,25 @@ object Monitoring {
     * feeds spine, bounds, and the fill — persisted so the raw scan
     * happens once; the forward-fill window runs over the dense grid
     * (tiny), partitioned by type. */
-  def gapFill(ev: DataFrame): DataFrame = {
-    val daily = ev
+  def gapFill(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds bounds, the type list, and the fill join
+    val daily = s.persist(ev
       .groupBy(col("event_type"), expr("ts_ms div 86400000").as("day"))
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
-      .persist() // feeds bounds, the type list, and the fill join
+        sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents")))
     val bounds = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val spine = daily.select(col("event_type")).distinct()
       .crossJoin(bounds)
       .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
     val carry = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val result = spine.join(daily, Seq("event_type", "day"), "left")
+    spine.join(daily, Seq("event_type", "day"), "left")
       .select(col("event_type"), col("day"),
         coalesce(col("n"), lit(0L)).as("n"),
         col("n").isNull.as("filled"), col("cents"))
       .withColumn("carry_cents", last(col("cents"), ignoreNulls = true).over(carry))
       .drop("cents")
       .localCheckpoint(true) // |types|·|days| rows; releases the daily cache
-    daily.unpersist()
-    result
   }
 
   /** Peak interval concurrency per status — the interval-overlap
@@ -407,8 +405,8 @@ object Monitoring {
     * hash-agg to |changepoints| rows and a window over THAT — no pair
     * blow-up at any cardinality. Everything is integer millis and
     * counts — engine-exact. */
-  def statusConcurrency(ev: DataFrame): DataFrame = {
-    val iv = scd2(ev).persist() // feeds the anchor, the sweep, and the counts
+  def statusConcurrency(ev: DataFrame): DataFrame = Scope { s =>
+    val iv = s.persist(scd2(ev)) // feeds the anchor, the sweep, and the counts
     val anchor = iv.agg(max(col("valid_from")).as("m"))
     val pts = iv.crossJoin(anchor)
       .select(col("status"), explode(array(
@@ -422,12 +420,10 @@ object Monitoring {
         Window.partitionBy(col("status")).orderBy(col("conc").desc, col("ts"))))
       .filter(col("rn") === 1)
     val ni = iv.groupBy(col("status")).agg(count(lit(1)).as("n_intervals"))
-    val result = peak.join(ni, Seq("status"))
+    peak.join(ni, Seq("status"))
       .select(col("status"), col("conc").as("peak_concurrency"),
         col("ts").as("at_ts"), col("n_intervals"))
       .localCheckpoint(true) // |statuses| rows; releases the interval cache
-    iv.unpersist()
-    result
   }
 
   /** Robust per-user outliers via MAD (median absolute deviation) —
@@ -478,35 +474,32 @@ object Monitoring {
     * overlap; a day-boundary end ((t−1) div D) does not occupy the
     * next bucket. Open intervals are excluded (no measurable
     * duration). */
-  /** [[intervalOverlaps]]' lazy plan + its persisted base, for plan
-    * inspection (ScaleSpec) and the public wrapper. */
-  private[graft] def intervalOverlapsLazy(ev: DataFrame, status: String,
-      minDurMs: Long): (DataFrame, DataFrame) = {
+  /** [[intervalOverlaps]]' lazy plan, its base persisted in `s`, for
+    * plan inspection (ScaleSpec) and the public wrapper. */
+  private[graft] def intervalOverlapsPlan(s: Scope, ev: DataFrame, status: String,
+      minDurMs: Long): DataFrame = {
     val D = 86400000L
-    val iv = scd2(ev)
+    // both join arms read the slim 3-column relation
+    val iv = s.persist(scd2(ev)
       .filter(col("status") === status && col("valid_to").isNotNull &&
         col("valid_to") - col("valid_from") >= minDurMs)
-      .select(col("user_id"), col("valid_from"), col("valid_to"))
-      .persist() // both join arms read the slim 3-column relation
+      .select(col("user_id"), col("valid_from"), col("valid_to")))
     def arm(i: Int) = iv
       .select(col("user_id").as(s"u$i"), col("valid_from").as(s"f$i"),
         col("valid_to").as(s"t$i"))
       .withColumn("day", explode(sequence(expr(s"f$i div $D"), expr(s"(t$i - 1) div $D"))))
-    val plan = arm(1).join(arm(2), Seq("day"))
+    arm(1).join(arm(2), Seq("day"))
       .filter(col("u1") < col("u2") && col("f1") < col("t2") && col("f2") < col("t1") &&
         expr(s"greatest(f1, f2) div $D") === col("day"))
       .groupBy(col("u1"), col("u2"))
       .agg(count(lit(1)).as("n_overlaps"),
         sum(least(col("t1"), col("t2")) - greatest(col("f1"), col("f2"))).as("overlap_ms"))
-    (plan, iv)
   }
 
   def intervalOverlaps(ev: DataFrame, status: String = "error",
-      minDurMs: Long = 7200000L): DataFrame = {
-    val (plan, iv) = intervalOverlapsLazy(ev, status, minDurMs)
-    val result = plan.localCheckpoint(true) // ≤ C(users,2) rows; releases iv
-    iv.unpersist()
-    result
+      minDurMs: Long = 7200000L): DataFrame = Scope { s =>
+    intervalOverlapsPlan(s, ev, status, minDurMs)
+      .localCheckpoint(true) // ≤ C(users,2) rows; releases iv
   }
 
   /** Day-of-week seasonal baseline — the seasonality sibling of
@@ -856,14 +849,14 @@ object Monitoring {
     * event type (never global), over the type's cent domain — the
     * same domain-bounded justification as [[ksDrift]], now also
     * parallel across types. */
-  def w1Drift(ev: DataFrame, splitDay: String = "2024-01-16"): DataFrame = {
+  def w1Drift(ev: DataFrame, splitDay: String = "2024-01-16"): DataFrame = Scope { s =>
     val tagged = ev.select(col("event_type"),
       floor(col("value") * 100 + 0.5).cast("long").as("cents"),
       when(col("ts") < lit(splitDay).cast("timestamp"), 1L).otherwise(2L).as("s"))
-    val perValue = tagged.groupBy(col("event_type"), col("cents"))
+    // feeds the CDF window AND the per-type totals
+    val perValue = s.persist(tagged.groupBy(col("event_type"), col("cents"))
       .agg(sum(when(col("s") === 1L, 1L).otherwise(0L)).as("a1"),
-        sum(when(col("s") === 2L, 1L).otherwise(0L)).as("a2"))
-      .persist() // feeds the CDF window AND the per-type totals
+        sum(when(col("s") === 2L, 1L).otherwise(0L)).as("a2")))
     val byType = Window.partitionBy(col("event_type")).orderBy(col("cents"))
     val gaps = perValue
       .withColumn("c1", sum(col("a1")).over(
@@ -873,7 +866,7 @@ object Monitoring {
       .withColumn("width", lead(col("cents"), 1).over(byType) - col("cents"))
     val ns = perValue.groupBy(col("event_type"))
       .agg(sum(col("a1")).as("n1"), sum(col("a2")).as("n2"))
-    val result = gaps.filter(col("width").isNotNull)
+    gaps.filter(col("width").isNotNull)
       .join(ns, "event_type")
       .groupBy(col("event_type"))
       .agg(first(col("n1")).as("n1"), first(col("n2")).as("n2"),
@@ -885,8 +878,6 @@ object Monitoring {
       .select(col("event_type"), col("n1"), col("n2"), col("w1_scaled"),
         (col("w1_scaled") / 10000.0).as("w1_dollars"))
       .localCheckpoint(true) // |types| rows; releases the support cache
-    perValue.unpersist()
-    result
   }
 
   /** Benjamini–Hochberg FDR screen over merchant activity deviations
@@ -951,17 +942,17 @@ object Monitoring {
     * bands by the value domain, 24 hours, 7 weekdays) — broadcast by
     * construction, never data-growing; the fact is scanned once and
     * the global top-k is a TakeOrdered, not a sort. */
-  def hbos(ev: DataFrame, k: Int = 20): DataFrame = {
-    val base = ev.select(col("event_id"),
+  def hbos(ev: DataFrame, k: Int = 20): DataFrame = Scope { s =>
+    // feeds the three histograms AND the scoring pass
+    val base = s.persist(ev.select(col("event_id"),
         floor(col("value") / 10).cast("long").as("b_amt"),
         hour(col("ts")).cast("long").as("b_hour"),
-        dayofweek(col("ts")).cast("long").as("b_dow"))
-      .persist() // feeds the three histograms AND the scoring pass
+        dayofweek(col("ts")).cast("long").as("b_dow")))
     val tot = base.agg(count(lit(1)).as("nn"))
     def hist(c: String) = base.groupBy(col(c)).agg(count(lit(1)).as(s"n_$c"))
     def term(c: String): Column =
       floor(log(col("nn").cast("double") / col(s"n_$c")) * 1e6).cast("long")
-    val result = base
+    base
       .join(broadcast(hist("b_amt")), "b_amt")
       .join(broadcast(hist("b_hour")), "b_hour")
       .join(broadcast(hist("b_dow")), "b_dow")
@@ -971,8 +962,6 @@ object Monitoring {
       .orderBy(col("score_scaled").desc, col("event_id"))
       .limit(k)
       .localCheckpoint(true) // k rows; releases the base cache
-    base.unpersist()
-    result
   }
 
   /** Bivariate Mahalanobis outliers per event type — the COVARIANCE-
@@ -1138,11 +1127,11 @@ object Monitoring {
     * cut-point relation broadcasts back onto the binned counts — the
     * no-global-sort percentile path ([[Sketches]]' histogram-quantile
     * discipline applied to clipping). */
-  def winsorize(ev: DataFrame, loPct: Long = 1L, hiPct: Long = 99L): DataFrame = {
+  def winsorize(ev: DataFrame, loPct: Long = 1L, hiPct: Long = 99L): DataFrame = Scope { s =>
     val cents = ev.select(col("event_type"),
       floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val bins = cents.groupBy(col("event_type"), col("cents"))
-      .agg(count(lit(1)).as("c")).persist()
+    val bins = s.persist(cents.groupBy(col("event_type"), col("cents"))
+      .agg(count(lit(1)).as("c")))
     val w = Window.partitionBy(col("event_type")).orderBy(col("cents"))
     val cum = bins.withColumn("cum", sum(col("c")).over(w))
       .withColumn("n", sum(col("c")).over(Window.partitionBy(col("event_type"))))
@@ -1150,7 +1139,7 @@ object Monitoring {
       .groupBy(col("event_type")).agg(min(col("cents")).as("lo_cents"))
     val hi = cum.filter(col("cum") * 100 >= col("n") * hiPct)
       .groupBy(col("event_type")).agg(min(col("cents")).as("hi_cents"))
-    val result = bins
+    bins
       .join(broadcast(lo), "event_type").join(broadcast(hi), "event_type")
       .groupBy(col("event_type"))
       .agg(sum(col("c")).as("n"), min(col("lo_cents")).as("lo_cents"),
@@ -1162,8 +1151,6 @@ object Monitoring {
         sum(greatest(col("lo_cents"), least(col("hi_cents"), col("cents"))) * col("c"))
           .as("winsorized_cents"))
       .localCheckpoint(true) // |types| rows; releases bins
-    bins.unpersist()
-    result
   }
 
   /** Two-proportion A/B significance — the experimentation readout:
@@ -1281,41 +1268,33 @@ object Monitoring {
     * `parts`-way parallel where the window form drags every user
     * through one task. The three score branches join back on the
     * shared user_id partitioning. */
-  def rfm(ev: DataFrame): DataFrame = {
-    val (res, caches) = rfmLazy(ev)
+  def rfm(ev: DataFrame): DataFrame = Scope { s =>
     // |users|-row result: the eager checkpoint stands in for the
     // production parquet sink and releases the cached relations
-    val out = res.localCheckpoint(true)
-    caches.foreach(_.unpersist())
-    out
+    rfmPlan(s, ev).localCheckpoint(true)
   }
 
-  /** [[rfm]] without the eager checkpoint, exposing the cached
-    * relations (per-user base + the three ranged relations) for plan
-    * inspection / lifecycle control. */
-  private[graft] def rfmLazy(ev: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  /** [[rfm]] without the eager checkpoint, its cached relations
+    * (per-user base + the three ranged relations) persisted in `s`,
+    * for plan inspection. */
+  private[graft] def rfmPlan(s: Scope, ev: DataFrame): DataFrame = {
     val per = ev.groupBy(col("user_id")).agg(
       max(to_date(col("ts"))).as("last_day"),
       count(lit(1)).as("freq"),
       sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
     val anchor = per.agg(max(col("last_day")).as("corpus_day"))
-    val base = per.crossJoin(broadcast(anchor))
+    val base = s.persist(per.crossJoin(broadcast(anchor))
       .withColumn("recency_days", datediff(col("corpus_day"), col("last_day")).cast("long"))
-      .select(col("user_id"), col("recency_days"), col("freq"), col("cents"))
-      .persist()
+      .select(col("user_id"), col("recency_days"), col("freq"), col("cents")))
     val nUsers = base.agg(count(lit(1)).as("n_users"))
-    def score(order: Seq[Column], as: String): (DataFrame, DataFrame) = {
-      val (ranked, cache) = ScaleOps.globalRankLazy(base, order)
-      (ranked.crossJoin(broadcast(nUsers))
-        .select(col("user_id"), ntileOf(col("pos"), col("n_users"), 5).as(as)),
-        cache)
-    }
-    val (r, cr) = score(Seq(col("recency_days"), col("user_id")), "r")
-    val (f, cf) = score(Seq(col("freq").desc, col("user_id")), "f")
-    val (m, cm) = score(Seq(col("cents").desc, col("user_id")), "m")
-    val res = base.join(r, "user_id").join(f, "user_id").join(m, "user_id")
+    def score(order: Seq[Column], as: String): DataFrame =
+      ScaleOps.globalRank(s, base, order).crossJoin(broadcast(nUsers))
+        .select(col("user_id"), ntileOf(col("pos"), col("n_users"), 5).as(as))
+    val r = score(Seq(col("recency_days"), col("user_id")), "r")
+    val f = score(Seq(col("freq").desc, col("user_id")), "f")
+    val m = score(Seq(col("cents").desc, col("user_id")), "m")
+    base.join(r, "user_id").join(f, "user_id").join(m, "user_id")
       .withColumn("segment", col("r") * 100L + col("f") * 10L + col("m"))
-    (res, Seq(base, cr, cf, cm))
   }
 
   /** Exact integer ⌊a/b⌋ via double division — exact while a < 2⁵²
@@ -1447,9 +1426,9 @@ object Monitoring {
     * |users|-bounded relation a DAU pipeline materializes anyway, and
     * count(DISTINCT user_id) plans as two-level hash aggregation, so
     * no per-day sort or global window appears anywhere. */
-  def rollingDau(ev: DataFrame, windowDays: Int = 7): DataFrame = {
-    val du = ev.select(to_date(col("ts")).as("day"), col("user_id"))
-      .distinct().persist() // feeds the DAU agg, the spine, and the explode
+  def rollingDau(ev: DataFrame, windowDays: Int = 7): DataFrame = Scope { s =>
+    val du = s.persist(ev.select(to_date(col("ts")).as("day"), col("user_id"))
+      .distinct()) // feeds the DAU agg, the spine, and the explode
     val days = du.select(col("day")).distinct()
     val wau = du
       .select(explode(sequence(lit(0), lit(windowDays - 1))).as("off"),
@@ -1457,12 +1436,10 @@ object Monitoring {
       .select(expr("date_add(day, off)").as("day"), col("user_id"))
       .join(days, "day")
       .groupBy(col("day")).agg(countDistinct(col("user_id")).as("wau_7d"))
-    val result = du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
+    du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
       .join(wau, "day")
       .withColumn("stickiness", trunc4(col("dau") / col("wau_7d")))
       .localCheckpoint(true) // one row per day; releases the grid cache
-    du.unpersist()
-    result
   }
 
   /** Sequential-pattern support: which ordered event-type pairs a→b
@@ -1481,12 +1458,12 @@ object Monitoring {
     * pair exceeds 24 h, every other cross-boundary pair does too).
     * Both are equi-joins on (user, day) with integer-ms predicates —
     * grid-bounded, engine-exact, no windows anywhere. */
-  def seqPairs(ev: DataFrame): DataFrame = {
-    val g = ev.select(col("user_id"), col("event_type").as("t"),
+  def seqPairs(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds both orientation arms of both joins
+    val g = s.persist(ev.select(col("user_id"), col("event_type").as("t"),
         expr("ts_ms div 86400000").as("d"), col("ts_ms"))
       .groupBy(col("user_id"), col("t"), col("d"))
-      .agg(min(col("ts_ms")).as("mn"), max(col("ts_ms")).as("mx"))
-      .persist() // feeds both orientation arms of both joins
+      .agg(min(col("ts_ms")).as("mn"), max(col("ts_ms")).as("mx")))
     val same = g.as("a").join(g.as("b"),
         col("a.user_id") === col("b.user_id") && col("a.d") === col("b.d") &&
           col("a.t") =!= col("b.t") && col("b.mx") > col("a.mn"))
@@ -1499,15 +1476,13 @@ object Monitoring {
     val aUsers = g.select(col("t").as("ta"), col("user_id")).distinct()
       .groupBy(col("ta")).agg(count(lit(1)).as("n_a_users"))
     val total = ev.agg(countDistinct(col("user_id")).as("n_total"))
-    val result = userPairs.groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n_users"))
+    userPairs.groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n_users"))
       .join(aUsers, "ta")
       .crossJoin(broadcast(total))
       .select(col("ta"), col("tb"), col("n_users"), col("n_a_users"),
         trunc4(col("n_users") / col("n_total")).as("support"),
         trunc4(col("n_users") / col("n_a_users")).as("confidence"))
       .localCheckpoint(true) // ≤ |types|² rows; releases the grid cache
-    g.unpersist()
-    result
   }
 
   /** Cohort LTV curve: cumulative spend per user by cohort age — the
@@ -1522,10 +1497,10 @@ object Monitoring {
     * corpus-weeks age rows — the allowlisted bounded-relation window
     * shape, nothing global. Epoch-week buckets (day div 7) keep the
     * cohort key calendar-free and engine-portable. */
-  def cohortLtv(ev: DataFrame): DataFrame = {
-    val first = ev.groupBy(col("user_id"))
-      .agg(expr("min(ts_ms div 86400000) div 7").as("cohort_week"))
-      .persist() // feeds the fact join AND the cohort-size aggregate
+  def cohortLtv(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds the fact join AND the cohort-size aggregate
+    val first = s.persist(ev.groupBy(col("user_id"))
+      .agg(expr("min(ts_ms div 86400000) div 7").as("cohort_week")))
     val size = first.groupBy(col("cohort_week")).agg(count(lit(1)).as("n_users"))
     val weekly = ev.select(col("user_id"), expr("(ts_ms div 86400000) div 7").as("week"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -1533,15 +1508,13 @@ object Monitoring {
       .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("age_week"))
       .agg(sum(col("cents")).as("cents_week"))
     val byAge = Window.partitionBy(col("cohort_week")).orderBy(col("age_week"))
-    val result = weekly
+    weekly
       .withColumn("cum_cents", sum(col("cents_week")).over(byAge))
       .join(size, "cohort_week")
       .select(col("cohort_week"), col("age_week"), col("n_users"),
         col("cents_week"), col("cum_cents"),
         trunc4(col("cum_cents") / col("n_users")).as("ltv_cents"))
       .localCheckpoint(true) // cohorts × ages rows; releases the cache
-    first.unpersist()
-    result
   }
 
   /** Seasonal residual anomalies: days whose volume departs from
@@ -1587,14 +1560,14 @@ object Monitoring {
     * after runs on the ≤ corpus-weeks relation — the descending
     * cumulative is a window over that spine, never the fact. Weeks
     * are epoch-day div 7 (the [[cohortLtv]] convention). */
-  def survivalCurve(ev: DataFrame): DataFrame = {
-    val lw = ev.groupBy(col("user_id"))
-      .agg(expr("max(ts_ms div 86400000) div 7").as("week"))
-      .persist() // feeds the churn histogram AND the population count
+  def survivalCurve(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds the churn histogram AND the population count
+    val lw = s.persist(ev.groupBy(col("user_id"))
+      .agg(expr("max(ts_ms div 86400000) div 7").as("week")))
     val total = lw.agg(count(lit(1)).as("n_total"))
     val spine = ev.select(expr("(ts_ms div 86400000) div 7").as("week")).distinct()
     val byLast = lw.groupBy(col("week")).agg(count(lit(1)).as("n_churned"))
-    val result = spine.join(byLast, Seq("week"), "left")
+    spine.join(byLast, Seq("week"), "left")
       .withColumn("n_churned", coalesce(col("n_churned"), lit(0L)))
       .withColumn("survivors",
         sum(col("n_churned")).over(Window.orderBy(col("week").desc)))
@@ -1602,8 +1575,6 @@ object Monitoring {
       .select(col("week"), col("n_churned"), col("survivors"),
         trunc4(col("survivors") / col("n_total")).as("share"))
       .localCheckpoint(true) // one row per week; releases the cache
-    lw.unpersist()
-    result
   }
 
   /** CUPED variance reduction for the A/B readout ([[abTest]]'s
@@ -1628,19 +1599,19 @@ object Monitoring {
     * only the final ratios cast to double (the weekDiscord/markov
     * discipline). Exactness bound: n·Σx² ≤ 10³⁸ holds to ~10⁹ users ×
     * ~10¹⁰ lifetime cents. */
-  def abCuped(ev: DataFrame): DataFrame = {
+  def abCuped(ev: DataFrame): DataFrame = Scope { s =>
     val base = ev.select(col("user_id"), expr("ts_ms div 86400000").as("day"),
       floor(col("value") * 100 + 0.5).cast("long").as("cents"))
     val mid = base.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-    val per = base.crossJoin(broadcast(mid))
+    // feeds the pooled AND the per-variant sum aggregates
+    val per = s.persist(base.crossJoin(broadcast(mid))
       .groupBy(col("user_id"))
       .agg(sum(when(col("day") < col("mid"), col("cents")).otherwise(0L)).as("x"),
         sum(when(col("day") >= col("mid"), col("cents")).otherwise(0L)).as("y"))
       .withColumn("variant",
         when(pmod(graft.functions.TextHash.hash60(
           concat(lit("ab|"), col("user_id").cast("string"))), lit(2L)) === 0, "A")
-          .otherwise("B"))
-      .persist() // feeds the pooled AND the per-variant sum aggregates
+          .otherwise("B")))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     def sums(df: DataFrame, keys: Seq[Column]) = df.groupBy(keys: _*).agg(
       count(lit(1)).as("n"), sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
@@ -1653,7 +1624,7 @@ object Monitoring {
         (dec(col("np")) * col("sxyp") - col("sxp") * col("syp")).cast("double") /
           (dec(col("np")) * col("sxxp") - col("sxp") * col("sxp")).cast("double"))
       .withColumn("mean_x_pool", col("sxp").cast("double") / col("np"))
-    val result = sums(per, Seq(col("variant")))
+    sums(per, Seq(col("variant")))
       .crossJoin(broadcast(pooled))
       .withColumn("mean_y", col("sy").cast("double") / col("n"))
       .withColumn("mean_x", col("sx").cast("double") / col("n"))
@@ -1672,8 +1643,6 @@ object Monitoring {
         trunc4(col("var_y")).as("var_post"), trunc4(col("var_adj")).as("var_adj"),
         trunc4((col("var_y") - col("var_adj")) / col("var_y") * 100).as("var_cut_pct"))
       .localCheckpoint(true) // 2 rows; releases the per-user cache
-    per.unpersist()
-    result
   }
 
   /** Right-to-erasure impact audit: given a deletion list (hash-picked
@@ -1688,17 +1657,17 @@ object Monitoring {
     * Scale: the deletion predicate is a pure hash of the join key, so
     * at 100 TB it pushes as a runtime filter; the per-type rollups are
     * map-side-combined hash-aggs; nothing here sorts. */
-  def forgetAudit(ev: DataFrame, mod: Long = 20L): DataFrame = {
-    val erased = ev.select(col("user_id")).distinct()
+  def forgetAudit(ev: DataFrame, mod: Long = 20L): DataFrame = Scope { s =>
+    // feeds the semi AND the anti join
+    val erased = s.persist(ev.select(col("user_id")).distinct()
       .filter(pmod(graft.functions.TextHash.hash60(
-        concat(lit("erase|"), col("user_id").cast("string"))), lit(mod)) === 0)
-      .persist() // feeds the semi AND the anti join
+        concat(lit("erase|"), col("user_id").cast("string"))), lit(mod)) === 0))
     val kept = ev.join(erased, Seq("user_id"), "left_anti")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_kept"))
     val gone = ev.join(erased, Seq("user_id"), "left_semi")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_erased"),
         countDistinct(col("user_id")).as("n_erased_users"))
-    val result = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_total"))
+    ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_total"))
       .join(kept, Seq("event_type"), "left")
       .join(gone, Seq("event_type"), "left")
       .select(col("event_type"), col("n_total"),
@@ -1706,8 +1675,6 @@ object Monitoring {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("n_erased_users"), lit(0L)).as("n_erased_users"))
       .localCheckpoint(true) // |types| rows; releases the list cache
-    erased.unpersist()
-    result
   }
 
   /** Recurring-payment detection: per (user, merchant) purchase
@@ -1759,13 +1726,13 @@ object Monitoring {
     * over the ≤ |types|·|merchants| cell relation with a rnk ≤ 3
     * filter (WindowGroupLimit-eligible). One fact scan, one
     * hash-agg, everything after is cell-bounded. */
-  def concentration(ev: DataFrame): DataFrame = {
-    val cells = ev.select(col("event_type"),
+  def concentration(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds the HHI aggregate AND the top-k window
+    val cells = s.persist(ev.select(col("event_type"),
         get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .groupBy(col("event_type"), col("merchant"))
-      .agg(sum(col("cents")).as("c"))
-      .persist() // feeds the HHI aggregate AND the top-k window
+      .agg(sum(col("cents")).as("c")))
     val agg = cells.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_merchants"), sum(col("c")).as("total_cents"),
         sum(col("c") * col("c")).as("ssq"))
@@ -1776,15 +1743,13 @@ object Monitoring {
       .groupBy(col("event_type"))
       .agg(max(when(col("rnk") === 1, col("c"))).as("top1_cents"),
         sum(col("c")).as("top3_cents"))
-    val result = agg.join(topk, "event_type")
+    agg.join(topk, "event_type")
       .select(col("event_type"), col("n_merchants"), col("total_cents"),
         graft.functions.Portable.trunc6(col("ssq").cast("double") /
           (col("total_cents").cast("double") * col("total_cents"))).as("hhi"),
         trunc4(col("top1_cents") / col("total_cents")).as("top1_share"),
         trunc4(col("top3_cents") / col("total_cents")).as("top3_share"))
       .localCheckpoint(true) // |types| rows; releases the cell cache
-    cells.unpersist()
-    result
   }
 
   /** Per-user merchant-mix Shannon entropy — the account-takeover /
@@ -1833,22 +1798,20 @@ object Monitoring {
     * doubles are the two final divisions, mirrored shape-for-shape by
     * the oracle. One hash-agg over the fact; the 1-row global rides a
     * broadcast cross join. */
-  def targetEncode(ev: DataFrame, m: Int = 20): DataFrame = {
-    val cells = ev
+  def targetEncode(ev: DataFrame, m: Int = 20): DataFrame = Scope { s =>
+    // feeds the global mean AND the encoded projection
+    val cells = s.persist(ev
       .select(get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .groupBy(col("merchant"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-      .persist() // feeds the global mean AND the encoded projection
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents")))
     val g = cells.agg(sum(col("n")).as("tn"), sum(col("sum_cents")).as("tc"))
-    val result = cells.crossJoin(broadcast(g))
+    cells.crossJoin(broadcast(g))
       .select(col("merchant"), col("n"), col("sum_cents"),
         trunc4(col("sum_cents") / col("n")).as("naive_cents"),
         trunc4((col("sum_cents") + lit(m) * (col("tc") / col("tn"))) / (col("n") + lit(m)))
           .as("enc_cents"))
       .localCheckpoint(true) // |merchants| rows; releases the cell cache
-    cells.unpersist()
-    result
   }
 
   /** Hourly burst detection: (event_type, hour) buckets whose count
@@ -1873,9 +1836,9 @@ object Monitoring {
     * (event_type, h, n) hourly relation — shared with the streaming
     * replay ([[graft.streaming.Streaming]] `streamBurst`), so the
     * stream and batch z-gates can never diverge. */
-  private[graft] def burstFromHours(hoursIn: DataFrame, z: Double): DataFrame = {
-    val hours = hoursIn
-      .persist() // feeds the span, the type list, and the dense join
+  private[graft] def burstFromHours(hoursIn: DataFrame, z: Double): DataFrame = Scope { s =>
+    // feeds the span, the type list, and the dense join
+    val hours = s.persist(hoursIn)
     val span = hours.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
     val dense = hours.select(col("event_type")).distinct()
       .crossJoin(broadcast(span))
@@ -1885,15 +1848,13 @@ object Monitoring {
     val stats = dense.groupBy(col("event_type"))
       .agg(count(lit(1)).as("k"), sum(col("n")).as("s"),
         sum(col("n") * col("n")).as("s2"))
-    val result = dense.join(broadcast(stats), "event_type")
+    dense.join(broadcast(stats), "event_type")
       .withColumn("mu", col("s") / col("k"))
       .withColumn("sd", sqrt(col("s2") / col("k") - (col("s") / col("k")) * (col("s") / col("k"))))
       .filter(col("sd") > 0 && (col("n") - col("mu")) > lit(z) * col("sd"))
       .select(col("event_type"), (col("h") * 3600000L).as("hour_ms"), col("n"),
         trunc4((col("n") - col("mu")) / col("sd")).as("z"))
       .localCheckpoint(true) // flagged buckets only; releases the cache
-    hours.unpersist()
-    result
   }
 
   /** Pareto coverage: per event type, how many top merchants carry 80%
@@ -1907,12 +1868,12 @@ object Monitoring {
     * Scale: the rank/running-sum window runs over the COLLAPSED
     * (type, merchant) relation — bounded by the merchant catalog, not
     * the fact — partitioned by type (never global). */
-  def paretoShare(ev: DataFrame): DataFrame = {
-    val cells = ev
+  def paretoShare(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds the totals AND the ranked running sum
+    val cells = s.persist(ev
       .select(col("event_type"), get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("merchant")).agg(sum(col("cents")).as("c"))
-      .persist() // feeds the totals AND the ranked running sum
+      .groupBy(col("event_type"), col("merchant")).agg(sum(col("cents")).as("c")))
     val byC = Window.partitionBy(col("event_type"))
       .orderBy(col("c").desc, col("merchant"))
     val run = cells
@@ -1921,7 +1882,7 @@ object Monitoring {
         byC.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val tot = cells.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_merchants"), sum(col("c")).as("total_cents"))
-    val result = run.join(broadcast(tot), "event_type")
+    run.join(broadcast(tot), "event_type")
       .filter(col("cum") * 5 >= col("total_cents") * 4)
       .groupBy(col("event_type"))
       .agg(min(col("rnk")).as("k80"), min_by(col("cum"), col("rnk")).as("cum80"))
@@ -1929,8 +1890,6 @@ object Monitoring {
       .select(col("event_type"), col("n_merchants"), col("total_cents"),
         col("k80"), trunc4(col("cum80") / col("total_cents")).as("share80"))
       .localCheckpoint(true) // |types| rows; releases the cell cache
-    cells.unpersist()
-    result
   }
 
   /** Per-user inter-arrival profile: min/median/p90/max gap between a
@@ -1968,24 +1927,22 @@ object Monitoring {
     * Exactness: counts are BIGINTs; shares and the log run as the
     * identical double expression on both engines; emitted measures
     * truncate. One fact hash-agg; totals broadcast as one row. */
-  def woeEncode(ev: DataFrame): DataFrame = {
-    val cells = ev
+  def woeEncode(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds the totals AND the encoded projection
+    val cells = s.persist(ev
       .select(get_json_object(col("props"), "$.k").as("merchant"),
         when(col("event_type") === "error", 1L).otherwise(0L).as("bad"))
       .groupBy(col("merchant"))
       .agg(sum(col("bad")).as("n_bad"),
-        sum(lit(1L) - col("bad")).as("n_good"))
-      .persist() // feeds the totals AND the encoded projection
+        sum(lit(1L) - col("bad")).as("n_good")))
     val g = cells.agg(sum(col("n_bad")).as("tb"), sum(col("n_good")).as("tg"))
-    val result = cells.crossJoin(broadcast(g))
+    cells.crossJoin(broadcast(g))
       .withColumn("gs", (col("n_good") + 0.5) / (col("tg") + 0.5))
       .withColumn("bs", (col("n_bad") + 0.5) / (col("tb") + 0.5))
       .select(col("merchant"), col("n_good"), col("n_bad"),
         trunc4(log(col("gs") / col("bs"))).as("woe"),
         trunc4((col("gs") - col("bs")) * log(col("gs") / col("bs"))).as("iv_term"))
       .localCheckpoint(true) // |merchants| rows; releases the cell cache
-    cells.unpersist()
-    result
   }
 
   /** Exact ROC AUC of a score against a binary outcome via the
@@ -2099,7 +2056,7 @@ object Monitoring {
     *
     * Scale: one fact hash-agg; the running-max window and the argmax
     * join both run over the collapsed (type, day) relation. */
-  def drawdown(ev: DataFrame): DataFrame = {
+  def drawdown(ev: DataFrame): DataFrame = Scope { s =>
     val daily = ev
       .select(col("event_type"),
         (floor(col("ts_ms") / 86400000L) * 86400000L).as("day_ms"),
@@ -2107,11 +2064,11 @@ object Monitoring {
       .groupBy(col("event_type"), col("day_ms")).agg(sum(col("cents")).as("c"))
     val byDay = Window.partitionBy(col("event_type")).orderBy(col("day_ms"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dd = daily
+    // feeds the per-type max AND the argmax join
+    val dd = s.persist(daily
       .withColumn("peak", max(col("c")).over(byDay))
-      .withColumn("dd", col("peak") - col("c"))
-      .persist() // feeds the per-type max AND the argmax join
-    val result = dd.groupBy(col("event_type"))
+      .withColumn("dd", col("peak") - col("c")))
+    dd.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"), max(col("c")).as("peak_cents"),
         max(col("dd")).as("max_dd_cents"))
       .join(dd.groupBy(col("event_type"), col("dd"))
@@ -2122,8 +2079,6 @@ object Monitoring {
         col("max_dd_cents"), col("trough_day_ms"),
         trunc4(col("max_dd_cents") / col("peak_cents")).as("dd_share"))
       .localCheckpoint(true) // |types| rows; releases the daily cache
-    dd.unpersist()
-    result
   }
 
   /** Mutual information between event type and merchant — the
@@ -2138,15 +2093,15 @@ object Monitoring {
     * Scale: one (type, merchant) hash-agg over the fact; both marginal
     * relations and the 1-row total broadcast; the rollup runs over
     * ≤ |types|·|merchants| cells. */
-  def mutualInfo(ev: DataFrame): DataFrame = {
-    val cells = ev
+  def mutualInfo(ev: DataFrame): DataFrame = Scope { s =>
+    // feeds both marginals, the total, and the term join
+    val cells = s.persist(ev
       .select(col("event_type"), get_json_object(col("props"), "$.k").as("merchant"))
-      .groupBy(col("event_type"), col("merchant")).agg(count(lit(1)).as("n"))
-      .persist() // feeds both marginals, the total, and the term join
+      .groupBy(col("event_type"), col("merchant")).agg(count(lit(1)).as("n")))
     val tm = cells.groupBy(col("event_type")).agg(sum(col("n")).as("nt"))
     val mm = cells.groupBy(col("merchant")).agg(sum(col("n")).as("nm"))
     val tot = cells.agg(sum(col("n")).as("nn"))
-    val result = cells
+    cells
       .join(broadcast(tm), "event_type")
       .join(broadcast(mm), "merchant")
       .crossJoin(broadcast(tot))
@@ -2165,8 +2120,6 @@ object Monitoring {
         sum(col("term_scaled")).as("mi_scaled"))
       .withColumn("mi_part", trunc4(col("mi_scaled") / 1e8))
       .localCheckpoint(true) // |types| rows; releases the cell cache
-    cells.unpersist()
-    result
   }
 
   /** k-anonymity risk audit (Sweeney 2002) — the privacy screen next
@@ -2187,14 +2140,14 @@ object Monitoring {
     * QI key or k — bounded by the QI domain, and the violating-group
     * join back to pairs carries only small groups (< k·|violating|
     * rows by definition). */
-  def kAnonymity(ev: DataFrame, ks: Seq[Long] = Seq(2L, 5L, 10L)): DataFrame = {
-    val pairs = ev
+  def kAnonymity(ev: DataFrame, ks: Seq[Long] = Seq(2L, 5L, 10L)): DataFrame = Scope { s =>
+    val pairs = s.persist(ev
       .select(get_json_object(col("props"), "$.k").as("merchant"), col("event_type"),
         floor(col("value") / 10).cast("long").as("band"), col("user_id"))
-      .distinct().persist() // feeds group sizes AND the affected-user join
-    val gs = pairs.groupBy(col("merchant"), col("event_type"), col("band"))
-      .agg(count(lit(1)).as("g"))
-      .persist() // feeds the total AND the per-k flags
+      .distinct()) // feeds group sizes AND the affected-user join
+    // feeds the total AND the per-k flags
+    val gs = s.persist(pairs.groupBy(col("merchant"), col("event_type"), col("band"))
+      .agg(count(lit(1)).as("g")))
     val tot = gs.agg(count(lit(1)).as("n_groups"))
     val kdf = pairs.sparkSession.createDataFrame(
       ks.map(Tuple1(_))).toDF("k")
@@ -2204,14 +2157,12 @@ object Monitoring {
     val affected = flagged
       .join(pairs, Seq("merchant", "event_type", "band"))
       .groupBy(col("k")).agg(countDistinct(col("user_id")).as("n_affected_users"))
-    val result = perK.join(affected, Seq("k"), "left")
+    perK.join(affected, Seq("k"), "left")
       .withColumn("n_affected_users", coalesce(col("n_affected_users"), lit(0L)))
       .crossJoin(broadcast(tot))
       .select(col("k"), col("n_groups"), col("n_violating"), col("n_affected_users"),
         trunc4(col("n_violating") / col("n_groups")).as("risk_share"))
       .localCheckpoint(true) // |ks| rows; releases both caches
-    gs.unpersist(); pairs.unpersist()
-    result
   }
 
   /** Distinct l-diversity audit (Machanavajjhala et al. 2007) — the
@@ -2224,29 +2175,26 @@ object Monitoring {
     * [[kAnonymity]] — group sizes come from one distinct-projection
     * aggregate, thresholds ride a literal frame, and the affected-user
     * count joins the violating groups back to the slim projection. */
-  def lDiversity(ev: DataFrame, ls: Seq[Long] = Seq(2L, 3L)): DataFrame = {
-    val rows = ev
+  def lDiversity(ev: DataFrame, ls: Seq[Long] = Seq(2L, 3L)): DataFrame = Scope { s =>
+    val rows = s.persist(ev
       .select(get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") / 10).cast("long").as("band"),
         col("event_type"), col("user_id"))
-      .distinct().persist() // feeds diversity counts AND the affected join
-    val gs = rows.groupBy(col("merchant"), col("band"))
-      .agg(countDistinct(col("event_type")).as("ndist"))
-      .persist()
+      .distinct()) // feeds diversity counts AND the affected join
+    val gs = s.persist(rows.groupBy(col("merchant"), col("band"))
+      .agg(countDistinct(col("event_type")).as("ndist")))
     val tot = gs.agg(count(lit(1)).as("n_groups"))
     val ldf = rows.sparkSession.createDataFrame(ls.map(Tuple1(_))).toDF("l")
     val flagged = gs.join(broadcast(ldf), col("ndist") < col("l"))
     val perL = flagged.groupBy(col("l")).agg(count(lit(1)).as("n_violating"))
     val affected = flagged.join(rows, Seq("merchant", "band"))
       .groupBy(col("l")).agg(countDistinct(col("user_id")).as("n_affected_users"))
-    val result = perL.join(affected, Seq("l"), "left")
+    perL.join(affected, Seq("l"), "left")
       .withColumn("n_affected_users", coalesce(col("n_affected_users"), lit(0L)))
       .crossJoin(broadcast(tot))
       .select(col("l"), col("n_groups"), col("n_violating"), col("n_affected_users"),
         trunc4(col("n_violating") / col("n_groups")).as("risk_share"))
       .localCheckpoint(true) // |ls| rows; releases both caches
-    gs.unpersist(); rows.unpersist()
-    result
   }
 
   /** Minimum-generalization search for k-anonymity — the
@@ -2297,27 +2245,27 @@ object Monitoring {
     * users × 10⁹ rows) and the threshold test `tvd·10 > t₁₀·2·n_g·N`
     * and the reported 4-digit TVD (`div`, floor semantics) stay
     * engine-exact. Output: one row per t₁₀ ∈ ts (t = t₁₀/10). */
-  def tCloseness(ev: DataFrame, ts: Seq[Long] = Seq(2L, 3L)): DataFrame = {
+  def tCloseness(ev: DataFrame, ts: Seq[Long] = Seq(2L, 3L)): DataFrame = Scope { s =>
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val rows = ev
+    val rows = s.persist(ev
       .select(get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") / 10).cast("long").as("band"),
         col("event_type"), col("user_id"))
-      .distinct().persist() // feeds the cell counts AND the affected join
-    val cell = rows.groupBy(col("merchant"), col("band"), col("event_type"))
-      .agg(count(lit(1)).as("cgs")).persist() // feeds sens totals AND groups
+      .distinct()) // feeds the cell counts AND the affected join
+    val cell = s.persist(rows.groupBy(col("merchant"), col("band"), col("event_type"))
+      .agg(count(lit(1)).as("cgs"))) // feeds sens totals AND groups
     val sens = cell.groupBy(col("event_type")).agg(sum(col("cgs")).as("cs"))
     val tot = sens.agg(sum(col("cs")).as("bign"))
     val grp = cell.groupBy(col("merchant"), col("band")).agg(sum(col("cgs")).as("ng"))
-    val gnum = cell.join(sens, "event_type")
+    // feeds the total AND the per-t flags
+    val gnum = s.persist(cell.join(sens, "event_type")
       .join(grp, Seq("merchant", "band"))
       .crossJoin(broadcast(tot)) // 1-row scalar
       .groupBy(col("merchant"), col("band"))
       .agg(max(col("ng")).as("ng"), max(col("bign")).as("bign"),
         (sum(abs(dec(col("cgs")) * col("bign") - dec(col("cs")) * col("ng"))) +
           dec(max(col("ng"))) * (max(col("bign")) - sum(col("cs")))).as("tvd_num"))
-      .withColumn("den2", dec(col("ng")) * col("bign") * 2)
-      .persist() // feeds the total AND the per-t flags
+      .withColumn("den2", dec(col("ng")) * col("bign") * 2))
     val tot2 = gnum.agg(count(lit(1)).as("n_groups"))
     val tdf = rows.sparkSession.createDataFrame(ts.map(Tuple1(_))).toDF("t_scaled")
     val flagged = gnum.join(broadcast(tdf),
@@ -2327,7 +2275,7 @@ object Monitoring {
       .agg(count(lit(1)).as("n_violating"), max(col("tvd4")).as("max_tvd4"))
     val affected = flagged.join(rows, Seq("merchant", "band"))
       .groupBy(col("t_scaled")).agg(countDistinct(col("user_id")).as("n_affected_users"))
-    val result = tdf // |ts| rows; left side of an outer join is never broadcast
+    tdf // |ts| rows; left side of an outer join is never broadcast
       .join(perT, Seq("t_scaled"), "left")
       .join(affected, Seq("t_scaled"), "left")
       .crossJoin(broadcast(tot2))
@@ -2337,8 +2285,6 @@ object Monitoring {
         (coalesce(col("max_tvd4"), lit(0L)) / 10000.0).as("max_tvd"),
         trunc4(coalesce(col("n_violating"), lit(0L)) / col("n_groups")).as("risk_share"))
       .localCheckpoint(true) // |ts| rows; releases all caches
-    gnum.unpersist(); cell.unpersist(); rows.unpersist()
-    result
   }
 
   /** Alert triage — the monitoring capstone over FOUR detector
@@ -2779,20 +2725,20 @@ object Monitoring {
     * (k+1)-th value; per-bin log terms floor to 1e6-scaled BIGINTs and
     * the weighted sum is exact. The windows run over the value-domain-
     * bounded bin relation — the [[winsorize]]/[[scoreAuc]] discipline. */
-  def tailIndex(ev: DataFrame, k: Long = 100L): DataFrame = {
+  def tailIndex(ev: DataFrame, k: Long = 100L): DataFrame = Scope { s =>
     val bins = ev
       .select(col("event_type"), floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .filter(col("cents") > 0)
       .groupBy(col("event_type"), col("cents")).agg(count(lit(1)).as("n"))
     val byDesc = Window.partitionBy(col("event_type")).orderBy(col("cents").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = bins
-      .withColumn("cum_before", coalesce(sum(col("n")).over(byDesc), lit(0L)))
-      .persist() // feeds the threshold lookup AND the weighted terms
+    // feeds the threshold lookup AND the weighted terms
+    val ranked = s.persist(bins
+      .withColumn("cum_before", coalesce(sum(col("n")).over(byDesc), lit(0L))))
     val thr = ranked
       .filter(col("cum_before") <= k && col("cum_before") + col("n") > k)
       .select(col("event_type"), col("cents").as("xk1"))
-    val result = ranked.join(broadcast(thr), "event_type")
+    ranked.join(broadcast(thr), "event_type")
       .filter(col("cum_before") < k && col("cents") > col("xk1"))
       .withColumn("w", least(col("n"), lit(k) - col("cum_before")))
       .withColumn("term", col("w") *
@@ -2805,8 +2751,6 @@ object Monitoring {
         when(col("hill_scaled") > 0,
           trunc4(lit(k.toDouble) * 1e6 / col("hill_scaled"))).as("alpha"))
       .localCheckpoint(true) // |types| rows; releases the bin cache
-    ranked.unpersist()
-    result
   }
 
   /** Value-at-Risk + Expected Shortfall (Artzner et al. 1999; the

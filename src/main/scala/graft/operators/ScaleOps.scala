@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -167,17 +167,12 @@ object ScaleOps {
     * action time — which is why [[bloomRevenue]] executes eagerly
     * inside this window rather than returning a lazy plan that would
     * optimize after the confs are restored. */
-  private[graft] def withBloomConfs[T](spark: SparkSession)(body: => T): T = {
-    val pins = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pins.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
+  private[graft] def withBloomConfs[T](spark: SparkSession)(body: => T): T =
+    Scope.withConf(spark, Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> Some("-1"),
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> Some("true"),
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" ->
+        Some("0")))(body)
 
   /** The lazy join [[bloomRevenue]] executes: brand-filtered `part`
     * (1/25 of the dim) against the `lineitem` fact on partkey, rolled
@@ -284,12 +279,17 @@ object ScaleOps {
     * cannot reorder rows — `pos` is defined by the order alone,
     * whatever boundaries the sampler picks.
     *
-    * Returns (ranked relation with `posCol`, the persisted ranged
-    * relation) — the caller unpersists the latter once the former is
-    * materialized. */
-  def globalRankLazy(df: DataFrame, order: Seq[Column], parts: Int = 0,
-      posCol: String = "pos"): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
+    * Returns the lazy ranked relation with `posCol`; its persisted
+    * range-partitioned input belongs to `s`, so the caller materializes
+    * the result inside that scope. */
+  private[graft] def globalRank(s: Scope, df: DataFrame, order: Seq[Column],
+      parts: Int = 0, posCol: String = "pos"): DataFrame =
+    rankPartitioned(rangePartitioned(s, df, order, parts), order, posCol)
+
+  /** [[globalRank]]'s first phase: `df` range-partitioned on `order`
+    * with its partition id as `_gr_pid`, persisted in `s`. */
+  private[graft] def rangePartitioned(s: Scope, df: DataFrame, order: Seq[Column],
+      parts: Int = 0): DataFrame = {
     // Scale-adaptive range width (r11, guide §2): the old constant 32
     // was tuned for neither regime — 32 one-task-minimum partitions of
     // overhead on a megabyte corpus, and a catastrophic 32-way sort of
@@ -310,11 +310,15 @@ object ScaleOps {
     // and WITHOUT the cache Catalyst column-prunes the two branches
     // differently below the range exchange, defeating exchange reuse —
     // the range shuffle would run twice (measured; AQE stage reuse
-    // does not fire across the differently-pruned subtrees). Caller
-    // unpersists after materializing the result.
-    val ranged = df.repartitionByRange(nParts, order: _*)
-      .withColumn("_gr_pid", spark_partition_id())
-      .persist()
+    // does not fire across the differently-pruned subtrees).
+    s.persist(df.repartitionByRange(nParts, order: _*)
+      .withColumn("_gr_pid", spark_partition_id()))
+  }
+
+  /** [[globalRank]]'s second phase over a [[rangePartitioned]] relation. */
+  private[graft] def rankPartitioned(ranged: DataFrame, order: Seq[Column],
+      posCol: String = "pos"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val local = ranged.withColumn("_gr_lrn",
       row_number().over(
         Window.partitionBy(col("_gr_pid")).orderBy(order: _*)).cast("long"))
@@ -323,10 +327,9 @@ object ScaleOps {
         Window.orderBy(col("_gr_pid")).rowsBetween(Window.unboundedPreceding, -1)),
         lit(0L)))
       .select(col("_gr_pid"), col("_gr_off"))
-    val ranked = local.join(broadcast(offsets), "_gr_pid")
+    local.join(broadcast(offsets), "_gr_pid")
       .withColumn(posCol, col("_gr_off") + col("_gr_lrn"))
       .drop("_gr_pid", "_gr_lrn", "_gr_off")
-    (ranked, ranged)
   }
 
   /** Incremental aggregate maintenance: merge a pre-aggregated STATE
@@ -463,20 +466,17 @@ object ScaleOps {
 
   // ---- driver wiring ----
 
-  /** [[globalRankLazy]] itself under the oracle gate: every event's
+  /** [[globalRank]] itself under the oracle gate: every event's
     * exact global position by (cents desc, event_id) — the DuckDB
     * `row_number() OVER (ORDER BY …)` computed WITHOUT the one-task
     * sort. The hash compare makes the two-phase rank's exactness a
     * driver-checked fact, not just a ScaleSpec property. */
-  def globalRankEvents(ev: DataFrame): DataFrame = {
+  def globalRankEvents(ev: DataFrame): DataFrame = Scope { s =>
     val cents = ev.select(col("event_id"),
       floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val (ranked, cache) = globalRankLazy(
-      cents, Seq(col("cents").desc, col("event_id")))
-    val out = ranked.select(col("event_id"), col("cents"), col("pos"))
+    globalRank(s, cents, Seq(col("cents").desc, col("event_id")))
+      .select(col("event_id"), col("cents"), col("pos"))
       .localCheckpoint(true)
-    cache.unpersist()
-    out
   }
 
   /** Zone-map pruning audit — the data-LAYOUT decision [[zorderEvents]]
@@ -589,7 +589,7 @@ object ScaleOps {
   /** Hub-cap audit — every silent truncation the pair generators
     * perform, made VISIBLE as data: one row per hub guard
     * ([[Graph.coEdges]]' maxCell, [[Dedup.containmentPairs]]' and
-    * [[Dedup.substringRuns]]' maxDf, [[Dedup.fuzzyEditPairsLazy]]'
+    * [[Dedup.substringRuns]]' maxDf, [[Dedup.fuzzyEditPairsPlan]]'
     * maxBlock) reporting how many groups the cap would drop and how
     * many member rows those groups carry. The caps are the right scale
     * trade (a stadium-sized cell / boilerplate shingle identifies

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.NativeVector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -125,22 +125,19 @@ object Similarity {
   /** LSH-bucketed ANN top-k: rank only candidates sharing a band with
     * the query. Eager result so the banded intermediate can be released
     * (library callers don't accumulate cached relations). */
-  def annTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = {
+  def annTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = Scope { s =>
     val v = withEmbD(emb)
-    val bands = v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
-      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-      .persist()
+    val bands = s.persist(v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
+      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey")))
     val qb = bands.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("band"), col("bkey"))
     val cand = bands.join(broadcast(qb), Seq("band", "bkey"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("qe"), col("e"))
       .dropDuplicates("q_id", "vec_id")
-    val result = topKByCos(cand.select(col("q_id"), col("vec_id"),
+    topKByCos(cand.select(col("q_id"), col("vec_id"),
         trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos")), k)
       .localCheckpoint(true) // k rows per query — tiny at any scale
-    bands.unpersist()
-    result
   }
 
   /** Contrastive hard-negative mining — the training-pair generator
@@ -154,12 +151,11 @@ object Similarity {
     * cross-label near-misses rather than being used up by same-label
     * true neighbors. */
   def hardNegatives(emb: DataFrame, queryIds: Seq[Long] = DefaultQueryIds,
-      k: Int = 10): DataFrame = {
+      k: Int = 10): DataFrame = Scope { s =>
     val lbl = emb.select(col("vec_id"), col("label").cast("long").as("label"))
     val v = withEmbD(emb)
-    val bands = v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
-      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-      .persist()
+    val bands = s.persist(v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
+      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey")))
     val qb = bands.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("band"), col("bkey"))
     val cand = bands.join(broadcast(qb), Seq("band", "bkey"))
@@ -173,12 +169,10 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("label").as("q_label"))), "q_id")
       .join(lbl.select(col("vec_id"), col("label").as("neg_label")), "vec_id")
       .filter(col("q_label") =!= col("neg_label"))
-    val result = topKByCos(crossLabel, k)
+    topKByCos(crossLabel, k)
       .select(col("q_id"), col("q_label"), col("vec_id"), col("neg_label"),
         col("cos"), col("rnk"))
       .localCheckpoint(true) // ≤ k rows per query
-    bands.unpersist()
-    result
   }
 
   /** Multi-probe LSH ANN top-k: like [[annTopK]], but each query also
@@ -194,10 +188,10 @@ object Similarity {
   /** [[annTopKMultiProbe]] over an already-projected vector relation
     * (shared by [[rrfFusion]], which reuses one persisted `v` across
     * both ANN methods — the [[recallAtK]] discipline). */
-  private def annTopKMultiProbeOn(v: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val bands = v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
-      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-      .persist()
+  private def annTopKMultiProbeOn(v: DataFrame, queryIds: Seq[Long],
+      k: Int): DataFrame = Scope { s =>
+    val bands = s.persist(v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
+      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey")))
     val variants = col("bkey") +:
       (0 until RowsPerBand).map(i => col("bkey").bitwiseXOR(lit(1 << i)))
     val qb = bands.filter(col("vec_id").isin(queryIds: _*))
@@ -207,11 +201,9 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("qe"), col("e"))
       .dropDuplicates("q_id", "vec_id")
-    val result = topKByCos(cand.select(col("q_id"), col("vec_id"),
+    topKByCos(cand.select(col("q_id"), col("vec_id"),
         trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos")), k)
       .localCheckpoint(true)
-    bands.unpersist()
-    result
   }
 
   val NList = 16
@@ -297,11 +289,9 @@ object Similarity {
     * At 100 TB the vectors would additionally be written bucketed by
     * list_id, turning the probe join into partition pruning at the
     * scan (asserted in ScaleSpec). */
-  def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = {
-    val v = withEmbD(emb).persist() // training + assign + probe passes
-    val result = ivfTopKOn(v, queryIds, k)
-    v.unpersist()
-    result
+  def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb)) // training + assign + probe passes
+    ivfTopKOn(v, queryIds, k)
   }
 
   /** [[ivfTopK]] over an already-persisted vector relation (shared by
@@ -364,30 +354,26 @@ object Similarity {
     * aggregates are order-independent, so the result is engine-exact;
     * the oracle retrains the same k-means (exact quantized sums) and
     * replays the same pairing. */
-  /** [[semanticDedup]]'s lazy plan + its persisted inputs, for plan
-    * inspection (ScaleSpec pins the pairing join shape) and the eager
-    * public wrapper. */
-  private[graft] def semanticDedupLazy(emb: DataFrame,
-      threshold: Double): (DataFrame, DataFrame, DataFrame) = {
-    val v = withEmbD(emb).persist() // training + assignment + pairing passes
+  /** [[semanticDedup]]'s lazy plan, its inputs persisted in `s`, for
+    * plan inspection (ScaleSpec pins the pairing join shape) and the
+    * eager public wrapper. */
+  private[graft] def semanticDedupPlan(s: Scope, emb: DataFrame,
+      threshold: Double): DataFrame = {
+    val v = s.persist(withEmbD(emb)) // training + assignment + pairing passes
     val cents = trainedCentroids(v).localCheckpoint(true)
-    val vl = v.join(assignTo(v, cents), "vec_id").persist()
+    val vl = s.persist(v.join(assignTo(v, cents), "vec_id"))
     val pairs = vl.as("x").join(vl.as("y"),
         col("x.list_id") === col("y.list_id") && col("x.vec_id") < col("y.vec_id"))
       .select(col("y.vec_id").as("vec_id"), col("x.vec_id").as("a_id"),
         trunc4(NativeVector.cosine(col("x.e"), col("y.e"))).as("cos"))
       .filter(col("cos") >= threshold)
-    val result = pairs.groupBy(col("vec_id"))
+    pairs.groupBy(col("vec_id"))
       .agg(min(col("a_id")).as("dup_of"), count(lit(1)).as("n_dups"),
         max(col("cos")).as("best_cos"))
-    (result, v, vl)
   }
 
-  def semanticDedup(emb: DataFrame, threshold: Double = 0.4): DataFrame = {
-    val (lazyResult, v, vl) = semanticDedupLazy(emb, threshold)
-    val result = lazyResult.localCheckpoint(true) // dropped set ≪ corpus
-    vl.unpersist(); v.unpersist()
-    result
+  def semanticDedup(emb: DataFrame, threshold: Double = 0.4): DataFrame = Scope { s =>
+    semanticDedupPlan(s, emb, threshold).localCheckpoint(true) // dropped set ≪ corpus
   }
 
   /** IVF index health audit — the report an ANN deployment reads
@@ -406,8 +392,8 @@ object Similarity {
     * hash-agg — deliberately NOT a row_number window, which would
     * shuffle |v|·NList scored rows — then one per-list hash-agg over
     * |v| narrow rows. */
-  def ivfStats(emb: DataFrame): DataFrame = {
-    val v = withEmbD(emb).persist() // training + scoring passes
+  def ivfStats(emb: DataFrame): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb)) // training + scoring passes
     val cents = trainedCentroids(v).localCheckpoint(true)
     val top2 = v.crossJoin(broadcast(cents))
       .select(col("vec_id"),
@@ -417,7 +403,7 @@ object Similarity {
       .agg(sort_array(collect_list(col("s")), asc = false).as("r"))
       .select(col("vec_id"), (-col("r")(0)("ncid")).as("list_id"),
         col("r")(0)("cosq").as("own_q"), col("r")(1)("cosq").as("next_q"))
-    val result = top2.groupBy(col("list_id"))
+    top2.groupBy(col("list_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("own_q")).as("sum_own_q"),
         min(col("own_q")).as("min_own_q"),
@@ -428,8 +414,6 @@ object Similarity {
         trunc4(col("sum_own_q").cast("double") / col("n") / 10000.0).as("mean_cos"),
         trunc4(col("sum_margin_q").cast("double") / col("n") / 10000.0).as("mean_margin"))
       .localCheckpoint(true) // ≤ NList rows
-    v.unpersist()
-    result
   }
 
   /** kNN-classifier embedding eval — the standard "are these
@@ -459,19 +443,16 @@ object Similarity {
     * index side is [[writeBucketedByList]]'s bucketed layout and the
     * probe join prunes at the scan. */
   def knnLabelEval(emb: DataFrame, holdMod: Long = 7L, k: Int = 5,
-      maxPerList: Int = 64): DataFrame = {
-    val (lazyResult, v) = knnLabelEvalLazy(emb, holdMod, k, maxPerList)
-    val result = lazyResult.localCheckpoint(true) // ≤ #labels rows
-    v.unpersist()
-    result
+      maxPerList: Int = 64): DataFrame = Scope { s =>
+    knnLabelEvalPlan(s, emb, holdMod, k, maxPerList).localCheckpoint(true) // ≤ #labels rows
   }
 
-  /** [[knnLabelEval]]'s lazy plan + its persisted input, for plan
+  /** [[knnLabelEval]]'s lazy plan, its input persisted in `s`, for plan
     * inspection (ScaleSpec pins the probe join's build side as the
     * capped index, never the held-out query slice). */
-  private[graft] def knnLabelEvalLazy(emb: DataFrame, holdMod: Long = 7L,
-      k: Int = 5, maxPerList: Int = 64): (DataFrame, DataFrame) = {
-    val v = withEmbD(emb).persist() // split + training + assign + probe
+  private[graft] def knnLabelEvalPlan(s: Scope, emb: DataFrame, holdMod: Long = 7L,
+      k: Int = 5, maxPerList: Int = 64): DataFrame = {
+    val v = s.persist(withEmbD(emb)) // split + training + assign + probe
     val lbl = emb.select(col("vec_id"), col("label").cast("long").as("label"))
     val tr = v.filter(pmod(col("vec_id"), lit(holdMod)) =!= 0)
     val ho = v.filter(pmod(col("vec_id"), lit(holdMod)) === 0)
@@ -505,7 +486,7 @@ object Similarity {
       .agg(expr("max_by(n_label, struct(cnt, -n_label))").as("pred"))
     // LEFT join from the full held-out slice: candidate-less queries
     // stay in the denominator (pred NULL → incorrect + n_unclassified)
-    val result = ho.select(col("vec_id").as("q_id"))
+    ho.select(col("vec_id").as("q_id"))
       .join(lbl.select(col("vec_id").as("q_id"), col("label").as("true_label")), "q_id")
       .join(pred, Seq("q_id"), "left")
       .groupBy(col("true_label"))
@@ -514,7 +495,6 @@ object Similarity {
         sum(when(col("pred").isNull, 1L).otherwise(0L)).as("n_unclassified"))
       .select(col("true_label"), col("n"), col("n_correct"), col("n_unclassified"),
         trunc4(col("n_correct").cast("double") / col("n")).as("accuracy"))
-    (result, v)
   }
 
   /** Incremental IVF maintenance audit — the report behind the
@@ -546,8 +526,8 @@ object Similarity {
     c.localCheckpoint(true)
   }
 
-  def ivfIncr(emb: DataFrame, holdMod: Long = 7L): DataFrame = {
-    val v = withEmbD(emb).persist() // two trainings + three assigns
+  def ivfIncr(emb: DataFrame, holdMod: Long = 7L): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb)) // two trainings + three assigns
     val tr = v.filter(pmod(col("vec_id"), lit(holdMod)) =!= 0)
     val ho = v.filter(pmod(col("vec_id"), lit(holdMod)) === 0)
     val frozen = trainedCentroids(tr).localCheckpoint(true)
@@ -561,15 +541,13 @@ object Similarity {
       .agg(count(lit(1)).as("n_added"),
         sum(when(col("frozen_list") =!= col("retrained_list"), 1L)
           .otherwise(0L)).as("n_would_move"))
-    val result = base.join(moves, Seq("list_id"), "full_outer")
+    base.join(moves, Seq("list_id"), "full_outer")
       .select(col("list_id"),
         coalesce(col("n_base"), lit(0L)).as("n_base"),
         coalesce(col("n_added"), lit(0L)).as("n_added"),
         (coalesce(col("n_base"), lit(0L)) + coalesce(col("n_added"), lit(0L))).as("n_new"),
         coalesce(col("n_would_move"), lit(0L)).as("n_would_move"))
       .localCheckpoint(true) // ≤ NList rows
-    v.unpersist()
-    result
   }
 
   /** Filtered ANN — top-k under a metadata predicate (here: the
@@ -587,8 +565,8 @@ object Similarity {
     * rows against the label-filtered corpus); post-filter path reuses
     * the IVF probe equi-join. Candidates stay bounded by the label
     * selectivity resp. NProbe/NList. */
-  def filteredTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = {
-    val v = withEmbD(emb).persist() // training + assign + two scoring passes
+  def filteredTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb)) // training + assign + two scoring passes
     val vl = v.join(emb.select(col("vec_id"), col("label")), "vec_id")
     val q = vl.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("label").as("qlabel"))
@@ -597,9 +575,9 @@ object Similarity {
         col("label") === col("qlabel") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos"))
-    val exact = exactScored.withColumn("rnk", row_number().over(
+    val exact = s.persist(exactScored.withColumn("rnk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rnk") <= k).select(col("q_id"), col("vec_id")).persist()
+      .filter(col("rnk") <= k).select(col("q_id"), col("vec_id")))
     val cents = trainedCentroids(v).localCheckpoint(true)
     val probes = q.crossJoin(broadcast(cents))
       .select(col("q_id"), col("qe"), col("qlabel"), col("cid"),
@@ -608,28 +586,26 @@ object Similarity {
         Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("cid"))))
       .filter(col("prnk") <= NProbe)
       .select(col("q_id"), col("qe"), col("qlabel"), col("cid").as("list_id"))
-    val post = vl.join(assignTo(v, cents), "vec_id")
+    val post = s.persist(vl.join(assignTo(v, cents), "vec_id")
       .join(broadcast(probes), Seq("list_id"))
       .filter(col("vec_id") =!= col("q_id") && col("label") === col("qlabel"))
       .select(col("q_id"), col("vec_id"),
         trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rnk") <= k).select(col("q_id"), col("vec_id")).persist()
+      .filter(col("rnk") <= k).select(col("q_id"), col("vec_id")))
     val nf = exactScored.groupBy(col("q_id")).agg(count(lit(1)).as("n_filtered"))
     val nExact = exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
     val nPost = post.groupBy(col("q_id")).agg(count(lit(1)).as("n_post"))
     val hits = exact.join(post, Seq("q_id", "vec_id"))
       .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    val result = nf.join(nExact, "q_id")
+    nf.join(nExact, "q_id")
       .join(nPost, Seq("q_id"), "left").join(hits, Seq("q_id"), "left")
       .select(col("q_id"), col("n_filtered"), col("n_exact"),
         coalesce(col("n_post"), lit(0L)).as("n_post"),
         coalesce(col("hits"), lit(0L)).as("hits"),
         trunc4(coalesce(col("hits"), lit(0L)).cast("double") / col("n_exact")).as("recall"))
       .localCheckpoint(true) // |Q| rows
-    exact.unpersist(); post.unpersist(); v.unpersist()
-    result
   }
 
   /** Cross-corpus EMBEDDING-SPACE decontamination — the semantic
@@ -670,18 +646,16 @@ object Similarity {
     * slice (exact quantized sums) and replays probe ranking, cap
     * thinning, and scoring with identical tie-breaks. */
   def simDecontam(emb: DataFrame, holdMod: Long = 7L, threshold: Double = 0.4,
-      maxPerList: Int = 64): DataFrame = {
-    val (lazyResult, v) = simDecontamLazy(emb, holdMod, threshold, maxPerList)
-    val result = lazyResult.localCheckpoint(true) // contaminated slice ≪ corpus
-    v.unpersist()
-    result
+      maxPerList: Int = 64): DataFrame = Scope { s =>
+    simDecontamPlan(s, emb, holdMod, threshold, maxPerList)
+      .localCheckpoint(true) // contaminated slice ≪ corpus
   }
 
-  /** [[simDecontam]]'s lazy plan + its persisted input, for plan
+  /** [[simDecontam]]'s lazy plan, its input persisted in `s`, for plan
     * inspection (ScaleSpec pins the probe join as an equi-join). */
-  private[graft] def simDecontamLazy(emb: DataFrame, holdMod: Long = 7L,
-      threshold: Double = 0.4, maxPerList: Int = 64): (DataFrame, DataFrame) = {
-    val v = withEmbD(emb).persist() // split + training + assign + probe passes
+  private[graft] def simDecontamPlan(s: Scope, emb: DataFrame, holdMod: Long = 7L,
+      threshold: Double = 0.4, maxPerList: Int = 64): DataFrame = {
+    val v = s.persist(withEmbD(emb)) // split + training + assign + probe passes
     val tr = v.filter(pmod(col("vec_id"), lit(holdMod)) =!= 0)
     val ho = v.filter(pmod(col("vec_id"), lit(holdMod)) === 0)
     val cents = trainedCentroids(tr).localCheckpoint(true) // ≤ NList rows
@@ -705,16 +679,15 @@ object Similarity {
     val scored = broadcast(capped).join(probes, Seq("list_id"))
       .select(col("q_id"), col("vec_id"),
         trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos"))
-    val result = scored.filter(col("cos") >= threshold)
+    scored.filter(col("cos") >= threshold)
       .groupBy(col("q_id"))
       .agg(min(col("vec_id")).as("train_match"),
         count(lit(1)).as("n_matches"), max(col("cos")).as("best_cos"))
-    (result, v)
   }
 
   /** Embedding-cosine near-dup pairs: LSH band join (no cross join),
     * verified by cosine ≥ threshold. */
-  def nearDupPairs(emb: DataFrame, threshold: Double = 0.4): DataFrame = {
+  def nearDupPairs(emb: DataFrame, threshold: Double = 0.4): DataFrame = Scope { s =>
     val v = withEmbD(emb)
     // all-pairs self-join ⇒ the WIDE KnnBands×KnnRowsPerBand geometry,
     // same reasoning as [[knnGraph]] (measured 14 s → ~linear at 10×
@@ -723,11 +696,10 @@ object Similarity {
     // pairs near the 0.4 verification floor surface less often — the
     // floor only filters verified candidates, it is not a recall
     // promise at that similarity.
-    val bands = v.select(col("vec_id"), col("e"),
+    val bands = s.persist(v.select(col("vec_id"), col("e"),
         explode(bandStructsWith(col("e"), KnnBands, KnnRowsPerBand)).as("bb"))
-      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-      .persist()
-    val result = bands.as("x").join(bands.as("y"),
+      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey")))
+    bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"),
@@ -736,8 +708,6 @@ object Similarity {
       .select(col("a_id"), col("b_id"), trunc4(NativeVector.cosine(col("ea"), col("eb"))).as("cos"))
       .filter(col("cos") >= threshold)
       .localCheckpoint(true) // verified near-dup pairs ≪ corpus
-    bands.unpersist()
-    result
   }
 
   /** LSH-banded k-nearest-neighbor GRAPH over the whole corpus — the
@@ -786,35 +756,32 @@ object Similarity {
   /** The banded per-node top-k edge relation (src_id, dst_id, cos,
     * rnk) — [[knnGraph]]'s round-0 graph, shared with [[knnRefine]]'s
     * NN-descent pass. Materialized via localCheckpoint (≤ k·n rows) so
-    * both consumers can unpersist the wide intermediates. */
-  private[graft] def knnTopK(emb: DataFrame, k: Int): DataFrame = {
+    * the wide intermediates are released before either consumer runs. */
+  private[graft] def knnTopK(emb: DataFrame, k: Int): DataFrame = Scope { s =>
     val v = withEmbD(emb)
     // all-pairs self-join ⇒ the WIDE KnnBands×KnnRowsPerBand geometry
     // (see the constant's docstring: 4×4's 16-bucket key space is
     // quadratic in the corpus; 256 buckets/band restores ~linear
     // candidate growth at the measured scale)
-    val bands = v.select(col("vec_id"), col("e"),
+    val bands = s.persist(v.select(col("vec_id"), col("e"),
         explode(bandStructsWith(col("e"), KnnBands, KnnRowsPerBand)).as("bb"))
-      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-      .persist()
-    val pairs = bands.as("x").join(bands.as("y"),
+      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey")))
+    // narrow (id, id, cos) triples feed BOTH mirror arms
+    val pairs = s.persist(bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"),
         col("x.e").as("ea"), col("y.e").as("eb"))
       .dropDuplicates("a_id", "b_id")
       .select(col("a_id"), col("b_id"),
-        trunc4(NativeVector.cosine(col("ea"), col("eb"))).as("cos"))
-      .persist() // narrow (id, id, cos) triples feed BOTH mirror arms
+        trunc4(NativeVector.cosine(col("ea"), col("eb"))).as("cos")))
     val directed = pairs
       .select(col("a_id").as("src_id"), col("b_id").as("dst_id"), col("cos"))
       .unionAll(pairs.select(col("b_id").as("src_id"), col("a_id").as("dst_id"), col("cos")))
     val w = Window.partitionBy(col("src_id")).orderBy(col("cos").desc, col("dst_id"))
-    val topk = directed.withColumn("rnk", row_number().over(w).cast("long"))
+    directed.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .localCheckpoint(true) // ≤ k·n edge rows, materialized
-    pairs.unpersist(); bands.unpersist()
-    topk
   }
 
   def knnGraph(emb: DataFrame, k: Int = 5): DataFrame = {
@@ -906,21 +873,21 @@ object Similarity {
     * labels×dims centroid relation broadcasts, and the per-vector
     * rollup reuses the spread vec_id partitioning. The top-j window is
     * per label, never global. */
-  def vecOutliers(emb: DataFrame, topJ: Int = 5): DataFrame = {
+  def vecOutliers(emb: DataFrame, topJ: Int = 5): DataFrame = Scope { s =>
     val v = graft.functions.Portable.spread(emb, col("vec_id"))
       .select(col("vec_id"), col("label").cast("long").as("label"),
         col("embedding").as("e"))
     val gs = v.agg((max(aggregate(col("e"), lit(0.0),
       (a, x) => greatest(a, abs(x)))) / 127.0).as("gs"))
-    val q = v.crossJoin(broadcast(gs))
+    // feeds the centroid sums AND the deviation join
+    val q = s.persist(v.crossJoin(broadcast(gs))
       .select(col("vec_id"), col("label"), col("gs"),
         posexplode(col("e")))
       .select(col("vec_id"), col("label"), (col("pos") + 1).as("d"),
         when(col("gs") > 0,
           greatest(lit(-127L), least(lit(127L),
             floor(col("col") / col("gs") + 0.5).cast("long"))))
-          .otherwise(0L).as("qx"))
-      .persist() // feeds the centroid sums AND the deviation join
+          .otherwise(0L).as("qx")))
     val cent = q.groupBy(col("label"), col("d"))
       .agg(sum(col("qx")).as("sv"), count(lit(1)).as("n"))
     val dev = q.join(broadcast(cent), Seq("label", "d"))
@@ -929,14 +896,12 @@ object Similarity {
     val perVec = dev.groupBy(col("vec_id"), col("label"))
       .agg(sum(col("t2")).as("d2n2"), max(col("n")).as("n"))
     val w = Window.partitionBy(col("label")).orderBy(col("d2n2").desc, col("vec_id"))
-    val result = perVec
+    perVec
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= topJ)
       .select(col("label"), col("vec_id"), col("d2n2"), col("n"),
         trunc4(sqrt(col("d2n2").cast("double")) / col("n")).as("dist_q"), col("rnk"))
       .localCheckpoint(true) // topJ rows per label; releases the dim cache
-    q.unpersist()
-    result
   }
 
   /** kNN label-noise detection (the confident-learning screen of
@@ -1101,8 +1066,8 @@ object Similarity {
     fs.map(Await.result(_, Duration.Inf))
   }
 
-  def pqEncode(emb: DataFrame): DataFrame = {
-    val v = withEmbD(emb).persist() // PqM training + encode passes
+  def pqEncode(emb: DataFrame): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb)) // PqM training + encode passes
     val cbs = pqCodebooks(v)
     val parts = (0 until PqM).map { m =>
       val vm = pqSlice(v, m)
@@ -1117,11 +1082,9 @@ object Similarity {
           max(col("ccos")).as("sub_cos"))
         .withColumn("m", lit(m.toLong))
     }
-    val result = parts.reduce(_ unionByName _)
+    parts.reduce(_ unionByName _)
       .select(col("vec_id"), col("m"), col("code"), col("sub_cos"))
       .localCheckpoint(true)
-    v.unpersist()
-    result
   }
 
   /** ADC (asymmetric distance computation) top-k over the PQ codes —
@@ -1136,8 +1099,8 @@ object Similarity {
     * integer under any partial-agg merge order (same rule as the PSI
     * terms); ties rank to the smaller vec_id. `adot` is the
     * reconstructed approximate dot product for human eyes. */
-  def adcTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = {
-    val v = withEmbD(emb).persist() // PqM training + code + lut passes
+  def adcTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb)) // PqM training + code + lut passes
     val cbs = pqCodebooks(v)
     val parts = (0 until PqM).map { m =>
       val vm = pqSlice(v, m)
@@ -1159,7 +1122,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("pdot")).as("dot_scaled"))
-    val result = scored
+    scored
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("q_id"))
           .orderBy(col("dot_scaled").desc, col("vec_id"))).cast("long"))
@@ -1167,8 +1130,6 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("dot_scaled"),
         trunc4(col("dot_scaled") / QScale).as("adot"), col("rnk"))
       .localCheckpoint(true) // k rows per query
-    v.unpersist()
-    result
   }
 
   /** IVF-PQ with exact refine — the composition every production ANN
@@ -1189,8 +1150,8 @@ object Similarity {
     * ADC scores are exact 2^20-scaled BIGINT sums, the refine cosine
     * is trunc4, all ties break to the smaller vec_id. */
   def ivfAdcTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
-      rerank: Int = 40): DataFrame = {
-    val v = withEmbD(emb).persist() // coarse + PQ training, encode, refine
+      rerank: Int = 40): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb)) // coarse + PQ training, encode, refine
     val cents = trainedCentroids(v).localCheckpoint(true)
     val q = v.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
@@ -1204,10 +1165,9 @@ object Similarity {
       .localCheckpoint(true) // |Q|·NProbe rows
     // candidate set = union of the probed inverted lists, built once and
     // shared by all PqM subspace scorers
-    val cand = assignTo(v, cents).join(broadcast(probes), Seq("list_id"))
+    val cand = s.persist(assignTo(v, cents).join(broadcast(probes), Seq("list_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"))
-      .persist()
+      .select(col("q_id"), col("vec_id")))
     val cbs = pqCodebooks(v)
     val parts = (0 until PqM).map { m =>
       val vm = pqSlice(v, m)
@@ -1231,15 +1191,13 @@ object Similarity {
       .withColumn("arnk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("dot_scaled").desc, col("vec_id"))))
       .filter(col("arnk") <= rerank)
-    val result = adc.join(v, "vec_id").join(broadcast(q), "q_id")
+    adc.join(v, "vec_id").join(broadcast(q), "q_id")
       .select(col("q_id"), col("vec_id"), col("dot_scaled"),
         trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))).cast("long"))
       .filter(col("rnk") <= k)
       .localCheckpoint(true) // k rows per query
-    cand.unpersist(); v.unpersist()
-    result
   }
 
   /** Scalar-quantized (int8) top-k: search over per-vector int8 codes
@@ -1426,7 +1384,7 @@ object Similarity {
     * Scale: the per-dim explode shuffles (label, dim, partial sum)
     * with map-side combine — |labels|·dims rows, never a vector; the
     * pair join runs on that tiny relation. */
-  def vecDrift(emb: DataFrame): DataFrame = {
+  def vecDrift(emb: DataFrame): DataFrame = Scope { sc =>
     val v = graft.functions.Portable.spread(emb, col("vec_id"))
       .select(col("label"), col("embedding").as("e"))
     val gs = v.agg((max(aggregate(col("e"), lit(0.0),
@@ -1436,15 +1394,15 @@ object Similarity {
       .select(col("label"), col("i"),
         when(col("gs") > 0, greatest(lit(-127L), least(lit(127L),
           floor(col("x") / col("gs") + 0.5).cast("long")))).otherwise(0L).as("qv"))
-    val s = codes.groupBy(col("label"), col("i"))
-      .agg(sum(col("qv")).as("s")).persist()
+    val s = sc.persist(codes.groupBy(col("label"), col("i"))
+      .agg(sum(col("qv")).as("s")))
     val n2 = s.groupBy(col("label")).agg(sum(col("s") * col("s")).as("n2"))
     val cnt = v.groupBy(col("label")).agg(count(lit(1)).as("n"))
     val dots = s.as("a").join(s.as("b"),
         col("a.i") === col("b.i") && col("a.label") < col("b.label"))
       .groupBy(col("a.label").as("label_a"), col("b.label").as("label_b"))
       .agg(sum(col("a.s") * col("b.s")).as("dot"))
-    val result = dots
+    dots
       .join(broadcast(n2.select(col("label").as("label_a"), col("n2").as("na2"))), "label_a")
       .join(broadcast(n2.select(col("label").as("label_b"), col("n2").as("nb2"))), "label_b")
       .join(broadcast(cnt.select(col("label").as("label_a"), col("n").as("n_a"))), "label_a")
@@ -1455,8 +1413,6 @@ object Similarity {
           (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))))
           .as("cos"))
       .localCheckpoint(true) // |labels|²/2 rows
-    s.unpersist()
-    result
   }
 
   /** Embedding data-quality audit — the pre-flight before any vector
@@ -1559,8 +1515,8 @@ object Similarity {
     * (came from an unflipped band key) and the single-probe ranking is
     * just a filter. Same results as running each method standalone,
     * at roughly half the work. */
-  def recallAtK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = {
-    val v = withEmbD(emb).persist()
+  def recallAtK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb))
     val q = v.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
     def rankK(scored: DataFrame): DataFrame =
@@ -1571,9 +1527,8 @@ object Similarity {
       .localCheckpoint(true) // consumed by every method join
     // one banded relation, query keys expanded with their bit-flip
     // variants, each tagged whether it is the original key
-    val bands = v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
-      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-      .persist()
+    val bands = s.persist(v.select(col("vec_id"), col("e"), explode(bandStructs(col("e"))).as("bb"))
+      .select(col("vec_id"), col("e"), col("bb.band").as("band"), col("bb.bkey").as("bkey")))
     val variantStructs = struct(col("bkey").as("bkey"), lit(true).as("orig")) +:
       (0 until RowsPerBand).map(i =>
         struct(col("bkey").bitwiseXOR(lit(1 << i)).as("bkey"), lit(false).as("orig")))
@@ -1582,13 +1537,12 @@ object Similarity {
         explode(array(variantStructs: _*)).as("bb"))
       .select(col("q_id"), col("qe"), col("band"),
         col("bb.bkey").as("bkey"), col("bb.orig").as("orig"))
-    val scoredLsh = bands.join(broadcast(qbv), Seq("band", "bkey"))
+    val scoredLsh = s.persist(bands.join(broadcast(qbv), Seq("band", "bkey"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(max(col("orig")).as("sp"), first(col("qe")).as("qe"), first(col("e")).as("e"))
       .select(col("q_id"), col("vec_id"), col("sp"),
-        trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos"))
-      .persist()
+        trunc4(NativeVector.cosine(col("qe"), col("e"))).as("cos")))
     // r12 fusions (guide §2.4 — operations keyed the same way share one
     // exchange): the two LSH rankings were two window passes over the
     // same persisted cosine relation (single-probe = the sp slice), now
@@ -1610,15 +1564,13 @@ object Similarity {
         .select(lit("rpt").as("method"), col("q_id"), col("vec_id")))
     val methods = exact.sparkSession.createDataFrame(
       Seq("ann", "ann_mp", "ivf", "rpt").map(Tuple1(_))).toDF("method")
-    val result = exact.crossJoin(broadcast(methods))
+    exact.crossJoin(broadcast(methods))
       .join(approxAll.withColumn("hit", lit(1L)),
         Seq("method", "q_id", "vec_id"), "left")
       .groupBy(col("method"), col("q_id"))
       .agg((sum(coalesce(col("hit"), lit(0L))).cast("double") / k).as("recall"))
       .select(col("method"), col("q_id"), col("recall"))
       .localCheckpoint(true) // 4 × |queries| rows
-    bands.unpersist(); scoredLsh.unpersist(); v.unpersist()
-    result
   }
 
   /** Matryoshka prefix-dimension retrieval eval (Kusupati et al. 2022,
@@ -1636,7 +1588,7 @@ object Similarity {
     * multiplies); the rank window partitions by (q_id, d) — |Q|·|dims|
     * independent partitions, never global. */
   def matryoshkaRecall(emb: DataFrame, queryIds: Seq[Long] = DefaultQueryIds,
-      k: Int = 10, dims: Seq[Int] = Seq(8, 16, 32, Dim)): DataFrame = {
+      k: Int = 10, dims: Seq[Int] = Seq(8, 16, 32, Dim)): DataFrame = Scope { s =>
     val v = withEmbD(emb)
     val q = v.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
@@ -1647,21 +1599,19 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("p.d").as("d"), col("p.cos").as("cos"))
     val byQd = Window.partitionBy(col("q_id"), col("d"))
       .orderBy(col("cos").desc, col("vec_id"))
-    val ranked = pref.withColumn("rnk", row_number().over(byQd).cast("long"))
+    // feeds the truth slice AND the per-d hit join
+    val ranked = s.persist(pref.withColumn("rnk", row_number().over(byQd).cast("long"))
       .filter(col("rnk") <= k)
-      .select(col("d"), col("q_id"), col("vec_id"))
-      .persist() // feeds the truth slice AND the per-d hit join
+      .select(col("d"), col("q_id"), col("vec_id")))
     val truth = ranked.filter(col("d") === Dim.toLong)
       .select(col("q_id"), col("vec_id"))
     val ddf = emb.sparkSession.createDataFrame(
       dims.map(d => Tuple1(d.toLong))).toDF("d")
-    val result = truth.crossJoin(broadcast(ddf))
+    truth.crossJoin(broadcast(ddf))
       .join(ranked.withColumn("hit", lit(1L)), Seq("d", "q_id", "vec_id"), "left")
       .groupBy(col("d"), col("q_id"))
       .agg((sum(coalesce(col("hit"), lit(0L))).cast("double") / k).as("recall"))
       .localCheckpoint(true) // |dims|·|Q| rows; releases the rank cache
-    ranked.unpersist()
-    result
   }
 
   /** Reciprocal-rank fusion of the two production ANN paths — the
@@ -1690,12 +1640,13 @@ object Similarity {
     // A/B-measured ~1.6× SLOWER at sf0.1 on local[4] — the interleaved
     // small-stage jobs thrash scheduling and the shared cache fill —
     // so the arms stay sequential.)
-    val v = withEmbD(emb).persist()
-    val mp = annTopKMultiProbeOn(v, queryIds, k)
-      .select(col("q_id"), col("vec_id"), col("rnk").as("rnk_mp"))
-    val iv = ivfTopKOn(v, queryIds, k)
-      .select(col("q_id"), col("vec_id"), col("rnk").as("rnk_ivf"))
-    v.unpersist()
+    val (mp, iv) = Scope { s =>
+      val v = s.persist(withEmbD(emb))
+      (annTopKMultiProbeOn(v, queryIds, k)
+        .select(col("q_id"), col("vec_id"), col("rnk").as("rnk_mp")),
+        ivfTopKOn(v, queryIds, k)
+          .select(col("q_id"), col("vec_id"), col("rnk").as("rnk_ivf")))
+    }
     val fused = mp.join(iv, Seq("q_id", "vec_id"), "full_outer")
       .withColumn("score",
         coalesce(lit(1.0) / (lit(c) + col("rnk_mp")), lit(0.0)) +
@@ -1788,38 +1739,39 @@ object Similarity {
       queryIds: Seq[Long] = DefaultQueryIds, k: Int = 10, nq: Int = 5,
       c: Int = 60): DataFrame = {
     import graft.functions.TextHash
-    val tok = graft.functions.Portable.spread(docs, col("doc_id"))
-      .select(col("doc_id"), explode(TextHash.tokens(col("text"))).as("t"))
-      .persist() // feeds tf, df, lens
-    val tf = tok.groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-    val dfr = tok.groupBy(col("t")).agg(countDistinct(col("doc_id")).as("df"))
-    val lens = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("len"))
-    val stats = lens.agg(count(lit(1)).as("nd"), sum(col("len")).as("tt"))
-    val qw = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("t"))
-    val qt = tf.filter(col("doc_id").isin(queryIds: _*))
-      .join(dfr, "t")
-      .withColumn("qrnk", row_number().over(qw))
-      .filter(col("qrnk") <= nq)
-      .select(col("doc_id").as("q_id"), col("t"), col("df"))
-    val textScored = tf.join(broadcast(qt), "t")
-      .filter(col("doc_id") =!= col("q_id"))
-      .join(lens, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("q_id"), col("doc_id"),
-        // the bm25TopK term formula, 1e6-scaled BIGINT terms
-        floor((log(lit(1.0) + (col("nd") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len") * col("nd") / col("tt"))))) * 1e6)
-          .cast("long").as("term_scaled"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("term_scaled")).as("t_scaled"))
-    val tw = Window.partitionBy(col("q_id")).orderBy(col("t_scaled").desc, col("doc_id"))
-    val textRanked = textScored
-      .withColumn("rnk_text", row_number().over(tw).cast("long"))
-      .filter(col("rnk_text") <= k)
-      .select(col("q_id"), col("doc_id"), col("rnk_text"))
-      .localCheckpoint(true) // k rows per query; releases the token cache
-    tok.unpersist()
+    val textRanked = Scope { s =>
+      // feeds tf, df, lens
+      val tok = s.persist(graft.functions.Portable.spread(docs, col("doc_id"))
+        .select(col("doc_id"), explode(TextHash.tokens(col("text"))).as("t")))
+      val tf = tok.groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
+      val dfr = tok.groupBy(col("t")).agg(countDistinct(col("doc_id")).as("df"))
+      val lens = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("len"))
+      val stats = lens.agg(count(lit(1)).as("nd"), sum(col("len")).as("tt"))
+      val qw = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("t"))
+      val qt = tf.filter(col("doc_id").isin(queryIds: _*))
+        .join(dfr, "t")
+        .withColumn("qrnk", row_number().over(qw))
+        .filter(col("qrnk") <= nq)
+        .select(col("doc_id").as("q_id"), col("t"), col("df"))
+      val textScored = tf.join(broadcast(qt), "t")
+        .filter(col("doc_id") =!= col("q_id"))
+        .join(lens, "doc_id")
+        .crossJoin(broadcast(stats))
+        .select(col("q_id"), col("doc_id"),
+          // the bm25TopK term formula, 1e6-scaled BIGINT terms
+          floor((log(lit(1.0) + (col("nd") - col("df") + 0.5) / (col("df") + 0.5)) *
+            (col("tf") * 2.2) /
+            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len") * col("nd") / col("tt"))))) * 1e6)
+            .cast("long").as("term_scaled"))
+        .groupBy(col("q_id"), col("doc_id"))
+        .agg(sum(col("term_scaled")).as("t_scaled"))
+      val tw = Window.partitionBy(col("q_id")).orderBy(col("t_scaled").desc, col("doc_id"))
+      textScored
+        .withColumn("rnk_text", row_number().over(tw).cast("long"))
+        .filter(col("rnk_text") <= k)
+        .select(col("q_id"), col("doc_id"), col("rnk_text"))
+        .localCheckpoint(true) // k rows per query; releases the token cache
+    }
     val vecRanked = annTopK(emb, queryIds, k)
       .select(col("q_id"), col("vec_id").as("doc_id"), col("rnk").as("rnk_vec"))
     val fused = textRanked.join(vecRanked, Seq("q_id", "doc_id"), "full_outer")
@@ -1868,19 +1820,19 @@ object Similarity {
     * (identical in both engines), λ and 1−λ fold to single doubles
     * shared with the oracle, ties break on vec_id. */
   def mmrRerank(emb: DataFrame, queryIds: Seq[Long] = DefaultQueryIds,
-      k: Int = 10, sel: Int = 5, lam: Double = 0.7): DataFrame = {
+      k: Int = 10, sel: Int = 5, lam: Double = 0.7): DataFrame = Scope { s =>
     val mu = 1.0 - lam
-    val topk = bruteForceTopK(emb, queryIds, k)
-      .select(col("q_id"), col("vec_id"), col("cos").as("rel"))
-      .persist() // feeds every greedy round
+    // feeds every greedy round
+    val topk = s.persist(bruteForceTopK(emb, queryIds, k)
+      .select(col("q_id"), col("vec_id"), col("cos").as("rel")))
     val ve = withEmbD(emb)
     val cand = topk.join(ve, "vec_id")
       .select(col("q_id"), col("vec_id"), col("e"))
-    val sims = cand.as("a").join(cand.as("b"),
+    // k²-per-query pair relation, reused each round
+    val sims = s.persist(cand.as("a").join(cand.as("b"),
         col("a.q_id") === col("b.q_id") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.q_id").as("q_id"), col("a.vec_id").as("c"),
-        col("b.vec_id").as("s"), trunc4(NativeVector.cosine(col("a.e"), col("b.e"))).as("sim"))
-      .persist() // k²-per-query pair relation, reused each round
+        col("b.vec_id").as("s"), trunc4(NativeVector.cosine(col("a.e"), col("b.e"))).as("sim")))
     val w1 = Window.partitionBy(col("q_id")).orderBy(col("rel").desc, col("vec_id"))
     var selected = topk.withColumn("r", row_number().over(w1)).filter(col("r") === 1)
       .select(col("q_id"), col("vec_id"), lit(1L).as("pick"), col("rel"),
@@ -1903,9 +1855,7 @@ object Similarity {
       // (2^sel plan copies — measured 14.8 s vs ~1 s flattened)
       selected = selected.unionByName(pick).localCheckpoint(true)
     }
-    val result = selected
-    sims.unpersist(); topk.unpersist()
-    result
+    selected
   }
 
   /** Prefix dims for [[pcaTop]] — the Matryoshka head (q_vec_matryoshka
@@ -2040,8 +1990,8 @@ object Similarity {
     * nprobe) over those candidates. The exact baseline is the
     * documented measurement-only pass. */
   def nprobeCurve(emb: DataFrame, queryIds: Seq[Long] = DefaultQueryIds,
-      nprobes: Seq[Int] = Seq(1, 2, 4, 8), k: Int = 10): DataFrame = {
-    val v = withEmbD(emb).persist()
+      nprobes: Seq[Int] = Seq(1, 2, 4, 8), k: Int = 10): DataFrame = Scope { s =>
+    val v = s.persist(withEmbD(emb))
     val cents = trainedCentroids(v).localCheckpoint(true)
     val assign = assignTo(v, cents)
     val q = v.filter(col("vec_id").isin(queryIds: _*))
@@ -2067,15 +2017,13 @@ object Similarity {
       .withColumn("rnk", row_number().over(Window.partitionBy(col("q_id"),
         col("nprobe")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rnk") <= k)
-    val result = swept.join(exact, Seq("q_id", "vec_id"), "left")
+    swept.join(exact, Seq("q_id", "vec_id"), "left")
       .groupBy(col("q_id"), col("nprobe"))
       .agg(count(lit(1)).as("n_ret"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .select(col("q_id"), col("nprobe"), col("n_ret"), col("n_hit"),
         trunc4(col("n_hit") / lit(k)).as("recall"))
       .localCheckpoint(true)
-    v.unpersist()
-    result
   }
 
   /** Local Outlier Factor (Breunig et al. 2000) over the BANDED kNN

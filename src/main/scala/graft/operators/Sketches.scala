@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.Portable.trunc4
 import graft.functions.TextHash.hash60
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -31,11 +31,11 @@ object Sketches {
     * against the counters instead and skip the exact agg entirely —
     * the probe join below is that path). */
   def cmsHeavyHitters(ev: DataFrame, depth: Int = 4, width: Int = 256,
-      topN: Int = 20): DataFrame = {
+      topN: Int = 20): DataFrame = Scope { s =>
     // base feeds BOTH the counter build and the exact ranking pass —
     // persist so the events scan happens once (house rule: persist
     // multi-consumer intermediates; one narrow long column per row)
-    val base = ev.select(floor(col("value")).cast("long").as("amt")).persist()
+    val base = s.persist(ev.select(floor(col("value")).cast("long").as("amt")))
     def bucketed(df: DataFrame) = df
       .select(df.columns.map(col) :+
         explode(array((0 until depth).map(lit): _*)).as("i"): _*)
@@ -50,12 +50,10 @@ object Sketches {
     // the report is tiny post-agg; the global window ranks ~|distinct
     // amounts| rows, not the input
     val w = Window.orderBy(col("n").desc, col("amt"))
-    val result = est.withColumn("rnk", row_number().over(w).cast("long"))
+    est.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= topN)
       .select(col("amt"), col("n"), col("est"), col("rnk"))
       .localCheckpoint(true) // topN rows; lets the base cache go
-    base.unpersist()
-    result
   }
 
   /** Histogram-sketch quantile estimation — the at-scale sibling of the
@@ -130,15 +128,13 @@ object Sketches {
     * shuffle carries at most 3·m partials per task regardless of
     * input size, the CMS discipline. The exact `count(distinct)`
     * exists to report the error and would be skipped at 100 TB. */
-  def hllDistinct(ev: DataFrame, m: Int = 256): DataFrame = {
-    val tagged = hllTagged(ev).persist() // feeds the sketch AND the exact-error report
+  def hllDistinct(ev: DataFrame, m: Int = 256): DataFrame = Scope { s =>
+    val tagged = s.persist(hllTagged(ev)) // feeds the sketch AND the exact-error report
     val regs = hllCells(tagged, m)
       .groupBy(col("metric"), col("reg")).agg(max(col("rho")).as("mx"))
     val exact = tagged.groupBy(col("metric")).agg(countDistinct(col("v")).as("n_exact"))
-    val est = hllEstimate(regs, exact, m)
+    hllEstimate(regs, exact, m)
       .localCheckpoint(true) // 3 rows; releases the tagged cache
-    tagged.unpersist()
-    est
   }
 
   /** The 3-metric tagged explode the HLL sketch reads — one narrow
@@ -204,10 +200,10 @@ object Sketches {
     * is exactly why Bloom filters are the cross-stage pruning
     * primitive (see the runtime bloom-join ScaleSpec demo). */
   def bloomAudit(ev: DataFrame, minValue: Double = 250.0, mBits: Int = 8192,
-      k: Int = 3): DataFrame = {
-    val users = ev.groupBy(col("user_id"))
-      .agg((max(when(col("value") >= minValue, 1L).otherwise(0L)) === 1L).as("is_member"))
-      .persist() // feeds both the build and the probe
+      k: Int = 3): DataFrame = Scope { s =>
+    // feeds both the build and the probe
+    val users = s.persist(ev.groupBy(col("user_id"))
+      .agg((max(when(col("value") >= minValue, 1L).otherwise(0L)) === 1L).as("is_member")))
     def hashed(df: DataFrame) = df
       .select(col("user_id"), col("is_member"),
         explode(array((0 until k).map(lit): _*)).as("j"))
@@ -226,12 +222,10 @@ object Sketches {
       .withColumn("hit", coalesce(col("bits").bitwiseAND(col("mask")) =!= 0L, lit(false)))
       .groupBy(col("user_id"), col("is_member"))
       .agg((sum(when(col("hit"), 1L).otherwise(0L)) === k).as("bloom_maybe"))
-    val cells = probe.groupBy(col("is_member"), col("bloom_maybe"))
+    probe.groupBy(col("is_member"), col("bloom_maybe"))
       .agg(count(lit(1)).as("n"))
       .withColumn("share", trunc4(col("n") / sum(col("n")).over(Window.partitionBy())))
       .localCheckpoint(true) // ≤ 4 rows; releases the users cache
-    users.unpersist()
-    cells
   }
 
   /** Weekly distinct-user estimates built by MERGING daily HLL
@@ -251,16 +245,16 @@ object Sketches {
     * exact count exists for the error column and would be skipped at
     * scale. Weeks are epoch-day div 7 — calendar-free and
     * engine-portable. */
-  def hllDailyRollup(ev: DataFrame, m: Int = 256): DataFrame = {
-    val daily = ev.select(expr("ts_ms div 86400000").as("day_idx"),
+  def hllDailyRollup(ev: DataFrame, m: Int = 256): DataFrame = Scope { s =>
+    // feeds the weekly merge AND the day count
+    val daily = s.persist(ev.select(expr("ts_ms div 86400000").as("day_idx"),
         hash60(col("user_id").cast("string")).as("h"))
       .withColumn("week", expr("day_idx div 7"))
       .withColumn("reg", pmod(col("h"), lit(m.toLong)))
       .withColumn("rest", expr(s"h div $m"))
       .withColumn("rho", when(col("rest") === 0L, lit(53L))
         .otherwise(length(bin(expr("rest & -rest"))).cast("long")))
-      .groupBy(col("week"), col("day_idx"), col("reg")).agg(max(col("rho")).as("mx"))
-      .persist() // feeds the weekly merge AND the day count
+      .groupBy(col("week"), col("day_idx"), col("reg")).agg(max(col("rho")).as("mx")))
     val weekly = daily.groupBy(col("week"), col("reg")).agg(max(col("mx")).as("mx"))
     val sk = weekly.groupBy(col("week")).agg(
       sum(expr("shiftleft(1L, cast(53 - mx as int))")).as("s_hit"),
@@ -270,7 +264,7 @@ object Sketches {
     val exact = ev.groupBy(expr("(ts_ms div 86400000) div 7").as("week"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
     val alphaM2: Double = hllAlphaM2(m)
-    val result = sk
+    sk
       .withColumn("v_empty", lit(m.toLong) - col("n_hit"))
       .withColumn("est_raw",
         lit(alphaM2) / expr("cast(s_hit + v_empty * shiftleft(1L, 53) as double)"))
@@ -282,8 +276,6 @@ object Sketches {
       .select(col("week"), col("n_days"), col("n_exact"), col("v_empty"),
         col("est"), trunc4(abs(col("est") - col("n_exact")) / col("n_exact")).as("rel_err"))
       .localCheckpoint(true) // one row per week; releases the daily cache
-    daily.unpersist()
-    result
   }
 
   /** Mergeable equi-width histogram quantile sketch + its error audit
@@ -302,9 +294,9 @@ object Sketches {
     * fact); at 100 TB only the coarse-bin path would run, which is
     * one map-side-combinable hash-agg. */
   def quantileSketch(ev: DataFrame, binCents: Long = 1000L,
-      pcts: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
-    val cents = ev.select(floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .persist() // feeds the sketch bins AND the exact bins
+      pcts: Seq[Int] = Seq(50, 90, 99)): DataFrame = Scope { s =>
+    // feeds the sketch bins AND the exact bins
+    val cents = s.persist(ev.select(floor(col("value") * 100 + 0.5).cast("long").as("cents")))
     val cum = cents.groupBy(expr(s"cents div $binCents").as("b"))
       .agg(count(lit(1)).as("c"))
       .withColumn("cum", sum(col("c")).over(Window.orderBy(col("b"))))
@@ -319,15 +311,13 @@ object Sketches {
     val exact = ecum.crossJoin(broadcast(pRel.select(col("p"), col("r").as("er"))))
       .filter(col("ecum") >= col("er"))
       .groupBy(col("p")).agg(min(col("cents")).as("exact_cents"))
-    val result = pick
+    pick
       .withColumn("est_cents", trunc4(col("b") * lit(binCents) +
         (col("r") - (col("cum") - col("c"))) * lit(binCents) / col("c")))
       .join(exact, "p")
       .select(col("p"), col("n"), col("r"), col("exact_cents"), col("est_cents"),
         trunc4(abs(col("est_cents") - col("exact_cents"))).as("abs_err"))
       .localCheckpoint(true) // |pcts| rows; releases the cents cache
-    cents.unpersist()
-    result
   }
 
   /** Bitmap-index set intersection: first-week vs last-week active
@@ -345,16 +335,16 @@ object Sketches {
     * packing rule keeps `1 << 62` the largest shift both engines
     * accept). At 10⁹ users the word relation is ~16M rows — the
     * bitmap rides a broadcast where the user set never could. */
-  def bitmapRetention(ev: DataFrame): DataFrame = {
+  def bitmapRetention(ev: DataFrame): DataFrame = Scope { s =>
     val wk = ev.select(expr("(ts_ms div 86400000) div 7").as("week"), col("user_id"))
     val bounds = wk.agg(min(col("week")).as("w0"), max(col("week")).as("w1"))
-    val words = wk.crossJoin(broadcast(bounds))
+    // feeds both period slices AND the intersection join
+    val words = s.persist(wk.crossJoin(broadcast(bounds))
       .filter(col("week") === col("w0") || col("week") === col("w1"))
       .select(when(col("week") === col("w0"), "first").otherwise("last").as("period"),
         expr("user_id div 63").as("word"),
         expr("shiftleft(1L, cast(user_id % 63 as int))").as("mask"))
-      .groupBy(col("period"), col("word")).agg(expr("bit_or(mask)").as("bits"))
-      .persist() // feeds both period slices AND the intersection join
+      .groupBy(col("period"), col("word")).agg(expr("bit_or(mask)").as("bits")))
     def side(p: String, as: String) =
       words.filter(col("period") === p).select(col("word"), col("bits").as(as))
     val counts = words.groupBy(col("period"))
@@ -363,11 +353,9 @@ object Sketches {
     val nLast = counts.filter(col("period") === "last").select(col("n").as("n_last"))
     val nBoth = side("first", "fb").join(side("last", "lb"), "word")
       .agg(coalesce(sum(expr("bit_count(fb & lb)")), lit(0L)).as("n_both"))
-    val result = nFirst.crossJoin(nLast).crossJoin(nBoth)
+    nFirst.crossJoin(nLast).crossJoin(nBoth)
       .withColumn("retention", trunc4(col("n_both") / col("n_first")))
       .localCheckpoint(true) // 1 row; releases the word cache
-    words.unpersist()
-    result
   }
 
   /** KMV (k-minimum-values / bottom-k) distinct estimator — the OTHER
@@ -382,10 +370,10 @@ object Sketches {
     * rows per bucket, and only those parts·k survivors meet the global
     * rank window. Returns empty when the input has < k distinct keys
     * (use a smaller k — spec covers it). */
-  def kmvDistinct(ev: DataFrame, k: Int = 64, parts: Int = 32): DataFrame = {
+  def kmvDistinct(ev: DataFrame, k: Int = 64, parts: Int = 32): DataFrame = Scope { s =>
     // one narrow persisted projection feeds the hash pass AND the exact
     // error report (house rule: persist multi-consumer intermediates)
-    val ids = ev.select(col("user_id")).persist()
+    val ids = s.persist(ev.select(col("user_id")))
     val h = ids.select(hash60(col("user_id").cast("string")).as("h")).distinct()
     val local = Window.partitionBy(pmod(col("h"), lit(parts.toLong))).orderBy(col("h"))
     val cand = h.withColumn("lr", row_number().over(local)).filter(col("lr") <= k)
@@ -394,12 +382,10 @@ object Sketches {
     val exact = ids.agg(countDistinct(col("user_id")).as("n_exact"))
     val num: Double = (k - 1).toDouble * (1L << 60).toDouble
     val estRaw = lit(num) / col("h")
-    val result = kth.crossJoin(exact).select(col("h").as("kth_hash"), col("n_exact"),
+    kth.crossJoin(exact).select(col("h").as("kth_hash"), col("n_exact"),
         trunc4(estRaw).as("est"),
         trunc4(abs(estRaw - col("n_exact")) / col("n_exact")).as("rel_err"))
       .localCheckpoint(true) // one row; releases the ids cache
-    ids.unpersist()
-    result
   }
 
   /** KMV set algebra: estimate the UNION and INTERSECTION cardinality
@@ -418,18 +404,18 @@ object Sketches {
     * each; the bottom-k prune is the two-stage (partition-local then
     * global) row_number, so no global sort of the full hash set; the
     * membership joins touch k rows against the set relations. */
-  def kmvIntersect(ev: DataFrame, k: Int = 64, parts: Int = 32): DataFrame = {
-    val users = ev.select(col("user_id"),
-      expr("weekday(ts)").as("dow")).persist()
+  def kmvIntersect(ev: DataFrame, k: Int = 64, parts: Int = 32): DataFrame = Scope { s =>
+    val users = s.persist(ev.select(col("user_id"),
+      expr("weekday(ts)").as("dow")))
     def hashSet(cond: Column): DataFrame = users.filter(cond)
       .select(hash60(col("user_id").cast("string")).as("h")).distinct()
-    val a = hashSet(col("dow") <= 4).persist()
-    val b = hashSet(col("dow") >= 5).persist()
+    val a = s.persist(hashSet(col("dow") <= 4))
+    val b = s.persist(hashSet(col("dow") >= 5))
     val u = a.union(b).distinct()
     val local = Window.partitionBy(pmod(col("h"), lit(parts.toLong))).orderBy(col("h"))
-    val bottom = u.withColumn("lr", row_number().over(local)).filter(col("lr") <= k)
+    val bottom = s.persist(u.withColumn("lr", row_number().over(local)).filter(col("lr") <= k)
       .withColumn("r", row_number().over(Window.orderBy(col("h"))))
-      .filter(col("r") <= k).select(col("h"), col("r")).persist()
+      .filter(col("r") <= k).select(col("h"), col("r")))
     // fewer than k hashes ⇒ the sketch holds the whole set: count
     // exactly (the standard KMV small-set branch; sf0.001 has 15 users)
     val kth = bottom.agg(count(lit(1)).as("cnt"), expr("max_by(h, r)").as("kth"))
@@ -444,15 +430,13 @@ object Sketches {
     val num: Double = (k - 1).toDouble * (1L << 60).toDouble
     val unionRaw = when(col("cnt") < k, col("cnt").cast("double"))
       .otherwise(lit(num) / col("kth"))
-    val result = kth.crossJoin(both).crossJoin(exact)
+    kth.crossJoin(both).crossJoin(exact)
       .select(lit(k.toLong).as("k"), col("cnt"), col("n_both"),
         trunc4(unionRaw).as("union_est"),
         trunc4(col("n_both").cast("double") / col("cnt")).as("jaccard_est"),
         trunc4(unionRaw * col("n_both") / col("cnt")).as("inter_est"),
         col("n_inter_exact"))
       .localCheckpoint(true)
-    Seq(users, a, b, bottom).foreach(_.unpersist())
-    result
   }
 
   /** HLL set algebra + audit: estimate |purchase users ∩ click users|
@@ -468,18 +452,18 @@ object Sketches {
     * register sums, the one shared alpha constant, small-range
     * correction mirrored; the only new arithmetic is
     * est_a + est_b − est_union over the already-truncated estimates. */
-  def hllIntersect(ev: DataFrame, m: Int = 256): DataFrame = {
-    val base = ev.filter(col("event_type").isin("purchase", "click"))
-      .select(col("event_type").as("set_id"), col("user_id").cast("string").as("v"))
-      .persist() // feeds the registers AND the exact intersection
-    val regs = base
+  def hllIntersect(ev: DataFrame, m: Int = 256): DataFrame = Scope { s =>
+    // feeds the registers AND the exact intersection
+    val base = s.persist(ev.filter(col("event_type").isin("purchase", "click"))
+      .select(col("event_type").as("set_id"), col("user_id").cast("string").as("v")))
+    // feeds the per-set sketches AND the union merge
+    val regs = s.persist(base
       .withColumn("h", hash60(col("v")))
       .withColumn("reg", pmod(col("h"), lit(m.toLong)))
       .withColumn("rest", expr(s"h div $m"))
       .withColumn("rho", when(col("rest") === 0L, lit(53L))
         .otherwise(length(bin(expr("rest & -rest"))).cast("long")))
-      .groupBy(col("set_id"), col("reg")).agg(max(col("rho")).as("mx"))
-      .persist() // feeds the per-set sketches AND the union merge
+      .groupBy(col("set_id"), col("reg")).agg(max(col("rho")).as("mx")))
     val perSet = regs.groupBy(col("set_id"))
       .agg(sum(expr("shiftleft(1L, cast(53 - mx as int))")).as("s_hit"),
         count(lit(1)).as("n_hit"))
@@ -503,15 +487,13 @@ object Sketches {
     val exact = base.distinct()
       .groupBy(col("v")).agg(count(lit(1)).as("ns"))
       .filter(col("ns") === 2).agg(count(lit(1)).as("n_exact"))
-    val result = pivoted.crossJoin(broadcast(exact))
+    pivoted.crossJoin(broadcast(exact))
       .withColumn("est_intersect", trunc4(col("est_a") + col("est_b") - col("est_union")))
       .select(col("est_a"), col("est_b"), col("est_union"), col("est_intersect"),
         col("n_exact"),
         when(col("n_exact") > 0,
           trunc4(abs(col("est_intersect") - col("n_exact")) / col("n_exact"))).as("rel_err"))
       .localCheckpoint(true) // 1 row; releases both caches
-    regs.unpersist(); base.unpersist()
-    result
   }
 
   // ---- driver wiring ----
@@ -587,8 +569,8 @@ object Sketches {
     * pass explodes `depth` narrow rows per event into ONE map-side-
     * combined 8-cell aggregate; the exact pass is one (user) hash-agg
     * the 100 TB deployment would skip. */
-  def amsF2(ev: DataFrame, depth: Int = 8): DataFrame = {
-    val base = ev.select(col("user_id").as("k")).persist()
+  def amsF2(ev: DataFrame, depth: Int = 8): DataFrame = Scope { s =>
+    val base = s.persist(ev.select(col("user_id").as("k")))
     val z = base
       .select(col("k"), explode(array((0 until depth).map(lit): _*)).as("i"))
       .withColumn("s", lit(1L) - lit(2L) * pmod(
@@ -597,15 +579,13 @@ object Sketches {
       .groupBy(col("i")).agg(sum(col("s")).as("z"))
     val exact = base.groupBy(col("k")).agg(count(lit(1)).as("f"))
       .agg(sum(col("f") * col("f")).as("f2"))
-    val result = z.withColumn("est", col("z") * col("z"))
+    z.withColumn("est", col("z") * col("z"))
       .withColumn("mean_est", avg(col("est")).over(Window.partitionBy()))
       .crossJoin(broadcast(exact))
       .select(col("i").cast("long").as("i"), col("z"), col("est"), col("f2"),
         trunc4((col("est") - col("f2")) / col("f2")).as("rel_err"),
         trunc4((col("mean_est") - col("f2")) / col("f2")).as("mean_rel_err"))
       .localCheckpoint(true) // 8 rows; frees the base cache
-    base.unpersist()
-    result
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -186,7 +186,7 @@ object SqlCoverage {
     * Scale: one user_id shuffle for the session windows; the distinct
     * (session, type) collapse is map-side combined; the pair self-join
     * runs on the collapsed relation with a `<` predicate. */
-  def basketLift(ev: DataFrame, gapMs: Long = 1800000L): DataFrame = {
+  def basketLift(ev: DataFrame, gapMs: Long = 1800000L): DataFrame = Scope { s =>
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
     val sessioned = ev.select(col("user_id"), col("ts_ms"), col("event_id"),
         col("event_type"),
@@ -195,9 +195,8 @@ object SqlCoverage {
           .otherwise(0L).as("new_session"))
       .withColumn("session_no",
         sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val st = sessioned
-      .select(col("user_id"), col("session_no"), col("event_type")).distinct()
-      .persist()
+    val st = s.persist(sessioned
+      .select(col("user_id"), col("session_no"), col("event_type")).distinct())
     val perType = st.groupBy(col("event_type")).agg(count(lit(1)).as("n_t"))
     val total = st.select(col("user_id"), col("session_no")).distinct()
       .agg(count(lit(1)).as("n_sessions"))
@@ -207,7 +206,7 @@ object SqlCoverage {
         col("a.event_type") < col("b.event_type"))
       .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
       .agg(count(lit(1)).as("c_ab"))
-    val result = pairs
+    pairs
       .join(broadcast(perType.select(col("event_type").as("type_a"), col("n_t").as("n_a"))), "type_a")
       .join(broadcast(perType.select(col("event_type").as("type_b"), col("n_t").as("n_b"))), "type_b")
       .crossJoin(broadcast(total))
@@ -216,8 +215,6 @@ object SqlCoverage {
           (col("n_sessions") * col("c_ab")).cast("double") /
             (col("n_a") * col("n_b"))).as("lift"))
       .localCheckpoint(true) // |types|²/2 rows
-    st.unpersist()
-    result
   }
 
   /** Equi-depth decile profile of transaction amounts — NTILE(10)
@@ -237,18 +234,15 @@ object SqlCoverage {
     *
     * All measures are integer cent sums; shares divide two exact
     * integers. */
-  def decileStats(ev: DataFrame): DataFrame = {
-    val (res, bins) = decileStatsLazy(ev)
-    val result = res.localCheckpoint(true) // 10 rows; releases bins
-    bins.unpersist()
-    result
+  def decileStats(ev: DataFrame): DataFrame = Scope { s =>
+    decileStatsPlan(s, ev).localCheckpoint(true) // 10 rows; releases bins
   }
 
-  /** [[decileStats]] without the eager checkpoint, exposing the cached
-    * bin relation for plan inspection / lifecycle control. */
-  private[graft] def decileStatsLazy(ev: DataFrame): (DataFrame, DataFrame) = {
+  /** [[decileStats]] without the eager checkpoint, its bin relation
+    * persisted in `s`, for plan inspection. */
+  private[graft] def decileStatsPlan(s: Scope, ev: DataFrame): DataFrame = {
     val cents = ev.select(floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val bins = cents.groupBy(col("cents")).agg(count(lit(1)).as("c")).persist()
+    val bins = s.persist(cents.groupBy(col("cents")).agg(count(lit(1)).as("c")))
     // cumulative row positions over the BIN relation (the only global
     // window — |distinct cents| rows, the winsorize discipline)
     val cum = bins.withColumn("cum", sum(col("c")).over(Window.orderBy(col("cents"))))
@@ -263,7 +257,7 @@ object SqlCoverage {
           least(col("decile") - 1, col("n_total") % 10) + 1).as("lo"),
         (col("decile") * expr("n_total DIV 10") +
           least(col("decile"), col("n_total") % 10)).as("hi"))
-    val result = cum
+    cum
       .join(broadcast(deciles),
         col("cum") - col("c") + 1 <= col("hi") && col("cum") >= col("lo"))
       .select(col("decile"), col("cents"), col("total_cents"),
@@ -278,7 +272,6 @@ object SqlCoverage {
         col("sum_cents"),
         graft.functions.Portable.trunc4(
           col("sum_cents").cast("double") / col("total_cents")).as("share"))
-    (result, bins)
   }
 
   /** Marketing-attribution join: for every purchase, the user's most

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.TextHash._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -116,13 +116,14 @@ object TextOps {
     * the bucket join is Σ df² with df ≤ |sources|. Output is
     * |sources|²/2 rows; all counts integer, the three ratios are
     * single divisions. */
-  def sourceOverlap(docs: DataFrame): DataFrame = {
+  def sourceOverlap(docs: DataFrame): DataFrame = Scope { s =>
     // codegen'd shingle rows (posexplode + leads) with the source
     // carried through — the interpreted HOF-lambda form measured ~1.5×
     // slower on this collapse (PERF.md A/B); the per-doc distinct is
     // subsumed by the (source, hash) distinct
     val byPos = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-    val g = docs
+    // sizes + both join arms
+    val g = s.persist(docs
       .select(col("doc_id"), col("source"),
         posexplode(tokens(col("text"))).as(Seq("i", "t")))
       .withColumn("n_toks", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
@@ -130,14 +131,13 @@ object TextOps {
         lead(col("t"), 1).over(byPos), lead(col("t"), 2).over(byPos)))
       .filter(col("i") <= col("n_toks") - 3)
       .select(col("source"), hash60(col("s")).as("sh"))
-      .distinct()
-      .persist() // sizes + both join arms
+      .distinct())
     val sizes = g.groupBy(col("source")).agg(count(lit(1)).as("sz"))
     val inter = g.as("a").join(g.as("b"),
         col("a.sh") === col("b.sh") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
       .agg(count(lit(1)).as("inter"))
-    val result = inter
+    inter
       .join(broadcast(sizes.select(col("source").as("src_a"), col("sz").as("sz_a"))), "src_a")
       .join(broadcast(sizes.select(col("source").as("src_b"), col("sz").as("sz_b"))), "src_b")
       .select(col("src_a"), col("src_b"), col("inter"), col("sz_a"), col("sz_b"),
@@ -146,8 +146,6 @@ object TextOps {
         trunc4(col("inter").cast("double") / col("sz_a")).as("contain_a"),
         trunc4(col("inter").cast("double") / col("sz_b")).as("contain_b"))
       .localCheckpoint(true) // |sources|²/2 rows; releases g
-    g.unpersist()
-    result
   }
 
   /** Token-budget corpus fill — the "give me N tokens per source" cut
@@ -333,15 +331,15 @@ object TextOps {
     * order), with the tiny ≤`buckets`-row LUT broadcast to the doc
     * side. At 100 TB: scan-bound, one narrow shuffle of (doc, bucket)
     * pairs, LUT broadcast — the same profile as tfidf. */
-  /** [[dsirWeights]]' lazy plan + its persisted base, for plan
+  /** [[dsirWeights]]' lazy plan, its base persisted in `s`, for plan
     * inspection (ScaleSpec) and the public wrapper. */
-  private[graft] def dsirWeightsLazy(docs: DataFrame, buckets: Long,
-      benchMod: Long): (DataFrame, DataFrame) = {
+  private[graft] def dsirWeightsPlan(s: Scope, docs: DataFrame, buckets: Long,
+      benchMod: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bg = graft.functions.TextHash
+    // feeds target counts, raw counts, and the doc sums
+    val bg = s.persist(graft.functions.TextHash
       .shingleRows(graft.functions.Portable.spread(docs, col("doc_id")), 2)
-      .select(col("doc_id"), pmod(hash60(col("s")), lit(buckets)).as("b"))
-      .persist() // feeds target counts, raw counts, and the doc sums
+      .select(col("doc_id"), pmod(hash60(col("s")), lit(buckets)).as("b")))
     val isBench = col("doc_id") % benchMod === 0
     val tgt = bg.filter(isBench).groupBy(col("b")).agg(count(lit(1)).as("nt"))
     val raw = bg.filter(!isBench).groupBy(col("b")).agg(count(lit(1)).as("nr"))
@@ -356,20 +354,17 @@ object TextOps {
         floor((log((col("nt") + 1) / (col("tt") + buckets)) -
           log((col("nr") + 1) / (col("tr") + buckets))) * 1e6).cast("long")
           .as("term_scaled"))
-    val plan = bg.filter(!isBench).join(broadcast(lut), "b")
+    bg.filter(!isBench).join(broadcast(lut), "b")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("term_scaled")).as("w_scaled"))
       .withColumn("avg_logratio",
         graft.functions.Portable.trunc4(col("w_scaled") / 1e6 / col("n_bigrams")))
-    (plan, bg)
   }
 
   def dsirWeights(docs: DataFrame, buckets: Long = 1024L,
-      benchMod: Long = 97L): DataFrame = {
-    val (plan, bg) = dsirWeightsLazy(docs, buckets, benchMod)
-    val result = plan.localCheckpoint(true) // one narrow row per doc; releases bg
-    bg.unpersist()
-    result
+      benchMod: Long = 97L): DataFrame = Scope { s =>
+    dsirWeightsPlan(s, docs, buckets, benchMod)
+      .localCheckpoint(true) // one narrow row per doc; releases bg
   }
 
   /** Concat-and-chunk sequence packing: documents are concatenated in
@@ -384,18 +379,17 @@ object TextOps {
     * rows), broadcast back. No single-partition pass over the corpus —
     * the naive `Window.orderBy(doc_id)` over all docs would serialize
     * 100 TB through one task. */
-  /** [[seqPacking]]'s lazy plan + its persisted base, for plan
+  /** [[seqPacking]]'s lazy plan, its base persisted in `s`, for plan
     * inspection (ScaleSpec) and the public wrapper. */
-  private[graft] def seqPackingLazy(docs: DataFrame, capacity: Int,
-      blockSize: Long): (DataFrame, DataFrame) = {
+  private[graft] def seqPackingPlan(s: Scope, docs: DataFrame, capacity: Int,
+      blockSize: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the tokenized base feeds BOTH the per-block cumsum and the block
     // totals; persisting it (24 bytes/doc — text never enters the cache)
     // keeps the corpus scan + tokenize single-pass
-    val base = docs
+    val base = s.persist(docs
       .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tokens"))
-      .withColumn("blk", expr(s"doc_id div $blockSize"))
-      .persist()
+      .withColumn("blk", expr(s"doc_id div $blockSize")))
     val wIn = Window.partitionBy(col("blk")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val partial = base
@@ -404,23 +398,20 @@ object TextOps {
     val offsets = base.groupBy(col("blk")).agg(sum(col("n_tokens")).as("bt"))
       .withColumn("boff", coalesce(sum(col("bt")).over(wBlk), lit(0L)))
       .select(col("blk"), col("boff"))
-    val result = partial.join(broadcast(offsets), "blk")
+    partial.join(broadcast(offsets), "blk")
       .withColumn("tok_offset", col("boff") + col("in_blk"))
       .withColumn("first_pack", expr(s"tok_offset div $capacity"))
       .withColumn("last_pack", expr(s"(tok_offset + n_tokens - 1) div $capacity"))
       .select(col("doc_id"), col("n_tokens"), col("tok_offset"),
         col("first_pack"), col("last_pack"),
         (col("last_pack") - col("first_pack") + 1).as("n_packs"))
-    (result, base)
   }
 
-  def seqPacking(docs: DataFrame, capacity: Int = 2048, blockSize: Long = 1000L): DataFrame = {
-    val (lazyResult, base) = seqPackingLazy(docs, capacity, blockSize)
-    // eager (6 narrow columns/doc) so the cached base can be released
-    val result = lazyResult.localCheckpoint(true)
-    base.unpersist()
-    result
-  }
+  def seqPacking(docs: DataFrame, capacity: Int = 2048, blockSize: Long = 1000L): DataFrame =
+    Scope { s =>
+      // eager (6 narrow columns/doc) so the cached base can be released
+      seqPackingPlan(s, docs, capacity, blockSize).localCheckpoint(true)
+    }
 
   /** Sparse TF-IDF cosine similarity via an inverted-index join — the
     * at-scale sparse sibling of the dense-vector paths in Similarity:
@@ -446,7 +437,7 @@ object TextOps {
     * decides which side of 1.0 each engine lands — those pairs are
     * pinned to exactly 1.0 via a text-hash equality (cosine of
     * identical texts is 1 by definition). */
-  def sparseSim(docs: DataFrame, maxDf: Long = 50L, minCos: Double = 0.2): DataFrame = {
+  def sparseSim(docs: DataFrame, maxDf: Long = 50L, minCos: Double = 0.2): DataFrame = Scope { s =>
     val tf = shingleRows(graft.functions.Portable.spread(docs, col("doc_id")), 3)
       .select(col("doc_id"), hash60(col("s")).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -462,13 +453,12 @@ object TextOps {
     // zero contribution to dot and norm, but a doc whose surviving
     // terms were ALL such would get norm 0 and a NaN cosine (which
     // Spark's >= admits and SQL NULL-division drops — an engine split)
-    val w = tf.withColumn("df", count(lit(1)).over(dfW))
+    val w = s.persist(tf.withColumn("df", count(lit(1)).over(dfW))
       .filter(col("df") <= maxDf)
       .crossJoin(broadcast(n))
       .filter(col("df") < col("nd"))
       .select(col("doc_id"), col("term"),
-        (col("tf") * log(col("nd").cast("double") / col("df"))).as("w"))
-      .persist()
+        (col("tf") * log(col("nd").cast("double") / col("df"))).as("w")))
     val norms = w.groupBy(col("doc_id")).agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
       .join(docs.select(col("doc_id"), md5(col("text")).as("th")), "doc_id")
     val dots = w.select(col("term"), col("doc_id").as("doc_a"), col("w").as("wa"))
@@ -476,7 +466,7 @@ object TextOps {
       .filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(sum(col("wa") * col("wb")).as("dot"), count(lit(1)).as("n_terms"))
-    val result = dots
+    dots
       .join(norms.select(col("doc_id").as("doc_a"), col("nrm").as("na"),
         col("th").as("ha")), "doc_a")
       .join(norms.select(col("doc_id").as("doc_b"), col("nrm").as("nb"),
@@ -486,8 +476,6 @@ object TextOps {
       .filter(col("cos_sim") >= minCos)
       .select(col("doc_a"), col("doc_b"), col("n_terms"), col("cos_sim"))
       .localCheckpoint(true) // small survivor set; lets the weights cache go
-    w.unpersist()
-    result
   }
 
   /** Deterministic stratified sampling: the n smallest md5-ranked docs
@@ -734,7 +722,7 @@ object TextOps {
     * it's recrawling itself).
     *
     * Scale: each token's GLOBAL position = its doc's token offset + its
-    * in-doc index. Doc offsets reuse [[seqPackingLazy]]'s two-phase
+    * in-doc index. Doc offsets reuse [[seqPackingPlan]]'s two-phase
     * block cumsum (within-block window + tiny per-block totals — never
     * a global window over the fact); positions then need ONE
     * co-partitioned join of the narrow offsets onto the exploded
@@ -746,19 +734,20 @@ object TextOps {
   def heapsLaw(docs: DataFrame, blockSize: Long = 1000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val QL = 1048576.0 // 2^20: exponent-shift-exact quantization scale
-    val (packed, base) = seqPackingLazy(docs, 2048, blockSize)
-    val offsets = packed.select(col("doc_id"), col("tok_offset"))
-    val firstPos = graft.functions.Portable.spread(docs, col("doc_id"))
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("i", "w")))
-      .join(offsets, "doc_id")
-      .groupBy(col("w"))
-      .agg(min(col("tok_offset") + col("i")).as("fp"))
-      .localCheckpoint(true) // |vocab| narrow rows
-    // exact token total = last doc's offset + its count: 1 row, eager so
-    // the packing cache can be released before the curve plan runs
-    val tExact = packed.agg(max(col("tok_offset") + col("n_tokens")).as("t"))
-      .localCheckpoint(true)
-    base.unpersist()
+    val (firstPos, tExact) = Scope { s =>
+      val packed = seqPackingPlan(s, docs, 2048, blockSize)
+      val offsets = packed.select(col("doc_id"), col("tok_offset"))
+      (graft.functions.Portable.spread(docs, col("doc_id"))
+        .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("i", "w")))
+        .join(offsets, "doc_id")
+        .groupBy(col("w"))
+        .agg(min(col("tok_offset") + col("i")).as("fp"))
+        .localCheckpoint(true), // |vocab| narrow rows
+      // exact token total = last doc's offset + its count: 1 row, eager so
+      // the packing cache can be released before the curve plan runs
+      packed.agg(max(col("tok_offset") + col("n_tokens")).as("t"))
+        .localCheckpoint(true))
+    }
     val tt = firstPos.sparkSession.range(8).select(col("id").cast("int").as("k"))
     val ck = tExact.crossJoin(broadcast(tt))
       .select(expr("t div cast(pow(2, k) as bigint)").as("n_prefix"))
@@ -1210,19 +1199,18 @@ object TextOps {
     * shuffle joins on w1/w2 at vocab scale); top-k is a global
     * sort+limit (TakeOrderedAndProject — per-partition partial top-k,
     * no single-partition window). */
-  def pmiCollocations(docs: DataFrame, minCount: Long = 5L, k: Int = 25): DataFrame = {
+  def pmiCollocations(docs: DataFrame, minCount: Long = 5L, k: Int = 25): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
-    val grams = graft.functions.TextHash.shingleRows(docs, n = 2)
+    val grams = s.persist(graft.functions.TextHash.shingleRows(docs, n = 2)
       .select(split(col("s"), " ").getItem(0).as("w1"),
-        split(col("s"), " ").getItem(1).as("w2"))
-      .persist()
+        split(col("s"), " ").getItem(1).as("w2")))
     val pairs = grams.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c_xy"))
       .filter(col("c_xy") >= minCount)
     val m = grams.agg(count(lit(1)).as("m_total"))
     val cx = grams.groupBy(col("w1")).agg(count(lit(1)).as("c_x"))
     val cy = grams.groupBy(col("w2")).agg(count(lit(1)).as("c_y"))
-    val ranked = pairs
+    pairs
       .join(broadcast(cx.withColumnRenamed("w1", "wx")), col("w1") === col("wx"))
       .join(broadcast(cy.withColumnRenamed("w2", "wy")), col("w2") === col("wy"))
       .crossJoin(broadcast(m))
@@ -1232,9 +1220,7 @@ object TextOps {
       .orderBy(col("lift").desc, col("w1"), col("w2")).limit(k)
       .withColumn("rnk", row_number().over(
         Window.orderBy(col("lift").desc, col("w1"), col("w2"))).cast("long"))
-      .localCheckpoint(true) // k rows; materialize BEFORE the unpersist
-    grams.unpersist()
-    ranked
+      .localCheckpoint(true) // k rows; materialize BEFORE the release
   }
 
   /** Per-source corpus report card: the first dashboard a data curator
@@ -1340,14 +1326,13 @@ object TextOps {
     * Scale: identical plan shape to PMI — bigram hash-agg, two
     * marginal hash-aggs broadcast back, rank over the ≥minCount pair
     * relation. */
-  def llrCollocations(docs: DataFrame, minCount: Long = 5L, k: Int = 25): DataFrame = {
+  def llrCollocations(docs: DataFrame, minCount: Long = 5L, k: Int = 25): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     def xlx(c: Column): Column =
       when(c > 0, c.cast("double") * log(c.cast("double"))).otherwise(lit(0.0))
-    val grams = graft.functions.TextHash.shingleRows(docs, n = 2)
+    val grams = s.persist(graft.functions.TextHash.shingleRows(docs, n = 2)
       .select(split(col("s"), " ").getItem(0).as("w1"),
-        split(col("s"), " ").getItem(1).as("w2"))
-      .persist()
+        split(col("s"), " ").getItem(1).as("w2")))
     val pairs = grams.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("k11"))
       .filter(col("k11") >= minCount)
@@ -1361,7 +1346,7 @@ object TextOps {
       .withColumn("k12", col("c1") - col("k11"))
       .withColumn("k21", col("c2") - col("k11"))
       .withColumn("k22", col("nn") - col("c1") - col("c2") + col("k11"))
-    val ranked = tabled
+    tabled
       .select(col("w1"), col("w2"), col("k11"), col("c1"), col("c2"),
         trunc4(lit(2.0) * (xlx(col("k11")) + xlx(col("k12")) + xlx(col("k21")) +
           xlx(col("k22")) - xlx(col("c1")) - xlx(col("k11") + col("k21")) -
@@ -1370,9 +1355,7 @@ object TextOps {
       .orderBy(col("llr").desc, col("w1"), col("w2")).limit(k)
       .withColumn("rnk", row_number().over(
         Window.orderBy(col("llr").desc, col("w1"), col("w2"))).cast("long"))
-      .localCheckpoint(true) // k rows; materialize BEFORE the unpersist
-    grams.unpersist()
-    ranked
+      .localCheckpoint(true) // k rows; materialize BEFORE the release
   }
 
   /** Chao1 unseen-species estimate (Chao 1984) per source — "how many
@@ -1425,21 +1408,19 @@ object TextOps {
     * At 100 TB the first-seen registry is the persisted state and a
     * new batch joins against it instead of rebuilding — the
     * [[Dedup]] incremental-MinHash pattern without signatures. */
-  def novelty(docs: DataFrame): DataFrame = {
-    val g = graft.functions.TextHash.shingleRows(
+  def novelty(docs: DataFrame): DataFrame = Scope { s =>
+    // feeds the first-seen registry AND the join back
+    val g = s.persist(graft.functions.TextHash.shingleRows(
         graft.functions.Portable.spread(docs, col("doc_id")), 3)
-      .select(col("doc_id"), col("s")).distinct()
-      .persist() // feeds the first-seen registry AND the join back
+      .select(col("doc_id"), col("s")).distinct())
     val firstSeen = g.groupBy(col("s")).agg(min(col("doc_id")).as("first_doc"))
-    val result = g.join(firstSeen, "s")
+    g.join(firstSeen, "s")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
       .withColumn("novelty", graft.functions.Portable.trunc4(
         col("n_novel") / col("n_shingles")))
       .localCheckpoint(true) // one row per doc; releases the shingle cache
-    g.unpersist()
-    result
   }
 
   /** BM25 top-k retrieval (Robertson & Zaragoza 2009, the Okapi
@@ -1453,7 +1434,7 @@ object TextOps {
     * hit MOST documents.
     *
     * Engine-portable scoring: each per-(doc, term) BM25 contribution
-    * floors to a 1e6-scaled BIGINT (the [[dsirWeightsLazy]] trick), so
+    * floors to a 1e6-scaled BIGINT (the [[dsirWeightsPlan]] trick), so
     * the per-doc score is an exact integer sum — no float merge-order
     * hazard — and the final top-k ordering is over BIGINTs.
     *
@@ -1465,13 +1446,13 @@ object TextOps {
     * global rank sits behind `rnk <= k`, so Spark 4's
     * window-group-limit keeps k rows per partition before the single
     * merge — the [[Analytics]] shippingPriority precedent. */
-  /** [[bm25TopK]]'s lazy plan + its persisted token base, for plan
-    * inspection (ScaleSpec) and the public wrapper. */
-  private[graft] def bm25TopKLazy(docs: DataFrame, k: Int,
-      nq: Int): (DataFrame, DataFrame) = {
-    val tok = graft.functions.Portable.spread(docs, col("doc_id"))
-      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-      .persist() // feeds tf, df, AND doc lengths
+  /** [[bm25TopK]]'s lazy plan, its token base persisted in `s`, for
+    * plan inspection (ScaleSpec) and the public wrapper. */
+  private[graft] def bm25TopKPlan(s: Scope, docs: DataFrame, k: Int,
+      nq: Int): DataFrame = {
+    // feeds tf, df, AND doc lengths
+    val tok = s.persist(graft.functions.Portable.spread(docs, col("doc_id"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("t")))
     val tf = tok.groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
     val dfr = tok.groupBy(col("t")).agg(countDistinct(col("doc_id")).as("df"))
     val lens = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("len"))
@@ -1488,19 +1469,15 @@ object TextOps {
     val perDoc = scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_match_terms"), sum(col("term_scaled")).as("score_scaled"))
     val w = Window.orderBy(col("score_scaled").desc, col("doc_id"))
-    val plan = perDoc
+    perDoc
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("doc_id"), col("n_match_terms"), col("score_scaled"),
         trunc4(col("score_scaled") / 1e6).as("score"), col("rnk"))
-    (plan, tok)
   }
 
-  def bm25TopK(docs: DataFrame, k: Int = 10, nq: Int = 5): DataFrame = {
-    val (plan, tok) = bm25TopKLazy(docs, k, nq)
-    val result = plan.localCheckpoint(true) // k rows; releases the token cache
-    tok.unpersist()
-    result
+  def bm25TopK(docs: DataFrame, k: Int = 10, nq: Int = 5): DataFrame = Scope { s =>
+    bm25TopKPlan(s, docs, k, nq).localCheckpoint(true) // k rows; releases the token cache
   }
 
   /** Unigram-LM negative-log-likelihood scoring — the perplexity
@@ -1515,28 +1492,26 @@ object TextOps {
     * pass → per-token LUT → score pass.)
     *
     * Per-token logprobs floor to 1e6-scaled BIGINTs so doc scores are
-    * exact integer sums ([[dsirWeightsLazy]] pattern). The LUT join is
+    * exact integer sums ([[dsirWeightsPlan]] pattern). The LUT join is
     * deliberately NOT broadcast-hinted — vocabulary grows with the
     * corpus ([[tfidfTopK]]'s reasoning); AQE still picks broadcast when
     * it fits. One tokenize pass persisted; the per-doc sum reuses the
     * spread doc partitioning. */
-  def unigramNll(docs: DataFrame): DataFrame = {
-    val tok = graft.functions.Portable.spread(docs, col("doc_id"))
-      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-      .persist() // feeds the LM counts AND the scoring join
+  def unigramNll(docs: DataFrame): DataFrame = Scope { s =>
+    // feeds the LM counts AND the scoring join
+    val tok = s.persist(graft.functions.Portable.spread(docs, col("doc_id"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("t")))
     val tfc = tok.groupBy(col("t")).agg(count(lit(1)).as("tf"))
     val tot = tfc.agg(sum(col("tf")).as("tt"), count(lit(1)).as("v"))
     val lut = tfc.crossJoin(broadcast(tot))
       .select(col("t"),
         floor(-log((col("tf") + 1) / (col("tt") + col("v"))) * 1e6)
           .cast("long").as("nll_term"))
-    val result = tok.join(lut, "t")
+    tok.join(lut, "t")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("nll_term")).as("nll_scaled"))
       .withColumn("avg_nll", trunc4(col("nll_scaled") / 1e6 / col("n_tokens")))
       .localCheckpoint(true) // one row per doc; releases the token cache
-    tok.unpersist()
-    result
   }
 
   /** Bigram-LM held-out scoring — [[unigramNll]]'s sequence-aware
@@ -1554,15 +1529,15 @@ object TextOps {
     * the token ARRAY (one transform per doc — no positional self-join
     * over the token stream); the train counts relation is vocabulary-
     * bounded, joined un-hinted so AQE broadcasts it while it fits. */
-  def bigramLm(docs: DataFrame): DataFrame = {
+  def bigramLm(docs: DataFrame): DataFrame = Scope { s =>
     val toks = graft.functions.Portable.spread(docs, col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("tok"))
-    val bi = toks
+    // feeds the train counts AND the test scoring join
+    val bi = s.persist(toks
       .select(col("doc_id"),
         explode(expr("transform(slice(tok, 1, size(tok) - 1), " +
           "(t, i) -> struct(t AS t1, element_at(tok, i + 2) AS t2))")).as("b"))
-      .select(col("doc_id"), col("b.t1").as("t1"), col("b.t2").as("t2"))
-      .persist() // feeds the train counts AND the test scoring join
+      .select(col("doc_id"), col("b.t1").as("t1"), col("b.t2").as("t2")))
     val train = bi.filter(pmod(col("doc_id"), lit(2)) === 0)
     val c2 = train.groupBy(col("t1"), col("t2")).agg(count(lit(1)).as("c2"))
     val c1 = train.groupBy(col("t1")).agg(count(lit(1)).as("c1"))
@@ -1576,14 +1551,12 @@ object TextOps {
         floor(-log((coalesce(col("c2"), lit(0L)) + 1) /
           (coalesce(col("c1"), lit(0L)) + col("v"))) * 1e6)
           .cast("long").as("nll_term"))
-    val result = scored.groupBy(col("doc_id"))
+    scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("nll_term")).as("nll_scaled"),
         sum(col("unseen")).as("n_unseen"))
       .withColumn("avg_nll", trunc4(col("nll_scaled") / 1e6 / col("n_bigrams")))
       .withColumn("unseen_rate", trunc4(col("n_unseen") / col("n_bigrams")))
       .localCheckpoint(true) // one row per held-out doc; frees the cache
-    bi.unpersist()
-    result
   }
 
   /** Interpolated Kneser–Ney bigram LM (Kneser & Ney 1995; Chen &
@@ -1612,18 +1585,18 @@ object TextOps {
     * equi-joins against collapsed count relations (each ≤ |bigram
     * types|), then one tiny per-source rollup. The probability divides
     * exact integer counts in one textual order both engines share. */
-  def knBigramLm(docs: DataFrame, discount: Double = 0.75): DataFrame = {
+  def knBigramLm(docs: DataFrame, discount: Double = 0.75): DataFrame = Scope { s =>
     val toks = graft.functions.Portable.spread(docs, col("doc_id"))
       .select(col("doc_id"), col("source"), tokens(col("text")).as("tok"))
-    val bi = toks
+    // feeds four train aggregates AND the test scoring join
+    val bi = s.persist(toks
       .select(col("doc_id"), col("source"),
         explode(expr("transform(slice(tok, 1, size(tok) - 1), " +
           "(t, i) -> struct(t AS t1, element_at(tok, i + 2) AS t2))")).as("b"))
-      .select(col("doc_id"), col("source"), col("b.t1").as("t1"), col("b.t2").as("t2"))
-      .persist() // feeds four train aggregates AND the test scoring join
+      .select(col("doc_id"), col("source"), col("b.t1").as("t1"), col("b.t2").as("t2")))
     val train = bi.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val c2 = train.groupBy(col("t1"), col("t2")).agg(count(lit(1)).as("c2"))
-      .persist() // feeds c1/n1f/n1b/B and the scoring join
+    // feeds c1/n1f/n1b/B and the scoring join
+    val c2 = s.persist(train.groupBy(col("t1"), col("t2")).agg(count(lit(1)).as("c2")))
     val c1 = c2.groupBy(col("t1"))
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1f"))
     val n1b = c2.groupBy(col("t2")).agg(count(lit(1)).as("n1b"))
@@ -1645,15 +1618,13 @@ object TextOps {
         when(col("c2").isNull, 1L).otherwise(0L).as("unseen_bigram"),
         when(col("c1").isNull, 1L).otherwise(0L).as("unseen_history"),
         floor(-log(col("p")) * 1e6).cast("long").as("nll_term"))
-    val result = scored.groupBy(col("source"))
+    scored.groupBy(col("source"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("nll_term")).as("nll_scaled"),
         sum(col("unseen_bigram")).as("n_unseen"),
         sum(col("unseen_history")).as("n_unseen_hist"))
       .withColumn("avg_nll", trunc4(col("nll_scaled") / 1e6 / col("n_bigrams")))
       .withColumn("unseen_rate", trunc4(col("n_unseen") / col("n_bigrams")))
       .localCheckpoint(true) // one row per source; frees both caches
-    bi.unpersist(); c2.unpersist()
-    result
   }
 
   /** Per-document keyphrase extraction — top-`k` tokens by
@@ -1664,16 +1635,16 @@ object TextOps {
     * product — rank ties cannot float), rank window partitioned per
     * doc (bounded by a doc's distinct tokens, never corpus-sized);
     * single-doc hapax noise is suppressed by requiring df ≥ 2. */
-  def keyphrases(docs: DataFrame, k: Int = 3): DataFrame = {
-    val tok = graft.functions.Portable.spread(docs, col("doc_id"))
-      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-      .persist() // feeds tf AND df
+  def keyphrases(docs: DataFrame, k: Int = 3): DataFrame = Scope { s =>
+    // feeds tf AND df
+    val tok = s.persist(graft.functions.Portable.spread(docs, col("doc_id"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("t")))
     val tf = tok.groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
     val dfr = tok.groupBy(col("t")).agg(countDistinct(col("doc_id")).as("df"))
     val nd = tok.agg(countDistinct(col("doc_id")).as("n"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score_scaled").desc, col("t"))
-    val result = tf.join(dfr.filter(col("df") >= 2), "t")
+    tf.join(dfr.filter(col("df") >= 2), "t")
       .crossJoin(broadcast(nd))
       .withColumn("idf_scaled",
         floor(log(col("n") / col("df")) * 1e6).cast("long"))
@@ -1683,8 +1654,6 @@ object TextOps {
       .select(col("doc_id"), col("rnk"), col("t").as("term"),
         col("tf"), col("df"), col("score_scaled"))
       .localCheckpoint(true) // ≤ k rows per doc; releases the token cache
-    tok.unpersist()
-    result
   }
 
   /** Water-filling mixture allocation — the budgeted answer to "how
@@ -1757,7 +1726,7 @@ object TextOps {
 
   /** Per-source Jensen–Shannon divergence from the corpus unigram
     * mix — the domain-balance readout a pretraining pipeline reads
-    * before weighting sources ([[dsirWeightsLazy]] reweights; this
+    * before weighting sources ([[dsirWeightsPlan]] reweights; this
     * MEASURES how far each source sits): JSD(p_s ‖ q) with q the
     * whole-corpus distribution and m = (p+q)/2.
     *
@@ -1768,10 +1737,10 @@ object TextOps {
     * |sources| cross product a naive full-outer evaluation would
     * materialize. Per-term floors to 1e9 BIGINTs keep sums exact;
     * 0 ≤ JSD ≤ ln 2 ≈ 0.6931. */
-  def sourceJsd(docs: DataFrame): DataFrame = {
-    val tok = graft.functions.Portable.spread(docs, col("doc_id"))
-      .select(col("source"), explode(tokens(col("text"))).as("t"))
-      .persist() // feeds the per-source AND corpus counts
+  def sourceJsd(docs: DataFrame): DataFrame = Scope { s =>
+    // feeds the per-source AND corpus counts
+    val tok = s.persist(graft.functions.Portable.spread(docs, col("doc_id"))
+      .select(col("source"), explode(tokens(col("text"))).as("t")))
     val st = tok.groupBy(col("source"), col("t")).agg(count(lit(1)).as("tfs"))
     val ct = tok.groupBy(col("t")).agg(count(lit(1)).as("tfc"))
     val stot = st.groupBy(col("source")).agg(sum(col("tfs")).as("ts"))
@@ -1779,7 +1748,7 @@ object TextOps {
     val p = col("tfs") / col("ts")
     val q = col("tfc") / col("tc")
     val m = (p + q) / 2
-    val result = st.join(ct, "t")
+    st.join(ct, "t")
       .join(stot, "source")
       .crossJoin(broadcast(ctot))
       .select(col("source"), col("ts"),
@@ -1796,8 +1765,6 @@ object TextOps {
           .as("jsd_scaled"))
       .withColumn("jsd", trunc4(col("jsd_scaled") / 1e9))
       .localCheckpoint(true) // |sources| rows; releases the token cache
-    tok.unpersist()
-    result
   }
 
   /** Vocabulary coverage curve — the tokenizer-sizing readout: what
@@ -1865,17 +1832,17 @@ object TextOps {
     * driver-gated — fused in one lazy plan whose only fact-sized
     * shuffles are the dedup hash-agg and the final tiny reason
     * rollup. */
-  def corpusTriage(docs: DataFrame): DataFrame = {
-    val s = perturbed(docs)
+  def corpusTriage(docs: DataFrame): DataFrame = Scope { sc =>
+    // feeds the keeper table, the totals, and the ledger
+    val s = sc.persist(perturbed(docs)
       .select(col("doc_id"), normalize(col("text")).as("nt"),
         tokens(col("text")).as("toks"))
       .withColumn("n_tokens", size(tokens(col("nt"))).cast("long"))
       .select(langRatios(col("doc_id"), col("nt"), col("n_tokens")): _*)
-      .withColumn("lang", langDecision)
-      .persist() // feeds the keeper table, the totals, and the ledger
+      .withColumn("lang", langDecision))
     val keep = s.groupBy(md5(col("nt")).as("h")).agg(min(col("doc_id")).as("keep_id"))
     val tot = s.agg(count(lit(1)).as("n_total"))
-    val result = s.withColumn("h", md5(col("nt")))
+    s.withColumn("h", md5(col("nt")))
       .join(keep, "h")
       .withColumn("reason",
         when(col("doc_id") =!= col("keep_id"), "duplicate")
@@ -1888,8 +1855,6 @@ object TextOps {
       .select(col("reason"), col("n_docs"), col("n_tokens"),
         trunc4(col("n_docs") / col("n_total")).as("share"))
       .localCheckpoint(true) // ≤ 4 rows; releases the scored cache
-    s.unpersist()
-    result
   }
 
   /** Good–Turing missing-mass estimate per source (Good 1953; Gale &

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Scope
 import graft.operators.{Reference, Transaction}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{broadcast => _, _}
@@ -594,40 +595,38 @@ object Streaming {
 
   /** [[upsertSink]]'s per-micro-batch keep-latest upsert into `storeDir`. */
   private def upsertBatch(storeDir: String, buckets: Int)(batch: DataFrame,
-      batchId: Long): Unit = {
+      batchId: Long): Unit = Scope { s =>
     val spark = batch.sparkSession
     val cols = Seq("transaction_id", "user_id", "amount", "currency", "type", "timestamp")
-    // int kb regardless of the stream's user_id width (int or long)
-    val b = batch.select(cols.map(col): _*)
-      .withColumn("kb", pmod(col("user_id"), lit(buckets)).cast("int"))
-      .persist()
-    try {
-      // driver-side bucket list is bounded by `buckets`, never by data
-      val touched = b.select("kb").distinct().collect().map(_.getInt(0))
-      if (touched.nonEmpty) {
-        // explicit existence probe per touched partition dir — never a
-        // broad exception catch (which would conflate "store not born
-        // yet" with "store unreadable" and clobber good partitions)
-        val base = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val liveDirs = touched.map(k => s"$storeDir/kb=$k")
-          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-        val existing =
-          if (liveDirs.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
-          else spark.read.option("basePath", storeDir).schema(b.schema)
-            .parquet(liveDirs.toSeq: _*)
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-          .orderBy(col("timestamp").desc, col("transaction_id").desc)
-        existing.unionByName(b)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("kb")
-          .parquet(storeDir)
-      }
-    } finally b.unpersist() // also on write failure: replay must not stack cached copies
+    // int kb regardless of the stream's user_id width (int or long);
+    // released also on write failure: replay must not stack cached copies
+    val b = s.persist(batch.select(cols.map(col): _*)
+      .withColumn("kb", pmod(col("user_id"), lit(buckets)).cast("int")))
+    // driver-side bucket list is bounded by `buckets`, never by data
+    val touched = b.select("kb").distinct().collect().map(_.getInt(0))
+    if (touched.nonEmpty) {
+      // explicit existence probe per touched partition dir — never a
+      // broad exception catch (which would conflate "store not born
+      // yet" with "store unreadable" and clobber good partitions)
+      val base = new org.apache.hadoop.fs.Path(storeDir)
+      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val liveDirs = touched.map(k => s"$storeDir/kb=$k")
+        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+      val existing =
+        if (liveDirs.isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema)
+        else spark.read.option("basePath", storeDir).schema(b.schema)
+          .parquet(liveDirs.toSeq: _*)
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
+        .orderBy(col("timestamp").desc, col("transaction_id").desc)
+      existing.unionByName(b)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("kb")
+        .parquet(storeDir)
+    }
   }
 
   /** The CDC-apply path under the correctness gate: drive [[upsertSink]]
@@ -2195,20 +2194,6 @@ object Streaming {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> Some("true"))
   }
 
-  /** Runs `body` with `overrides` on the session conf (None = unset)
-    * and restores the prior explicit settings after, also on failure.
-    * A streaming query runs on the session clone it takes in
-    * `start()`, so wrapping just the start pins the stream without the
-    * override staying on the session while its batches run. */
-  private[graft] def withConf[T](spark: SparkSession,
-      overrides: Seq[(String, Option[String])])(body: => T): T = {
-    def put(kv: (String, Option[String])): Unit =
-      kv._2.fold(spark.conf.unset(kv._1))(spark.conf.set(kv._1, _))
-    val prior = spark.conf.getAll
-    overrides.foreach(put)
-    try body finally overrides.foreach { case (k, _) => put(k -> prior.get(k)) }
-  }
-
   /** Where a bounded replay's micro-batches go. */
   private[graft] sealed trait ReplaySink
   /** Append-mode parquet files in the run's output directory. */
@@ -2255,7 +2240,7 @@ object Streaming {
     * `Trigger.AvailableNow` over one checkpoint in a fresh temp tree,
     * then `readBack` over the finished run. `pinPartitions` pins
     * [[ReplayPartitions]] and `rocksDb` the [[stateStoreConf]] — both
-    * applied only around each `start()` ([[withConf]]), so the
+    * applied only around each `start()` ([[Scope.withConf]]), so the
     * session's own conf is untouched while batches run. The temp tree
     * is removed after the read-back, also when a batch or the
     * read-back fails; a read-back that outlives it must materialize
@@ -2280,7 +2265,7 @@ object Streaming {
         .parquet(inDir))
       val w = df.writeStream.option("checkpointLocation", s"$root/ck")
         .trigger(Trigger.AvailableNow())
-      val q = withConf(spark, pins)((sink match {
+      val q = Scope.withConf(spark, pins)((sink match {
         case ParquetSink => w.format("parquet").option("path", out)
           .outputMode(OutputMode.Append())
         case NoopSink => w.format("noop").outputMode(OutputMode.Append())
@@ -2346,61 +2331,53 @@ object Streaming {
     * probe join prunes to the probed buckets at the scan. Streaming
     * state: none. */
   def streamDecontam(spark: SparkSession, dir: String,
-      threshold: Double = 0.4): DataFrame = {
+      threshold: Double = 0.4): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     val Sim = graft.operators.Similarity
-    // everything below sits under one try/finally: a failing stream or
-    // read-back must still unpersist the pinned index (round-9 advice)
-    val v = Sim.withEmbD(graft.Tables.embeddings(spark, dir)).persist()
-    var capped: DataFrame = null
-    try {
-      val tr = v.filter(pmod(col("vec_id"), lit(7L)) =!= 0)
-      val cents = Sim.trainedCentroids(tr).localCheckpoint(true) // ≤ NList rows
-      capped = tr.join(Sim.assignTo(tr, cents), "vec_id")
-        .withColumn("crnk", row_number().over(Window.partitionBy(col("list_id"))
-          .orderBy(graft.functions.TextHash.hash60(concat(lit("dcap|"), col("vec_id"))),
-            col("vec_id"))))
-        .filter(col("crnk") <= 64)
-        .select(col("vec_id").as("train_id"), col("e").as("te"), col("list_id"))
-        .persist()
-      capped.count() // pin the index BEFORE micro-batches start re-planning
-      val cl = cents.collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-      // top-NProbe lists as a pure scalar expression over the literal
-      // centroid set: (qcos, -cid) structs sort exactly like the batch
-      // operator's (qcos DESC, cid) window rank
-      def probedLists(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        slice(sort_array(array(cl.map {
-        case (cid, ce) => struct(
+    // a failing stream or read-back still releases the pinned index
+    val v = s.persist(Sim.withEmbD(graft.Tables.embeddings(spark, dir)))
+    val tr = v.filter(pmod(col("vec_id"), lit(7L)) =!= 0)
+    val cents = Sim.trainedCentroids(tr).localCheckpoint(true) // ≤ NList rows
+    val capped = s.persist(tr.join(Sim.assignTo(tr, cents), "vec_id")
+      .withColumn("crnk", row_number().over(Window.partitionBy(col("list_id"))
+        .orderBy(graft.functions.TextHash.hash60(concat(lit("dcap|"), col("vec_id"))),
+          col("vec_id"))))
+      .filter(col("crnk") <= 64)
+      .select(col("vec_id").as("train_id"), col("e").as("te"), col("list_id")))
+    capped.count() // pin the index BEFORE micro-batches start re-planning
+    val cl = cents.collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+    // top-NProbe lists as a pure scalar expression over the literal
+    // centroid set: (qcos, -cid) structs sort exactly like the batch
+    // operator's (qcos DESC, cid) window rank
+    def probedLists(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      slice(sort_array(array(cl.map {
+      case (cid, ce) => struct(
+        graft.functions.Portable.trunc4(
+          graft.functions.NativeVector.cosine(e, typedLit(ce))).as("qcos"),
+        lit(-cid).as("ncid"))
+    }: _*), asc = false), 1, Sim.NProbe)
+    // batch boundaries don't affect the (stateless) result; slicing is
+    // only there to exercise real multi-batch execution — the staged
+    // slice is shared with streamIvfIncr ([[HoldoutCorpus]])
+    // Stateless pipeline — the ReplayPartitions state-commit pin never
+    // applied here (r12: removed; the broadcast probe join leaves no
+    // session-width exchange in the batch plan). A per-micro-batch
+    // repartition to spread the probe compute was A/B-measured SLOWER
+    // at sf0.1 (4.81 → 5.34 s warm min-of-3: four extra exchanges buy
+    // nothing when each batch is thousands of rows); at 100 TB the
+    // scan itself has thousands of splits and needs no spread.
+    driveReplay(spark, HoldoutCorpus.get(spark, dir), in => in
+        .select(col("vec_id").as("q_id"), col("e").as("qe"),
+          explode(probedLists(col("e"))).as("p"))
+        .select(col("q_id"), col("qe"), (-col("p.ncid")).as("list_id"))
+        .join(capped, Seq("list_id"))
+        .select(col("q_id"), col("train_id").as("train_match"),
           graft.functions.Portable.trunc4(
-            graft.functions.NativeVector.cosine(e, typedLit(ce))).as("qcos"),
-          lit(-cid).as("ncid"))
-      }: _*), asc = false), 1, Sim.NProbe)
-      // batch boundaries don't affect the (stateless) result; slicing is
-      // only there to exercise real multi-batch execution — the staged
-      // slice is shared with streamIvfIncr ([[HoldoutCorpus]])
-      // Stateless pipeline — the ReplayPartitions state-commit pin never
-      // applied here (r12: removed; the broadcast probe join leaves no
-      // session-width exchange in the batch plan). A per-micro-batch
-      // repartition to spread the probe compute was A/B-measured SLOWER
-      // at sf0.1 (4.81 → 5.34 s warm min-of-3: four extra exchanges buy
-      // nothing when each batch is thousands of rows); at 100 TB the
-      // scan itself has thousands of splits and needs no spread.
-      driveReplay(spark, HoldoutCorpus.get(spark, dir), in => in
-          .select(col("vec_id").as("q_id"), col("e").as("qe"),
-            explode(probedLists(col("e"))).as("p"))
-          .select(col("q_id"), col("qe"), (-col("p.ncid")).as("list_id"))
-          .join(capped, Seq("list_id"))
-          .select(col("q_id"), col("train_id").as("train_match"),
-            graft.functions.Portable.trunc4(
-              graft.functions.NativeVector.cosine(col("qe"), col("te"))).as("cos"))
-          .filter(col("cos") >= threshold),
-        ParquetSink, maxFilesPerTrigger = Some(1)) { run =>
-        spark.read.schema(run.schema).parquet(run.out)
-          .localCheckpoint(true) // flagged pairs ≪ corpus
-      }
-    } finally {
-      if (capped != null) capped.unpersist()
-      v.unpersist()
+            graft.functions.NativeVector.cosine(col("qe"), col("te"))).as("cos"))
+        .filter(col("cos") >= threshold),
+      ParquetSink, maxFilesPerTrigger = Some(1)) { run =>
+      spark.read.schema(run.schema).parquet(run.out)
+        .localCheckpoint(true) // flagged pairs ≪ corpus
     }
   }
 
@@ -2421,21 +2398,18 @@ object Streaming {
     * each purchase match exactly one version. At 100 TB the dimension
     * is the bucketed/broadcast side and the probe stays an equi-join
     * on the user key. */
-  def streamScdEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val dim = graft.operators.Monitoring.scd2(graft.Tables.events(spark, dir))
+  def streamScdEnrich(spark: SparkSession, dir: String): DataFrame = Scope { s =>
+    val dim = s.persist(graft.operators.Monitoring.scd2(graft.Tables.events(spark, dir))
       .select(col("user_id").as("d_user"), col("status"),
-        col("valid_from"), col("valid_to"))
-      .persist()
-    try {
-      dim.count() // pin the dimension before micro-batches start
-      replay(spark, dir, in => in
-        .filter(col("event_type") === "purchase")
-        .join(dim, col("user_id") === col("d_user") &&
-          col("ts_ms") >= col("valid_from") &&
-          (col("valid_to").isNull || col("ts_ms") < col("valid_to")))
-        .select(col("event_id"), col("user_id"), col("ts_ms"),
-          col("status"), col("cents")))
-    } finally dim.unpersist()
+        col("valid_from"), col("valid_to")))
+    dim.count() // pin the dimension before micro-batches start
+    replay(spark, dir, in => in
+      .filter(col("event_type") === "purchase")
+      .join(dim, col("user_id") === col("d_user") &&
+        col("ts_ms") >= col("valid_from") &&
+        (col("valid_to").isNull || col("ts_ms") < col("valid_to")))
+      .select(col("event_id"), col("user_id"), col("ts_ms"),
+        col("status"), col("cents")))
   }
 
   /** Online IVF index maintenance — the streaming half of
@@ -2469,58 +2443,56 @@ object Streaming {
   def streamIvfIncr(spark: SparkSession, dir: String,
       moveFrac: Double = 0.25, minAdds: Long = 3L,
       onProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit
-        = _ => ()): DataFrame = {
+        = _ => ()): DataFrame = Scope { s =>
     val Sim = graft.operators.Similarity
-    val v = Sim.withEmbD(graft.Tables.embeddings(spark, dir)).persist()
-    try {
-      val tr = v.filter(pmod(col("vec_id"), lit(7L)) =!= 0)
-      val frozen = Sim.trainedCentroids(tr).localCheckpoint(true) // ≤ NList rows
-      val retrained = Sim.retrainedAlignedCentroids(v, tr) // ≤ NList rows
-      def lits(df: DataFrame): Array[(Int, Seq[Double])] =
-        df.collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-      // argmax over a literal centroid set: top-1 of (trunc4 cosine,
-      // −cid) sorted descending == the batch operator's row_number
-      // ORDER BY ccos DESC, cid — pure scalar compute, no state
-      def assignLit(e: org.apache.spark.sql.Column,
-          cl: Array[(Int, Seq[Double])]): org.apache.spark.sql.Column =
-        -sort_array(array(cl.map { case (cid, ce) => struct(
+    val v = s.persist(Sim.withEmbD(graft.Tables.embeddings(spark, dir)))
+    val tr = v.filter(pmod(col("vec_id"), lit(7L)) =!= 0)
+    val frozen = Sim.trainedCentroids(tr).localCheckpoint(true) // ≤ NList rows
+    val retrained = Sim.retrainedAlignedCentroids(v, tr) // ≤ NList rows
+    def lits(df: DataFrame): Array[(Int, Seq[Double])] =
+      df.collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+    // argmax over a literal centroid set: top-1 of (trunc4 cosine,
+    // −cid) sorted descending == the batch operator's row_number
+    // ORDER BY ccos DESC, cid — pure scalar compute, no state
+    def assignLit(e: org.apache.spark.sql.Column,
+        cl: Array[(Int, Seq[Double])]): org.apache.spark.sql.Column =
+      -sort_array(array(cl.map { case (cid, ce) => struct(
+        graft.functions.Portable.trunc4(
+          graft.functions.NativeVector.cosine(e, typedLit(ce))).as("qcos"),
+        lit(-cid).as("ncid"))
+      }: _*), asc = false)(0)("ncid")
+    val (fl, rl) = (lits(frozen), lits(retrained))
+    // batch boundaries don't affect the final ledger; slicing only
+    // exercises real multi-batch accumulation through state — the
+    // staged slice is shared with streamDecontam ([[HoldoutCorpus]])
+    // The pin sizes the ≤ NList-group STATE layout; the heavy work is
+    // the 2·NList literal cosines per row, which would otherwise run
+    // inside the 1-file-per-trigger scan stage — ONE task per batch.
+    // Spread each micro-batch first (r12, guide §2): the assignment +
+    // map-side partial agg then run cluster-wide, and only ≤ NList
+    // partial rows per partition reach the pinned state exchange.
+    driveReplay(spark, HoldoutCorpus.get(spark, dir), in => in
+      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
+      .select(assignLit(col("e"), fl).as("list_id"),
+        assignLit(col("e"), rl).as("retrained_list"))
+      .groupBy(col("list_id"))
+      .agg(count(lit(1)).as("n_added"),
+        sum(when(col("list_id") =!= col("retrained_list"), 1L)
+          .otherwise(0L)).as("n_would_move"))
+      .select(col("list_id"), col("n_added"), col("n_would_move"),
+        graft.functions.Portable.trunc4(
+          col("n_would_move").cast("double") / col("n_added")).as("move_frac"),
+        (col("n_added") >= minAdds &&
           graft.functions.Portable.trunc4(
-            graft.functions.NativeVector.cosine(e, typedLit(ce))).as("qcos"),
-          lit(-cid).as("ncid"))
-        }: _*), asc = false)(0)("ncid")
-      val (fl, rl) = (lits(frozen), lits(retrained))
-      // batch boundaries don't affect the final ledger; slicing only
-      // exercises real multi-batch accumulation through state — the
-      // staged slice is shared with streamDecontam ([[HoldoutCorpus]])
-      // The pin sizes the ≤ NList-group STATE layout; the heavy work is
-      // the 2·NList literal cosines per row, which would otherwise run
-      // inside the 1-file-per-trigger scan stage — ONE task per batch.
-      // Spread each micro-batch first (r12, guide §2): the assignment +
-      // map-side partial agg then run cluster-wide, and only ≤ NList
-      // partial rows per partition reach the pinned state exchange.
-      driveReplay(spark, HoldoutCorpus.get(spark, dir), in => in
-        .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-        .select(assignLit(col("e"), fl).as("list_id"),
-          assignLit(col("e"), rl).as("retrained_list"))
-        .groupBy(col("list_id"))
-        .agg(count(lit(1)).as("n_added"),
-          sum(when(col("list_id") =!= col("retrained_list"), 1L)
-            .otherwise(0L)).as("n_would_move"))
-        .select(col("list_id"), col("n_added"), col("n_would_move"),
-          graft.functions.Portable.trunc4(
-            col("n_would_move").cast("double") / col("n_added")).as("move_frac"),
-          (col("n_added") >= minAdds &&
-            graft.functions.Portable.trunc4(
-              col("n_would_move").cast("double") / col("n_added")) >= moveFrac)
-            .as("retrain")),
-        BatchSink(OutputMode.Complete(), snap => (df, _) =>
-          df.write.mode("overwrite").parquet(snap)), // compacted ledger snapshot
-        maxFilesPerTrigger = Some(1), pinPartitions = true) { run =>
-        onProgress(run.progress)
-        spark.read.parquet(run.out)
-          .localCheckpoint(true) // ≤ NList rows; materialize before rmTree
-      }
-    } finally v.unpersist()
+            col("n_would_move").cast("double") / col("n_added")) >= moveFrac)
+          .as("retrain")),
+      BatchSink(OutputMode.Complete(), snap => (df, _) =>
+        df.write.mode("overwrite").parquet(snap)), // compacted ledger snapshot
+      maxFilesPerTrigger = Some(1), pinPartitions = true) { run =>
+      onProgress(run.progress)
+      spark.read.parquet(run.out)
+        .localCheckpoint(true) // ≤ NList rows; materialize before rmTree
+    }
   }
 
   /** Streaming event-time AS-OF enrichment — Flink's event-time
@@ -2590,11 +2562,11 @@ object Streaming {
   def streamNeardup(spark: SparkSession, dir: String,
       threshold: Double = 0.5,
       onProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit
-        = _ => ()): DataFrame = {
+        = _ => ()): DataFrame = Scope { s =>
     val D = graft.operators.Dedup
     val docs = graft.Tables.documents(spark, dir)
-    val registry = D.incrRegistryOf(docs).persist() // verify arm re-shingles candidates
-    val regBands = D.bandIndex(registry).persist()
+    val registry = s.persist(D.incrRegistryOf(docs)) // verify arm re-shingles candidates
+    val regBands = s.persist(D.bandIndex(registry))
     val root = java.nio.file.Files.createTempDirectory("graft-snd")
     try {
       regBands.count() // pin the LSH index BEFORE micro-batches start
@@ -2628,10 +2600,7 @@ object Streaming {
           .parquet(run.out)
           .localCheckpoint(true) // flagged pairs ≪ corpus; materialize before rmTree
       }
-    } finally {
-      regBands.unpersist(); registry.unpersist()
-      rmTree(new java.io.File(root.toString))
-    }
+    } finally rmTree(new java.io.File(root.toString))
   }
 
   // ---- driver wiring ----

@@ -314,6 +314,20 @@ class MonitoringSpec extends SparkSpec {
     }
   }
 
+  test("gapFill: a failing checkpoint propagates and leaves no relation cached") {
+    // q_ts_gapfill persists its daily aggregate before the eager
+    // checkpoint; a value that raises on evaluation fails that checkpoint
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val poisoned = Tables.events(spark, sf001)
+      .withColumn("value", raise_error(lit("injected value fault")).cast("double"))
+    val cached0 = org.apache.spark.sql.CachedRelations.count(spark)
+    val e = intercept[Exception](Monitoring.gapFill(poisoned))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(c => String.valueOf(c.getMessage).contains("injected value fault")), e)
+    assert(org.apache.spark.sql.CachedRelations.count(spark) === cached0,
+      "the failed operator left its daily aggregate cached")
+  }
+
   test("intervalOverlaps: exact pair durations, handoffs excluded, multi-day pairs count once") {
     import spark.implicits._
     val H = 3600000L

@@ -196,17 +196,18 @@ class ScaleSpec extends SparkSpec {
       s"cusum: one agg exchange + one window exchange on the daily table:\n$cPlan")
     // interval overlaps: candidates come from a hash EQUI-join on the
     // day bucket, never a nested-loop over intervals
-    val (iLazy, iCache) = Monitoring.intervalOverlapsLazy(ev, "error", 7200000L)
-    val iPlan = iLazy.queryExecution.executedPlan.toString
-    iCache.unpersist()
+    val iPlan = Scope { s =>
+      Monitoring.intervalOverlapsPlan(s, ev, "error", 7200000L).queryExecution.executedPlan.toString
+    }
     assert(iPlan.contains("SortMergeJoin") || iPlan.contains("ShuffledHashJoin") ||
       iPlan.contains("BroadcastHashJoin"), s"interval join must be hash-based:\n$iPlan")
     assert(!iPlan.contains("NestedLoop"), iPlan)
     // dsir: the bucket LUT reaches the doc side as a broadcast — the
     // corpus-scale bigram relation is never shuffled by bucket
-    val (dLazy, dCache) = TextOps.dsirWeightsLazy(Tables.documents(spark, sf), 1024L, 97L)
-    val dPlan = dLazy.queryExecution.executedPlan.toString
-    dCache.unpersist()
+    val dPlan = Scope { s =>
+      TextOps.dsirWeightsPlan(s, Tables.documents(spark, sf), 1024L, 97L)
+        .queryExecution.executedPlan.toString
+    }
     assert(dPlan.contains("BroadcastHashJoin"), s"dsir LUT must broadcast:\n$dPlan")
   }
 
@@ -388,9 +389,10 @@ class ScaleSpec extends SparkSpec {
 
   test("seqPacking: corpus window is block-partitioned; base is scanned once") {
     val docs = Tables.documents(spark, sf)
-    val (lazyResult, base) = graft.operators.TextOps.seqPackingLazy(docs, 2048, 1000L)
-    val plan = try lazyResult.queryExecution.executedPlan.toString
-    finally base.unpersist()
+    val plan = Scope { s =>
+      graft.operators.TextOps.seqPackingPlan(s, docs, 2048, 1000L)
+        .queryExecution.executedPlan.toString
+    }
     // the per-doc running sum must be partitioned (blk) — a global
     // Window over the corpus would serialize 100 TB through one task
     assert(plan.contains("windowspecdefinition(blk"),
@@ -461,22 +463,24 @@ class ScaleSpec extends SparkSpec {
     // semanticDedup's within-cluster pairing must plan as an EQUI-join
     // on list_id (shuffle or broadcast), never a cartesian product —
     // the difference between Σ|cluster|²/2 and n²/2 at corpus scale
-    val (sd, v, vl) = graft.operators.Similarity
-      .semanticDedupLazy(Tables.embeddings(spark, sf), 0.4)
-    val sdPlan = sd.queryExecution.executedPlan.toString
-    assert(!sdPlan.contains("CartesianProduct"), s"pairing cross-joined:\n$sdPlan")
-    vl.unpersist(); v.unpersist()
+    Scope { s =>
+      val sd = graft.operators.Similarity
+        .semanticDedupPlan(s, Tables.embeddings(spark, sf), 0.4)
+      val sdPlan = sd.queryExecution.executedPlan.toString
+      assert(!sdPlan.contains("CartesianProduct"), s"pairing cross-joined:\n$sdPlan")
+    }
     // simDecontam's held-out→train probe must be an EQUI-join on
     // list_id (probe side broadcast), never a cartesian product — the
     // difference between NProbe·maxPerList work per held-out vector
     // and |held|·|train| at corpus scale
-    val (dc, dcv) = graft.operators.Similarity
-      .simDecontamLazy(Tables.embeddings(spark, sf))
-    val dcPlan = dc.queryExecution.executedPlan.toString
-    assert(!dcPlan.contains("CartesianProduct"), s"decontam cross-joined:\n$dcPlan")
-    assert(dcPlan.contains("BroadcastHashJoin"),
-      s"decontam probe join is not a broadcast equi-join:\n$dcPlan")
-    dcv.unpersist()
+    Scope { s =>
+      val dc = graft.operators.Similarity
+        .simDecontamPlan(s, Tables.embeddings(spark, sf))
+      val dcPlan = dc.queryExecution.executedPlan.toString
+      assert(!dcPlan.contains("CartesianProduct"), s"decontam cross-joined:\n$dcPlan")
+      assert(dcPlan.contains("BroadcastHashJoin"),
+        s"decontam probe join is not a broadcast equi-join:\n$dcPlan")
+    }
     // zipfFit: term agg + lang rank window = two exchanges; the final
     // per-lang regression agg must REUSE the window's lang partitioning
     val zf = graft.operators.TextOps.zipfFit(Tables.documents(spark, sf))
@@ -500,10 +504,10 @@ class ScaleSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(tbPlan).length === 1, tbPlan)
     // substringRuns: the shingle bucket join must be an equi-join on the
     // hash, never a nested loop (the Σ df² bound depends on it)
-    val (srLazy, srKept) = graft.operators.Dedup
-      .substringRunsLazy(Tables.documents(spark, sf), 10L, 50L)
-    val srPlan = srLazy.queryExecution.executedPlan.toString
-    srKept.unpersist()
+    val srPlan = Scope { s =>
+      graft.operators.Dedup.substringRunsPlan(s, Tables.documents(spark, sf), 10L, 50L)
+        .queryExecution.executedPlan.toString
+    }
     assert(srPlan.contains("SortMergeJoin") || srPlan.contains("ShuffledHashJoin") ||
       srPlan.contains("BroadcastHashJoin"), s"substringRuns must equi-join:\n$srPlan")
     assert(!srPlan.contains("NestedLoop") && !srPlan.contains("CartesianProduct"), srPlan)
@@ -520,13 +524,14 @@ class ScaleSpec extends SparkSpec {
     // never a cartesian (Σ|block|²/2 vs n²/2, the blocking guarantee) —
     // and BOTH sides read the persisted capped projection, so the
     // corpus parquet is scanned once however the join is planned
-    val (fz, fzBase) = graft.operators.Dedup
-      .fuzzyEditPairsLazy(Tables.documents(spark, sf))
-    val fzPlan = fz.queryExecution.executedPlan.toString
-    assert(!fzPlan.contains("CartesianProduct"), s"blocked join degenerated:\n$fzPlan")
-    assert("InMemoryTableScan".r.findAllIn(fzPlan).length === 2,
-      s"both join sides should read the cached projection:\n$fzPlan")
-    fzBase.unpersist()
+    Scope { s =>
+      val fz = graft.operators.Dedup
+        .fuzzyEditPairsPlan(s, Tables.documents(spark, sf))
+      val fzPlan = fz.queryExecution.executedPlan.toString
+      assert(!fzPlan.contains("CartesianProduct"), s"blocked join degenerated:\n$fzPlan")
+      assert("InMemoryTableScan".r.findAllIn(fzPlan).length === 2,
+        s"both join sides should read the cached projection:\n$fzPlan")
+    }
     // cohortRetention: (user, week) agg → user window → cells agg →
     // cohort-size window = four hash exchanges, each over a SMALLER
     // relation, in ONE linear plan — a sizes self-join branch would
@@ -721,8 +726,8 @@ class ScaleSpec extends SparkSpec {
   test("decileStats: bin-collapse equals the NTILE window form; no global window touches the fact") {
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, sf)
-    val (res, bins) = graft.operators.SqlCoverage.decileStatsLazy(ev)
-    try {
+    Scope { s =>
+      val res = graft.operators.SqlCoverage.decileStatsPlan(s, ev)
       // plan: the only global window runs over the (cents, count) bin
       // aggregate — never the raw event relation
       assert(globalWindowOffenders(res.queryExecution.executedPlan).isEmpty,
@@ -742,14 +747,14 @@ class ScaleSpec extends SparkSpec {
             col("sum_cents").cast("double") / col("total_cents")).as("share"))
       assert(res.exceptAll(direct).count() === 0)
       assert(direct.exceptAll(res).count() === 0)
-    } finally bins.unpersist()
+    }
   }
 
   test("rfm: two-phase quintiles equal the NTILE window form; no global window over the per-user relation") {
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, sf)
-    val (res, caches) = graft.operators.Monitoring.rfmLazy(ev)
-    try {
+    Scope { s =>
+      val res = graft.operators.Monitoring.rfmPlan(s, ev)
       // plan: the only single-partition windows left are the ≤parts-row
       // partition-count offsets inside globalRank (aggregates below)
       assert(globalWindowOffenders(res.queryExecution.executedPlan).isEmpty,
@@ -773,23 +778,24 @@ class ScaleSpec extends SparkSpec {
         .withColumn("segment", col("r") * 100L + col("f") * 10L + col("m"))
       assert(res.exceptAll(direct).count() === 0)
       assert(direct.exceptAll(res).count() === 0)
-    } finally caches.foreach(_.unpersist())
+    }
   }
 
   test("bm25TopK: query terms via TakeOrderedAndProject, global rank behind a window-group limit") {
-    val (plan, tok) = graft.operators.TextOps.bm25TopKLazy(
-      Tables.documents(spark, sf), 10, 5)
-    val exec = plan.queryExecution.executedPlan
-    val nodes = planNodes(exec)
-    // BOTH global orderings ride TakeOrderedAndProject — the nq=5
-    // query-term selection AND the final k=10 rank (Spark pushes the
-    // rank limit below the window itself): never a global sort
-    assert(nodes.count(_.isInstanceOf[TakeOrderedAndProjectExec]) >= 2,
-      exec.treeString)
-    // and the global window therefore sits on a collapsed subtree
-    nodes.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-      .foreach(w => assert(collapsedBelow(w.child), w.treeString))
-    tok.unpersist()
+    Scope { s =>
+      val plan = graft.operators.TextOps.bm25TopKPlan(s,
+        Tables.documents(spark, sf), 10, 5)
+      val exec = plan.queryExecution.executedPlan
+      val nodes = planNodes(exec)
+      // BOTH global orderings ride TakeOrderedAndProject — the nq=5
+      // query-term selection AND the final k=10 rank (Spark pushes the
+      // rank limit below the window itself): never a global sort
+      assert(nodes.count(_.isInstanceOf[TakeOrderedAndProjectExec]) >= 2,
+        exec.treeString)
+      // and the global window therefore sits on a collapsed subtree
+      nodes.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+        .foreach(w => assert(collapsedBelow(w.child), w.treeString))
+    }
   }
 
   test("userEntropy: ONE fact exchange — aggregation and windows all reuse the spread partitioning") {
@@ -995,27 +1001,28 @@ class ScaleSpec extends SparkSpec {
     // stays free to pick the join strategy by actual size) and plans no
     // one-task global window over an uncollapsed relation (the node
     // rank goes through the two-phase globalRank)
-    val (negLazy, negCaches) = graft.operators.Graph
-      .negativeEdgesLazy(Tables.events(spark, sf))
-    val hints = negLazy.queryExecution.optimizedPlan.collect {
-      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-    }
-    // optimizer may fold the hint into the join; check the ANALYZED
-    // plan where every user-forced broadcast() is still visible
-    val analyzedHints = negLazy.queryExecution.analyzed.collect {
-      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-    }
-    (hints ++ analyzedHints).foreach { h =>
-      val scalarAgg = h.child.collect {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-          if a.groupingExpressions.isEmpty => a
+    Scope { s =>
+      val neg = graft.operators.Graph
+        .negativeEdgesPlan(s, Tables.events(spark, sf))
+      val hints = neg.queryExecution.optimizedPlan.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
       }
-      assert(scalarAgg.nonEmpty,
-        s"forced broadcast over a non-scalar (data-dependent) relation:\n${h.treeString}")
+      // optimizer may fold the hint into the join; check the ANALYZED
+      // plan where every user-forced broadcast() is still visible
+      val analyzedHints = neg.queryExecution.analyzed.collect {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }
+      (hints ++ analyzedHints).foreach { h =>
+        val scalarAgg = h.child.collect {
+          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+            if a.groupingExpressions.isEmpty => a
+        }
+        assert(scalarAgg.nonEmpty,
+          s"forced broadcast over a non-scalar (data-dependent) relation:\n${h.treeString}")
+      }
+      assert(globalWindowOffenders(neg.queryExecution.executedPlan).isEmpty,
+        "negativeEdgesPlan plans a global window over an uncollapsed relation")
     }
-    assert(globalWindowOffenders(negLazy.queryExecution.executedPlan).isEmpty,
-      "negativeEdgesLazy plans a global window over an uncollapsed relation")
-    negCaches.foreach(_.unpersist())
     // the k-per-key guards that keep downstream joins candidate-sized
     val kp = graft.operators.TextOps.keyphrases(Tables.documents(spark, sf))
       .groupBy(col("doc_id")).count().agg(max(col("count"))).head.getLong(0)
@@ -1228,7 +1235,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("IVF probe joins build on the capped INDEX side, never the query slice") {
-    // the round-9 verdict finding: knnLabelEval/simDecontamLazy hinted
+    // the round-9 verdict finding: knnLabelEval/simDecontam plans hinted
     // broadcast(probes) — the held-out corpus slice × NProbe, which is
     // CORPUS-PROPORTIONAL — while the ≤ NList·maxPerList capped index
     // went unhinted. The board-wide sweep above cannot catch this class
@@ -1254,17 +1261,19 @@ class ScaleSpec extends SparkSpec {
       assert(indexSideHints.length === 1,
         s"$name should hint exactly the capped index (got ${indexSideHints.length})")
     }
-    val (dc, dcv) = graft.operators.Similarity
-      .simDecontamLazy(Tables.embeddings(spark, sf))
-    checkOrientation("simDecontam", dc)
-    // and the physical build really is the index: the BroadcastExchange
-    // feeding the list_id join sits under the capped-index subtree
-    assert(dc.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
-    dcv.unpersist()
-    val (kl, klv) = graft.operators.Similarity
-      .knnLabelEvalLazy(Tables.embeddings(spark, sf))
-    checkOrientation("knnLabelEval", kl)
-    klv.unpersist()
+    Scope { s =>
+      val dc = graft.operators.Similarity
+        .simDecontamPlan(s, Tables.embeddings(spark, sf))
+      checkOrientation("simDecontam", dc)
+      // and the physical build really is the index: the BroadcastExchange
+      // feeding the list_id join sits under the capped-index subtree
+      assert(dc.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    }
+    Scope { s =>
+      val kl = graft.operators.Similarity
+        .knnLabelEvalPlan(s, Tables.embeddings(spark, sf))
+      checkOrientation("knnLabelEval", kl)
+    }
   }
 
   test("global-window sweep: no driver query plans a global window over an uncollapsed relation") {
@@ -1276,7 +1285,7 @@ class ScaleSpec extends SparkSpec {
     // limit, or a limit. A global window directly over a fact-derived
     // relation is the one-task sort that never finishes at 100 TB.
     // (Eagerly-checkpointed operators surface here only via their final
-    // plans; their inner pipelines are pinned by the *Lazy tests.)
+    // plans; their inner pipelines are pinned by the *Plan tests.)
     val offenders = boardSweepOffenders._2
     assert(offenders.isEmpty,
       s"${offenders.length} global-window offender(s):\n${offenders.mkString("\n\n")}")

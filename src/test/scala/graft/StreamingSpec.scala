@@ -522,7 +522,7 @@ class StreamingSpec extends SparkSpec {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
     withThreeFileInput { in =>
       // the caller's width differs from the pin, so a leak would show
-      Streaming.withConf(spark, Seq(sp -> Some("3"))) {
+      Scope.withConf(spark, Seq(sp -> Some("3"))) {
         val batches = Streaming.driveReplay(spark, in, identity,
           Streaming.BatchSink(OutputMode.Append(), _ => (b, _) => {
             seen.add((spark.conf.get(sp), b.sparkSession.conf.get(sp),
@@ -1197,11 +1197,14 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.toLowerCase.contains("kafka"))
   }
 
+  /** Pins the RocksDB state-store provider on the session conf. */
+  private val rocksDbProvider = Seq("spark.sql.streaming.stateStore.providerClass" ->
+    Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+
   test("windowedVolume on the RocksDB state store (production posture)") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    Tables.configure(spark, rocksDbState = true)
-    try {
+    Scope.withConf(spark, rocksDbProvider) {
       val in = MemoryStream[Transaction](spark)
       val agg = Streaming.windowedVolume(in.toDF(), watermark = "1 minute", window_ = "5 minutes")
       val q = Streaming.toMemory(agg, "wv_rocks", OutputMode.Append())
@@ -1219,7 +1222,7 @@ class StreamingSpec extends SparkSpec {
           _.customMetrics.keySet.asScala.exists(_.toLowerCase.contains("rocksdb"))))
         assert(usedRocks, "no rocksdb state-store metrics in query progress")
       }
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("state soak: window-agg and TTL-balance state stays bounded across 30 batches, default AND RocksDB") {
@@ -1232,8 +1235,7 @@ class StreamingSpec extends SparkSpec {
     // near the would-be-unbounded totals (120 window cells / 150 users).
     import spark.implicits._
     def soak(rocks: Boolean): (Long, Long) = {
-      if (rocks) Tables.configure(spark, rocksDbState = true)
-      try {
+      Scope.withConf(spark, if (rocks) rocksDbProvider else Nil) {
         val tag = if (rocks) "r" else "d"
         val inW = MemoryStream[Transaction](spark)
         val qW = Streaming.toMemory(
@@ -1259,8 +1261,7 @@ class StreamingSpec extends SparkSpec {
               .foldLeft(0L)(math.max)
           (maxState(qW), maxState(qB))
         } finally { qW.stop(); qB.stop() }
-      } finally if (rocks)
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
     }
     for (rocks <- Seq(false, true)) {
       val (wv, bal) = soak(rocks)
