@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.Scope
 import graft.operators.{Reference, Transaction}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{broadcast => _, _}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState,
+  OutputMode, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Per-user fraud-rule state: in-window debit event times + amounts.
   * Top-level (public) so Spark's state-encoder codegen can reach it. */
@@ -70,7 +71,7 @@ final case class LedgerRowTws(user_id: Long, event_type: String, n: Long,
   * hashes seen for an event type — a bottom-k (KMV) distinct sketch.
   * Bounded at k longs per key BY CONSTRUCTION, which is the whole
   * point: distinct-user state that never grows with distinct users. */
-final case class KmvState(hs: Array[Long], lastSeenMs: Long)
+final case class KmvState(hs: Array[Long])
 
 /** One [[Streaming.streamKmv]] row per event type, emitted exactly once
   * when the watermark passes the type's last event: the sketch size,
@@ -1308,8 +1309,6 @@ object Streaming {
   private[graft] def funnelTwsPipeline(watermarkMin: Long)(in: DataFrame): DataFrame = {
     val spark = in.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
-      TimeMode, TimerValues, TTLConfig}
     in.select(col("timestamp"), col("user_id"),
         when(col("event_type") === "view", 1)
           .when(col("event_type") === "click", 2)
@@ -1318,39 +1317,26 @@ object Streaming {
       .as[(java.sql.Timestamp, Long, Int)]
       .groupByKey(_._2)
       .transformWithState(
-        new StatefulProcessor[Long, (java.sql.Timestamp, Long, Int), FunnelVerdict] {
-          @transient private var buf: org.apache.spark.sql.streaming.ValueState[FunnelBufState] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+        new FlushAtWatermark[Long, (java.sql.Timestamp, Long, Int), FunnelVerdict, Nothing](1L) {
+          @transient private var buf: ValueState[FunnelBufState] = _
+          protected def declare(): Unit =
             buf = getHandle.getValueState[FunnelBufState]("buf",
-              org.apache.spark.sql.Encoders.product[FunnelBufState], TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInputRows(uid: Long,
-              rows: Iterator[(java.sql.Timestamp, Long, Int)],
-              timerValues: TimerValues): Iterator[FunnelVerdict] = {
+              Encoders.product[FunnelBufState], TTLConfig.NONE)
+          protected def absorb(uid: Long, rows: Iterator[(java.sql.Timestamp, Long, Int)]): Long = {
+            val add = rows.map { case (ts, _, k) => (ts.getTime, k) }.toArray
+            if (add.isEmpty) return Long.MinValue
             val prev = if (buf.exists()) buf.get()
               else FunnelBufState(Array.empty, Array.empty, 0L)
-            val add = rows.map { case (ts, _, k) => (ts.getTime, k) }.toArray
-            if (add.nonEmpty) {
-              val acc = FunnelBufState(prev.tsMs ++ add.map(_._1),
-                prev.kind ++ add.map(_._2),
-                math.max(prev.lastSeenMs, add.map(_._1).max))
-              buf.update(acc)
-              if (tmr.exists()) getHandle.deleteTimer(tmr.get())
-              getHandle.registerTimer(acc.lastSeenMs + 1L)
-              tmr.update(acc.lastSeenMs + 1L)
-            }
-            Iterator.empty
+            val acc = FunnelBufState(prev.tsMs ++ add.map(_._1),
+              prev.kind ++ add.map(_._2),
+              math.max(prev.lastSeenMs, add.map(_._1).max))
+            buf.update(acc)
+            acc.lastSeenMs
           }
-          override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[FunnelVerdict] = {
-            if (!buf.exists()) return Iterator.empty
-            val s = buf.get()
-            buf.clear(); tmr.clear()
-            Iterator.single(funnelVerdict(uid, s.tsMs, s.kind))
-          }
+          protected def emit(uid: Long): Seq[FunnelVerdict] =
+            if (!buf.exists()) Nil
+            else { val s = buf.get(); Seq(funnelVerdict(uid, s.tsMs, s.kind)) }
+          protected def clearState(): Unit = buf.clear()
         },
         TimeMode.EventTime(), OutputMode.Append())
       .toDF()
@@ -1359,17 +1345,16 @@ object Streaming {
   /** The funnel verdict on Spark 4's `transformWithState` — the modern
     * arbitrary-stateful API ([[streamFunnel]]'s `flatMapGroupsWithState`
     * predecessor path kept alongside, SAME semantics, SAME oracle):
-    * a `StatefulProcessor` with two named state variables (the event
-    * buffer as `ValueState[FunnelBufState]`, the registered timer's
-    * timestamp as `ValueState[Long]`) and an EVENT-TIME timer per user
-    * at lastSeen+1 — each batch deletes the previous timer before
-    * registering the new one (timers don't overwrite the way
-    * `setTimeoutTimestamp` did), so exactly one verdict emits per user
-    * when the watermark finally passes their last event. This is the
-    * API surface a production funnel/ledger migrates to: typed state
-    * variables with independent lifetimes (TTL-capable), multiple
-    * timers, and state schema evolution — none of which the single
-    * opaque fMGWS state value offers.
+    * a [[FlushAtWatermark]] processor with two named state variables
+    * (the event buffer as `ValueState[FunnelBufState]`, the registered
+    * timer's timestamp as `ValueState[Long]`) and an EVENT-TIME timer
+    * per user at lastSeen+1 — moved forward as events arrive (timers
+    * don't overwrite the way `setTimeoutTimestamp` did), so exactly one
+    * verdict emits per user when the watermark finally passes their
+    * last event. This is the API surface a production funnel/ledger
+    * migrates to: typed state variables with independent lifetimes
+    * (TTL-capable), multiple timers, and state schema evolution — none
+    * of which the single opaque fMGWS state value offers.
     *
     * `transformWithState` requires the RocksDB state-store provider;
     * the replay pins it for its stream only ([[stateStoreConf]]) —
@@ -1412,8 +1397,6 @@ object Streaming {
   def streamSessionsTws(spark: SparkSession, dir: String,
       watermarkMin: Long = 10L, gapMin: Long = 30L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
-      TimeMode, TimerValues, TTLConfig}
     val gapMs = gapMin * 60000L
     replay(spark, dir, in => in
       .select(timestamp_millis(col("ts_ms")).as("timestamp"),
@@ -1422,37 +1405,22 @@ object Streaming {
       .as[(java.sql.Timestamp, Long, Long, Long)]
       .groupByKey(_._2)
       .transformWithState(
-        new StatefulProcessor[Long, (java.sql.Timestamp, Long, Long, Long), SessionRowTws] {
-          @transient private var buf: org.apache.spark.sql.streaming.ListState[SessEv] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            buf = getHandle.getListState[SessEv]("buf",
-              org.apache.spark.sql.Encoders.product[SessEv], TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInputRows(uid: Long,
-              rows: Iterator[(java.sql.Timestamp, Long, Long, Long)],
-              timerValues: TimerValues): Iterator[SessionRowTws] = {
+        new FlushAtWatermark[Long, (java.sql.Timestamp, Long, Long, Long), SessionRowTws,
+            Nothing](gapMs) {
+          @transient private var buf: ListState[SessEv] = _
+          protected def declare(): Unit =
+            buf = getHandle.getListState[SessEv]("buf", Encoders.product[SessEv], TTLConfig.NONE)
+          protected def absorb(uid: Long,
+              rows: Iterator[(java.sql.Timestamp, Long, Long, Long)]): Long = {
             val add = rows.map { case (_, _, tsMs, cents) => SessEv(tsMs, cents) }.toArray
-            if (add.nonEmpty) {
-              buf.appendList(add)
-              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-              val next = math.max(prev, add.map(_.tsMs).max + gapMs)
-              if (next != prev) {
-                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(next)
-                tmr.update(next)
-              }
-            }
-            Iterator.empty
+            if (add.isEmpty) return Long.MinValue
+            buf.appendList(add)
+            add.map(_.tsMs).max
           }
-          override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionRowTws] = {
+          protected def emit(uid: Long): Seq[SessionRowTws] = {
             val ev = buf.get().toArray.sortBy(_.tsMs)
-            buf.clear(); tmr.clear()
-            if (ev.isEmpty) return Iterator.empty
-            val out = scala.collection.mutable.ArrayBuffer.empty[SessionRowTws]
+            if (ev.isEmpty) return Nil
+            val out = Vector.newBuilder[SessionRowTws]
             var start = ev(0).tsMs; var prevTs = ev(0).tsMs
             var n = 0L; var c = 0L
             ev.foreach { e =>
@@ -1463,12 +1431,46 @@ object Streaming {
               n += 1L; c += e.cents; prevTs = e.tsMs
             }
             out += SessionRowTws(start, uid, n, c)
-            out.iterator
+            out.result()
           }
+          protected def clearState(): Unit = buf.clear()
         },
         TimeMode.EventTime(), OutputMode.Append())
       .toDF(), rocksDb = true)
       .filter(col("user_id") =!= -1L)
+  }
+
+  /** The per-user MapState ledger behind [[streamLedgerTws]] and
+    * [[streamLedgerInit]]: each row point-updates its (event_type →
+    * running {n, cents}) entry; only [[streamLedgerInit]] hands it an
+    * initial state, which seeds the entries and arms the timer at the
+    * history's lastSeen + 1. */
+  private final class LedgerTws extends FlushAtWatermark[Long,
+      (java.sql.Timestamp, Long, String, Long), LedgerRowTws, LedgerInitState](1L) {
+    @transient private var led: MapState[String, TypeAgg] = _
+    protected def declare(): Unit =
+      led = getHandle.getMapState[String, TypeAgg]("led", Encoders.STRING,
+        Encoders.product[TypeAgg], TTLConfig.NONE)
+    override def handleInitialState(uid: Long, st: LedgerInitState,
+        timerValues: TimerValues): Unit = {
+      st.rows.foreach(r => led.updateValue(r.t, TypeAgg(r.n, r.c)))
+      arm(st.lastSeenMs + 1L)
+    }
+    protected def absorb(uid: Long,
+        rows: Iterator[(java.sql.Timestamp, Long, String, Long)]): Long = {
+      var hi = Long.MinValue
+      rows.foreach { case (ts, _, typ, cents) =>
+        val cur = if (led.containsKey(typ)) led.getValue(typ) else TypeAgg(0L, 0L)
+        led.updateValue(typ, TypeAgg(cur.n + 1L, cur.cents + cents))
+        hi = math.max(hi, ts.getTime)
+      }
+      hi
+    }
+    protected def emit(uid: Long): Seq[LedgerRowTws] =
+      led.iterator().map { case (typ, agg) =>
+        LedgerRowTws(uid, typ, agg.n, agg.cents)
+      }.toSeq
+    protected def clearState(): Unit = led.clear()
   }
 
   /** [[streamLedgerTws]] with INITIAL STATE — the batch→streaming
@@ -1484,8 +1486,8 @@ object Streaming {
     * [[streamReplay]] documents for sentinel-excluding predicates).
     * `handleInitialState` also registers the user's timer at the
     * HISTORY's lastSeen+1, so a user with zero post-cutoff events
-    * still emits; a stream arrival supersedes that timer through the
-    * same delete-then-register path as [[streamLedgerTws]].
+    * still emits; a stream arrival moves that timer forward through
+    * the one [[FlushAtWatermark]] rule, as in [[streamLedgerTws]].
     *
     * Scale: the seed is one shuffle of the history aggregate (its own
     * keyed partitioning), loaded once into the state store at batch 0;
@@ -1493,8 +1495,6 @@ object Streaming {
   def streamLedgerInit(spark: SparkSession, dir: String,
       watermarkMin: Long = 10L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo,
-      StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig}
     val ev = graft.Tables.events(spark, dir)
     val bounds = ev.agg(min(col("ts_ms")), max(col("ts_ms"))).head
     val cutoff = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
@@ -1516,53 +1516,7 @@ object Streaming {
       .withWatermark("timestamp", s"$watermarkMin minutes")
       .as[(java.sql.Timestamp, Long, String, Long)]
       .groupByKey(_._2)
-      .transformWithState(
-        new StatefulProcessorWithInitialState[Long,
-            (java.sql.Timestamp, Long, String, Long), LedgerRowTws, LedgerInitState] {
-          @transient private var led: org.apache.spark.sql.streaming.MapState[String, TypeAgg] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            led = getHandle.getMapState[String, TypeAgg]("led",
-              org.apache.spark.sql.Encoders.STRING,
-              org.apache.spark.sql.Encoders.product[TypeAgg], TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInitialState(uid: Long, st: LedgerInitState,
-              timerValues: TimerValues): Unit = {
-            st.rows.foreach(r => led.updateValue(r.t, TypeAgg(r.n, r.c)))
-            getHandle.registerTimer(st.lastSeenMs + 1L)
-            tmr.update(st.lastSeenMs + 1L)
-          }
-          override def handleInputRows(uid: Long,
-              rows: Iterator[(java.sql.Timestamp, Long, String, Long)],
-              timerValues: TimerValues): Iterator[LedgerRowTws] = {
-            var hi = Long.MinValue
-            rows.foreach { case (ts, _, typ, cents) =>
-              val cur = if (led.containsKey(typ)) led.getValue(typ) else TypeAgg(0L, 0L)
-              led.updateValue(typ, TypeAgg(cur.n + 1L, cur.cents + cents))
-              hi = math.max(hi, ts.getTime)
-            }
-            if (hi != Long.MinValue) {
-              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-              val next = math.max(prev, hi + 1L)
-              if (next != prev) {
-                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(next)
-                tmr.update(next)
-              }
-            }
-            Iterator.empty
-          }
-          override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[LedgerRowTws] = {
-            val out = led.iterator().map { case (typ, agg) =>
-              LedgerRowTws(uid, typ, agg.n, agg.cents)
-            }.toArray
-            led.clear(); tmr.clear()
-            out.iterator
-          }
-        },
+      .transformWithState(new LedgerTws,
         TimeMode.EventTime(), OutputMode.Append(), initState)
       .toDF(), rocksDb = true)
       .filter(col("user_id") >= 0L)
@@ -1623,63 +1577,22 @@ object Streaming {
     * one state-store put of one entry). Update order within a user is
     * immaterial — addition commutes — so the operator is correct under
     * ANY arrival order, no buffering needed; the only other state is
-    * the funnel's lastSeen+1 event-time timer, which emits the final
-    * ledger exactly once per user when the watermark passes their last
-    * event. Oracle: the plain batch GROUP BY user_id, event_type.
+    * the lastSeen+1 event-time timer of [[FlushAtWatermark]], which
+    * emits the final ledger exactly once per user when the watermark
+    * passes their last event. Oracle: the plain batch GROUP BY
+    * user_id, event_type.
     *
     * Scale: state rows = live (user, type) pairs — O(users × |types|),
     * watermark-evicted on emission; partitions by user. */
   def streamLedgerTws(spark: SparkSession, dir: String,
       watermarkMin: Long = 10L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
-      TimeMode, TimerValues, TTLConfig}
     replay(spark, dir, in => in
       .select(col("timestamp"), col("user_id"), col("event_type"), col("cents"))
       .withWatermark("timestamp", s"$watermarkMin minutes")
       .as[(java.sql.Timestamp, Long, String, Long)]
       .groupByKey(_._2)
-      .transformWithState(
-        new StatefulProcessor[Long, (java.sql.Timestamp, Long, String, Long), LedgerRowTws] {
-          @transient private var led: org.apache.spark.sql.streaming.MapState[String, TypeAgg] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            led = getHandle.getMapState[String, TypeAgg]("led",
-              org.apache.spark.sql.Encoders.STRING,
-              org.apache.spark.sql.Encoders.product[TypeAgg], TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInputRows(uid: Long,
-              rows: Iterator[(java.sql.Timestamp, Long, String, Long)],
-              timerValues: TimerValues): Iterator[LedgerRowTws] = {
-            var hi = Long.MinValue
-            rows.foreach { case (ts, _, typ, cents) =>
-              val cur = if (led.containsKey(typ)) led.getValue(typ) else TypeAgg(0L, 0L)
-              led.updateValue(typ, TypeAgg(cur.n + 1L, cur.cents + cents))
-              hi = math.max(hi, ts.getTime)
-            }
-            if (hi != Long.MinValue) {
-              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-              val next = math.max(prev, hi + 1L)
-              if (next != prev) {
-                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(next)
-                tmr.update(next)
-              }
-            }
-            Iterator.empty
-          }
-          override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[LedgerRowTws] = {
-            val out = led.iterator().map { case (typ, agg) =>
-              LedgerRowTws(uid, typ, agg.n, agg.cents)
-            }.toArray
-            led.clear(); tmr.clear()
-            out.iterator
-          }
-        },
-        TimeMode.EventTime(), OutputMode.Append())
+      .transformWithState(new LedgerTws, TimeMode.EventTime(), OutputMode.Append())
       .toDF(), rocksDb = true)
       .filter(col("user_id") >= 0L)
   }
@@ -1698,16 +1611,14 @@ object Streaming {
     * The hash rides the plan BEFORE the shuffle
     * ([[graft.functions.TextHash.hash60]] — the native codegen'd md5
     * digest, oracle-portable); the processor only merges longs. One
-    * verdict per type on the watermark timer ([[streamLedgerTws]]'s
-    * emission discipline); the estimate is computed on the read-back
+    * verdict per type on the watermark timer ([[FlushAtWatermark]]'s
+    * emission rule); the estimate is computed on the read-back
     * with the SAME `(k−1)·2^60 / kth` expression the batch sketch uses,
     * exact-count branch when the sketch never filled. Sentinel keys
     * flow through (the watermark lesson) and drop at read-back. */
   def streamKmv(spark: SparkSession, dir: String,
       watermarkMin: Long = 10L, k: Int = 64): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
-      TimeMode, TimerValues, TTLConfig}
     val num = (k - 1).toDouble * (1L << 60).toDouble
     replay(spark, dir, in => in
       .select(col("timestamp"), col("event_type"),
@@ -1716,50 +1627,31 @@ object Streaming {
       .as[(java.sql.Timestamp, String, Long)]
       .groupByKey(_._2)
       .transformWithState(
-        new StatefulProcessor[String, (java.sql.Timestamp, String, Long), KmvRow] {
-          @transient private var st: org.apache.spark.sql.streaming.ValueState[KmvState] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            st = getHandle.getValueState[KmvState]("kmv",
-              org.apache.spark.sql.Encoders.product[KmvState], TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInputRows(typ: String,
-              rows: Iterator[(java.sql.Timestamp, String, Long)],
-              timerValues: TimerValues): Iterator[KmvRow] = {
+        new FlushAtWatermark[String, (java.sql.Timestamp, String, Long), KmvRow, Nothing](1L) {
+          @transient private var st: ValueState[KmvState] = _
+          protected def declare(): Unit =
+            st = getHandle.getValueState[KmvState]("kmv", Encoders.product[KmvState],
+              TTLConfig.NONE)
+          protected def absorb(typ: String,
+              rows: Iterator[(java.sql.Timestamp, String, Long)]): Long = {
             var hi = Long.MinValue
             val batch = scala.collection.mutable.ArrayBuffer.empty[Long]
             rows.foreach { case (ts, _, h) =>
               batch += h; hi = math.max(hi, ts.getTime)
             }
-            val cur = if (st.exists()) st.get() else KmvState(Array.empty, Long.MinValue)
+            val cur = if (st.exists()) st.get().hs else Array.empty[Long]
             // bottom-k merge: distinct ∪ state, k smallest survive —
             // O((k + batch)·log) per key per batch, state stays ≤ k
-            val merged = (cur.hs ++ batch).distinct.sorted.take(k)
-            st.update(KmvState(merged, math.max(cur.lastSeenMs, hi)))
-            if (hi != Long.MinValue) {
-              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-              val next = math.max(prev, hi + 1L)
-              if (next != prev) {
-                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(next)
-                tmr.update(next)
-              }
+            st.update(KmvState((cur ++ batch).distinct.sorted.take(k)))
+            hi
+          }
+          protected def emit(typ: String): Seq[KmvRow] =
+            if (!st.exists()) Nil
+            else {
+              val hs = st.get().hs
+              Seq(KmvRow(typ, hs.length.toLong, if (hs.length == k) Some(hs.last) else None))
             }
-            Iterator.empty
-          }
-          override def handleExpiredTimer(typ: String, timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[KmvRow] = {
-            val out =
-              if (st.exists()) {
-                val hs = st.get().hs
-                Iterator.single(KmvRow(typ, hs.length.toLong,
-                  if (hs.length == k) Some(hs.last) else None))
-              } else Iterator.empty
-            st.clear(); tmr.clear()
-            out
-          }
+          protected def clearState(): Unit = st.clear()
         },
         TimeMode.EventTime(), OutputMode.Append())
       .toDF(), rocksDb = true)
@@ -1797,8 +1689,6 @@ object Streaming {
   def streamCms(spark: SparkSession, dir: String, watermarkMin: Long = 10L,
       depth: Int = 4, width: Int = 256, topN: Int = 20): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
-      TimeMode, TimerValues, TTLConfig}
     import graft.functions.TextHash.hash60
     def bucketOf(iCol: org.apache.spark.sql.Column, amtCol: org.apache.spark.sql.Column) =
       pmod(hash60(concat(iCol.cast("string"), lit("|"), amtCol.cast("string"))),
@@ -1814,44 +1704,8 @@ object Streaming {
       .as[(java.sql.Timestamp, Int, Long)]
       .groupByKey(r => (r._2, r._3))
       .transformWithState(
-        new StatefulProcessor[(Int, Long), (java.sql.Timestamp, Int, Long), CmsCell] {
-          @transient private var cnt: org.apache.spark.sql.streaming.ValueState[Long] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            cnt = getHandle.getValueState[Long]("cnt",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInputRows(key: (Int, Long),
-              rows: Iterator[(java.sql.Timestamp, Int, Long)],
-              timerValues: TimerValues): Iterator[CmsCell] = {
-            var hi = Long.MinValue
-            var add = 0L
-            rows.foreach { case (ts, _, _) =>
-              add += 1L; hi = math.max(hi, ts.getTime)
-            }
-            cnt.update((if (cnt.exists()) cnt.get() else 0L) + add)
-            if (hi != Long.MinValue) {
-              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-              val next = math.max(prev, hi + 1L)
-              if (next != prev) {
-                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(next)
-                tmr.update(next)
-              }
-            }
-            Iterator.empty
-          }
-          override def handleExpiredTimer(key: (Int, Long), timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[CmsCell] = {
-            val out =
-              if (cnt.exists()) Iterator.single(CmsCell(key._1, key._2, cnt.get()))
-              else Iterator.empty
-            cnt.clear(); tmr.clear()
-            out
-          }
-        },
+        new LongCell[(Int, Long), (java.sql.Timestamp, Int, Long), CmsCell]("cnt",
+          _ + _, r => (r._1.getTime, 1L), (key, c) => CmsCell(key._1, key._2, c)),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF(), rocksDb = true)
       .filter(col("bucket") >= 0L)
@@ -1898,8 +1752,6 @@ object Streaming {
   def streamHll(spark: SparkSession, dir: String,
       watermarkMin: Long = 10L, m: Int = 256): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
-      TimeMode, TimerValues, TTLConfig}
     val Sk = graft.operators.Sketches
     val regs = replay(spark, dir, in => Sk.hllCells(
         in.select(col("timestamp"), col("event_type"), explode(array(
@@ -1916,44 +1768,8 @@ object Streaming {
       .as[(java.sql.Timestamp, String, Long, Long)]
       .groupByKey(r => (r._2, r._3))
       .transformWithState(
-        new StatefulProcessor[(String, Long), (java.sql.Timestamp, String, Long, Long), HllReg] {
-          @transient private var mx: org.apache.spark.sql.streaming.ValueState[Long] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            mx = getHandle.getValueState[Long]("mx",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInputRows(key: (String, Long),
-              rows: Iterator[(java.sql.Timestamp, String, Long, Long)],
-              timerValues: TimerValues): Iterator[HllReg] = {
-            var hi = Long.MinValue
-            var top = if (mx.exists()) mx.get() else 0L
-            rows.foreach { case (ts, _, _, rho) =>
-              top = math.max(top, rho); hi = math.max(hi, ts.getTime)
-            }
-            mx.update(top)
-            if (hi != Long.MinValue) {
-              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-              val next = math.max(prev, hi + 1L)
-              if (next != prev) {
-                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(next)
-                tmr.update(next)
-              }
-            }
-            Iterator.empty
-          }
-          override def handleExpiredTimer(key: (String, Long), timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[HllReg] = {
-            val out =
-              if (mx.exists()) Iterator.single(HllReg(key._1, key._2, mx.get()))
-              else Iterator.empty
-            mx.clear(); tmr.clear()
-            out
-          }
-        },
+        new LongCell[(String, Long), (java.sql.Timestamp, String, Long, Long), HllReg]("mx",
+          math.max(_, _), r => (r._1.getTime, r._4), (key, mx) => HllReg(key._1, key._2, mx)),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF(), rocksDb = true)
       .filter(col("metric") =!= "__sentinel__")
@@ -1987,8 +1803,6 @@ object Streaming {
       watermarkMin: Long = 10L, qs: Seq[Double] = Seq(0.5, 0.9, 0.99),
       binW: Double = 64.0): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor,
-      TimeMode, TimerValues, TTLConfig}
     val binWc = math.round(binW * 100) // cents per bin; 64.00 dollars
     val bins = replay(spark, dir, in => in
       .select(col("timestamp"),
@@ -1998,44 +1812,8 @@ object Streaming {
       .as[(java.sql.Timestamp, Long)]
       .groupByKey(_._2)
       .transformWithState(
-        new StatefulProcessor[Long, (java.sql.Timestamp, Long), QBin] {
-          @transient private var cnt: org.apache.spark.sql.streaming.ValueState[Long] = _
-          @transient private var tmr: org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            cnt = getHandle.getValueState[Long]("cnt",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-            tmr = getHandle.getValueState[Long]("tmr",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          }
-          override def handleInputRows(bin: Long,
-              rows: Iterator[(java.sql.Timestamp, Long)],
-              timerValues: TimerValues): Iterator[QBin] = {
-            var hi = Long.MinValue
-            var add = 0L
-            rows.foreach { case (ts, _) =>
-              add += 1L; hi = math.max(hi, ts.getTime)
-            }
-            cnt.update((if (cnt.exists()) cnt.get() else 0L) + add)
-            if (hi != Long.MinValue) {
-              val prev = if (tmr.exists()) tmr.get() else Long.MinValue
-              val next = math.max(prev, hi + 1L)
-              if (next != prev) {
-                if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-                getHandle.registerTimer(next)
-                tmr.update(next)
-              }
-            }
-            Iterator.empty
-          }
-          override def handleExpiredTimer(bin: Long, timerValues: TimerValues,
-              expiredTimerInfo: ExpiredTimerInfo): Iterator[QBin] = {
-            val out =
-              if (cnt.exists()) Iterator.single(QBin(bin, cnt.get()))
-              else Iterator.empty
-            cnt.clear(); tmr.clear()
-            out
-          }
-        },
+        new LongCell[Long, (java.sql.Timestamp, Long), QBin]("cnt",
+          _ + _, r => (r._1.getTime, 1L), QBin(_, _)),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF(), rocksDb = true)
       .filter(col("bin") >= 0L)

@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard for the operators' cache lifecycle: every persisted
-  * relation in `src/main/scala` is registered with a [[Scope]], which
-  * releases it when the operator returns or throws. */
+/** Source guards for the shared lifecycles in `src/main/scala`: every
+  * persisted relation is registered with a [[Scope]], which releases it
+  * when the operator returns or throws; and every `transformWithState`
+  * processor moves its event-time timer through
+  * [[graft.streaming.FlushAtWatermark]]. */
 class ScopeSpec extends AnyFunSuite {
 
   /** Top-level defs allowed to persist and release by hand, per file. */
@@ -25,16 +27,20 @@ class ScopeSpec extends AnyFunSuite {
     """(?s)/\*.*?\*/""".r.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
       .split("\n", -1).map(_.replaceAll("//.*$", ""))
 
-  test("no persist or unpersist outside Scope and the allow-list") {
+  /** Every main source: (path under `src/main/scala`, [[code]] lines). */
+  private def sources: Seq[(String, Array[String])] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root (no $root)")
-    val files = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
+      .map((f: Path) => (root.relativize(f).toString,
+        code(new String(Files.readAllBytes(f), "UTF-8"))))
+  }
+
+  test("no persist or unpersist outside Scope and the allow-list") {
     val offenders = for {
-      f: Path <- files
-      rel = root.relativize(f).toString
+      (rel, lines) <- sources
       if rel != "graft/Scope.scala"
-      lines = code(new String(Files.readAllBytes(f), "UTF-8"))
       (line, i) <- lines.zipWithIndex
       if direct.findFirstIn(line).isDefined
       owner = lines.take(i + 1).reverseIterator
@@ -45,5 +51,20 @@ class ScopeSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "cache calls outside Scope (use Scope { s => s.persist(...) }):\n" +
         offenders.mkString("\n"))
+  }
+
+  private val timerCall =
+    """registerTimer\(|deleteTimer\(|(?:new|extends)\s+StatefulProcessor""".r
+
+  test("no timer calls or StatefulProcessor outside FlushAtWatermark") {
+    val offenders = for {
+      (rel, lines) <- sources
+      if rel != "graft/streaming/FlushAtWatermark.scala"
+      (line, i) <- lines.zipWithIndex
+      if timerCall.findFirstIn(line).isDefined
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "timer bookkeeping outside FlushAtWatermark (extend it and implement " +
+        "absorb/emit/clearState):\n" + offenders.mkString("\n"))
   }
 }

@@ -21,6 +21,25 @@ class StreamingSpec extends SparkSpec {
   private def withQuery[T](q: org.apache.spark.sql.streaming.StreamingQuery)(body: => T): T =
     try body finally q.stop()
 
+  /** Runs `body` while a listener records, for every query progress
+    * that reports state operators, the sum of their `numRowsTotal`;
+    * returns the body's result and those sums in arrival order. */
+  private def peakStateRows[T](body: => T): (T, Seq[Long]) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val ops = e.progress.stateOperators
+        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
+      }
+    }
+    spark.streams.addListener(l)
+    val out = try body finally spark.streams.removeListener(l)
+    (out, peaks.toSeq)
+  }
+
   test("batch PII redaction lifts onto a document stream unchanged") {
     // redactPii is a pure scan projection, so the SAME operator runs on
     // a streaming DataFrame with no adaptation — the batch/stream reuse
@@ -765,24 +784,10 @@ class StreamingSpec extends SparkSpec {
     // parity: the modern-API port must land the EXACT verdict rows the
     // flatMapGroupsWithState operator produces (same buffers, same
     // timer-by-watermark finalization), through a real RocksDB replay
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-        ()
-      }
-    }
-    spark.streams.addListener(l)
     val priorProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val (tws, fmgws) = try {
+    val ((tws, fmgws), peaks) = peakStateRows {
       (Streaming.streamFunnelTws(spark, sf), Streaming.streamFunnel(spark, sf))
-    } finally spark.streams.removeListener(l)
+    }
     assert(tws.exceptAll(fmgws).count() === 0)
     assert(fmgws.exceptAll(tws).count() === 0)
     assert(tws.count() > 0)
@@ -805,27 +810,12 @@ class StreamingSpec extends SparkSpec {
     // rows the native session_window aggregation produces (same gap
     // rule, same watermark finalization) — two independent engines for
     // the same semantics, checked against each other
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-        ()
-      }
-    }
-    spark.streams.addListener(l)
     val priorProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // listener scoped to the tws replay only — the native session_window
     // run that follows keeps one state row per OPEN SESSION (all of them
     // at once under the one-batch backfill), which would drown the tws
     // operator's per-user key count
-    val tws = try Streaming.streamSessionsTws(spark, sf)
-      finally spark.streams.removeListener(l)
+    val (tws, peaks) = peakStateRows(Streaming.streamSessionsTws(spark, sf))
     val native = Streaming.streamSessions(spark, sf)
     assert(tws.exceptAll(native).count() === 0)
     assert(native.exceptAll(tws).count() === 0)
@@ -845,23 +835,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streamLedgerTws: MapState ledger equals the batch per-(user,type) totals; state O(users×types); provider restored") {
     import org.apache.spark.sql.functions._
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-        ()
-      }
-    }
-    spark.streams.addListener(l)
     val priorProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val got = try Streaming.streamLedgerTws(spark, sf)
-      finally spark.streams.removeListener(l)
+    val (got, peaks) = peakStateRows(Streaming.streamLedgerTws(spark, sf))
     val batch = Tables.events(spark, sf)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -886,23 +861,8 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.functions.TextHash.hash60
     val k = 64
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-        ()
-      }
-    }
-    spark.streams.addListener(l)
     val priorProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val got = try Streaming.streamKmv(spark, sf)
-      finally spark.streams.removeListener(l)
+    val (got, peaks) = peakStateRows(Streaming.streamKmv(spark, sf))
     // batch recompute of the same sketch: per type, the k smallest
     // distinct hashes; kth defined ⟺ the sketch filled
     val h = Tables.events(spark, sf)
@@ -941,23 +901,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamCms: streamed counters reconstruct the batch sketch row-for-row; state O(depth*width), not O(distinct amounts)") {
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-        ()
-      }
-    }
-    spark.streams.addListener(l)
     val priorProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val got = try Streaming.streamCms(spark, sf)
-      finally spark.streams.removeListener(l)
+    val (got, peaks) = peakStateRows(Streaming.streamCms(spark, sf))
     // row-for-row parity with the BATCH operator — the two transports
     // must reconstruct the identical sketch and identical report
     val batch = graft.operators.Sketches.cmsHeavyHitters(Tables.events(spark, sf))
@@ -975,23 +920,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamHll: streamed registers reconstruct the batch sketch row-for-row; state O(metrics*m), not O(distinct ids)") {
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-        ()
-      }
-    }
-    spark.streams.addListener(l)
     val priorProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val got = try Streaming.streamHll(spark, sf)
-      finally spark.streams.removeListener(l)
+    val (got, peaks) = peakStateRows(Streaming.streamHll(spark, sf))
     // row-for-row parity with the BATCH operator — the two transports
     // must reconstruct the identical registers and identical estimate
     val batch = graft.operators.Sketches.hllDistinct(Tables.events(spark, sf))
@@ -1010,22 +940,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streamQuantile: streamed histogram evaluates to the batch read-back; state O(occupied bins), not O(events)") {
     import org.apache.spark.sql.functions._
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-        ()
-      }
-    }
-    spark.streams.addListener(l)
-    val got = try Streaming.streamQuantile(spark, sf)
-      finally spark.streams.removeListener(l)
+    val (got, peaks) = peakStateRows(Streaming.streamQuantile(spark, sf))
     // the streamed cells must evaluate exactly as a batch histogram
     // over the same cent bins through the SAME shared read-back
     val batchBins = Tables.events(spark, sf)
@@ -1272,19 +1187,21 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("socketIngest: the reference's 20-row fixture round-trips a real TCP socket end-to-end") {
-    // The closest feasible stand-in for a broker test in this sandbox
-    // (no kafka jars exist on the image, no egress to fetch one): the
-    // reference's own ingest fixture is produced over a REAL loopback
-    // TCP connection and drained through the SAME wire-decode path
-    // kafkaIngest uses, then compared row-for-row with the batch file
-    // reader on every stable wire field.
-    val fixturePath = "/root/reference/mock_transactions.json"
-    // re-serialize the pretty-printed array as compact JSON lines (what
-    // a producer would put on the wire), via the inferring batch reader
-    // so metadata stays a NESTED OBJECT on the wire like the original
-    val lines = spark.read.option("multiLine", true).json(fixturePath)
-      .toJSON.collect()
+  test("socketIngest: a loopback TCP round trip through the kafkaIngest decode path equals the batch reader") {
+    // The closest feasible stand-in for a broker test without the kafka
+    // connector jars: a 20-row wire-format fixture is produced over a
+    // REAL loopback TCP connection and drained through the SAME
+    // wire-decode path kafkaIngest uses, then compared row-for-row with
+    // the batch file reader on every stable wire field. The fixture
+    // (src/test/resources/wire_transactions.jsonl) holds seeded
+    // synthetic rows in the reference fixture's schema and value
+    // domains (FIXTURES.md §1): one compact JSON object per line, as a
+    // producer puts it on the wire, metadata a NESTED object.
+    val fixture = java.nio.file.Paths.get(
+      getClass.getResource("/wire_transactions.jsonl").toURI)
+    val fixturePath = fixture.toString
+    val lines = new String(java.nio.file.Files.readAllBytes(fixture), "UTF-8")
+      .split("\n").filter(_.nonEmpty)
     assert(lines.length === 20)
     val server = new java.net.ServerSocket(
       0, 1, java.net.InetAddress.getLoopbackAddress)
@@ -1318,8 +1235,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(_.toSeq).sortBy(_.head.toString)
       val viaSocket = key(spark.table("socket_e2e"))
       val viaFile = key(graft.operators.Reference.decode(
-        spark.read.schema(graft.operators.Reference.wireSchema)
-          .option("multiLine", true).json(fixturePath)))
+        spark.read.schema(graft.operators.Reference.wireSchema).json(fixturePath)))
       assert(viaSocket.length === 20)
       assert(viaSocket.toSeq === viaFile.toSeq)
     } finally { q.stop(); server.close() }
