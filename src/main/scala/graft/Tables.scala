@@ -1,7 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata (`/root/repo/TESTDATA.md`): TPC-H-ish
   * star schema + `events`/`documents`/`embeddings` extension tables.
@@ -25,13 +32,11 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if (sys.env.get("GRAFT_AQE_PROFILE").exists(_.equalsIgnoreCase("scale")))
-      aqeScaleProfile(spark)
     spark
   }
 
-  /** Opt-in AQE posture for the 100 TB deployment (also via env
-    * `GRAFT_AQE_PROFILE=scale`): instead of sizing
+  /** Opt-in AQE posture for the 100 TB deployment, applied by an
+    * explicit call on the session: instead of sizing
     * `spark.sql.shuffle.partitions` by hand per cluster, START WIDE
     * (4× parallelism — the headroom AQE needs to see real output sizes
     * before merging) and let runtime statistics coalesce small
@@ -56,9 +61,40 @@ object Tables {
   }
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    configure(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
   }
+
+  /** Inferred parquet schemas, per session and [[version]]. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Seq[Any], StructType]]())
+
+  /** The schema Spark infers for the parquet file or directory at
+    * `path` under [[configure]], inferred once per session and file
+    * version: inference is a Spark job of its own, which would
+    * otherwise run on every read. A non-local path is always inferred. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    configure(spark)
+    lazy val inferred = spark.read.parquet(path).schema
+    version(path).fold(inferred)(schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+      .computeIfAbsent(_, _ => inferred))
+  }
+
+  /** One version of a local file: its canonical path, NIO file key,
+    * mtime and size; of a directory, those of every data file under it
+    * (not named `_*` or `.*`, as in Spark's listing). */
+  private def version(path: String): Option[Seq[Any]] =
+    Some(Paths.get(path)).filter(p => !path.contains(":/") && Files.exists(p))
+      .map(_.toRealPath()).map { root =>
+        val walk = Files.walk(root)
+        try root.toString +: walk.iterator.asScala.filter(p => Files.isRegularFile(p) &&
+            !root.relativize(p).iterator.asScala.exists(_.toString.matches("[_.].*")))
+          .map { p =>
+            val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+            Seq(p.toString, a.fileKey, a.lastModifiedTime.toMillis, a.size)
+          }.toSeq.sortBy(_.head.toString).flatten
+        finally walk.close()
+      }
 
   def region(s: SparkSession, d: String): DataFrame   = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = read(s, d, "nation")

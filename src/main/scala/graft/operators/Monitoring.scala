@@ -197,14 +197,16 @@ object Monitoring {
 
   /** The monitoring capstone: both flag families over one input,
     * fused per user — the screening report a compliance pipeline
-    * emits. Composition stays one lazy plan: Catalyst shares nothing
-    * between the branches it cannot (different groupings), but the
-    * union'd flag rows are narrow (user, kind, amount) and the final
-    * aggregate is tiny. */
+    * emits. Composition stays one lazy plan: both detectors read the
+    * fact through `spread` on user_id, so their user-keyed aggregate
+    * and window, the union of the narrow (user, kind, amount) flag
+    * rows, and the final aggregate all run on that one partitioning
+    * (the [[alertTriage]] shape). */
   def flagSummary(ev: DataFrame): DataFrame = {
-    val s = structuring(ev).select(col("user_id"),
+    val u = graft.functions.Portable.spread(ev, col("user_id"))
+    val s = structuring(u).select(col("user_id"),
       lit("structuring").as("flag"), col("sum_sub").as("amount"))
-    val o = amountOutliers(ev).select(col("user_id"),
+    val o = amountOutliers(u).select(col("user_id"),
       lit("outlier").as("flag"), col("value").as("amount"))
     s.unionByName(o)
       .groupBy(col("user_id"), col("flag"))
@@ -544,19 +546,21 @@ object Monitoring {
     * across engines holds at this granularity (the q_benford log10
     * precedent).
     *
-    * Scale: one events scan → map-side-combined agg to ≤ |types|·2·B
-    * rows; everything after runs on that tiny cell table. */
+    * Scale: one events scan → map-side-combined agg to calendar-bounded
+    * (type, day, bin) cells; d0 is a window over them, so no scalar is
+    * computed ahead of the scan; everything after runs on tiny cells. */
   def psiDrift(ev: DataFrame, nBins: Int = 10, binCents: Long = 5000L,
       splitDays: Long = 15L): DataFrame = {
-    val d0 = ev.agg(min(expr("ts_ms div 86400000")).as("d0"))
-    val binned = ev.crossJoin(d0).select(col("event_type"),
-      when(expr("ts_ms div 86400000") < col("d0") + splitDays, lit("ref"))
-        .otherwise(lit("cur")).as("period"),
-      least(expr(s"cast(floor(value * 100 + 0.5) as bigint) div $binCents"),
-        lit(nBins - 1L)).as("bin"))
-    val counts = binned.groupBy(col("event_type"), col("period"), col("bin"))
+    val cells = ev.groupBy(col("event_type"), expr("ts_ms div 86400000").as("day"),
+        least(expr(s"cast(floor(value * 100 + 0.5) as bigint) div $binCents"),
+          lit(nBins - 1L)).as("bin"))
       .agg(count(lit(1)).as("n"))
-    val grid = binned.select(col("event_type")).distinct()
+      .withColumn("d0", min(col("day")).over(Window.partitionBy()))
+    val counts = cells.groupBy(col("event_type"),
+        when(col("day") < col("d0") + splitDays, lit("ref")).otherwise(lit("cur")).as("period"),
+        col("bin"))
+      .agg(sum(col("n")).as("n"))
+    val grid = cells.select(col("event_type")).distinct()
       .select(col("event_type"),
         explode(sequence(lit(0L), lit(nBins - 1L))).as("bin"))
       .select(col("event_type"), col("bin"),
@@ -848,26 +852,24 @@ object Monitoring {
     * map-side-combined agg; the cumulative window is PARTITIONED by
     * event type (never global), over the type's cent domain — the
     * same domain-bounded justification as [[ksDrift]], now also
-    * parallel across types. */
-  def w1Drift(ev: DataFrame, splitDay: String = "2024-01-16"): DataFrame = Scope { s =>
-    val tagged = ev.select(col("event_type"),
-      floor(col("value") * 100 + 0.5).cast("long").as("cents"),
-      when(col("ts") < lit(splitDay).cast("timestamp"), 1L).otherwise(2L).as("s"))
-    // feeds the CDF window AND the per-type totals
-    val perValue = s.persist(tagged.groupBy(col("event_type"), col("cents"))
+    * parallel across types — and the per-type sizes are windows on
+    * that same partitioning. */
+  def w1Drift(ev: DataFrame, splitDay: String = "2024-01-16"): DataFrame = {
+    val byType = Window.partitionBy(col("event_type"))
+    val byCents = byType.orderBy(col("cents"))
+    val cdf = byCents.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ev.select(col("event_type"),
+        floor(col("value") * 100 + 0.5).cast("long").as("cents"),
+        when(col("ts") < lit(splitDay).cast("timestamp"), 1L).otherwise(2L).as("s"))
+      .groupBy(col("event_type"), col("cents"))
       .agg(sum(when(col("s") === 1L, 1L).otherwise(0L)).as("a1"),
-        sum(when(col("s") === 2L, 1L).otherwise(0L)).as("a2")))
-    val byType = Window.partitionBy(col("event_type")).orderBy(col("cents"))
-    val gaps = perValue
-      .withColumn("c1", sum(col("a1")).over(
-        byType.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("c2", sum(col("a2")).over(
-        byType.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("width", lead(col("cents"), 1).over(byType) - col("cents"))
-    val ns = perValue.groupBy(col("event_type"))
-      .agg(sum(col("a1")).as("n1"), sum(col("a2")).as("n2"))
-    gaps.filter(col("width").isNotNull)
-      .join(ns, "event_type")
+        sum(when(col("s") === 2L, 1L).otherwise(0L)).as("a2"))
+      .withColumn("c1", sum(col("a1")).over(cdf))
+      .withColumn("c2", sum(col("a2")).over(cdf))
+      .withColumn("width", lead(col("cents"), 1).over(byCents) - col("cents"))
+      .withColumn("n1", sum(col("a1")).over(byType))
+      .withColumn("n2", sum(col("a2")).over(byType))
+      .filter(col("width").isNotNull)
       .groupBy(col("event_type"))
       .agg(first(col("n1")).as("n1"), first(col("n2")).as("n2"),
         sum(abs(col("c1").cast("decimal(38,0)") * col("n2") -
@@ -877,7 +879,6 @@ object Monitoring {
         "cast((w1_num * 10000) div (cast(n1 as decimal(38,0)) * n2 * 100) as bigint)"))
       .select(col("event_type"), col("n1"), col("n2"), col("w1_scaled"),
         (col("w1_scaled") / 10000.0).as("w1_dollars"))
-      .localCheckpoint(true) // |types| rows; releases the support cache
   }
 
   /** Benjamini–Hochberg FDR screen over merchant activity deviations
@@ -938,30 +939,33 @@ object Monitoring {
     * per-term-floor discipline), so the integer sum and the top-k
     * ranking are engine-exact. Emits the `k` highest-scoring events.
     *
-    * Scale: three histogram relations, each DOMAIN-bounded (amount
-    * bands by the value domain, 24 hours, 7 weekdays) — broadcast by
-    * construction, never data-growing; the fact is scanned once and
-    * the global top-k is a TakeOrdered, not a sort. */
-  def hbos(ev: DataFrame, k: Int = 20): DataFrame = Scope { s =>
-    // feeds the three histograms AND the scoring pass
-    val base = s.persist(ev.select(col("event_id"),
+    * Scale: the three DOMAIN-bounded histograms (amount bands, 24
+    * hours, 7 weekdays) are ONE aggregate over feature-tagged bins,
+    * broadcast as one row of bin → count maps plus the total; an event
+    * with a NULL bin has no cell and is skipped. The global top-k is a
+    * TakeOrdered, not a sort. */
+  def hbos(ev: DataFrame, k: Int = 20): DataFrame = {
+    val feats = Seq("b_amt", "b_hour", "b_dow")
+    val base = ev.select(col("event_id"),
         floor(col("value") / 10).cast("long").as("b_amt"),
         hour(col("ts")).cast("long").as("b_hour"),
-        dayofweek(col("ts")).cast("long").as("b_dow")))
-    val tot = base.agg(count(lit(1)).as("nn"))
-    def hist(c: String) = base.groupBy(col(c)).agg(count(lit(1)).as(s"n_$c"))
+        dayofweek(col("ts")).cast("long").as("b_dow"))
+    val hist = base
+      .select(explode(array(feats.indices.map(f =>
+        struct(lit(f).as("f"), col(feats(f)).as("bin"))): _*)).as("e"))
+      .groupBy(col("e.f").as("f"), col("e.bin").as("bin")).agg(count(lit(1)).as("n"))
+      .agg(sum(when(col("f") === 0, col("n"))).as("nn"), feats.indices.map(f =>
+        map_from_entries(collect_list(when(col("f") === f && col("bin").isNotNull,
+          struct(col("bin"), col("n"))))).as(s"h_${feats(f)}")): _*)
     def term(c: String): Column =
-      floor(log(col("nn").cast("double") / col(s"n_$c")) * 1e6).cast("long")
-    base
-      .join(broadcast(hist("b_amt")), "b_amt")
-      .join(broadcast(hist("b_hour")), "b_hour")
-      .join(broadcast(hist("b_dow")), "b_dow")
-      .crossJoin(broadcast(tot))
+      floor(log(col("nn").cast("double") / element_at(col(s"h_$c"), col(c))) * 1e6)
+        .cast("long")
+    base.filter(feats.map(col(_).isNotNull).reduce(_ && _))
+      .crossJoin(broadcast(hist))
       .select(col("event_id"), col("b_amt"), col("b_hour"), col("b_dow"),
         (term("b_amt") + term("b_hour") + term("b_dow")).as("score_scaled"))
       .orderBy(col("score_scaled").desc, col("event_id"))
       .limit(k)
-      .localCheckpoint(true) // k rows; releases the base cache
   }
 
   /** Bivariate Mahalanobis outliers per event type — the COVARIANCE-
@@ -1122,25 +1126,22 @@ object Monitoring {
     * exactly). Output per type: the cut points, how many rows each
     * side clipped, and the winsorized total.
     *
-    * Scale: the fact collapses to (type, cents) bins first, the two
-    * cumulative windows run over that TINY bin table, and the 5-row
-    * cut-point relation broadcasts back onto the binned counts — the
-    * no-global-sort percentile path ([[Sketches]]' histogram-quantile
-    * discipline applied to clipping). */
-  def winsorize(ev: DataFrame, loPct: Long = 1L, hiPct: Long = 99L): DataFrame = Scope { s =>
-    val cents = ev.select(col("event_type"),
-      floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val bins = s.persist(cents.groupBy(col("event_type"), col("cents"))
-      .agg(count(lit(1)).as("c")))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("cents"))
-    val cum = bins.withColumn("cum", sum(col("c")).over(w))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("event_type"))))
-    val lo = cum.filter(col("cum") * 100 >= col("n") * loPct)
-      .groupBy(col("event_type")).agg(min(col("cents")).as("lo_cents"))
-    val hi = cum.filter(col("cum") * 100 >= col("n") * hiPct)
-      .groupBy(col("event_type")).agg(min(col("cents")).as("hi_cents"))
-    bins
-      .join(broadcast(lo), "event_type").join(broadcast(hi), "event_type")
+    * Scale: the fact collapses to (type, cents) bins first; the two
+    * cumulative windows and the cut points (per-type window minima over
+    * the qualifying bins) run over that TINY bin table, on the
+    * partitioning the rollup reuses — the no-global-sort percentile
+    * path ([[Sketches]]' histogram-quantile discipline applied to
+    * clipping). */
+  def winsorize(ev: DataFrame, loPct: Long = 1L, hiPct: Long = 99L): DataFrame = {
+    val byType = Window.partitionBy(col("event_type"))
+    val cut = (pct: Long) =>
+      min(when(col("cum") * 100 >= col("n") * pct, col("cents"))).over(byType)
+    ev.select(col("event_type"), floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+      .groupBy(col("event_type"), col("cents")).agg(count(lit(1)).as("c"))
+      .withColumn("cum", sum(col("c")).over(byType.orderBy(col("cents"))))
+      .withColumn("n", sum(col("c")).over(byType))
+      .withColumn("lo_cents", cut(loPct))
+      .withColumn("hi_cents", cut(hiPct))
       .groupBy(col("event_type"))
       .agg(sum(col("c")).as("n"), min(col("lo_cents")).as("lo_cents"),
         min(col("hi_cents")).as("hi_cents"),
@@ -1148,9 +1149,9 @@ object Monitoring {
           .as("n_clipped_lo"),
         sum(when(col("cents") > col("hi_cents"), col("c")).otherwise(0L))
           .as("n_clipped_hi"),
-        sum(greatest(col("lo_cents"), least(col("hi_cents"), col("cents"))) * col("c"))
-          .as("winsorized_cents"))
-      .localCheckpoint(true) // |types| rows; releases bins
+        // widened per term, BIGINT again at the end: raises, never wraps
+        sum(greatest(col("lo_cents"), least(col("hi_cents"), col("cents")))
+          .cast("decimal(38,0)") * col("c")).cast("long").as("winsorized_cents"))
   }
 
   /** Two-proportion A/B significance — the experimentation readout:
@@ -1418,29 +1419,24 @@ object Monitoring {
     * explode each grid row into the `windowDays` target days it
     * contributes to and re-aggregate with count(DISTINCT). Work is
     * windowDays × |day, user| — grid-bounded, not fact-bounded — and
-    * both aggregates are hash-aggs with map-side partials; the
-    * trailing-day join keeps only days that exist in the corpus
-    * (phantom post-corpus days would report partial windows).
+    * both aggregates are hash-aggs with map-side partials. The DAU is
+    * the same aggregate's count of offset-0 rows, and a target day
+    * with none is a phantom post-corpus day (it would report a
+    * partial window), so it is dropped.
     *
     * At 100 TB the same shape holds: the (day, user) grid is the
     * |users|-bounded relation a DAU pipeline materializes anyway, and
     * count(DISTINCT user_id) plans as two-level hash aggregation, so
     * no per-day sort or global window appears anywhere. */
-  def rollingDau(ev: DataFrame, windowDays: Int = 7): DataFrame = Scope { s =>
-    val du = s.persist(ev.select(to_date(col("ts")).as("day"), col("user_id"))
-      .distinct()) // feeds the DAU agg, the spine, and the explode
-    val days = du.select(col("day")).distinct()
-    val wau = du
+  def rollingDau(ev: DataFrame, windowDays: Int = 7): DataFrame =
+    ev.select(to_date(col("ts")).as("day"), col("user_id")).distinct()
       .select(explode(sequence(lit(0), lit(windowDays - 1))).as("off"),
         col("day"), col("user_id"))
-      .select(expr("date_add(day, off)").as("day"), col("user_id"))
-      .join(days, "day")
-      .groupBy(col("day")).agg(countDistinct(col("user_id")).as("wau_7d"))
-    du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
-      .join(wau, "day")
+      .groupBy(expr("date_add(day, off)").as("day"))
+      .agg(count(when(col("off") === 0, lit(1))).as("dau"),
+        countDistinct(col("user_id")).as("wau_7d"))
+      .filter(col("day").isNotNull && col("dau") > 0)
       .withColumn("stickiness", trunc4(col("dau") / col("wau_7d")))
-      .localCheckpoint(true) // one row per day; releases the grid cache
-  }
 
   /** Sequential-pattern support: which ordered event-type pairs a→b
     * (b within 24 h AFTER a) do users exhibit, with support (share of
@@ -1490,31 +1486,27 @@ object Monitoring {
     * epoch-week of their first event; each cohort's weekly cents then
     * accumulate over age and normalize by cohort size.
     *
-    * Shape: one per-user first-touch aggregate, one fact⋈per-user
-    * equi-join on user_id (the per-user relation grows with users —
-    * never broadcast, the tfidf lesson), one (cohort, week) hash-agg,
-    * and a running-sum window PARTITIONED BY COHORT over its ≤
-    * corpus-weeks age rows — the allowlisted bounded-relation window
-    * shape, nothing global. Epoch-week buckets (day div 7) keep the
-    * cohort key calendar-free and engine-portable. */
-  def cohortLtv(ev: DataFrame): DataFrame = Scope { s =>
-    // feeds the fact join AND the cohort-size aggregate
-    val first = s.persist(ev.groupBy(col("user_id"))
-      .agg(expr("min(ts_ms div 86400000) div 7").as("cohort_week")))
-    val size = first.groupBy(col("cohort_week")).agg(count(lit(1)).as("n_users"))
-    val weekly = ev.select(col("user_id"), expr("(ts_ms div 86400000) div 7").as("week"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .join(first, "user_id")
+    * Shape: `spread` keys the fact by user_id, so the per-(user, week)
+    * cents aggregate and the first-touch window share that one exchange
+    * (no fact⋈per-user join); one (cohort, age) hash-agg, where each
+    * user has exactly one age-0 row, so the cohort size is that row's
+    * count; then windows PARTITIONED BY COHORT over its ≤ corpus-weeks
+    * age rows — the allowlisted bounded-relation window shape, nothing
+    * global. Epoch-week buckets (day div 7) keep the cohort key
+    * calendar-free and engine-portable. */
+  def cohortLtv(ev: DataFrame): DataFrame = {
+    val byCohort = Window.partitionBy(col("cohort_week"))
+    graft.functions.Portable.spread(ev, col("user_id"))
+      .groupBy(col("user_id"), expr("(ts_ms div 86400000) div 7").as("week"))
+      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
+      .withColumn("cohort_week", min(col("week")).over(Window.partitionBy(col("user_id"))))
       .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("age_week"))
-      .agg(sum(col("cents")).as("cents_week"))
-    val byAge = Window.partitionBy(col("cohort_week")).orderBy(col("age_week"))
-    weekly
-      .withColumn("cum_cents", sum(col("cents_week")).over(byAge))
-      .join(size, "cohort_week")
+      .agg(sum(col("cents")).as("cents_week"), count(lit(1)).as("n_age"))
+      .withColumn("cum_cents", sum(col("cents_week")).over(byCohort.orderBy(col("age_week"))))
+      .withColumn("n_users", max(when(col("age_week") === 0, col("n_age"))).over(byCohort))
       .select(col("cohort_week"), col("age_week"), col("n_users"),
         col("cents_week"), col("cum_cents"),
         trunc4(col("cum_cents") / col("n_users")).as("ltv_cents"))
-      .localCheckpoint(true) // cohorts × ages rows; releases the cache
   }
 
   /** Seasonal residual anomalies: days whose volume departs from
@@ -1556,26 +1548,23 @@ object Monitoring {
     * row; the curve must be defined everywhere to read half-life off
     * it).
     *
-    * One per-user max aggregate collapses the fact table; everything
-    * after runs on the ≤ corpus-weeks relation — the descending
-    * cumulative is a window over that spine, never the fact. Weeks
-    * are epoch-day div 7 (the [[cohortLtv]] convention). */
-  def survivalCurve(ev: DataFrame): DataFrame = Scope { s =>
-    // feeds the churn histogram AND the population count
-    val lw = s.persist(ev.groupBy(col("user_id"))
-      .agg(expr("max(ts_ms div 86400000) div 7").as("week")))
-    val total = lw.agg(count(lit(1)).as("n_total"))
-    val spine = ev.select(expr("(ts_ms div 86400000) div 7").as("week")).distinct()
-    val byLast = lw.groupBy(col("week")).agg(count(lit(1)).as("n_churned"))
-    spine.join(byLast, Seq("week"), "left")
-      .withColumn("n_churned", coalesce(col("n_churned"), lit(0L)))
+    * One pass: `spread` keys the fact by user_id for the distinct
+    * (user, week) grid and the last-week window; the per-week rollup
+    * (each user counted at its last week) is the spine, and the
+    * cumulative and total are windows over it. Weeks are epoch-day
+    * div 7 (the [[cohortLtv]] convention). */
+  def survivalCurve(ev: DataFrame): DataFrame =
+    graft.functions.Portable.spread(ev, col("user_id"))
+      .select(col("user_id"), expr("(ts_ms div 86400000) div 7").as("week"))
+      .distinct()
+      .withColumn("last", max(col("week")).over(Window.partitionBy(col("user_id"))))
+      .groupBy(col("week"))
+      .agg(count(when(col("week") === col("last"), lit(1))).as("n_churned"))
       .withColumn("survivors",
         sum(col("n_churned")).over(Window.orderBy(col("week").desc)))
-      .crossJoin(broadcast(total))
+      .withColumn("n_total", sum(col("n_churned")).over(Window.partitionBy()))
       .select(col("week"), col("n_churned"), col("survivors"),
         trunc4(col("survivors") / col("n_total")).as("share"))
-      .localCheckpoint(true) // one row per week; releases the cache
-  }
 
   /** CUPED variance reduction for the A/B readout ([[abTest]]'s
     * sibling): user spend in the experiment period is adjusted by the
@@ -1590,7 +1579,9 @@ object Monitoring {
     * ALGEBRAICALLY over those sums (var_adj = var_y + θ²·var_x −
     * 2θ·cov), so both engines run the same scalar IEEE expression on
     * identical exact integers. The pre/post split day is the corpus
-    * midpoint, broadcast from a scalar aggregate.
+    * midpoint, broadcast from a scalar aggregate. The pooled sums are
+    * whole-relation window sums over the two per-variant rows, so one
+    * aggregate serves both.
     *
     * All sums and cross-products run in DECIMAL(38,0) (HUGEINT on the
     * oracle side): the first full-board sf1 run overflowed `n·Σx²` in
@@ -1599,33 +1590,28 @@ object Monitoring {
     * only the final ratios cast to double (the weekDiscord/markov
     * discipline). Exactness bound: n·Σx² ≤ 10³⁸ holds to ~10⁹ users ×
     * ~10¹⁰ lifetime cents. */
-  def abCuped(ev: DataFrame): DataFrame = Scope { s =>
+  def abCuped(ev: DataFrame): DataFrame = {
     val base = ev.select(col("user_id"), expr("ts_ms div 86400000").as("day"),
       floor(col("value") * 100 + 0.5).cast("long").as("cents"))
     val mid = base.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-    // feeds the pooled AND the per-variant sum aggregates
-    val per = s.persist(base.crossJoin(broadcast(mid))
+    val per = base.crossJoin(broadcast(mid))
       .groupBy(col("user_id"))
       .agg(sum(when(col("day") < col("mid"), col("cents")).otherwise(0L)).as("x"),
         sum(when(col("day") >= col("mid"), col("cents")).otherwise(0L)).as("y"))
       .withColumn("variant",
         when(pmod(graft.functions.TextHash.hash60(
           concat(lit("ab|"), col("user_id").cast("string"))), lit(2L)) === 0, "A")
-          .otherwise("B")))
+          .otherwise("B"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    def sums(df: DataFrame, keys: Seq[Column]) = df.groupBy(keys: _*).agg(
-      count(lit(1)).as("n"), sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"), sum(dec(col("x")) * col("y")).as("sxy"),
-      sum(dec(col("y")) * col("y")).as("syy"))
-    val pooled = sums(per, Seq.empty)
-      .select(col("n").as("np"), col("sx").as("sxp"), col("sy").as("syp"),
-        col("sxx").as("sxxp"), col("sxy").as("sxyp"))
+    val pool = (c: String) => sum(col(c)).over(Window.partitionBy())
+    per.groupBy(col("variant")).agg(
+        count(lit(1)).as("n"), sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+        sum(dec(col("x")) * col("x")).as("sxx"), sum(dec(col("x")) * col("y")).as("sxy"),
+        sum(dec(col("y")) * col("y")).as("syy"))
       .withColumn("theta",
-        (dec(col("np")) * col("sxyp") - col("sxp") * col("syp")).cast("double") /
-          (dec(col("np")) * col("sxxp") - col("sxp") * col("sxp")).cast("double"))
-      .withColumn("mean_x_pool", col("sxp").cast("double") / col("np"))
-    sums(per, Seq(col("variant")))
-      .crossJoin(broadcast(pooled))
+        (dec(pool("n")) * pool("sxy") - pool("sx") * pool("sy")).cast("double") /
+          (dec(pool("n")) * pool("sxx") - pool("sx") * pool("sx")).cast("double"))
+      .withColumn("mean_x_pool", pool("sx").cast("double") / pool("n"))
       .withColumn("mean_y", col("sy").cast("double") / col("n"))
       .withColumn("mean_x", col("sx").cast("double") / col("n"))
       .withColumn("mean_adj",
@@ -1642,39 +1628,29 @@ object Monitoring {
         trunc4(col("mean_y")).as("mean_post"), trunc4(col("mean_adj")).as("mean_adj"),
         trunc4(col("var_y")).as("var_post"), trunc4(col("var_adj")).as("var_adj"),
         trunc4((col("var_y") - col("var_adj")) / col("var_y") * 100).as("var_cut_pct"))
-      .localCheckpoint(true) // 2 rows; releases the per-user cache
   }
 
   /** Right-to-erasure impact audit: given a deletion list (hash-picked
     * ~5% of users here; a real run joins the actual request table),
     * report per event type what leaves and what remains — the
     * reconciliation a data-governance pipeline records BEFORE it
-    * rewrites partitions. The kept counts come from a LEFT ANTI join
-    * (the erasure plan itself) and the erased side from a LEFT SEMI —
-    * both broadcastable-list joins at any scale, and the audit proves
-    * kept + erased = total row-for-row.
+    * rewrites partitions. The deletion predicate is a pure hash of the
+    * user id, so membership is a per-row flag: the erased counts are
+    * conditional aggregates beside the total, and kept = total − erased
+    * row-for-row (a NULL user is never on the list, as it would never
+    * match the erasure join).
     *
-    * Scale: the deletion predicate is a pure hash of the join key, so
-    * at 100 TB it pushes as a runtime filter; the per-type rollups are
-    * map-side-combined hash-aggs; nothing here sorts. */
-  def forgetAudit(ev: DataFrame, mod: Long = 20L): DataFrame = Scope { s =>
-    // feeds the semi AND the anti join
-    val erased = s.persist(ev.select(col("user_id")).distinct()
-      .filter(pmod(graft.functions.TextHash.hash60(
-        concat(lit("erase|"), col("user_id").cast("string"))), lit(mod)) === 0))
-    val kept = ev.join(erased, Seq("user_id"), "left_anti")
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n_kept"))
-    val gone = ev.join(erased, Seq("user_id"), "left_semi")
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n_erased"),
-        countDistinct(col("user_id")).as("n_erased_users"))
-    ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_total"))
-      .join(kept, Seq("event_type"), "left")
-      .join(gone, Seq("event_type"), "left")
-      .select(col("event_type"), col("n_total"),
-        coalesce(col("n_erased"), lit(0L)).as("n_erased"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("n_erased_users"), lit(0L)).as("n_erased_users"))
-      .localCheckpoint(true) // |types| rows; releases the list cache
+    * Scale: one map-side-combined per-type aggregate over the scan (the
+    * distinct-user count adds one (type, user) partial level); no join,
+    * nothing sorts. */
+  def forgetAudit(ev: DataFrame, mod: Long = 20L): DataFrame = {
+    val erased = pmod(graft.functions.TextHash.hash60(
+      concat(lit("erase|"), col("user_id").cast("string"))), lit(mod)) === 0
+    ev.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_total"), count(when(erased, lit(1))).as("n_erased"),
+        countDistinct(when(erased, col("user_id"))).as("n_erased_users"))
+      .select(col("event_type"), col("n_total"), col("n_erased"),
+        (col("n_total") - col("n_erased")).as("n_kept"), col("n_erased_users"))
   }
 
   /** Recurring-payment detection: per (user, merchant) purchase
@@ -1720,36 +1696,33 @@ object Monitoring {
     * purchase volume" is an operational risk flag).
     *
     * HHI = Σᵢ (cᵢ/C)² is computed as Σcᵢ² / C² — the squared sum is
-    * an EXACT BIGINT (per-cell cents stay far under 2³¹·⁵), so no
+    * an EXACT DECIMAL(38,0) (a cell's cents squared passes 2⁶³ at
+    * scale, the abCuped widening rule), so no
     * double is summed across merchants and the index is
     * merge-order-deterministic; the top-k shares ride a rank window
-    * over the ≤ |types|·|merchants| cell relation with a rnk ≤ 3
-    * filter (WindowGroupLimit-eligible). One fact scan, one
-    * hash-agg, everything after is cell-bounded. */
-  def concentration(ev: DataFrame): DataFrame = Scope { s =>
-    // feeds the HHI aggregate AND the top-k window
-    val cells = s.persist(ev.select(col("event_type"),
+    * over the ≤ |types|·|merchants| cell relation, and the per-type
+    * rollup of the sums and the top ranks runs on that window's own
+    * partitioning. One fact scan, one hash-agg, everything after is
+    * cell-bounded. */
+  def concentration(ev: DataFrame): DataFrame = {
+    val byC = Window.partitionBy(col("event_type"))
+      .orderBy(col("c").desc, col("merchant"))
+    ev.select(col("event_type"),
         get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .groupBy(col("event_type"), col("merchant"))
-      .agg(sum(col("cents")).as("c")))
-    val agg = cells.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_merchants"), sum(col("c")).as("total_cents"),
-        sum(col("c") * col("c")).as("ssq"))
-    val byC = Window.partitionBy(col("event_type"))
-      .orderBy(col("c").desc, col("merchant"))
-    val topk = cells.withColumn("rnk", row_number().over(byC))
-      .filter(col("rnk") <= 3)
+      .agg(sum(col("cents")).as("c"))
+      .withColumn("rnk", row_number().over(byC))
       .groupBy(col("event_type"))
-      .agg(max(when(col("rnk") === 1, col("c"))).as("top1_cents"),
-        sum(col("c")).as("top3_cents"))
-    agg.join(topk, "event_type")
+      .agg(count(lit(1)).as("n_merchants"), sum(col("c")).as("total_cents"),
+        sum(col("c").cast("decimal(38,0)") * col("c")).as("ssq"),
+        max(when(col("rnk") === 1, col("c"))).as("top1_cents"),
+        sum(when(col("rnk") <= 3, col("c"))).as("top3_cents"))
       .select(col("event_type"), col("n_merchants"), col("total_cents"),
         graft.functions.Portable.trunc6(col("ssq").cast("double") /
           (col("total_cents").cast("double") * col("total_cents"))).as("hhi"),
         trunc4(col("top1_cents") / col("total_cents")).as("top1_share"),
         trunc4(col("top3_cents") / col("total_cents")).as("top3_share"))
-      .localCheckpoint(true) // |types| rows; releases the cell cache
   }
 
   /** Per-user merchant-mix Shannon entropy — the account-takeover /
@@ -1796,22 +1769,20 @@ object Monitoring {
     *
     * Exact-integer core: per-merchant sums are BIGINT cents; the only
     * doubles are the two final divisions, mirrored shape-for-shape by
-    * the oracle. One hash-agg over the fact; the 1-row global rides a
-    * broadcast cross join. */
-  def targetEncode(ev: DataFrame, m: Int = 20): DataFrame = Scope { s =>
-    // feeds the global mean AND the encoded projection
-    val cells = s.persist(ev
-      .select(get_json_object(col("props"), "$.k").as("merchant"),
+    * the oracle. One hash-agg over the fact; the global totals are
+    * whole-relation window sums over the |merchants|-row cells. */
+  def targetEncode(ev: DataFrame, m: Int = 20): DataFrame = {
+    val all = Window.partitionBy()
+    ev.select(get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .groupBy(col("merchant"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents")))
-    val g = cells.agg(sum(col("n")).as("tn"), sum(col("sum_cents")).as("tc"))
-    cells.crossJoin(broadcast(g))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
+      .withColumn("tn", sum(col("n")).over(all))
+      .withColumn("tc", sum(col("sum_cents")).over(all))
       .select(col("merchant"), col("n"), col("sum_cents"),
         trunc4(col("sum_cents") / col("n")).as("naive_cents"),
         trunc4((col("sum_cents") + lit(m) * (col("tc") / col("tn"))) / (col("n") + lit(m)))
           .as("enc_cents"))
-      .localCheckpoint(true) // |merchants| rows; releases the cell cache
   }
 
   /** Hourly burst detection: (event_type, hour) buckets whose count
@@ -1865,31 +1836,27 @@ object Monitoring {
     * cross-multiplication 5·cum ≥ 4·total — no float share ever
     * decides membership.
     *
-    * Scale: the rank/running-sum window runs over the COLLAPSED
-    * (type, merchant) relation — bounded by the merchant catalog, not
-    * the fact — partitioned by type (never global). */
-  def paretoShare(ev: DataFrame): DataFrame = Scope { s =>
-    // feeds the totals AND the ranked running sum
-    val cells = s.persist(ev
-      .select(col("event_type"), get_json_object(col("props"), "$.k").as("merchant"),
+    * Scale: the rank/running-sum and per-type total windows run over
+    * the COLLAPSED (type, merchant) relation — bounded by the merchant
+    * catalog, not the fact — partitioned by type (never global), and
+    * the rollup reuses that partitioning. */
+  def paretoShare(ev: DataFrame): DataFrame = {
+    val byType = Window.partitionBy(col("event_type"))
+    val byC = byType.orderBy(col("c").desc, col("merchant"))
+    ev.select(col("event_type"), get_json_object(col("props"), "$.k").as("merchant"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("merchant")).agg(sum(col("cents")).as("c")))
-    val byC = Window.partitionBy(col("event_type"))
-      .orderBy(col("c").desc, col("merchant"))
-    val run = cells
+      .groupBy(col("event_type"), col("merchant")).agg(sum(col("cents")).as("c"))
       .withColumn("rnk", row_number().over(byC).cast("long"))
       .withColumn("cum", sum(col("c")).over(
         byC.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val tot = cells.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_merchants"), sum(col("c")).as("total_cents"))
-    run.join(broadcast(tot), "event_type")
+      .withColumn("n_merchants", count(lit(1)).over(byType))
+      .withColumn("total_cents", sum(col("c")).over(byType))
       .filter(col("cum") * 5 >= col("total_cents") * 4)
       .groupBy(col("event_type"))
-      .agg(min(col("rnk")).as("k80"), min_by(col("cum"), col("rnk")).as("cum80"))
-      .join(broadcast(tot), "event_type")
+      .agg(max(col("n_merchants")).as("n_merchants"), max(col("total_cents")).as("total_cents"),
+        min(col("rnk")).as("k80"), min_by(col("cum"), col("rnk")).as("cum80"))
       .select(col("event_type"), col("n_merchants"), col("total_cents"),
         col("k80"), trunc4(col("cum80") / col("total_cents")).as("share80"))
-      .localCheckpoint(true) // |types| rows; releases the cell cache
   }
 
   /** Per-user inter-arrival profile: min/median/p90/max gap between a
@@ -1926,23 +1893,22 @@ object Monitoring {
     *
     * Exactness: counts are BIGINTs; shares and the log run as the
     * identical double expression on both engines; emitted measures
-    * truncate. One fact hash-agg; totals broadcast as one row. */
-  def woeEncode(ev: DataFrame): DataFrame = Scope { s =>
-    // feeds the totals AND the encoded projection
-    val cells = s.persist(ev
-      .select(get_json_object(col("props"), "$.k").as("merchant"),
+    * truncate. One fact hash-agg; totals are whole-relation window sums
+    * over the |merchants|-row cells. */
+  def woeEncode(ev: DataFrame): DataFrame = {
+    val all = Window.partitionBy()
+    ev.select(get_json_object(col("props"), "$.k").as("merchant"),
         when(col("event_type") === "error", 1L).otherwise(0L).as("bad"))
       .groupBy(col("merchant"))
       .agg(sum(col("bad")).as("n_bad"),
-        sum(lit(1L) - col("bad")).as("n_good")))
-    val g = cells.agg(sum(col("n_bad")).as("tb"), sum(col("n_good")).as("tg"))
-    cells.crossJoin(broadcast(g))
+        sum(lit(1L) - col("bad")).as("n_good"))
+      .withColumn("tb", sum(col("n_bad")).over(all))
+      .withColumn("tg", sum(col("n_good")).over(all))
       .withColumn("gs", (col("n_good") + 0.5) / (col("tg") + 0.5))
       .withColumn("bs", (col("n_bad") + 0.5) / (col("tb") + 0.5))
       .select(col("merchant"), col("n_good"), col("n_bad"),
         trunc4(log(col("gs") / col("bs"))).as("woe"),
         trunc4((col("gs") - col("bs")) * log(col("gs") / col("bs"))).as("iv_term"))
-      .localCheckpoint(true) // |merchants| rows; releases the cell cache
   }
 
   /** Exact ROC AUC of a score against a binary outcome via the
@@ -2054,9 +2020,11 @@ object Monitoring {
     * drawdown are BIGINTs; the trough day is the FIRST day attaining
     * the max drawdown (min day over ties — deterministic).
     *
-    * Scale: one fact hash-agg; the running-max window and the argmax
-    * join both run over the collapsed (type, day) relation. */
-  def drawdown(ev: DataFrame): DataFrame = Scope { s =>
+    * Scale: one fact hash-agg; the running-max window and the per-type
+    * rollup both run over the collapsed (type, day) relation, on one
+    * partitioning. The argmax is the max of (dd, −day): the deepest
+    * drawdown, then the earliest day among its ties. */
+  def drawdown(ev: DataFrame): DataFrame = {
     val daily = ev
       .select(col("event_type"),
         (floor(col("ts_ms") / 86400000L) * 86400000L).as("day_ms"),
@@ -2064,21 +2032,14 @@ object Monitoring {
       .groupBy(col("event_type"), col("day_ms")).agg(sum(col("cents")).as("c"))
     val byDay = Window.partitionBy(col("event_type")).orderBy(col("day_ms"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // feeds the per-type max AND the argmax join
-    val dd = s.persist(daily
-      .withColumn("peak", max(col("c")).over(byDay))
-      .withColumn("dd", col("peak") - col("c")))
-    dd.groupBy(col("event_type"))
+    daily
+      .withColumn("dd", max(col("c")).over(byDay) - col("c"))
+      .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"), max(col("c")).as("peak_cents"),
-        max(col("dd")).as("max_dd_cents"))
-      .join(dd.groupBy(col("event_type"), col("dd"))
-          .agg(min(col("day_ms")).as("trough_day_ms"))
-          .withColumnRenamed("dd", "max_dd_cents"),
-        Seq("event_type", "max_dd_cents"))
+        max(struct(col("dd"), (-col("day_ms")).as("neg_day"))).as("arg"))
       .select(col("event_type"), col("n_days"), col("peak_cents"),
-        col("max_dd_cents"), col("trough_day_ms"),
-        trunc4(col("max_dd_cents") / col("peak_cents")).as("dd_share"))
-      .localCheckpoint(true) // |types| rows; releases the daily cache
+        col("arg.dd").as("max_dd_cents"), (-col("arg.neg_day")).as("trough_day_ms"),
+        trunc4(col("arg.dd") / col("peak_cents")).as("dd_share"))
   }
 
   /** Mutual information between event type and merchant — the
@@ -2090,21 +2051,16 @@ object Monitoring {
     * so per-type sums are exact; ln's argument is the exact integer
     * cross-ratio n·N/(nt·nm).
     *
-    * Scale: one (type, merchant) hash-agg over the fact; both marginal
-    * relations and the 1-row total broadcast; the rollup runs over
-    * ≤ |types|·|merchants| cells. */
-  def mutualInfo(ev: DataFrame): DataFrame = Scope { s =>
-    // feeds both marginals, the total, and the term join
-    val cells = s.persist(ev
-      .select(col("event_type"), get_json_object(col("props"), "$.k").as("merchant"))
-      .groupBy(col("event_type"), col("merchant")).agg(count(lit(1)).as("n")))
-    val tm = cells.groupBy(col("event_type")).agg(sum(col("n")).as("nt"))
-    val mm = cells.groupBy(col("merchant")).agg(sum(col("n")).as("nm"))
-    val tot = cells.agg(sum(col("n")).as("nn"))
-    cells
-      .join(broadcast(tm), "event_type")
-      .join(broadcast(mm), "merchant")
-      .crossJoin(broadcast(tot))
+    * Scale: one (type, merchant) hash-agg over the fact; both marginals
+    * and the total are window sums over those ≤ |types|·|merchants|
+    * cells, where the rollup runs too. */
+  def mutualInfo(ev: DataFrame): DataFrame =
+    ev.select(col("event_type"), get_json_object(col("props"), "$.k").as("merchant"))
+      .groupBy(col("event_type"), col("merchant")).agg(count(lit(1)).as("n"))
+      .withColumn("nt", sum(col("n")).over(Window.partitionBy(col("event_type"))))
+      .withColumn("nm", sum(col("n")).over(Window.partitionBy(col("merchant"))))
+      .withColumn("nn", sum(col("n")).over(Window.partitionBy()))
+      .filter(col("merchant").isNotNull) // counted in the type and total marginals only
       .select(col("event_type"), col("nt"),
         // one operand of each count product cast to double BEFORE the
         // multiply: BIGINT n*nn wraps silently in Spark past ~3e9
@@ -2119,8 +2075,6 @@ object Monitoring {
       .agg(max(col("nt")).as("n_events"), count(lit(1)).as("n_cells"),
         sum(col("term_scaled")).as("mi_scaled"))
       .withColumn("mi_part", trunc4(col("mi_scaled") / 1e8))
-      .localCheckpoint(true) // |types| rows; releases the cell cache
-  }
 
   /** k-anonymity risk audit (Sweeney 2002) — the privacy screen next
     * to the [[TextOps]] PII redaction and the right-to-erasure audit:
@@ -2301,14 +2255,17 @@ object Monitoring {
     * behind rnk ≤ topN.
     *
     * Composition is the point: four independently-verified detectors
-    * chain into one lazy plan — Catalyst sees all of it, and the four
-    * user_id windows/aggregates of the constituents each keep their
-    * own one-exchange shape. */
+    * chain into one lazy plan — Catalyst sees all of it. The detectors
+    * read the fact through `spread` on user_id, so every user-keyed
+    * window and aggregate of the constituents, the union, and both
+    * per-user rollups run on that one partitioning: no exchange
+    * between the scan and the top-`topN` queue. */
   def alertTriage(ev: DataFrame, topN: Int = 50): DataFrame = {
-    val s = structuring(ev).select(col("user_id"), lit("structuring").as("family"))
-    val v = velocityBursts(ev).select(col("user_id"), lit("velocity").as("family"))
-    val d = dormantAwakening(ev).select(col("user_id"), lit("dormant").as("family"))
-    val o = amountOutliers(ev).select(col("user_id"), lit("outlier").as("family"))
+    val u = graft.functions.Portable.spread(ev, col("user_id"))
+    val s = structuring(u).select(col("user_id"), lit("structuring").as("family"))
+    val v = velocityBursts(u).select(col("user_id"), lit("velocity").as("family"))
+    val d = dormantAwakening(u).select(col("user_id"), lit("dormant").as("family"))
+    val o = amountOutliers(u).select(col("user_id"), lit("outlier").as("family"))
     val per = s.unionByName(v).unionByName(d).unionByName(o)
       .groupBy(col("user_id"), col("family")).agg(count(lit(1)).as("n"))
       .groupBy(col("user_id"))
@@ -2583,25 +2540,35 @@ object Monitoring {
       .filter(col("np_before") === 0)
   }
 
-  def markovAttribution(ev: DataFrame, rounds: Int = 8): DataFrame = {
-    val S = 1000000000000L // 1e12 probability scale
+  /** The (src, dst) transitions of [[markovAttribution]]'s chain, one
+    * pass over the journey steps: each step emits up to three optional
+    * edges — START → first step, step → next step, and a non-purchase
+    * last step → DROP — through one `explode`, so the steps are never
+    * re-read per edge kind. */
+  private[graft] def markovEdges(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("jkey")).orderBy(col("ts_ms"), col("event_id"))
-    val cut = journeyCut(ev)
-    val steps = cut
+    val edge = (cond: Column, src: Column, dst: Column) =>
+      when(cond, struct(src.as("src"), dst.as("dst")))
+    journeyCut(ev)
       .withColumn("rn", row_number().over(w))
       .withColumn("nxt", lead(col("event_type"), 1).over(w))
-    val edges = steps.filter(col("rn") === 1)
-        .select(lit("START").as("src"), col("event_type").as("dst"))
-      .unionAll(steps.filter(col("nxt").isNotNull)
-        .select(col("event_type").as("src"), col("nxt").as("dst")))
-      .unionAll(steps.filter(col("nxt").isNull && col("event_type") =!= "purchase")
-        .select(col("event_type").as("src"), lit("DROP").as("dst")))
+      .select(explode(array(
+        edge(col("rn") === 1, lit("START"), col("event_type")),
+        edge(col("nxt").isNotNull, col("event_type"), col("nxt")),
+        edge(col("nxt").isNull && col("event_type") =!= "purchase",
+          col("event_type"), lit("DROP")))).as("e"))
+      .filter(col("e").isNotNull)
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+  }
+
+  def markovAttribution(ev: DataFrame, rounds: Int = 8): DataFrame = {
+    val S = 1000000000000L // 1e12 probability scale
     // the LAST fact-sized work: the (src, dst) transition counts
-    val tcnt = edges.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-      .withColumn("n_src", sum(col("n")).over(Window.partitionBy(col("src"))))
+    val counts = markovEdges(ev).groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
       .collect() // ≤ (|types|+2)² rows — bounded by the event-type DOMAIN
-      .map(r => (r.getAs[String]("src"), r.getAs[String]("dst"),
-        r.getAs[Long]("n"), r.getAs[Long]("n_src")))
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val nSrc = counts.groupMapReduce(_._1)(_._3)(_ + _)
+    val tcnt = counts.map { case (src, dst, n) => (src, dst, n, nSrc(src)) }
     // The removal-effect iteration runs DRIVER-SIDE (r12): the chain
     // grid is a constant of the schema (event-type domain + START/DROP
     // ≤ 7 states × 5 variants), while the relational loop paid a join +
@@ -2723,22 +2690,19 @@ object Monitoring {
     * (type, cents, n) bins; one per-type window over the bins
     * assigns each bin its weight inside the top k and finds the
     * (k+1)-th value; per-bin log terms floor to 1e6-scaled BIGINTs and
-    * the weighted sum is exact. The windows run over the value-domain-
-    * bounded bin relation — the [[winsorize]]/[[scoreAuc]] discipline. */
-  def tailIndex(ev: DataFrame, k: Long = 100L): DataFrame = Scope { s =>
-    val bins = ev
-      .select(col("event_type"), floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+    * the weighted sum is exact. The windows — the (k+1)-th value is
+    * the one bin straddling rank k — run over the value-domain-bounded
+    * bin relation — the [[winsorize]]/[[scoreAuc]] discipline. */
+  def tailIndex(ev: DataFrame, k: Long = 100L): DataFrame = {
+    val byType = Window.partitionBy(col("event_type"))
+    val byDesc = byType.orderBy(col("cents").desc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    ev.select(col("event_type"), floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .filter(col("cents") > 0)
       .groupBy(col("event_type"), col("cents")).agg(count(lit(1)).as("n"))
-    val byDesc = Window.partitionBy(col("event_type")).orderBy(col("cents").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // feeds the threshold lookup AND the weighted terms
-    val ranked = s.persist(bins
-      .withColumn("cum_before", coalesce(sum(col("n")).over(byDesc), lit(0L))))
-    val thr = ranked
-      .filter(col("cum_before") <= k && col("cum_before") + col("n") > k)
-      .select(col("event_type"), col("cents").as("xk1"))
-    ranked.join(broadcast(thr), "event_type")
+      .withColumn("cum_before", coalesce(sum(col("n")).over(byDesc), lit(0L)))
+      .withColumn("xk1", max(when(col("cum_before") <= k && col("cum_before") + col("n") > k,
+        col("cents"))).over(byType))
       .filter(col("cum_before") < k && col("cents") > col("xk1"))
       .withColumn("w", least(col("n"), lit(k) - col("cum_before")))
       .withColumn("term", col("w") *
@@ -2750,7 +2714,6 @@ object Monitoring {
         trunc4(col("hill_scaled") / 1e6 / lit(k.toDouble)).as("hill"),
         when(col("hill_scaled") > 0,
           trunc4(lit(k.toDouble) * 1e6 / col("hill_scaled"))).as("alpha"))
-      .localCheckpoint(true) // |types| rows; releases the bin cache
   }
 
   /** Value-at-Risk + Expected Shortfall (Artzner et al. 1999; the

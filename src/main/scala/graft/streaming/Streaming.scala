@@ -2030,7 +2030,7 @@ object Streaming {
       readBack: ReplayRun => T): T = {
     import java.nio.file.Files
     import org.apache.spark.sql.streaming.Trigger
-    val inSchema = spark.read.parquet(inDir).schema
+    val inSchema = graft.Tables.schemaOf(spark, inDir)
     val pins = (if (pinPartitions)
         Seq("spark.sql.shuffle.partitions" -> Some(ReplayPartitions.toString))
       else Nil) ++ rocksDb.toSeq.flatMap(stateStoreConf)

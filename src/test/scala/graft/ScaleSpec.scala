@@ -459,6 +459,71 @@ class ScaleSpec extends SparkSpec {
     assert(rs.contains("ReadSchema: struct<event_id:bigint>"), rs)
   }
 
+  /** Spark jobs `body` starts on this thread, counted by job group. A
+    * sentinel job run after it marks where the listener bus has caught
+    * up, since job events arrive asynchronously and in order. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"graft-jobs-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group/end", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$group/end") && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.contains(s"$group/end"), "the sentinel job never reached the listener")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables schema memo: a second read of the same file starts no Spark job") {
+    val dir = Files.createTempDirectory("graft-memo").toString
+    Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    assert(jobsIn(Tables.events(spark, dir)) >= 1, "the first read infers the schema")
+    assert(jobsIn(Tables.events(spark, dir)) === 0)
+    assert(Tables.events(spark, dir).count() === Tables.events(spark, sf).count())
+  }
+
+  test("Tables schema memo: a file rewritten at the same path is inferred again") {
+    val dir = Files.createTempDirectory("graft-memo").toString
+    spark.range(3).toDF("a").write.parquet(s"$dir/t.parquet")
+    assert(Tables.read(spark, dir, "t").columns.toSeq === Seq("a"))
+    spark.range(3).select(col("id").as("b"), lit("x").as("c"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Tables.read(spark, dir, "t")
+    assert(again.columns.toSeq === Seq("b", "c"))
+    assert(again.collect().map(_.getString(1)).toSeq === Seq("x", "x", "x"))
+  }
+
+  test("Tables schema memo: both events ts encodings still normalize") {
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    // the corpus file carries TIMESTAMP; a copy whose ts is raw epoch
+    // nanoseconds takes the LongType branch that TIMESTAMP(NANOS) takes
+    // under nanosAsLong
+    val dir = Files.createTempDirectory("graft-memo").toString
+    val ev = Tables.events(spark, sf)
+    ev.withColumn("ts", col("ts_ns")).drop("ts_ns", "ts_ms")
+      .write.parquet(s"$dir/events.parquet")
+    assert(Tables.schemaOf(spark, s"$dir/events.parquet")("ts").dataType === LongType)
+    val key = Seq(col("event_id"), col("ts"), col("ts_ns"), col("ts_ms"))
+    val want = ev.select(key: _*).collect().map(_.toString).sorted.toSeq
+    for (d <- Seq(sf, dir); _ <- 1 to 2) { // inferred or memoized, then memoized
+      val norm = Tables.events(spark, d)
+      assert(norm.schema("ts").dataType === TimestampType, d)
+      assert(norm.select(key: _*).collect().map(_.toString).sorted.toSeq === want, d)
+    }
+  }
+
   test("round-5 plan shapes: semantic pairing is an equi-join, zipf fit adds no third exchange") {
     // semanticDedup's within-cluster pairing must plan as an EQUI-join
     // on list_id (shuffle or broadcast), never a cartesian product —
@@ -796,6 +861,20 @@ class ScaleSpec extends SparkSpec {
       nodes.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
         .foreach(w => assert(collapsedBelow(w.child), w.treeString))
     }
+  }
+
+  test("forgetAudit is one aggregate over one events scan; markov edges explode, never union") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Union}
+    val ev = Tables.events(spark, sf)
+    val fa = graft.operators.Monitoring.forgetAudit(ev).queryExecution
+    val plan = fa.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+    assert("FileScan parquet".r.findAllIn(plan).length === 1, plan)
+    assert(fa.optimizedPlan.collect { case a: Aggregate => a }.length === 1, fa.optimizedPlan)
+    val edges = graft.operators.Monitoring.markovEdges(ev).queryExecution
+    assert(edges.optimizedPlan.collect { case u: Union => u }.isEmpty, edges.optimizedPlan)
+    assert("FileScan parquet".r.findAllIn(edges.executedPlan.toString).length === 1,
+      edges.executedPlan)
   }
 
   test("userEntropy: ONE fact exchange — aggregation and windows all reuse the spread partitioning") {
