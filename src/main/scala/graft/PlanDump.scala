@@ -23,12 +23,10 @@ object PlanDump {
     val names = args(2).split(",").toSeq.filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("GRAFT_MAXPLANSTR")
-      .fold(b0)(v => b0.config("spark.sql.maxPlanStringLength", v))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()

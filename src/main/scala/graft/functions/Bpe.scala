@@ -22,8 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen, no interpreted lambda, no UDF serialization. The merge
   * table rides the expression as a reference object (one HashMap per
   * JVM, not per row). The LEARN side (vocab-sized, see
-  * `TextOps.bpeLearn`) uses [[BpeMergeOnce]] for the per-round vocab
-  * rewrite.
+  * `TextOps.bpeLearn`) runs driver-side and rewrites its vocabulary
+  * with [[mergeOnce]].
   *
   * BPE's merge recursion is inherently per-row-iterative, so there is
   * no SQL rendering for a DuckDB oracle — the driver records the
@@ -105,19 +105,6 @@ object Bpe {
     new GenericArrayData(arr)
   }
 
-  /** Static entry point for [[BpeMergeOnce]]'s generated code. */
-  def mergeOnceArrayData(syms: ArrayData, x: UTF8String, y: UTF8String): ArrayData = {
-    val n = syms.numElements()
-    val in = new Array[String](n)
-    var i = 0
-    while (i < n) { in(i) = syms.getUTF8String(i).toString; i += 1 }
-    val out = mergeOnce(in, x.toString, y.toString)
-    val arr = new Array[Any](out.length)
-    i = 0
-    while (i < out.length) { arr(i) = UTF8String.fromString(out(i)); i += 1 }
-    new GenericArrayData(arr)
-  }
-
   def ranksOf(merges: Seq[String]): java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](merges.size * 2)
     merges.zipWithIndex.foreach { case (p, r) => m.put(p, Integer.valueOf(r)) }
@@ -150,38 +137,6 @@ object Bpe {
       copy(child = newChild)
   }
 
-  /** `bpe_merge_once(syms)`: one leftmost-nonoverlapping merge of the
-    * pair (x, y) over a symbol array — the learner's per-round vocab
-    * rewrite. */
-  case class BpeMergeOnce(child: Expression, x: String, y: String) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(_: StringType, _) | NullType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string>, got ${other.simpleString}")
-    }
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "bpe_merge_once"
-
-    @transient private lazy val ux = UTF8String.fromString(x)
-    @transient private lazy val uy = UTF8String.fromString(y)
-
-    override protected def nullSafeEval(input: Any): Any =
-      mergeOnceArrayData(input.asInstanceOf[ArrayData], ux, uy)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val rx = ctx.addReferenceObj("bpeX", ux, "org.apache.spark.unsafe.types.UTF8String")
-      val ry = ctx.addReferenceObj("bpeY", uy, "org.apache.spark.unsafe.types.UTF8String")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Bpe.mergeOnceArrayData($c, $rx, $ry);")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   def bpeTokens(text: Column, merges: Seq[String]): Column =
     GraftBridge.column(BpeTokens(GraftBridge.expression(text), merges))
-
-  def bpeMergeOnce(syms: Column, x: String, y: String): Column =
-    GraftBridge.column(BpeMergeOnce(GraftBridge.expression(syms), x, y))
 }

@@ -655,15 +655,14 @@ object Analytics {
     * Exactness: y components are 1e-3 rationals (integers y1m, y2m),
     * ratings are integer quantities, so a,b,c (λ included, 1e6 scale)
     * and d1,d2 (1e-3 scale) accumulate as exact BIGINTs — merge-order-
-    * free; each x component is ONE division of exact integers
-    * (numerator ≤ ~2^50 here; widen to DECIMAL(38,0) at 10⁹-item
-    * catalogs, the abCuped rule). Recommendation scores multiply
-    * identical doubles.
+    * free; each x component is ONE division of exact integers whose
+    * products form in DECIMAL(38,0) (the abCuped rule).
+    * Recommendation scores multiply identical doubles.
     *
     * Scale: ratings = one orders⋈lineitem⋈part chain into a (user,
     * brand) hash-agg; the solve is a per-user aggregate over ≤|brands|
-    * rows (map-side combined); scoring cross-joins the 5-user factor
-    * row set against the 25-brand LUT — both broadcast-sized. The
+    * rows (map-side combined); scoring cross-joins the broadcast
+    * 5-user factor row set against the 25-brand LUT. The
     * item half-step (re-solving Y from X) is the same plan transposed;
     * production alternates the two to convergence. */
   def alsHalfStep(orders: DataFrame, li: DataFrame, part: DataFrame,
@@ -673,11 +672,14 @@ object Analytics {
     // fixed item factors: y1 = 1.000, y2 = hash-centered in [-0.5, 0.5)
     def y2m(brand: Column): Column =
       pmod(hash60(concat(lit("als|"), brand)), lit(1000L)) - 500L
+    // the solve multiplies sums by sums: products form in DECIMAL(38,0)
+    val dec = (c: String) => col(c).cast("decimal(38,0)")
+    val det = (dec("a_s") * col("c_s") - dec("b_s") * col("b_s")).cast("double")
     // feeds the solve AND the rated-brand anti-join
     val ratings = s.persist(li.select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
       .join(orders.select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(part.select(col("p_partkey"), col("p_brand"))),
+      .join(part.select(col("p_partkey"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("o_custkey").as("u"), col("p_brand").as("brand"))
       .agg(sum(col("l_quantity").cast("long")).as("r")))
@@ -691,14 +693,13 @@ object Analytics {
         sum(col("y1m") * col("r")).as("d1_s"),
         sum(col("y2m") * col("r")).as("d2_s"))
       .select(col("u"),
-        ((col("c_s") * col("d1_s") - col("b_s") * col("d2_s")).cast("double") /
-          (col("a_s") * col("c_s") - col("b_s") * col("b_s")) * 1000).as("x1"),
-        ((col("a_s") * col("d2_s") - col("b_s") * col("d1_s")).cast("double") /
-          (col("a_s") * col("c_s") - col("b_s") * col("b_s")) * 1000).as("x2"))
+        ((dec("c_s") * col("d1_s") - dec("b_s") * col("d2_s")).cast("double") / det * 1000).as("x1"),
+        ((dec("a_s") * col("d2_s") - dec("b_s") * col("d1_s")).cast("double") / det * 1000).as("x2"))
       .filter(col("u").isin(probeUsers: _*))
     val brands = part.select(col("p_brand").as("brand")).distinct()
       .withColumn("y2m", y2m(col("brand")))
-    val scored = factors.join(broadcast(brands))
+    // the ≤ |probeUsers|-row factor side is the bounded one
+    val scored = broadcast(factors).join(brands)
       .join(ratings.select(col("u"), col("brand")), Seq("u", "brand"), "left_anti")
       .select(col("u"), col("brand"),
         (col("x1") * 1.0 + col("x2") * (col("y2m").cast("double") / 1000)).as("score"))

@@ -527,14 +527,6 @@ object Dedup {
     * run on the small residue. */
   def substringRuns(docs: DataFrame, minRun: Long = 10L,
       maxDf: Long = 50L): DataFrame = Scope { s =>
-    substringRunsPlan(s, docs, minRun, maxDf)
-      .localCheckpoint(true) // qualifying pairs ≪ corpus; releases kept
-  }
-
-  /** [[substringRuns]] before its eager checkpoint (plan-shape specs
-    * need the live plan), its `kept` shingles persisted in `s`. */
-  private[graft] def substringRunsPlan(s: Scope, docs: DataFrame, minRun: Long,
-      maxDf: Long): DataFrame = {
     val g = shingleRows(spread(docs), n = 3)
       .select(col("doc_id"), col("i"), hash60(col("s")).as("sh"))
     // both arms of the match join
@@ -556,6 +548,7 @@ object Dedup {
       .agg((max(col("run_shingles")) + 2).as("max_run_tokens"),
         count(lit(1)).as("n_runs"),
         (sum(col("run_shingles")) + count(lit(1)) * 2).as("total_tokens"))
+      .localCheckpoint(true) // qualifying pairs ≪ corpus; releases kept
   }
 
   /** MinHash fidelity audit — the dedup sibling of the ANN recall
@@ -731,45 +724,40 @@ object Dedup {
     * corpus parquet is scanned (and normalization computed) exactly
     * once for both join sides — the cached relation is ~`cap` bytes per
     * doc, two orders smaller than the raw text; the self-equi-join on
-    * the block key then shuffles only that narrow projection. */
+    * the block key then shuffles only that narrow projection.
+    *
+    * Blocks of more than 64 members are dropped: the hub guard the
+    * other pair generators already carry (coEdges' maxCell,
+    * containment's maxDf). A prefix block with hundreds of members is
+    * boilerplate — its Σ|block|² Levenshtein DPs dominate the whole
+    * job while identifying nothing (the full-board sf1 run measured
+    * 16× for 10× data through one such block before the cap existed).
+    * Dropped blocks are dropped WHOLE, so the kept pair set is still
+    * exact within every surviving block — the containment-maxDf trade,
+    * documented not hidden. */
   def fuzzyEditPairs(docs: DataFrame, maxDist: Int = 2, cap: Int = 120): DataFrame =
     Scope { s =>
-      fuzzyEditPairsPlan(s, docs, maxDist, cap)
+      val maxBlock = 64L
+      // spread BEFORE persist: the corpus parquet arrives as 1-2 splits,
+      // which would serialize the O(cap²) Levenshtein DP on 1-2 cores —
+      // the probe side's parallelism is the cached relation's (measured
+      // 5.2 s → ~1 s at sf0.1 local[32])
+      val base = s.persist(spread(
+        typoCorpus(docs)
+          .select(col("doc_id"), substring(col("nt"), 1, cap).as("t"))
+          .withColumn("blk", substring(col("t"), 1, 12))
+          .withColumn("blk_n", count(lit(1)).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("blk"))))
+          .filter(col("blk_n") <= maxBlock)
+          .drop("blk_n")))
+      val a = base.select(col("blk"), col("doc_id").as("id_a"), col("t").as("t_a"))
+      val b = base.select(col("blk"), col("doc_id").as("id_b"), col("t").as("t_b"))
+      a.join(b, Seq("blk")).filter(col("id_a") < col("id_b"))
+        .withColumn("dist", levenshtein(col("t_a"), col("t_b")).cast("long"))
+        .filter(col("dist") <= maxDist)
+        .select(col("id_a"), col("id_b"), col("dist"))
         .localCheckpoint(true) // pair list is small; frees the cache
     }
-
-  /** [[fuzzyEditPairs]] without the eager checkpoint, its base
-    * persisted in `s`, for plan inspection.
-    *
-    * `maxBlock` is the hub guard the other pair generators already
-    * carry (coEdges' maxCell, containment's maxDf): a prefix block
-    * with hundreds of members is boilerplate — its Σ|block|²
-    * Levenshtein DPs dominate the whole job while identifying nothing
-    * (the full-board sf1 run measured 16× for 10× data through one
-    * such block before the cap existed). Dropped blocks are dropped
-    * WHOLE, so the kept pair set is still exact within every surviving
-    * block — the containment-maxDf trade, documented not hidden. */
-  private[graft] def fuzzyEditPairsPlan(s: Scope, docs: DataFrame, maxDist: Int = 2,
-      cap: Int = 120, maxBlock: Long = 64L): DataFrame = {
-    // spread BEFORE persist: the corpus parquet arrives as 1-2 splits,
-    // which would serialize the O(cap²) Levenshtein DP on 1-2 cores —
-    // the probe side's parallelism is the cached relation's (measured
-    // 5.2 s → ~1 s at sf0.1 local[32])
-    val base = s.persist(spread(
-      typoCorpus(docs)
-        .select(col("doc_id"), substring(col("nt"), 1, cap).as("t"))
-        .withColumn("blk", substring(col("t"), 1, 12))
-        .withColumn("blk_n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("blk"))))
-        .filter(col("blk_n") <= maxBlock)
-        .drop("blk_n")))
-    val a = base.select(col("blk"), col("doc_id").as("id_a"), col("t").as("t_a"))
-    val b = base.select(col("blk"), col("doc_id").as("id_b"), col("t").as("t_b"))
-    a.join(b, Seq("blk")).filter(col("id_a") < col("id_b"))
-      .withColumn("dist", levenshtein(col("t_a"), col("t_b")).cast("long"))
-      .filter(col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("dist"))
-  }
 
   /** Containment near-subset detection: documents whose 3-shingle set
     * is ≥ `threshold` CONTAINED in another document's — the asymmetric

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Scope, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -235,7 +235,8 @@ object Graph {
       .withColumn("n_tri", coalesce(col("n_tri"), lit(0L)))
       .filter(col("deg") >= 2L)
       .withColumn("coef", graft.functions.Portable.trunc4(
-        col("n_tri") * lit(2.0) / (col("deg") * (col("deg") - lit(1L)))))
+        col("n_tri") * lit(2.0) /
+          (col("deg").cast("decimal(38,0)") * (col("deg") - lit(1L))).cast("double")))
       .localCheckpoint(true) // one row per qualifying node
   }
 
@@ -570,25 +571,14 @@ object Graph {
     * (ranked by the two-phase parallel [[ScaleOps.globalRank]],
     * never a one-task global window), and the anti-join runs on
     * candidate keys only. Dedup keeps one row per undirected pair;
-    * self-picks drop. */
-  def negativeEdges(ev: DataFrame, k: Int = 5): DataFrame = Scope { s =>
-    negativeEdgesPlan(s, ev, k)
-      .localCheckpoint(true) // ≤ |nodes|·k rows; releases the um cache
-  }
-
-  /** [[negativeEdges]] before its eager checkpoint (ScaleSpec pins the
-    * plan shape here — the checkpoint hides the inner pipeline).
+    * self-picks drop.
     *
-    * Scale posture of the node indexing: the rank over the merchant
-    * relation runs through [[ScaleOps.globalRank]]'s two-phase
-    * range-partitioned rank (a bare `Window.orderBy` would drag every
-    * node through ONE task — the collapsed relation is merchant-sized,
-    * which at a 10⁹-node graph is still 10⁹ rows), and the rn→partner
-    * join carries NO forced broadcast: the node list is data-dependent,
-    * so the join strategy is left to the planner/AQE, which broadcasts
-    * exactly when the relation actually fits. The only forced
-    * broadcast is the 1-row count. */
-  private[graft] def negativeEdgesPlan(s: Scope, ev: DataFrame, k: Int = 5): DataFrame = {
+    * The rn→partner join carries NO forced broadcast: the node list is
+    * data-dependent (merchant-sized, which at a 10⁹-node graph is still
+    * 10⁹ rows), so the join strategy is left to the planner/AQE, which
+    * broadcasts exactly when the relation actually fits. The only
+    * forced broadcast is the 1-row count. */
+  def negativeEdges(ev: DataFrame, k: Int = 5): DataFrame = Scope { s =>
     // feeds the node list AND the true edge set
     val um = s.persist(userMerchant(ev).filter(col("m").isNotNull)
       .select(col("user_id"), col("m").cast("long").as("m")).distinct())
@@ -615,6 +605,7 @@ object Graph {
       .select(col("a.m").as("m1"), col("b.m").as("m2")).distinct()
     picks.join(edges, Seq("m1", "m2"), "left_anti")
       .select(col("m1"), col("m2"), lit(0L).as("label"))
+      .localCheckpoint(true) // ≤ |nodes|·k rows; releases the um cache
   }
 
   /** HITS hub/authority over the bipartite user–merchant graph: a
@@ -966,13 +957,15 @@ object Graph {
     val e = s.persist(e0.select(col("u1").as("s"), col("u2").as("d"))
       .unionAll(e0.select(col("u2").as("s"), col("u1").as("d"))))
     val deg = e.groupBy(col("s")).agg(count(lit(1)).as("deg"))
+    val dec = (c: Column) => c.cast("decimal(38,0)") // degree products
     val m = e
       .join(deg.select(col("s"), col("deg").as("x")), "s")
       .join(deg.select(col("s").as("d"), col("deg").as("y")), "d")
       .agg(count(lit(1)).as("m"), countDistinct(col("s")).as("n_nodes"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sx2"), sum(col("y") * col("y")).as("sy2"))
+        sum(dec(col("x")) * col("y")).cast("long").as("sxy"),
+        sum(dec(col("x")) * col("x")).cast("long").as("sx2"),
+        sum(dec(col("y")) * col("y")).cast("long").as("sy2"))
     val mx = col("sx") / col("m")
     val my = col("sy") / col("m")
     val num = col("sxy") / col("m") - mx * my

@@ -476,10 +476,8 @@ object Monitoring {
     * overlap; a day-boundary end ((t−1) div D) does not occupy the
     * next bucket. Open intervals are excluded (no measurable
     * duration). */
-  /** [[intervalOverlaps]]' lazy plan, its base persisted in `s`, for
-    * plan inspection (ScaleSpec) and the public wrapper. */
-  private[graft] def intervalOverlapsPlan(s: Scope, ev: DataFrame, status: String,
-      minDurMs: Long): DataFrame = {
+  def intervalOverlaps(ev: DataFrame, status: String = "error",
+      minDurMs: Long = 7200000L): DataFrame = Scope { s =>
     val D = 86400000L
     // both join arms read the slim 3-column relation
     val iv = s.persist(scd2(ev)
@@ -496,11 +494,6 @@ object Monitoring {
       .groupBy(col("u1"), col("u2"))
       .agg(count(lit(1)).as("n_overlaps"),
         sum(least(col("t1"), col("t2")) - greatest(col("f1"), col("f2"))).as("overlap_ms"))
-  }
-
-  def intervalOverlaps(ev: DataFrame, status: String = "error",
-      minDurMs: Long = 7200000L): DataFrame = Scope { s =>
-    intervalOverlapsPlan(s, ev, status, minDurMs)
       .localCheckpoint(true) // ≤ C(users,2) rows; releases iv
   }
 
@@ -1270,15 +1263,6 @@ object Monitoring {
     * through one task. The three score branches join back on the
     * shared user_id partitioning. */
   def rfm(ev: DataFrame): DataFrame = Scope { s =>
-    // |users|-row result: the eager checkpoint stands in for the
-    // production parquet sink and releases the cached relations
-    rfmPlan(s, ev).localCheckpoint(true)
-  }
-
-  /** [[rfm]] without the eager checkpoint, its cached relations
-    * (per-user base + the three ranged relations) persisted in `s`,
-    * for plan inspection. */
-  private[graft] def rfmPlan(s: Scope, ev: DataFrame): DataFrame = {
     val per = ev.groupBy(col("user_id")).agg(
       max(to_date(col("ts"))).as("last_day"),
       count(lit(1)).as("freq"),
@@ -1296,6 +1280,9 @@ object Monitoring {
     val m = score(Seq(col("cents").desc, col("user_id")), "m")
     base.join(r, "user_id").join(f, "user_id").join(m, "user_id")
       .withColumn("segment", col("r") * 100L + col("f") * 10L + col("m"))
+      // |users|-row result: the eager checkpoint stands in for the
+      // production parquet sink and releases the cached relations
+      .localCheckpoint(true)
   }
 
   /** Exact integer ⌊a/b⌋ via double division — exact while a < 2⁵²
@@ -1818,7 +1805,7 @@ object Monitoring {
       .withColumn("n", coalesce(col("n"), lit(0L)))
     val stats = dense.groupBy(col("event_type"))
       .agg(count(lit(1)).as("k"), sum(col("n")).as("s"),
-        sum(col("n") * col("n")).as("s2"))
+        sum(col("n").cast("decimal(38,0)") * col("n")).cast("long").as("s2"))
     dense.join(broadcast(stats), "event_type")
       .withColumn("mu", col("s") / col("k"))
       .withColumn("sd", sqrt(col("s2") / col("k") - (col("s") / col("k")) * (col("s") / col("k"))))

@@ -589,7 +589,7 @@ object ScaleOps {
   /** Hub-cap audit — every silent truncation the pair generators
     * perform, made VISIBLE as data: one row per hub guard
     * ([[Graph.coEdges]]' maxCell, [[Dedup.containmentPairs]]' and
-    * [[Dedup.substringRuns]]' maxDf, [[Dedup.fuzzyEditPairsPlan]]'
+    * [[Dedup.substringRuns]]' maxDf, [[Dedup.fuzzyEditPairs]]'
     * maxBlock) reporting how many groups the cap would drop and how
     * many member rows those groups carry. The caps are the right scale
     * trade (a stadium-sized cell / boilerplate shingle identifies

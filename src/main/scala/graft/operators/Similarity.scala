@@ -215,10 +215,15 @@ object Similarity {
     * IEEE doubles), so `floor` of it is engine-independent. */
   val QScale = 1048576.0
 
-  /** Seed coarse centroids: the embeddings of vec_id < k. */
+  /** Seed coarse centroids: the embeddings of vec_id 0 until k, a
+    * literal id slice, so the seed relation is at most k rows by its
+    * plan and safe to broadcast at any scale. */
   private[graft] def seedCentroids(v: DataFrame, k: Int = NList): DataFrame =
-    v.filter(col("vec_id") < k)
+    v.filter(col("vec_id").isin(0 until k: _*))
       .select(col("vec_id").cast("int").as("cid"), col("e").as("ce"))
+
+  /** [[seedCentroids]]' slice as an oracle SQL predicate. */
+  private def seedSliceSql(k: Int): String = s"vec_id IN (${(0 until k).mkString(", ")})"
 
   /** argmax-cosine assignment of every vector to its centroid, via a
     * broadcast of the NList centroids and a `max_by` hash aggregate —
@@ -354,11 +359,7 @@ object Similarity {
     * aggregates are order-independent, so the result is engine-exact;
     * the oracle retrains the same k-means (exact quantized sums) and
     * replays the same pairing. */
-  /** [[semanticDedup]]'s lazy plan, its inputs persisted in `s`, for
-    * plan inspection (ScaleSpec pins the pairing join shape) and the
-    * eager public wrapper. */
-  private[graft] def semanticDedupPlan(s: Scope, emb: DataFrame,
-      threshold: Double): DataFrame = {
+  def semanticDedup(emb: DataFrame, threshold: Double = 0.4): DataFrame = Scope { s =>
     val v = s.persist(withEmbD(emb)) // training + assignment + pairing passes
     val cents = trainedCentroids(v).localCheckpoint(true)
     val vl = s.persist(v.join(assignTo(v, cents), "vec_id"))
@@ -370,10 +371,7 @@ object Similarity {
     pairs.groupBy(col("vec_id"))
       .agg(min(col("a_id")).as("dup_of"), count(lit(1)).as("n_dups"),
         max(col("cos")).as("best_cos"))
-  }
-
-  def semanticDedup(emb: DataFrame, threshold: Double = 0.4): DataFrame = Scope { s =>
-    semanticDedupPlan(s, emb, threshold).localCheckpoint(true) // dropped set ≪ corpus
+      .localCheckpoint(true) // dropped set ≪ corpus
   }
 
   /** IVF index health audit — the report an ANN deployment reads
@@ -444,14 +442,6 @@ object Similarity {
     * probe join prunes at the scan. */
   def knnLabelEval(emb: DataFrame, holdMod: Long = 7L, k: Int = 5,
       maxPerList: Int = 64): DataFrame = Scope { s =>
-    knnLabelEvalPlan(s, emb, holdMod, k, maxPerList).localCheckpoint(true) // ≤ #labels rows
-  }
-
-  /** [[knnLabelEval]]'s lazy plan, its input persisted in `s`, for plan
-    * inspection (ScaleSpec pins the probe join's build side as the
-    * capped index, never the held-out query slice). */
-  private[graft] def knnLabelEvalPlan(s: Scope, emb: DataFrame, holdMod: Long = 7L,
-      k: Int = 5, maxPerList: Int = 64): DataFrame = {
     val v = s.persist(withEmbD(emb)) // split + training + assign + probe
     val lbl = emb.select(col("vec_id"), col("label").cast("long").as("label"))
     val tr = v.filter(pmod(col("vec_id"), lit(holdMod)) =!= 0)
@@ -495,6 +485,7 @@ object Similarity {
         sum(when(col("pred").isNull, 1L).otherwise(0L)).as("n_unclassified"))
       .select(col("true_label"), col("n"), col("n_correct"), col("n_unclassified"),
         trunc4(col("n_correct").cast("double") / col("n")).as("accuracy"))
+      .localCheckpoint(true) // ≤ #labels rows
   }
 
   /** Incremental IVF maintenance audit — the report behind the
@@ -647,14 +638,6 @@ object Similarity {
     * thinning, and scoring with identical tie-breaks. */
   def simDecontam(emb: DataFrame, holdMod: Long = 7L, threshold: Double = 0.4,
       maxPerList: Int = 64): DataFrame = Scope { s =>
-    simDecontamPlan(s, emb, holdMod, threshold, maxPerList)
-      .localCheckpoint(true) // contaminated slice ≪ corpus
-  }
-
-  /** [[simDecontam]]'s lazy plan, its input persisted in `s`, for plan
-    * inspection (ScaleSpec pins the probe join as an equi-join). */
-  private[graft] def simDecontamPlan(s: Scope, emb: DataFrame, holdMod: Long = 7L,
-      threshold: Double = 0.4, maxPerList: Int = 64): DataFrame = {
     val v = s.persist(withEmbD(emb)) // split + training + assign + probe passes
     val tr = v.filter(pmod(col("vec_id"), lit(holdMod)) =!= 0)
     val ho = v.filter(pmod(col("vec_id"), lit(holdMod)) === 0)
@@ -683,6 +666,7 @@ object Similarity {
       .groupBy(col("q_id"))
       .agg(min(col("vec_id")).as("train_match"),
         count(lit(1)).as("n_matches"), max(col("cos")).as("best_cos"))
+      .localCheckpoint(true) // contaminated slice ≪ corpus
   }
 
   /** Embedding-cosine near-dup pairs: LSH band join (no cross join),
@@ -863,11 +847,10 @@ object Similarity {
     * to int8 under one global scale (the [[vectorDq]] discipline), the
     * centroid is the per-(label, dim) BIGINT sum sv with count n, and
     * each vector's distance is compared via d²·n² = Σ_d (qx·n − sv)² —
-    * integer algebra that avoids dividing the centroid. Real headroom:
-    * |qx·n − sv| ≤ 254·n, so ONE squared term hits 2⁶³ at
-    * n ≈ 1.2e7 per label and the worst-case 64-dim sum at n ≈ 1.5e6;
-    * beyond that lift the squared terms to DECIMAL(38,0) (or divide
-    * sv's contribution through by n first at a precision cost).
+    * integer algebra that avoids dividing the centroid. The squared
+    * terms form and sum in DECIMAL(38,0); d²·n² reports as BIGINT,
+    * whose headroom (|qx·n − sv| ≤ 254·n) ends at n ≈ 1.5e6 per label
+    * for a worst-case 64-dim sum — an error rather than a wrap beyond.
     *
     * Scale: one posexplode pass (n·dims narrow rows), the
     * labels×dims centroid relation broadcasts, and the per-vector
@@ -892,9 +875,10 @@ object Similarity {
       .agg(sum(col("qx")).as("sv"), count(lit(1)).as("n"))
     val dev = q.join(broadcast(cent), Seq("label", "d"))
       .select(col("vec_id"), col("label"), col("n"),
-        ((col("qx") * col("n") - col("sv")) * (col("qx") * col("n") - col("sv"))).as("t2"))
+        ((col("qx") * col("n") - col("sv")).cast("decimal(38,0)") *
+          (col("qx") * col("n") - col("sv"))).as("t2"))
     val perVec = dev.groupBy(col("vec_id"), col("label"))
-      .agg(sum(col("t2")).as("d2n2"), max(col("n")).as("n"))
+      .agg(sum(col("t2")).cast("long").as("d2n2"), max(col("n")).as("n"))
     val w = Window.partitionBy(col("label")).orderBy(col("d2n2").desc, col("vec_id"))
     perVec
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -1396,12 +1380,13 @@ object Similarity {
           floor(col("x") / col("gs") + 0.5).cast("long")))).otherwise(0L).as("qv"))
     val s = sc.persist(codes.groupBy(col("label"), col("i"))
       .agg(sum(col("qv")).as("s")))
-    val n2 = s.groupBy(col("label")).agg(sum(col("s") * col("s")).as("n2"))
+    val n2 = s.groupBy(col("label"))
+      .agg(sum(col("s").cast("decimal(38,0)") * col("s")).as("n2"))
     val cnt = v.groupBy(col("label")).agg(count(lit(1)).as("n"))
     val dots = s.as("a").join(s.as("b"),
         col("a.i") === col("b.i") && col("a.label") < col("b.label"))
       .groupBy(col("a.label").as("label_a"), col("b.label").as("label_b"))
-      .agg(sum(col("a.s") * col("b.s")).as("dot"))
+      .agg(sum(col("a.s").cast("decimal(38,0)") * col("b.s")).as("dot"))
     dots
       .join(broadcast(n2.select(col("label").as("label_a"), col("n2").as("na2"))), "label_a")
       .join(broadcast(n2.select(col("label").as("label_b"), col("n2").as("nb2"))), "label_b")
@@ -1761,7 +1746,7 @@ object Similarity {
           // the bm25TopK term formula, 1e6-scaled BIGINT terms
           floor((log(lit(1.0) + (col("nd") - col("df") + 0.5) / (col("df") + 0.5)) *
             (col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len") * col("nd") / col("tt"))))) * 1e6)
+            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * ((col("len").cast("decimal(38,0)") * col("nd")).cast("double") / col("tt"))))) * 1e6)
             .cast("long").as("term_scaled"))
         .groupBy(col("q_id"), col("doc_id"))
         .agg(sum(col("term_scaled")).as("t_scaled"))
@@ -2309,7 +2294,7 @@ object Similarity {
       .map(i => kmAssignSql(s"c$i", i, "ks") + ", " + kmUpdateSql(i)).mkString(", ")
     "ks AS (SELECT vec_id, e FROM v " +
       "WHERE ('0x'||substr(md5('kms|'||vec_id),1,15))::BIGINT % 4 = 0), " +
-      s"c0 AS (SELECT vec_id::INT cid, e ce FROM v WHERE vec_id < $NList), " +
+      s"c0 AS (SELECT vec_id::INT cid, e ce FROM v WHERE ${seedSliceSql(NList)}), " +
       train + ", " + kmAssignSql(s"c$KmIters", KmIters, "v")
   }
 
@@ -2337,7 +2322,7 @@ object Similarity {
       .map(i => assignSql(s"${p}c$i", i, s"${p}ks") + ", " + updateSql(i)).mkString(", ")
     s"${p}ks AS (SELECT vec_id, e FROM $rel " +
       "WHERE ('0x'||substr(md5('kms|'||vec_id),1,15))::BIGINT % 4 = 0), " +
-      s"${p}c0 AS (SELECT vec_id::INT cid, e ce FROM $rel WHERE vec_id < $NList), " +
+      s"${p}c0 AS (SELECT vec_id::INT cid, e ce FROM $rel WHERE ${seedSliceSql(NList)}), " +
       train + ", " + assignSql(s"${p}c$KmIters", KmIters, rel)
   }
 
@@ -2390,7 +2375,7 @@ object Similarity {
       .map(i => assignSql(s"ii_c$i", i, "ii_ks") + ", " + updateSql(i)).mkString(", ")
     "ii_ks AS (SELECT vec_id, e FROM v " +
       "WHERE ('0x'||substr(md5('kms|'||vec_id),1,15))::BIGINT % 4 = 0), " +
-      s"ii_c0 AS (SELECT vec_id::INT cid, e ce FROM dc_tr WHERE vec_id < $NList), " +
+      s"ii_c0 AS (SELECT vec_id::INT cid, e ce FROM dc_tr WHERE ${seedSliceSql(NList)}), " +
       train
   }
 
@@ -2457,7 +2442,7 @@ object Similarity {
     s"vm$m AS (SELECT vec_id, e[$lo:$hi] e FROM v), " +
       s"km$m AS (SELECT vec_id, e FROM vm$m " +
       "WHERE ('0x'||substr(md5('kms|'||vec_id),1,15))::BIGINT % 4 = 0), " +
-      s"pc${m}_0 AS (SELECT vec_id::INT cid, e ce FROM vm$m WHERE vec_id < $PqKs), " +
+      s"pc${m}_0 AS (SELECT vec_id::INT cid, e ce FROM vm$m WHERE ${seedSliceSql(PqKs)}), " +
       steps + ", " +
       s"pf$m AS (SELECT vec_id, cid::BIGINT code, ccos sub_cos FROM " +
       "(SELECT vec_id, cid, ccos, row_number() OVER " +

@@ -563,9 +563,10 @@ object Sketches {
     * report carries each estimator, their mean, and the exact F₂ with
     * relative error.
     *
-    * Exactness & scale: Z is an exact BIGINT (|Z| ≤ n); Z² stays
-    * integral (≲ 2^63 to ~3·10⁹ rows; DECIMAL(38,0) beyond — in
-    * practice |Z| concentrates near √F₂, far smaller). The sketch
+    * Exactness & scale: Z is an exact BIGINT (|Z| ≤ n); Z² and F₂
+    * form in DECIMAL(38,0) and report as BIGINT (exact to ~3·10⁹
+    * rows, an error rather than a wrap beyond — in practice |Z|
+    * concentrates near √F₂, far smaller). The sketch
     * pass explodes `depth` narrow rows per event into ONE map-side-
     * combined 8-cell aggregate; the exact pass is one (user) hash-agg
     * the 100 TB deployment would skip. */
@@ -578,8 +579,8 @@ object Sketches {
           col("k").cast("string"))), lit(2L)))
       .groupBy(col("i")).agg(sum(col("s")).as("z"))
     val exact = base.groupBy(col("k")).agg(count(lit(1)).as("f"))
-      .agg(sum(col("f") * col("f")).as("f2"))
-    z.withColumn("est", col("z") * col("z"))
+      .agg(sum(col("f").cast("decimal(38,0)") * col("f")).cast("long").as("f2"))
+    z.withColumn("est", (col("z").cast("decimal(38,0)") * col("z")).cast("long"))
       .withColumn("mean_est", avg(col("est")).over(Window.partitionBy()))
       .crossJoin(broadcast(exact))
       .select(col("i").cast("long").as("i"), col("z"), col("est"), col("f2"),

@@ -212,8 +212,8 @@ object SqlCoverage {
       .crossJoin(broadcast(total))
       .select(col("type_a"), col("type_b"), col("c_ab"), col("n_a"), col("n_b"),
         graft.functions.Portable.trunc4(
-          (col("n_sessions") * col("c_ab")).cast("double") /
-            (col("n_a") * col("n_b"))).as("lift"))
+          (col("n_sessions").cast("decimal(38,0)") * col("c_ab")).cast("double") /
+            (col("n_a").cast("decimal(38,0)") * col("n_b")).cast("double")).as("lift"))
       .localCheckpoint(true) // |types|²/2 rows
   }
 
@@ -235,12 +235,6 @@ object SqlCoverage {
     * All measures are integer cent sums; shares divide two exact
     * integers. */
   def decileStats(ev: DataFrame): DataFrame = Scope { s =>
-    decileStatsPlan(s, ev).localCheckpoint(true) // 10 rows; releases bins
-  }
-
-  /** [[decileStats]] without the eager checkpoint, its bin relation
-    * persisted in `s`, for plan inspection. */
-  private[graft] def decileStatsPlan(s: Scope, ev: DataFrame): DataFrame = {
     val cents = ev.select(floor(col("value") * 100 + 0.5).cast("long").as("cents"))
     val bins = s.persist(cents.groupBy(col("cents")).agg(count(lit(1)).as("c")))
     // cumulative row positions over the BIN relation (the only global
@@ -272,6 +266,7 @@ object SqlCoverage {
         col("sum_cents"),
         graft.functions.Portable.trunc4(
           col("sum_cents").cast("double") / col("total_cents")).as("share"))
+      .localCheckpoint(true) // 10 rows; releases bins
   }
 
   /** Marketing-attribution join: for every purchase, the user's most

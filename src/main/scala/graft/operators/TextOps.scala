@@ -331,10 +331,8 @@ object TextOps {
     * order), with the tiny ≤`buckets`-row LUT broadcast to the doc
     * side. At 100 TB: scan-bound, one narrow shuffle of (doc, bucket)
     * pairs, LUT broadcast — the same profile as tfidf. */
-  /** [[dsirWeights]]' lazy plan, its base persisted in `s`, for plan
-    * inspection (ScaleSpec) and the public wrapper. */
-  private[graft] def dsirWeightsPlan(s: Scope, docs: DataFrame, buckets: Long,
-      benchMod: Long): DataFrame = {
+  def dsirWeights(docs: DataFrame, buckets: Long = 1024L,
+      benchMod: Long = 97L): DataFrame = Scope { s =>
     import org.apache.spark.sql.expressions.Window
     // feeds target counts, raw counts, and the doc sums
     val bg = s.persist(graft.functions.TextHash
@@ -359,11 +357,6 @@ object TextOps {
       .agg(count(lit(1)).as("n_bigrams"), sum(col("term_scaled")).as("w_scaled"))
       .withColumn("avg_logratio",
         graft.functions.Portable.trunc4(col("w_scaled") / 1e6 / col("n_bigrams")))
-  }
-
-  def dsirWeights(docs: DataFrame, buckets: Long = 1024L,
-      benchMod: Long = 97L): DataFrame = Scope { s =>
-    dsirWeightsPlan(s, docs, buckets, benchMod)
       .localCheckpoint(true) // one narrow row per doc; releases bg
   }
 
@@ -820,53 +813,27 @@ object TextOps {
 
   /** Learn a BPE merge list from the corpus — the standard two-regime
     * tokenizer-training shape (Sennrich et al. 2016): ONE corpus-sized
-    * pass builds the (word, frequency) vocabulary, then every round
-    * runs on the VOCAB (thousands of rows however big the corpus is):
-    * count adjacent symbol pairs weighted by word frequency, pick the
-    * most frequent (ties broken lexicographically — fully
-    * deterministic), rewrite the vocab with [[graft.functions.Bpe
-    * .BpeMergeOnce]]. The per-round argmax collects ≤ `batchM`+1 rows —
-    * merge DECISIONS, not data — mirroring how the IVF k-means loop
-    * carries centroid literals. The interpreted `transform` building
-    * pair keys is vocab-sized by the same argument (the corpus-sized
-    * hot loop is the native apply expression, never this).
-    *
-    * BATCHED rounds, provably identical merges: each round accepts the
-    * longest ranked-candidate prefix that is (a) pairwise
-    * symbol-DISJOINT and (b) strictly above the first unaccepted
-    * candidate's count. Equivalence to one-merge-per-round: merging a
-    * disjoint pair leaves the others' counts untouched, and a NEW pair
-    * born of a merge (x, ab) inherits adjacency from an old pair
-    * sharing a symbol with it ((x, a)), so its count is ≤ that old
-    * sharing pair's ≤ the first-unaccepted count < every accepted
-    * count — no new pair can outrank (or tie-break into) the accepted
-    * prefix. Conflicts or flat count ties simply shrink the batch —
-    * worst case one merge per round, the sequential learner exactly.
-    * Cuts the 2·nMerges driver round-trips ~batchM× on real corpora.
+    * pass builds the (word, frequency) vocabulary, then the merge loop
+    * runs driver-side over that vocabulary, one merge per round — the
+    * textbook sequential learner the DuckDB oracle unrolls
+    * ([[bpeOracleCtes]]): count adjacent symbol pairs weighted by word
+    * frequency, merge the (max count, lexicographically-smallest) pair
+    * with [[graft.functions.Bpe.mergeOnce]], repeat.
     *
     * Pair counts include overlapping occurrences ("aaa" counts (a,a)
     * twice) — the textbook counting; the REWRITE is leftmost-
     * nonoverlapping, matching the apply side exactly. */
-  def bpeLearn(docs: DataFrame, nMerges: Int = 32, batchM: Int = 8): Seq[String] = {
-    require(batchM >= 1, s"batchM must be >= 1 (got $batchM)")
-    // ONE distributed pass — the corpus-wide word-count aggregate, the
-    // only corpus-sized work a BPE learner has. The merge loop itself
-    // runs DRIVER-SIDE over the collected vocabulary (r12): the vocab
-    // is bounded by the LANGUAGE, not the corpus — production trainers
-    // (SentencePiece/GPT-2 reference) hold exactly these word counts in
-    // memory — while the relational loop paid 2–3 Spark actions per
-    // accepted merge (measured 88 jobs per learner at nMerges=32,
-    // ~60 ms driver round-trip each, dominating all four q_bpe_*
-    // queries). Semantics are EXACTLY the textbook one-merge-per-round
-    // sequential learner the DuckDB oracle unrolls (bpeOracleCtes):
-    // count adjacent symbol pairs weighted by word frequency, merge the
-    // (max count, lexicographically-smallest) pair, rewrite, repeat.
-    // Symbols split by CODE POINT (Spark's substring(w, i, 1) unit) and
-    // pair ties compare as unsigned UTF-8 bytes — the same order
-    // Spark's string sort used here before. batchM is retained for API
-    // compatibility: batched rounds existed only to cut Spark actions,
-    // and the driver loop IS the sequential reference they were proven
-    // against (BpeSpec pins batch ≡ sequential on the real corpus).
+  def bpeLearn(docs: DataFrame, nMerges: Int = 32): Seq[String] = {
+    // The word-count aggregate is the only corpus-sized work a BPE
+    // learner has; each merge round is a pass over the in-memory
+    // vocabulary, not a Spark action. Symbols split by CODE POINT
+    // (Spark's substring(w, i, 1) unit) and pair ties compare as
+    // unsigned UTF-8 bytes, the order the oracle's string sort uses.
+    //
+    // The collect is bounded by the LANGUAGE, not the corpus: one row
+    // per distinct whitespace word, a set that grows sublinearly in the
+    // corpus (Heaps' law) — production trainers (SentencePiece, the
+    // GPT-2 reference) hold exactly these word counts in memory.
     val vocabRows = docs
       .select(explode(graft.functions.TextHash.tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
@@ -939,10 +906,9 @@ object TextOps {
     * Oracled since round 8: the DuckDB side replays the textbook
     * ONE-merge-per-round sequential learner, UNROLLED `nMerges`
     * rounds deep as generated SQL ([[bpeOracleCtes]]) — so the gate
-    * simultaneously checks the per-doc accounting AND the batched
-    * learner's equivalence theorem ([[bpeLearn]]'s disjoint-prefix
-    * batching must produce exactly the sequential merge order, or the
-    * final vocab diverges and every count goes red). The greedy
+    * simultaneously checks the per-doc accounting AND the learner's
+    * merge order (a single reordered merge changes the final vocab and
+    * every count goes red). The greedy
     * lowest-rank apply equals in-learned-order application (each
     * merge's operands exist only after all lower-rank merges — the
     * GPT-2 encoder equivalence), which is what lets the oracle score
@@ -1215,8 +1181,8 @@ object TextOps {
       .join(broadcast(cy.withColumnRenamed("w2", "wy")), col("w2") === col("wy"))
       .crossJoin(broadcast(m))
       .select(col("w1"), col("w2"), col("c_xy"),
-        trunc4((col("m_total") * col("c_xy")).cast("double") /
-          (col("c_x") * col("c_y"))).as("lift"))
+        trunc4((col("m_total").cast("decimal(38,0)") * col("c_xy")).cast("double") /
+          (col("c_x").cast("decimal(38,0)") * col("c_y")).cast("double")).as("lift"))
       .orderBy(col("lift").desc, col("w1"), col("w2")).limit(k)
       .withColumn("rnk", row_number().over(
         Window.orderBy(col("lift").desc, col("w1"), col("w2"))).cast("long"))
@@ -1434,7 +1400,7 @@ object TextOps {
     * hit MOST documents.
     *
     * Engine-portable scoring: each per-(doc, term) BM25 contribution
-    * floors to a 1e6-scaled BIGINT (the [[dsirWeightsPlan]] trick), so
+    * floors to a 1e6-scaled BIGINT (the [[dsirWeights]] trick), so
     * the per-doc score is an exact integer sum — no float merge-order
     * hazard — and the final top-k ordering is over BIGINTs.
     *
@@ -1446,10 +1412,7 @@ object TextOps {
     * global rank sits behind `rnk <= k`, so Spark 4's
     * window-group-limit keeps k rows per partition before the single
     * merge — the [[Analytics]] shippingPriority precedent. */
-  /** [[bm25TopK]]'s lazy plan, its token base persisted in `s`, for
-    * plan inspection (ScaleSpec) and the public wrapper. */
-  private[graft] def bm25TopKPlan(s: Scope, docs: DataFrame, k: Int,
-      nq: Int): DataFrame = {
+  def bm25TopK(docs: DataFrame, k: Int = 10, nq: Int = 5): DataFrame = Scope { s =>
     // feeds tf, df, AND doc lengths
     val tok = s.persist(graft.functions.Portable.spread(docs, col("doc_id"))
       .select(col("doc_id"), explode(tokens(col("text"))).as("t")))
@@ -1464,7 +1427,7 @@ object TextOps {
       .select(col("doc_id"),
         floor((log(lit(1.0) + (col("nd") - col("df") + 0.5) / (col("df") + 0.5)) *
           (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("len") * col("nd") / col("tt"))))) * 1e6)
+          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * ((col("len").cast("decimal(38,0)") * col("nd")).cast("double") / col("tt"))))) * 1e6)
           .cast("long").as("term_scaled"))
     val perDoc = scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_match_terms"), sum(col("term_scaled")).as("score_scaled"))
@@ -1474,10 +1437,7 @@ object TextOps {
       .filter(col("rnk") <= k)
       .select(col("doc_id"), col("n_match_terms"), col("score_scaled"),
         trunc4(col("score_scaled") / 1e6).as("score"), col("rnk"))
-  }
-
-  def bm25TopK(docs: DataFrame, k: Int = 10, nq: Int = 5): DataFrame = Scope { s =>
-    bm25TopKPlan(s, docs, k, nq).localCheckpoint(true) // k rows; releases the token cache
+      .localCheckpoint(true) // k rows; releases the token cache
   }
 
   /** Unigram-LM negative-log-likelihood scoring — the perplexity
@@ -1492,7 +1452,7 @@ object TextOps {
     * pass → per-token LUT → score pass.)
     *
     * Per-token logprobs floor to 1e6-scaled BIGINTs so doc scores are
-    * exact integer sums ([[dsirWeightsPlan]] pattern). The LUT join is
+    * exact integer sums ([[dsirWeights]] pattern). The LUT join is
     * deliberately NOT broadcast-hinted — vocabulary grows with the
     * corpus ([[tfidfTopK]]'s reasoning); AQE still picks broadcast when
     * it fits. One tokenize pass persisted; the per-doc sum reuses the
@@ -1726,7 +1686,7 @@ object TextOps {
 
   /** Per-source Jensen–Shannon divergence from the corpus unigram
     * mix — the domain-balance readout a pretraining pipeline reads
-    * before weighting sources ([[dsirWeightsPlan]] reweights; this
+    * before weighting sources ([[dsirWeights]] reweights; this
     * MEASURES how far each source sits): JSD(p_s ‖ q) with q the
     * whole-corpus distribution and m = (p+q)/2.
     *

@@ -22,22 +22,6 @@ class BpeSpec extends SparkSpec {
     assert(TextOps.bpeLearn(tie, 1) === Seq("x y"))
   }
 
-  test("bpeLearn: batched rounds produce the EXACT one-merge-per-round sequence") {
-    // the batch-safety proof in the docstring, checked empirically on
-    // the real corpus: batchM=1 IS the sequential learner; the default
-    // batch must not reorder, drop, or invent a single merge
-    val docs = Tables.documents(spark, sf)
-    val sequential = TextOps.bpeLearn(docs, nMerges = 24, batchM = 1)
-    val batched = TextOps.bpeLearn(docs, nMerges = 24)
-    assert(batched === sequential)
-    // and a tie-heavy corpus collapses the batch rather than diverging:
-    // "x y"=1/"x z"=1 conflict on x AND tie — only the top-1 is safe
-    import spark.implicits._
-    val tie = Seq((1L, "xy xz xy xz")).toDF("doc_id", "text")
-    assert(TextOps.bpeLearn(tie, 4, batchM = 8) ===
-      TextOps.bpeLearn(tie, 4, batchM = 1))
-  }
-
   test("encodeWord: greedy lowest-rank apply, leftmost-nonoverlapping merges") {
     val ranks = Bpe.ranksOf(Seq("a b", "ab c"))
     assert(Bpe.encodeWord("abcab", ranks).toSeq === Seq("abc", "ab"))

@@ -1246,68 +1246,4 @@ class PropertiesSpec extends SparkSpec {
       }
     }
   }
-
-  test("overflow law: no driver query multiplies two aggregate-scale BIGINTs without DECIMAL widening") {
-    // Rounds 8-9 fixed four BIGINT cross-product overflows one at a time
-    // (abCuped, simpsonAudit, mannWhitney, the cross-products commit):
-    // each was sum(x)*sum(y) or count*sum evaluated in LongType, exact
-    // at sf0.1 and silently wrong at 1e9-row sums (sum of cents ~1e16;
-    // the product ~1e32 >> 2^63). This sweeps EVERY driver query's
-    // analyzed plan for the whole class: a LongType Multiply whose both
-    // operands are aggregate-scale (a long sum/count, or any expression
-    // referencing one through alias chains) must not exist — widen to
-    // decimal(38,0) like simpsonAudit.crossSign, or cast to double when
-    // the downstream math is a ratio anyway.
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum, Count}
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.types.LongType
-    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    def sweep(name: String, root: LogicalPlan): Unit = {
-      val tainted = scala.collection.mutable.Set.empty[ExprId]
-      // aggregate-scale = grows without bound as the corpus grows:
-      //  - a long sum/count (plain or windowed);
-      //  - a rank (row_number over a corpus-sized partition is just as
-      //    unbounded as count, though it is not an AggregateExpression);
-      //  - anything referencing one through alias chains.
-      // Magnitude SANITIZERS break the taint: signum (±1) and the log
-      // family (log of anything < 2^63 is < 44) bound their result
-      // regardless of input scale, so products of their outputs are
-      // safe however large the operand relation gets.
-      def aggScale(e: Expression): Boolean = e match {
-        case _: Signum | _: Log | _: Log10 | _: Log2 | _: Log1p => false
-        case _: RowNumber | _: Rank | _: DenseRank => true
-        case ae: AggregateExpression if ae.dataType == LongType &&
-          (ae.aggregateFunction.isInstanceOf[Sum] ||
-            ae.aggregateFunction.isInstanceOf[Count]) => true
-        case a: AttributeReference => tainted(a.exprId)
-        case other => other.children.exists(aggScale)
-      }
-      def walk(plan: LogicalPlan): Unit = plan.foreachUp { node =>
-        // subquery plans (scalar subqueries inside expr strings) are
-        // separate trees — sweep them with their own taint scope
-        node.expressions.foreach(_.foreach {
-          case sq: SubqueryExpression => sweep(name, sq.plan)
-          case _ => ()
-        })
-        node.expressions.foreach(_.foreach {
-          case m: Multiply if m.dataType == LongType &&
-              aggScale(m.left) && aggScale(m.right) =>
-            offenders += s"$name: ${m.sql}"
-          case _ => ()
-        })
-        node.expressions.foreach(_.foreach {
-          case al: Alias if aggScale(al.child) => tainted += al.exprId
-          case _ => ()
-        })
-      }
-      walk(root)
-    }
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, mk) =>
-      sweep(name, mk(spark, sf).queryExecution.analyzed)
-    }
-    assert(offenders.isEmpty,
-      s"${offenders.size} unwidened aggregate-scale BIGINT product(s):\n" +
-        offenders.distinct.mkString("\n"))
-  }
 }
