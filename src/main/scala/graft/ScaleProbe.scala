@@ -1,9 +1,11 @@
 package graft
 
+import graft.obs.Recorder
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import scala.jdk.CollectionConverters._
 
 /** Per-query wall + shuffle-byte probe for the scale methodology
   * (PERF.md's "operator scale table"): runs a named subset of
@@ -16,7 +18,7 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * fatal at 100 TB).
   *
   * Usage:
-  *   SPARK_GRAFT_SF_DIR=<dir> runMain graft.ScaleProbe q_a,q_b,...
+  *   SPARK_GRAFT_SF_DIR=<dir> runMain graft.ScaleProbe q_a,q_b,... [planDir]
   *
   * Two shuffle readings per query, because they answer different
   * questions:
@@ -24,19 +26,25 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *    stages and reused exchanges) — per-query exact, but BLIND to
   *    sub-jobs whose plans detach (an iterative operator's per-hop
   *    localCheckpoint rounds);
-  *  - total_*: a SparkListener summing every completed stage between
-  *    query start and end (queries run sequentially; the bus is
-  *    drained with a bounded settle wait) — covers the checkpointed
-  *    hops, which is exactly what the iterative graph family needs
-  *    measured. */
+  *  - total_*: every stage the query's build and run completed, as
+  *    [[Recorder]] saw them — covers the checkpointed hops, which is
+  *    exactly what the iterative graph family needs measured.
+  *
+  * A query's fixed cost lives in its sub-jobs: an operator may run
+  * dozens of them (persists, eager checkpoints, convergence probes)
+  * while it is built, which no plan dump shows. So each line also
+  * carries the build time (`build_s`, the operator's eager work),
+  * `jobs` and `gc_ms`, the slowest jobs go to stderr (id, seconds,
+  * stages, description) to name the ACTION that eats the wall, and
+  * with `planDir` the query's `.explain("formatted")` is written to
+  * `<planDir>/<query>.txt`. */
 object ScaleProbe {
   /** Candidate-pair counters for the banded generators whose decade
     * shuffle readings are attributed to candidate growth (VERDICT r10
     * directive 2): the probe line carries the MEASURED candidate count
     * (`cand_pairs`) next to the shuffle bytes, so cand× vs shuf× is a
-    * recorded ratio, not a narrative. Counted AFTER the timed run and
-    * after the listener totals are captured — the counter's own stages
-    * never contaminate the reading. */
+    * recorded ratio, not a narrative. Counted outside the recorded
+    * run — the counter's own stages never contaminate the reading. */
   private val candCounters: Map[String, (SparkSession, String) => Long] = Map(
     "q_knn_graph" -> ((s, d) =>
       graft.operators.Similarity.knnCandidatePairs(Tables.embeddings(s, d)).count()),
@@ -47,6 +55,9 @@ object ScaleProbe {
     // excess over 10× must track THIS count, not the row count
     "q_graph_cc" -> ((s, d) =>
       graft.operators.Graph.covisitEdges(Tables.events(s, d)).count()))
+
+  /** Jobs listed per query, slowest first. */
+  private val SlowJobs = 40
 
   /** All physical nodes, descending into AQE stages and reuse. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = {
@@ -59,9 +70,70 @@ object ScaleProbe {
     p +: kids.flatMap(nodes)
   }
 
+  private def gcMs: Long = java.lang.management.ManagementFactory
+    .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+
+  /** Builds and runs query `name` over `sfDir`, clears the session's
+    * cache and returns the query's JSON line. */
+  private[graft] def probe(spark: SparkSession, sfDir: String, name: String,
+      planDir: Option[String] = None): String = {
+    var build, wall = -1.0
+    val gc0 = gcMs
+    val (qe, rec) = Recorder(spark) {
+      val t0 = System.nanoTime()
+      try {
+        val q = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        build = (System.nanoTime() - t0) / 1e9
+        q.toRdd.count()
+        Some(q)
+      } catch { case e: Throwable =>
+        System.err.println(s"[probe] $name failed: ${e.getMessage}"); None
+      } finally wall = (System.nanoTime() - t0) / 1e9
+    }
+    val gc = gcMs - gc0
+    val (w, r, ex) = qe.map { q =>
+      val ns = nodes(q.executedPlan).distinct
+      def sum(key: String): Long =
+        ns.flatMap(_.metrics.get(key)).map(_.value).sum
+      (sum("shuffleBytesWritten"),
+        sum("localBytesRead") + sum("remoteBytesRead"),
+        ns.count(_.getClass.getSimpleName.contains("ShuffleExchange")))
+    }.getOrElse((-1L, -1L, -1))
+    for (q <- qe; dir <- planDir) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, s"$name.txt"),
+        q.explainString(FormattedMode))
+    }
+    spark.sharedState.cacheManager.clearCache()
+    rec.jobs.sortBy(-_.seconds).take(SlowJobs).foreach { j =>
+      System.err.println(f"[probe] $name job=${j.id}%-5d ${j.seconds}%7.3f s " +
+        f"stages=${j.stages}%-3d ${j.description.replaceAll("\\s+", " ").take(80)}")
+    }
+    val cand = candCounters.get(name).map { f =>
+      try f(spark, sfDir) catch { case _: Throwable => -1L } }
+    spark.sharedState.cacheManager.clearCache()
+    val candField = cand.map(c => s""""cand_pairs":$c,""").getOrElse("")
+    // Streaming state peaks: the q_stream_* replays run real streaming
+    // queries on this session, so the recording holds every batch's
+    // StateOperatorProgress. A query whose peak state grows with
+    // CORPUS SIZE instead of the watermark horizon is the 100 TB
+    // streaming killer this probe exists to catch.
+    val stateOps = rec.progress.map(_.stateOperators.length).foldLeft(0)(math.max)
+    val stateField = if (stateOps > 0)
+      s""""peak_state_rows":${StreamStateProbe.peakState(rec.progress)._1},"state_ops":$stateOps,"""
+    else ""
+    f"""{"query":"$name","ok":${qe.isDefined},"wall_s":$wall%.3f,"build_s":$build%.3f,""" +
+      s""""jobs":${rec.jobs.size},"gc_ms":$gc,""" +
+      s""""plan_shuffle_write_bytes":$w,"plan_shuffle_read_bytes":$r,""" +
+      s""""exchanges":$ex,"total_shuffle_write_bytes":${rec.stages.map(_.shuffleWriteBytes).sum},""" +
+      s""""total_shuffle_read_bytes":${rec.stages.map(_.shuffleReadBytes).sum},""" +
+      s""""stages":${rec.stages.size},$candField$stateField""" +
+      s""""sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(",").toSeq)
-      .getOrElse(sys.error("usage: ScaleProbe q_a,q_b,..."))
+      .getOrElse(sys.error("usage: ScaleProbe q_a,q_b,... [planDir]"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -70,87 +142,8 @@ object ScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    // Streaming state peaks (directive: streaming decade evidence).
-    // The q_stream_* replays run REAL StreamingQuery instances on this
-    // session, so a session-wide listener sees every micro-batch's
-    // StateOperatorProgress: peakState = max over progress events of
-    // Σ stateOperators.numRowsTotal (the concurrent state footprint),
-    // stateOps = max distinct stateful operators in one query. A query
-    // whose peak state grows with CORPUS SIZE instead of the watermark
-    // horizon is the 100 TB streaming killer this probe exists to catch.
-    val peakState = new java.util.concurrent.atomic.AtomicLong
-    val stateOps = new java.util.concurrent.atomic.AtomicLong
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) {
-          val total = ops.map(_.numRowsTotal).sum
-          peakState.getAndAccumulate(total, math.max(_, _))
-          stateOps.getAndAccumulate(ops.length.toLong, math.max(_, _))
-        }
-      }
-    })
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          stages.incrementAndGet()
-        }
-      }
-    })
-    // listener delivery is async; all stages are COMPLETE when the
-    // blocking count() returns, so a short settle drains the bus
-    def settle(): Unit = Thread.sleep(1000)
     try SparkEntry.entry(spark).count() catch { case _: Throwable => } // warmup
-    names.foreach { name =>
-      settle()
-      shufWrite.set(0L); shufRead.set(0L); stages.set(0L)
-      peakState.set(0L); stateOps.set(0L)
-      val t0 = System.nanoTime()
-      val qe = try {
-        val q = SparkEntry.queries(name)(spark, sfDir).queryExecution
-        q.toRdd.count()
-        Some(q)
-      } catch { case e: Throwable =>
-        System.err.println(s"[probe] $name failed: ${e.getMessage}"); None }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val (w, r, ex) = qe.map { q =>
-        val ns = nodes(q.executedPlan).distinct
-        def sum(key: String): Long =
-          ns.flatMap(_.metrics.get(key)).map(_.value).sum
-        (sum("shuffleBytesWritten"),
-          sum("localBytesRead") + sum("remoteBytesRead"),
-          ns.count(_.getClass.getSimpleName.contains("ShuffleExchange")))
-      }.getOrElse((-1L, -1L, -1))
-      spark.sharedState.cacheManager.clearCache()
-      settle()
-      // capture listener totals BEFORE any candidate counting: the
-      // counter runs its own stages and must not inflate the reading
-      val (totW, totR, totS) = (shufWrite.get, shufRead.get, stages.get)
-      val cand = candCounters.get(name).map { f =>
-        try f(spark, sfDir) catch { case _: Throwable => -1L } }
-      spark.sharedState.cacheManager.clearCache()
-      val candField = cand.map(c => s""""cand_pairs":$c,""").getOrElse("")
-      val stateField = if (stateOps.get > 0)
-        s""""peak_state_rows":${peakState.get},"state_ops":${stateOps.get},"""
-      else ""
-      println(f"""{"query":"$name","ok":${qe.isDefined},"wall_s":$wall%.3f,""" +
-        s""""plan_shuffle_write_bytes":$w,"plan_shuffle_read_bytes":$r,""" +
-        s""""exchanges":$ex,"total_shuffle_write_bytes":$totW,""" +
-        s""""total_shuffle_read_bytes":$totR,"stages":$totS,$candField$stateField""" +
-        s""""sf":"$sfDir"}""")
-    }
+    names.foreach(n => println(probe(spark, sfDir, n, args.lift(1))))
     spark.stop()
   }
 }

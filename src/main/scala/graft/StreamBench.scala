@@ -68,6 +68,9 @@ object StreamBench {
   /** Longest wait for one committed batch in [[run]]. */
   private val LoadCapMs = 120000L
 
+  /** The measurement window of each [[run]] in `main`. */
+  private val MeasureSecs = 20
+
   private def triggerMs(p: StreamingQueryProgress): Long =
     Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
 
@@ -102,20 +105,19 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val seconds = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "20").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // the skew A/B replays ~85 bounded batches; the peak must see all
+      // `run` reads its rate from recentProgress: keep its every batch
       .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val (defRps, defBatches) = run(spark, rocksDb = false, seconds)
-    val (rocksRps, rocksBatches) = run(spark, rocksDb = true, seconds)
+    val (defRps, defBatches) = run(spark, rocksDb = false, MeasureSecs)
+    val (rocksRps, rocksBatches) = run(spark, rocksDb = true, MeasureSecs)
     println(s"""{"metric":"stream_rows_per_sec","default":${defRps.round},""" +
       s""""rocksdb":${rocksRps.round},"batches_default":$defBatches,""" +
-      s""""batches_rocksdb":$rocksBatches,"seconds_each":$seconds}""")
+      s""""batches_rocksdb":$rocksBatches,"seconds_each":$MeasureSecs}""")
     // Skew-corpus state-store A/B for the bucketed join: runs only when
     // a skew corpus is present (SPARK_GRAFT_SKEW_DIR or target/sfskew —
     // generate with `runMain graft.ScaleUp <sf0.1> target/sfskew 5 --skew`).
@@ -126,7 +128,7 @@ object StreamBench {
     // difference is the API itself).
     val abDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if (new java.io.File(s"$abDir/events.parquet").exists())
-      StreamStateProbe.withSlicedEvents(spark, abDir, 2L * 86400000L) { (inDir, _) =>
+      StreamStateProbe.withSlicedEvents(spark, abDir) { (inDir, _) =>
         val (fmDef, sFmDef, _, bFm) = runSliced(spark, rocksDb = false, inDir,
           Streaming.funnelPipeline(10L))
         val (fmRocks, sFmRocks, _, _) = runSliced(spark, rocksDb = true, inDir,
@@ -142,7 +144,7 @@ object StreamBench {
       }
     val skewDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "target/sfskew")
     if (new java.io.File(s"$skewDir/events.parquet").exists())
-      StreamStateProbe.withSlicedEvents(spark, skewDir, 2L * 86400000L) { (inDir, _) =>
+      StreamStateProbe.withSlicedEvents(spark, skewDir) { (inDir, _) =>
         val pairs = Streaming.pairsOuterPipeline(10L, 60L,
           new java.sql.Timestamp(4102444800000L)) _ // no sentinels: far-future guard
         val (dRps, dRows, dBytes, _) = runSliced(spark, rocksDb = false, inDir, pairs)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Recorder
 import graft.streaming.Streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,8 +24,7 @@ import java.nio.file.Files
   * horizon).
   *
   * This probe measures exactly that: the events corpus is written as
-  * fixed-duration time slices (default 2 days, matching
-  * StreamingSpec's state-bound pin), replayed with
+  * [[SliceMs]] time slices, replayed with
   * `maxFilesPerTrigger=1` in slice order (deterministic modification
   * times), and each oracled pipeline's peak state rows/bytes are read
   * from the engine's own `StateOperatorProgress`. Because ScaleUp
@@ -35,25 +35,27 @@ import java.nio.file.Files
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=<dir> runMain graft.StreamStateProbe
-  * Env: SPARK_GRAFT_SLICE_DAYS (default 2) — batch time span.
   * One JSON line per pipeline: input rows, batches, wall seconds,
   * peak state rows/bytes.
   */
 object StreamStateProbe {
 
-  /** Write `shaped` as one parquet file per `sliceMs` time range, file
+  /** The time span of one sliced batch: 2 days. */
+  private[graft] val SliceMs = 2L * 86400000L
+
+  /** Write `shaped` as one parquet file per [[SliceMs]] time range, file
     * names and modification times in slice order so the file source's
     * modTime ordering replays them as a time-ordered bounded backfill.
     * Shared with [[StreamBench]]'s skew-corpus state-store A/B. */
-  private[graft] def writeSliced(shaped: DataFrame, sliceMs: Long): (String, Int) = {
+  private[graft] def writeSliced(shaped: DataFrame): (String, Int) = {
     val dir = Files.createTempDirectory("graft-ssp").toString
     val bounds = shaped.agg(min(col("ts_ms")), max(col("ts_ms"))).head
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val n = ((hi - lo) / sliceMs + 1).toInt
+    val n = ((hi - lo) / SliceMs + 1).toInt
     for (i <- 0 until n) {
       val scratch = s"$dir/tmp$i"
-      shaped.filter(col("ts_ms") >= lo + i * sliceMs &&
-          col("ts_ms") < lo + (i + 1) * sliceMs)
+      shaped.filter(col("ts_ms") >= lo + i * SliceMs &&
+          col("ts_ms") < lo + (i + 1) * SliceMs)
         .coalesce(1).write.parquet(scratch)
       val part = new java.io.File(scratch).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -67,9 +69,9 @@ object StreamStateProbe {
 
   /** [[writeSliced]] over `sfDir`'s replay-shaped events, removed
     * after `body` (also on failure). */
-  private[graft] def withSlicedEvents[T](spark: SparkSession, sfDir: String,
-      sliceMs: Long)(body: (String, Int) => T): T = {
-    val (inDir, n) = writeSliced(Streaming.replayShape(Tables.events(spark, sfDir)), sliceMs)
+  private[graft] def withSlicedEvents[T](spark: SparkSession, sfDir: String)(
+      body: (String, Int) => T): T = {
+    val (inDir, n) = writeSliced(Streaming.replayShape(Tables.events(spark, sfDir)))
     try body(inDir, n) finally Streaming.rmTree(new java.io.File(inDir))
   }
 
@@ -80,29 +82,30 @@ object StreamStateProbe {
   private[graft] def replaySliced(spark: SparkSession, inDir: String,
       pipeline: DataFrame => DataFrame,
       rocksDb: Option[Boolean] = None): Seq[StreamingQueryProgress] =
-    Streaming.driveReplay(spark, inDir, pipeline, Streaming.NoopSink,
-      maxFilesPerTrigger = Some(1), pinPartitions = true, rocksDb = rocksDb)(_.progress)
+    Recorder(spark)(Streaming.driveReplay(spark, inDir, pipeline, Streaming.NoopSink,
+      maxFilesPerTrigger = Some(1), pinPartitions = true, rocksDb = rocksDb)(_ => ()))
+      ._2.progress
 
-  /** Peak total (rows, bytes) across the state operators of any one
-    * batch, as the provider reports them. */
+  /** Total (rows, bytes) across the state operators of each batch that
+    * has any, as the provider reports them. */
+  private[graft] def stateTotals(ps: Seq[StreamingQueryProgress]): Seq[(Long, Long)] =
+    ps.map(_.stateOperators).filter(_.nonEmpty)
+      .map(ops => (ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum))
+
+  /** Peak [[stateTotals]] (rows, bytes) of any one batch. */
   private[graft] def peakState(ps: Seq[StreamingQueryProgress]): (Long, Long) =
-    (ps.map(_.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(math.max),
-      ps.map(_.stateOperators.map(_.memoryUsedBytes).sum).foldLeft(0L)(math.max))
+    stateTotals(ps).foldLeft((0L, 0L)) { case ((r, b), (r1, b1)) => (r max r1, b max b1) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val sliceDays = sys.env.getOrElse("SPARK_GRAFT_SLICE_DAYS", "2").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // a decade corpus at 2-day slices exceeds the default 100-entry
-      // recentProgress ring; the peak must see EVERY batch
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    withSlicedEvents(spark, sfDir, sliceDays * 86400000L) { (inDir, nSlices) =>
+    withSlicedEvents(spark, sfDir) { (inDir, nSlices) =>
       // 2100: the probe adds no sentinels, so the in-plan sentinel guard
       // predicates (`ts <= maxTs`) must never drop a real row
       val farFuture = new java.sql.Timestamp(4102444800000L)
@@ -119,7 +122,7 @@ object StreamStateProbe {
         println(f"""{"pipeline":"$name","input_rows":${ps.map(_.numInputRows).sum},""" +
           f""""batches":${ps.count(_.numInputRows > 0)},""" +
           f""""slices":$nSlices,"wall_s":$wall%.3f,"peak_state_rows":$peakRows,""" +
-          s""""peak_state_bytes":$peakBytes,"slice_days":$sliceDays,"sf":"$sfDir"}""")
+          s""""peak_state_bytes":$peakBytes,"slice_days":${SliceMs / 86400000L},"sf":"$sfDir"}""")
       }
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Scope, Tables}
+import graft.streaming.Streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,12 +71,7 @@ object ScaleOps {
     val (ot, ct) = bucketedPair.getOrElseUpdate(
       (System.identityHashCode(spark), dir), {
         val wh = java.nio.file.Files.createTempDirectory("graft-bucketed-wh")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(wh.toFile)
-        }
+        sys.addShutdownHook(Streaming.rmTree(wh.toFile))
         val tag = s"b${bucketedPair.size}"
         val (ot, ct) = (s"orders_$tag", s"customer_$tag")
         Tables.orders(spark, dir).write.mode("overwrite")
@@ -119,12 +115,7 @@ object ScaleOps {
     val wh = dppWarehouse.getOrElseUpdate(
       (System.identityHashCode(spark), dir), {
         val root = java.nio.file.Files.createTempDirectory("graft-dpp-wh")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(root.toFile)
-        }
+        sys.addShutdownHook(Streaming.rmTree(root.toFile))
         val monthly = Tables.orders(spark, dir)
           .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
         monthly.write.mode("overwrite").partitionBy("o_month")

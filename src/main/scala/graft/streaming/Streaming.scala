@@ -2005,12 +2005,11 @@ object Streaming {
     * maxTs + i·2 days; they stay in the corpus (see [[ReplayCorpus]]). */
   private[graft] final case class SentinelFlush(sfDir: String) extends ReplayPhases
 
-  /** A finished bounded run, handed to the read-back before the
-    * driver removes its temp tree: the output directory, the
-    * pipeline's output schema, and every batch's progress. */
+  /** A finished bounded run, handed to the read-back before
+    * [[driveReplay]] removes its temp tree: the output directory and
+    * the pipeline's output schema. */
   private[graft] final case class ReplayRun(out: String,
-      schema: org.apache.spark.sql.types.StructType,
-      progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
+      schema: org.apache.spark.sql.types.StructType)
 
   /** The bounded-replay driver every file replay runs through: the
     * parquet files in `inDir` (at most `maxFilesPerTrigger` per
@@ -2036,7 +2035,6 @@ object Streaming {
       else Nil) ++ rocksDb.toSeq.flatMap(stateStoreConf)
     val root = Files.createTempDirectory("graft-replay-run")
     val out = s"$root/out"
-    val progress = Seq.newBuilder[org.apache.spark.sql.streaming.StreamingQueryProgress]
     def drain(): org.apache.spark.sql.types.StructType = {
       val src = spark.readStream.schema(inSchema)
       val df = pipeline(maxFilesPerTrigger.fold(src)(src.option("maxFilesPerTrigger", _))
@@ -2050,7 +2048,6 @@ object Streaming {
         case BatchSink(mode, write) => w.outputMode(mode).foreachBatch(write(out))
       }).start())
       try q.awaitTermination() finally q.stop()
-      progress ++= q.recentProgress
       df.schema
     }
     try {
@@ -2068,7 +2065,7 @@ object Streaming {
             drain()
           }.last
       }
-      readBack(ReplayRun(out, schema, progress.result()))
+      readBack(ReplayRun(out, schema))
     } finally rmTree(root.toFile)
   }
 
@@ -2207,8 +2204,8 @@ object Streaming {
     * assignment is pure scalar compute. The ONLY streaming state is
     * the groupBy(list_id) aggregation: ≤ NList rows BY CONSTRUCTION
     * regardless of stream length — the strongest bounded-state shape
-    * an operator can have (StreamingSpec asserts the peak via
-    * `onProgress`). Complete-mode snapshots land via foreachBatch
+    * an operator can have (StreamingSpec asserts the peak).
+    * Complete-mode snapshots land via foreachBatch
     * overwrite — the compacted ledger table a production pipeline
     * serves the retrain dashboard from; replaying the stream
     * reproduces the identical final snapshot (batch boundaries only
@@ -2219,9 +2216,7 @@ object Streaming {
     * ≤ NList-group agg, which is map-side combined). At 100 TB the
     * ledger stays NList rows; the retrain signal is free. */
   def streamIvfIncr(spark: SparkSession, dir: String,
-      moveFrac: Double = 0.25, minAdds: Long = 3L,
-      onProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit
-        = _ => ()): DataFrame = Scope { s =>
+      moveFrac: Double = 0.25, minAdds: Long = 3L): DataFrame = Scope { s =>
     val Sim = graft.operators.Similarity
     val v = s.persist(Sim.withEmbD(graft.Tables.embeddings(spark, dir)))
     val tr = v.filter(pmod(col("vec_id"), lit(7L)) =!= 0)
@@ -2267,7 +2262,6 @@ object Streaming {
       BatchSink(OutputMode.Complete(), snap => (df, _) =>
         df.write.mode("overwrite").parquet(snap)), // compacted ledger snapshot
       maxFilesPerTrigger = Some(1), pinPartitions = true) { run =>
-      onProgress(run.progress)
       spark.read.parquet(run.out)
         .localCheckpoint(true) // ≤ NList rows; materialize before rmTree
     }
@@ -2338,9 +2332,7 @@ object Streaming {
     * 100 TB the index is the bucketed band table; the probe stays a
     * band-keyed equi-join, never batch×registry. */
   def streamNeardup(spark: SparkSession, dir: String,
-      threshold: Double = 0.5,
-      onProgress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] => Unit
-        = _ => ()): DataFrame = Scope { s =>
+      threshold: Double = 0.5): DataFrame = Scope { s =>
     val D = graft.operators.Dedup
     val docs = graft.Tables.documents(spark, dir)
     val registry = s.persist(D.incrRegistryOf(docs)) // verify arm re-shingles candidates
@@ -2369,7 +2361,6 @@ object Streaming {
           out => (b, batchId) => D.probeRegistry(registry, regBands, b, threshold)
             .write.mode("overwrite").parquet(s"$out/b$batchId")),
         maxFilesPerTrigger = Some(1)) { run =>
-        onProgress(run.progress)
         val outSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("reg_id", org.apache.spark.sql.types.LongType),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Recorder
 import graft.operators.{ScaleOps, Sketches}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -458,30 +459,15 @@ class ScaleSpec extends SparkSpec {
     assert(rs.contains("ReadSchema: struct<event_id:bigint>"), rs)
   }
 
-  /** Spark jobs `body` starts on this thread, counted by job group. A
-    * sentinel job run after it marks where the listener bus has caught
-    * up, since job events arrive asynchronously and in order. */
+  /** Spark jobs `body` starts on this thread, counted by job group. */
   private def jobsIn(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val group = s"graft-jobs-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
+    val (_, rec) = Recorder(spark) {
       sc.setJobGroup(group, "counted")
       try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group/end", "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$group/end") && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(seen.contains(s"$group/end"), "the sentinel job never reached the listener")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
+    }
+    rec.jobs.count(_.group.contains(group))
   }
 
   test("Tables schema memo: a second read of the same file starts no Spark job") {
@@ -964,29 +950,10 @@ class ScaleSpec extends SparkSpec {
     // collusion rings get deeper) passes.
     val iterative = Seq("q_markov_attrib", "q_dedup_clusters",
       "q_graph_modularity", "q_fraud_rings", "q_sim_mmr")
-    def jobsFor(name: String, dir: String): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-        // the listener bus is async: wait until the count is quiescent
-        var last = -1
-        var spins = 0
-        while (counter.get != last && spins < 50) {
-          last = counter.get; Thread.sleep(100); spins += 1
-        }
-        counter.get
-      } finally {
-        spark.sparkContext.removeSparkListener(l)
-        spark.sharedState.cacheManager.clearCache()
-      }
-    }
+    def jobsFor(name: String, dir: String): Int =
+      try Recorder(spark)(SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count())
+        ._2.jobs.size
+      finally spark.sharedState.cacheManager.clearCache()
     for (name <- iterative) {
       val j001 = jobsFor(name, "/root/testdata/sf0.001")
       val j01 = jobsFor(name, "/root/testdata/sf0.01")
@@ -1356,8 +1323,8 @@ class ScaleSpec extends SparkSpec {
   /** Builds one query and sweeps its final plan plus every plan its
     * construction executed. */
   private def sweepQuery(query: String)(build: => org.apache.spark.sql.DataFrame): Seq[Offender] = {
-    val (df, actions) = PlanCapture(spark)(build)
-    lawOffenders(query, actions.map(_.qe) :+ df.queryExecution)
+    val (df, rec) = Recorder(spark)(build)
+    lawOffenders(query, rec.actions.map(_.qe) :+ df.queryExecution)
   }
 
   private lazy val boardOffenders: Seq[Offender] =

@@ -8,9 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guards for the shared lifecycles in `src/main/scala`: every
   * persisted relation is registered with a [[Scope]], which releases it
-  * when the operator returns or throws; and every `transformWithState`
+  * when the operator returns or throws; every `transformWithState`
   * processor moves its event-time timer through
-  * [[graft.streaming.FlushAtWatermark]]. */
+  * [[graft.streaming.FlushAtWatermark]]; and, in the tests too, every
+  * Spark listener is [[graft.obs.Recorder]]'s, which drains the
+  * listener bus around what it records. */
 class ScopeSpec extends AnyFunSuite {
 
   /** Top-level defs allowed to persist and release by hand, per file. */
@@ -27,9 +29,9 @@ class ScopeSpec extends AnyFunSuite {
     """(?s)/\*.*?\*/""".r.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
       .split("\n", -1).map(_.replaceAll("//.*$", ""))
 
-  /** Every main source: (path under `src/main/scala`, [[code]] lines). */
-  private def sources: Seq[(String, Array[String])] = {
-    val root = Paths.get("src/main/scala")
+  /** Every source under `dir`: (path under it, [[code]] lines). */
+  private def sources(dir: String = "src/main/scala"): Seq[(String, Array[String])] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root (no $root)")
     Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
@@ -39,7 +41,7 @@ class ScopeSpec extends AnyFunSuite {
 
   test("no persist or unpersist outside Scope and the allow-list") {
     val offenders = for {
-      (rel, lines) <- sources
+      (rel, lines) <- sources()
       if rel != "graft/Scope.scala"
       (line, i) <- lines.zipWithIndex
       if direct.findFirstIn(line).isDefined
@@ -58,7 +60,7 @@ class ScopeSpec extends AnyFunSuite {
 
   test("no timer calls or StatefulProcessor outside FlushAtWatermark") {
     val offenders = for {
-      (rel, lines) <- sources
+      (rel, lines) <- sources()
       if rel != "graft/streaming/FlushAtWatermark.scala"
       (line, i) <- lines.zipWithIndex
       if timerCall.findFirstIn(line).isDefined
@@ -66,5 +68,22 @@ class ScopeSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "timer bookkeeping outside FlushAtWatermark (extend it and implement " +
         "absorb/emit/clearState):\n" + offenders.mkString("\n"))
+  }
+
+  private val listenerCode = ("""(?:new|extends|with)\s+[\w.]*""" +
+    """(?:SparkListener|QueryExecutionListener|StreamingQueryListener)\b|""" +
+    """addSparkListener\(|listenerManager\.register\(|streams\.addListener\(""").r
+
+  test("no Spark listener outside graft/obs") {
+    val offenders = for {
+      dir <- Seq("src/main/scala", "src/test/scala")
+      (rel, lines) <- sources(dir)
+      if !rel.startsWith("graft/obs/")
+      (line, i) <- lines.zipWithIndex
+      if listenerCode.findFirstIn(line).isDefined
+    } yield s"$dir/$rel:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "Spark listener outside graft/obs (record with graft.obs.Recorder):\n" +
+        offenders.mkString("\n"))
   }
 }

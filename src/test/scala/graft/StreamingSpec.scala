@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.Recorder
 import graft.operators.Transaction
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -21,23 +22,12 @@ class StreamingSpec extends SparkSpec {
   private def withQuery[T](q: org.apache.spark.sql.streaming.StreamingQuery)(body: => T): T =
     try body finally q.stop()
 
-  /** Runs `body` while a listener records, for every query progress
-    * that reports state operators, the sum of their `numRowsTotal`;
-    * returns the body's result and those sums in arrival order. */
+  /** Runs `body` and returns its result with the total state rows of
+    * each query progress it made that reports state operators, in
+    * arrival order. */
   private def peakStateRows[T](body: => T): (T, Seq[Long]) = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val l = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val ops = e.progress.stateOperators
-        if (ops != null && ops.nonEmpty) peaks += ops.map(_.numRowsTotal).sum
-      }
-    }
-    spark.streams.addListener(l)
-    val out = try body finally spark.streams.removeListener(l)
-    (out, peaks.toSeq)
+    val (out, rec) = Recorder(spark)(body)
+    (out, StreamStateProbe.stateTotals(rec.progress).map(_._1))
   }
 
   test("batch PII redaction lifts onto a document stream unchanged") {
@@ -542,14 +532,14 @@ class StreamingSpec extends SparkSpec {
     withThreeFileInput { in =>
       // the caller's width differs from the pin, so a leak would show
       Scope.withConf(spark, Seq(sp -> Some("3"))) {
-        val batches = Streaming.driveReplay(spark, in, identity,
+        val batches = Recorder(spark)(Streaming.driveReplay(spark, in, identity,
           Streaming.BatchSink(OutputMode.Append(), _ => (b, _) => {
             seen.add((spark.conf.get(sp), b.sparkSession.conf.get(sp),
               b.sparkSession.conf.get(provider)))
             ()
           }), maxFilesPerTrigger = Some(1), pinPartitions = true,
-          rocksDb = Some(true))(_.progress.size)
-        assert(batches === 3) // one per file, all handed back
+          rocksDb = Some(true))(_ => ()))._2.progress.size
+        assert(batches === 3) // one per file, all recorded
         assert(spark.conf.get(sp) === "3")
       }
     }
@@ -1259,9 +1249,8 @@ class StreamingSpec extends SparkSpec {
         .timestamp_millis(col("ts_ms")))
       .withColumn("event_id", col("event_id") + 10000000L)
       .withColumn("user_id", col("user_id") + 10000000L))
-    val sliceMs = 2L * 86400000L
-    val (dirA, _) = StreamStateProbe.writeSliced(shaped, sliceMs)
-    val (dirB, _) = StreamStateProbe.writeSliced(doubled, sliceMs)
+    val (dirA, _) = StreamStateProbe.writeSliced(shaped)
+    val (dirB, _) = StreamStateProbe.writeSliced(doubled)
     case class Peak(input: Long, rows: Long, bytes: Long, batches: Int)
     def probe(dir: String, pipeline: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): Peak = {
@@ -1363,12 +1352,10 @@ class StreamingSpec extends SparkSpec {
     // happen to agree
     val expected = operators.Dedup.incrMinhashAudit(Tables.documents(spark, sf))
       .collect().map(_.toString).sorted.toSeq
-    var nBatches = 0
-    var nStateful = -1
-    val got = Streaming.streamNeardup(spark, sf, onProgress = ps => {
-      nBatches = ps.count(_.numInputRows > 0)
-      nStateful = ps.flatMap(_.stateOperators).length
-    }).collect().map(_.toString).sorted.toSeq
+    val (got, rec) = Recorder(spark)(Streaming.streamNeardup(spark, sf)
+      .collect().map(_.toString).sorted.toSeq)
+    val nBatches = rec.progress.count(_.numInputRows > 0)
+    val nStateful = rec.progress.flatMap(_.stateOperators).length
     assert(got.nonEmpty, "no flagged near-dups at this sf — fixture too weak to test")
     assert(got === expected)
     assert(nBatches >= 2, s"parity must hold across real micro-batches (got $nBatches)")
@@ -1420,13 +1407,9 @@ class StreamingSpec extends SparkSpec {
       .filter(_.getAs[Long]("n_added") > 0L)
       .map(r => r.getAs[Int]("list_id").toLong ->
         ((r.getAs[Long]("n_added"), r.getAs[Long]("n_would_move")))).toMap
-    var peakState = -1L
-    var nBatches = 0
-    val got = Streaming.streamIvfIncr(spark, sf, onProgress = ps => {
-      peakState = ps.flatMap(_.stateOperators.map(_.numRowsTotal))
-        .foldLeft(0L)(math.max)
-      nBatches = ps.count(_.numInputRows > 0)
-    }).collect()
+    val (got, rec) = Recorder(spark)(Streaming.streamIvfIncr(spark, sf).collect())
+    val peakState = StreamStateProbe.peakState(rec.progress)._1
+    val nBatches = rec.progress.count(_.numInputRows > 0)
     assert(got.nonEmpty)
     val gotMap = got.map(r => r.getAs[Int]("list_id").toLong ->
       ((r.getAs[Long]("n_added"), r.getAs[Long]("n_would_move")))).toMap
